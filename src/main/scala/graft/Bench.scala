@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: one JSON line with per-query wall times at
   * SPARK_GRAFT_SF_DIR. Each query is warmed once at sf0.001 first so
   * the timings measure the engine, not JVM/codegen JIT warm-up.
@@ -10,13 +8,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus.toInt)
     // ERROR, not WARN: the driver's artifact is a bounded tail of the
     // combined output, and r9's nine WindowExec WARN lines landed AFTER
     // the result line and flooded the window — the whole round's bench
@@ -34,13 +26,14 @@ object Bench {
       catch { case _: Throwable => () }
     }
     def timeOnce(name: String): (Double, Boolean) = {
-      // clear BEFORE timing, outside the clock: operators that persist
-      // an intermediate (the dedup survivor maps) leak their cache
-      // entries by design, and ~50 queries of accumulated storage
-      // in front of a measurement inflates it up to 7x (r6's q50/q45/
-      // q73 artifacts). Every measurement starts cache-cold and
-      // storage-empty, so the committed minimum reproduces standalone.
-      spark.catalog.clearCache()
+      // release BEFORE timing, outside the clock: the bench opens no
+      // CacheScope bracket, so operator caches (the dedup survivor
+      // maps, the graph operators' raw-RDD generations) outlive their
+      // query, and ~50 queries of accumulated storage in front of a
+      // measurement inflates it up to 7x (r6's q50/q45/q73 artifacts).
+      // Every measurement starts cache-cold and storage-empty, so the
+      // committed minimum reproduces standalone.
+      graft.core.CacheScope.releaseAll(spark)
       val t0 = System.nanoTime()
       val ok =
         try { SparkEntry.queries(name)(spark, sfDir).count(); true }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round plan capture (tooling, not a query): writes
   * `.explain("formatted")` of each named declared query to
   * `<outDir>/<query>_<tag>.txt` — the committed evidence for plan-shape
@@ -21,13 +19,7 @@ object PlanDump {
     val outDir = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
@@ -37,7 +29,7 @@ object PlanDump {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"), txt)
       println(s"[plandump] wrote $outDir/${name}_$tag.txt (${txt.length} chars)")
-      spark.catalog.clearCache()
+      graft.core.CacheScope.releaseAll(spark)
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiling harness (tooling, not a query): runs
   * one declared query with a job listener and prints the per-Spark-job
@@ -16,13 +15,7 @@ object ProfileQ {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     case class Job(id: Int, desc: String, start: Long, var end: Long = 0L)
@@ -61,7 +54,7 @@ object ProfileQ {
     names.foreach { name =>
       // warm pass (JIT + codegen), uncounted
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-      spark.catalog.clearCache()
+      graft.core.CacheScope.releaseAll(spark)
       jobs.synchronized(jobs.clear())
       stages.synchronized(stages.clear())
       shuffleRead = 0L; shuffleWrite = 0L; stageCount = 0
@@ -84,7 +77,7 @@ object ProfileQ {
           println(f"   stg ${s.id}%4d ${s.ms / 1e3}%7.3f s  ${s.tasks}%4d tasks  taskSum=${s.taskMs / 1e3}%7.3f s  ${s.name.take(100)}")
         }
       }
-      spark.catalog.clearCache()
+      graft.core.CacheScope.releaseAll(spark)
     }
     spark.stop()
   }

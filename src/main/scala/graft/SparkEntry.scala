@@ -16,6 +16,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("q01_agg_groupby")(spark, "/root/testdata/sf0.001")
 
+  /** The local session every harness and the test suite run on. Parquet
+    * TIMESTAMP(NANOS) reads as a long; [[Tables.load]] converts it back.
+    */
+  def localSession(cores: Int): SparkSession =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.queries ++ TrainingQueries.queries ++ ChainQueries.queries

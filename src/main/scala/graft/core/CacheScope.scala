@@ -1,26 +1,29 @@
 package graft.core
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
-/** Deterministic release bracket for operator-managed caches.
+/** The one owner of every operator-managed cache. Operators never call
+  * `persist()` themselves; three cases cover every cache.
   *
-  * Several operators persist an intermediate that the CALLER's
-  * consumption still reads after the operator returns — the dedup
-  * survivor maps ([[graft.dedup.Dedup.resolveChains]]), component
-  * labelings ([[graft.dedup.Dedup.connectedComponents]]), the curation
-  * survivor corpus ([[graft.curation.Curation.curateCorpus]]), the
-  * bigram-LM model tables, and the IVF probe assignment. Those persists
-  * cannot be released inside the operator (the result would recompute
-  * its whole upstream on first use), so historically they leaked until
-  * someone called `spark.catalog.clearCache()` — which is what inflated
-  * the round-6 benchmark 7× (~50 queries of accumulated survivor-map
-  * storage sitting in front of each measurement) and is exactly what a
-  * long-running curation service cannot afford.
+  * '''Two entry points.''' [[persist]] persists a Dataset;
+  * [[persistRows]] persists a frame's copied INTERNAL rows as a raw RDD
+  * — the lineage cut for multi-action and iterative operators: a
+  * Dataset persist caches data but not the plan, so every later action
+  * re-analyzes the whole upstream tree, while a frame rebuilt over the
+  * RDD (`GraftBridge.internalCreateDataFrame`) plans as a flat scan.
+  * Internal rows, not `df.rdd`, skip the external `Row` decode and
+  * re-encode. Both register their release with the innermost open
+  * bracket; with none open they register nothing.
   *
-  * [[withReleased]] makes the lifecycle explicit: every operator-managed
-  * persist registered while the bracket is open is unpersisted when it
-  * closes, without touching caches the application created outside it
-  * (unlike `clearCache`, which nukes everything).
+  * '''Brackets, for operator-internal caches.''' [[withReleased]]
+  * unpersists every cache registered while it is open when it closes,
+  * normally or by exception, and touches nothing made outside it.
+  * Operators bracket the caches they consume themselves; callers
+  * bracket operators whose results stay persisted for consumption
+  * (dedup survivor maps, component labelings, the curation survivor
+  * corpus, the bigram-LM model tables, the IVF probe assignment):
   *
   * {{{
   * val report = CacheScope.withReleased {
@@ -30,18 +33,21 @@ import org.apache.spark.sql.Dataset
   * // storage empty again: spark.sparkContext.getPersistentRDDs is empty
   * }}}
   *
-  * Consume (write/collect/count) the operator results inside the body —
-  * a Dataset escaping the bracket unmaterialized recomputes from scratch
-  * on first use (correct, just slow). Scopes nest: an inner bracket
+  * A Dataset escaping the bracket unmaterialized recomputes from scratch
+  * on first use (correct, just slow). Brackets nest: an inner bracket
   * releases only its own registrations. Registration is per-thread
-  * (operators build plans on the calling thread), matching how Spark
-  * driver code composes.
+  * (operators build plans on the calling thread). Operators may also
+  * release a stale generation eagerly; unpersisting twice is a no-op.
   *
-  * Caveat: Spark's CacheManager dedups caches by PLAN, so two brackets
-  * caching plan-identical intermediates share one storage entry, and
-  * the first bracket to close releases it for both (the survivor is
-  * still correct — it just recomputes). Brackets over disjoint inputs
-  * (the normal shape) are unaffected.
+  * '''[[releaseAll]], for harnesses.''' A caller that owns the whole
+  * session (a bench measurement, a test suite) empties its storage in
+  * one call, including what was persisted with no bracket open — raw
+  * RDDs that `clearCache()` cannot reach.
+  *
+  * Caveat: Spark's CacheManager dedups Dataset caches by PLAN, so two
+  * brackets caching plan-identical intermediates share one storage
+  * entry, and the first bracket to close releases it for both (the
+  * survivor is still correct — it just recomputes).
   */
 object CacheScope {
   private val scopes =
@@ -49,30 +55,32 @@ object CacheScope {
       override def initialValue() = new java.util.ArrayDeque()
     }
 
-  /** Register an operator-managed persisted Dataset with the innermost
-    * open bracket; a no-op when none is open (the pre-bracket
-    * behavior: caller releases via unpersist/clearCache). Returns the
-    * Dataset unchanged.
-    */
-  private[graft] def track[T](ds: Dataset[T]): Dataset[T] = {
-    trackRelease(() => ds.unpersist(blocking = false))
-    ds
-  }
-
-  /** Register an arbitrary release action (e.g. an RDD-level persist
-    * from a lineage short-circuit, which Dataset.unpersist cannot
-    * reach) with the innermost open bracket; a no-op when none is
-    * open.
-    */
-  private[graft] def trackRelease(release: () => Unit): Unit = {
+  private def register(release: () => Unit): Unit = {
     val st = scopes.get()
     if (!st.isEmpty) st.peek().add(release)
   }
 
+  /** Persist `ds` (default storage level) and register its release.
+    * Returns `ds`.
+    */
+  def persist[T](ds: Dataset[T]): Dataset[T] = {
+    ds.persist()
+    register(() => ds.unpersist(blocking = false))
+    ds
+  }
+
+  /** Persist the copied internal rows of `df` (the scan reuses row
+    * buffers) and register their release. Lazy: nothing runs until the
+    * first action on the returned RDD.
+    */
+  def persistRows(df: DataFrame): RDD[InternalRow] = {
+    val rdd = df.queryExecution.toRdd.map(_.copy()).persist()
+    register(() => { rdd.unpersist(blocking = false); () })
+    rdd
+  }
+
   /** Run `body`; on exit (normal or exceptional) unpersist every
-    * operator-managed cache registered inside it. Double-unpersist is
-    * safe (a no-op on already-released data), so operators that release
-    * eagerly on their fast paths need no special casing.
+    * operator-managed cache registered inside it.
     */
   def withReleased[A](body: => A): A = {
     val st = scopes.get()
@@ -84,5 +92,14 @@ object CacheScope {
       mine.forEach(release => release())
       if (st.isEmpty) scopes.remove()
     }
+  }
+
+  /** Empty the session's storage: every Dataset cache, then every
+    * persisted RDD, including the raw ones `clearCache()` cannot see.
+    * Blocking, so the next measurement starts with the blocks gone.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
 }

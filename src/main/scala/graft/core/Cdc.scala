@@ -51,8 +51,10 @@ object Cdc {
     // (driver-side analysis/optimization per action dominated the
     // measured wall of a mirror sync; ProfileQ r13), so the plan is cut
     // to a flat scan of the cached internal rows
-    val (last, release) = Lineage.checkpointed(lastEventPerKey(feed, keys))
-    try {
+    CacheScope.withReleased {
+      val reduced = lastEventPerKey(feed, keys)
+      val last = org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
+        spark, CacheScope.persistRows(reduced), reduced.schema)
       val upserts = last.filter(col("_change_type") === "insert")
         .drop("_change_type", "_commit_version")
       val deletes = last.filter(col("_change_type") === "delete")
@@ -70,20 +72,21 @@ object Cdc {
       val hasVersions = VersionLog.versions(spark, targetDir).nonEmpty
       if (!hasVersions) {
         // bootstrap: the first feed IS the table (no deletes can match)
-        if (nUp == 0L) return (0L, 0L)
-        // right-size the bootstrap files from the known row count —
-        // the replica's file count otherwise inherits the feed plan's
-        // partitioning (one part file per shuffle partition for a
-        // delta-sized feed), and every later MERGE/DELETE pays per
-        // file (guide §6)
-        val rowsPerFile = spark.conf
-          .getOption("spark.graft.dml.insertFileRows")
-          .map(_.toLong).getOrElse(1L << 20)
-        upserts.coalesce(
-            math.max(1L, (nUp + rowsPerFile - 1) / rowsPerFile).toInt)
-          .write.mode("overwrite")
-          .parquet(VersionLog.rootUriPath(targetDir))
-        VersionLog.snapshot(spark, targetDir)
+        if (nUp > 0L) {
+          // right-size the bootstrap files from the known row count —
+          // the replica's file count otherwise inherits the feed plan's
+          // partitioning (one part file per shuffle partition for a
+          // delta-sized feed), and every later MERGE/DELETE pays per
+          // file (guide §6)
+          val rowsPerFile = spark.conf
+            .getOption("spark.graft.dml.insertFileRows")
+            .map(_.toLong).getOrElse(1L << 20)
+          upserts.coalesce(
+              math.max(1L, (nUp + rowsPerFile - 1) / rowsPerFile).toInt)
+            .write.mode("overwrite")
+            .parquet(VersionLog.rootUriPath(targetDir))
+          VersionLog.snapshot(spark, targetDir)
+        }
         (nUp, 0L)
       } else if (nUp == 0L) {
         // pure-delete feed: the all-rows-delete guard must stay, so
@@ -99,7 +102,7 @@ object Cdc {
           Dml.mergeApply(spark, targetDir, upserts, deletes, keys, nUp)
         (replaced + inserted, deleted)
       }
-    } finally release()
+    }
   }
 
   /** One standing-replica sync step: consume the source's change feed

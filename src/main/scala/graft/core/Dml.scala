@@ -176,12 +176,13 @@ object Dml {
     * replica's own change feed as preimage deletes exactly as the
     * two-pass form produced.
     *
-    * Caller contract (private[core], enforced by [[Cdc]]'s reduction,
-    * not re-checked with a job): `upserts` carries at most one row per
-    * key and is NON-EMPTY with `upCount` rows already counted;
-    * `deleteKeys` may be empty; the key sets are disjoint; NULL keys in
-    * `deleteKeys` match nothing (join semantics). Returns
-    * (newVersion, replaced, inserted, deleted).
+    * Caller contract (private[core], enforced by [[Cdc]]'s reduction):
+    * `upserts` carries at most one row per key and is NON-EMPTY with
+    * `upCount` rows already counted; `deleteKeys` may be empty; the key
+    * sets are disjoint; NULL keys in `deleteKeys` match nothing (join
+    * semantics). The probe checks disjointness on the keys the table
+    * holds, where an overlap would count a row as both replaced and
+    * deleted. Returns (newVersion, replaced, inserted, deleted).
     */
   private[core] def mergeApply(spark: SparkSession, dir: String,
       upserts: DataFrame, deleteKeys: DataFrame, keys: Seq[String],
@@ -203,8 +204,9 @@ object Dml {
       .unionByName(deleteKeys.select(keys.map(col): _*)
         .withColumn("__graft_up", lit(0)))
     // ONE scan answers every planner question: affected file set
-    // (metadata-scale collect_set), replaced rows, deleted rows, and
-    // the distinct upsert keys that hit (keyFlags is unique per key,
+    // (metadata-scale collect_set), replaced rows, deleted rows, the
+    // distinct upsert keys that hit, and whether a hit key carries both
+    // flags (keyFlags is unique per key when the key sets are disjoint,
     // so the inner join preserves table-row multiplicity)
     val probeRow = current
       .withColumn("__graft_file", input_file_name())
@@ -213,7 +215,13 @@ object Dml {
         count(when(col("__graft_up") === 1, lit(1))).as("n_rep"),
         count(when(col("__graft_up") === 0, lit(1))).as("n_del"),
         countDistinct(when(col("__graft_up") === 1,
-          struct(keys.map(col): _*))).as("mk")).head()
+          struct(keys.map(col): _*))).as("mk"),
+        countDistinct(struct(keys.map(col): _*)).as("hk"),
+        countDistinct(struct((keys :+ "__graft_up").map(col): _*)).as("hkf"))
+      .head()
+    require(probeRow.getLong(4) == probeRow.getLong(5),
+      "mergeApply needs disjoint upsert and delete key sets: " +
+        s"${probeRow.getLong(5) - probeRow.getLong(4)} key(s) of $dir are in both")
     val affectedFiles =
       probeRow.getSeq[String](0).map(f => relOf(root, f)).toSet
     val (replaced, deleted, matchedKeys) =

@@ -59,8 +59,7 @@ object Graph {
     // anyway — and a NARROW coalesce over the cached blocks re-lays the
     // scan without a second cache or any shuffle: each of the `want`
     // tasks reads its share of cached partitions from local memory.
-    val rdd = edges.queryExecution.toRdd.map(_.copy()).persist()
-    CacheScope.trackRelease(() => { rdd.unpersist(blocking = false); () })
+    val rdd = CacheScope.persistRows(edges)
     val n = rdd.count()
     val maxP = spark.sparkContext.defaultParallelism.toLong
     val want = math.min(n / EdgeRowsPerPartition + 1, math.max(1L, maxP)).toInt
@@ -349,17 +348,11 @@ object Graph {
     * generations give a 3^k-node plan and analysis time explodes —
     * the Dataset-API analog of GraphX's iteration checkpointing).
     * Lazy: nothing runs until the first action; the RDD persist makes
-    * later references reuse, and the bracket releases it.
-    *
-    * INTERNAL rows, not `df.rdd`: the external-Row path decodes and
-    * re-encodes every row every iteration (plus boxing); persisting
-    * the UnsafeRow bytes (copied — the scan reuses row buffers) skips
-    * both conversions. Semantics are unchanged: after release the
-    * frame recomputes from lineage like any unpersisted cache.
+    * later references reuse, and the bracket releases it. After
+    * release the frame recomputes from lineage like any unpersisted
+    * cache.
     */
-  private def shortCircuit(df: DataFrame): DataFrame = {
-    val (out, release) = Lineage.checkpointed(df)
-    CacheScope.trackRelease(release)
-    out
-  }
+  private def shortCircuit(df: DataFrame): DataFrame =
+    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
+      df.sparkSession, CacheScope.persistRows(df), df.schema)
 }

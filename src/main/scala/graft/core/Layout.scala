@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
 import graft.functions.GraftFunctions
 
 /** Multi-dimensional data layout via Z-ordering — the file-skipping
@@ -97,39 +98,44 @@ object Layout {
     * nothing driver-sized is collected here.
     */
   /** Per-file zone-map rows for an explicit file list; zero-row part
-    * files get explicit all-NULL stat rows (min/max of nothing), so
-    * the manifest's file set can never silently miss a file the
-    * staleness identity will demand. NULL stats prune correctly: no
-    * box test passes on them, and zero rows match nothing.
-    */
-  /** The stats aggregation runs ONCE: without the persist, the
-    * zero-row-file coverage check (a collect) and the caller's write
-    * each re-scanned every listed file (the expensive half of a
-    * manifest build, twice). Metadata-scale frame; every public caller
-    * ([[writeManifest]]/[[appendManifest]] and the bloom twins) opens
-    * its own [[CacheScope.withReleased]] bracket around build+write, so
-    * the persist releases when the maintenance call returns even when
-    * the application runs outside any scope (LakeCli, ingest loops).
+    * files get all-NULL stat rows (min/max of nothing). NULL stats
+    * prune correctly: no box test passes on them, and zero rows match
+    * nothing.
     */
   private def zoneMapRows(spark: SparkSession, files: Seq[String],
       cols: Seq[String]): DataFrame = {
     val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
       min(col(c).cast("long")).as(s"${c}__min"),
       max(col(c).cast("long")).as(s"${c}__max")))
-    val agged = graft.core.CacheScope.track(spark.read.parquet(files: _*)
+    perFileRows(spark, files, aggs)(0L +: cols.flatMap(_ => Seq(null, null)))
+  }
+
+  /** One row per listed file: `aggs` grouped by file, plus a
+    * `file +: fill` row for each file the aggregate never sees (a
+    * ZERO-ROW part file — an anti-join with an empty partition writes
+    * one), so the manifest's file set can never miss a file the
+    * staleness identity will demand. The aggregation runs ONCE: without
+    * the persist, the coverage collect and the caller's write each
+    * re-scanned every listed file. Metadata-scale frame; every caller
+    * ([[writeManifest]]/[[appendManifest]] and the bloom twins) opens
+    * its own [[CacheScope.withReleased]] bracket around build+write, so
+    * the persist releases when the maintenance call returns even when
+    * the application runs outside any bracket (LakeCli, ingest loops).
+    */
+  private def perFileRows(spark: SparkSession, files: Seq[String],
+      aggs: Seq[Column])(fill: => Seq[Any]): DataFrame = {
+    val agged = persist(spark.read.parquet(files: _*)
       .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .persist())
+      .agg(aggs.head, aggs.tail: _*))
     val covered = agged.select(col("file")).collect()
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
       .toSet
     val missing = files.filterNot(covered)
     if (missing.isEmpty) agged
     else agged.unionByName(spark.createDataFrame(
-      spark.sparkContext.parallelize(missing.map { f =>
-        org.apache.spark.sql.Row.fromSeq(
-          f +: 0L +: cols.flatMap(_ => Seq(null, null)))
-      }, 1), agged.schema))
+      spark.sparkContext.parallelize(
+        missing.map(f => org.apache.spark.sql.Row.fromSeq(f +: fill)), 1),
+      agged.schema))
   }
 
   def writeManifest(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
@@ -188,22 +194,32 @@ object Layout {
   private def swapPath(target: org.apache.hadoop.fs.Path) =
     new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.swap")
 
-  /** Heal a crashed [[writeSwapped]]: the swap's only loss window is
-    * "target deleted, complete `.swap` not yet renamed in" — if that is
-    * the on-disk state (swap dir complete per its `_SUCCESS` marker and
-    * no target), rename the swap into place so the next maintenance
-    * call or pruned read proceeds instead of failing until a manual
-    * rebuild. Called before every manifest read in the maintenance
-    * paths; one getFileStatus when the target exists (the normal case).
+  /** The manifest dir to read: the target, or — in a crashed
+    * [[writeSwapped]]'s only loss window, "target deleted, complete
+    * `.swap` not yet renamed in" — the `.swap` dir when its `_SUCCESS`
+    * marker says it is complete; None when neither exists. Read-only,
+    * so pruned reads proceed through the window without racing a
+    * writer's delete→rename. One exists() when the target is present
+    * (the normal case).
+    */
+  private def readableManifest(spark: SparkSession, manPath: String): Option[String] = {
+    val target = new org.apache.hadoop.fs.Path(manPath)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(target)) Some(manPath)
+    else Some(swapPath(target))
+      .filter(tmp => fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
+      .map(_.toString)
+  }
+
+  /** Heal a crashed [[writeSwapped]] by renaming the complete `.swap`
+    * into place. Only the write entry points call it ([[appendManifest]],
+    * [[appendBloomManifest]]); readers use [[readableManifest]].
     */
   private def healSwap(spark: SparkSession, manPath: String): Unit = {
     val target = new org.apache.hadoop.fs.Path(manPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) return
-    val tmp = swapPath(target)
-    if (fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      fs.rename(tmp, target)
-    ()
+    readableManifest(spark, manPath).filter(_ != manPath)
+      .foreach(swap => fs.rename(new org.apache.hadoop.fs.Path(swap), target))
   }
 
   private def writeSwapped(spark: SparkSession, rows: DataFrame,
@@ -215,8 +231,8 @@ object Layout {
     rows.write.mode("overwrite").parquet(tmp.toString)
     // the delete→rename window is two metadata ops back to back (the
     // distributed write happened above, into the scratch dir); a crash
-    // inside it leaves the complete .swap dir, which healSwap renames
-    // into place on the next maintenance call
+    // inside it leaves the complete .swap dir, which readers use as is
+    // and healSwap renames into place on the next maintenance call
     fs.delete(target, true)
     if (!fs.rename(tmp, target))
       throw new IllegalStateException(s"manifest swap to $manPath failed")
@@ -318,8 +334,8 @@ object Layout {
     // ONE collect serves both the staleness identity and the box
     // filter (the manifest is metadata-scale — one short row per
     // file); two separate collects were two Spark jobs per pruned read
-    healSwap(spark, s"$path/$ManifestDir")
-    val man = spark.read.parquet(s"$path/$ManifestDir")
+    val manPath = s"$path/$ManifestDir"
+    val man = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
     val cols = Seq("file") ++ boxes.flatMap { case (c, _, _) =>
       Seq(s"${c}__min", s"${c}__max") }
     val rows = man.select(cols.map(col): _*).collect()
@@ -346,8 +362,8 @@ object Layout {
     */
   def countFromManifest(spark: SparkSession, path: String): Long = {
     // one collect: staleness identity + the sum (metadata-scale rows)
-    healSwap(spark, s"$path/$ManifestDir")
-    val rows = spark.read.parquet(s"$path/$ManifestDir")
+    val manPath = s"$path/$ManifestDir"
+    val rows = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
       .select(col("file"), col("n_rows")).collect()
     val norm = rows
       .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
@@ -372,11 +388,8 @@ object Layout {
     * bloom-filter-index story, as one small table). One distributed
     * scan; `expectedPerFile`/`fpp` size the bit arrays.
     */
-  /** Per-file bloom rows for an explicit file list. Files the
-    * aggregate never sees — ZERO-ROW part files (an anti-join with an
-    * empty partition writes one) — get explicit empty-sketch rows, or
-    * the manifest would permanently miss them and every staleness
-    * check after would fail.
+  /** Per-file bloom rows for an explicit file list; zero-row part
+    * files get empty-sketch rows.
     */
   private def bloomRows(spark: SparkSession, files: Seq[String],
       cols: Seq[String], expected: Long, fpp: Double): DataFrame = {
@@ -384,31 +397,12 @@ object Layout {
       graft.functions.AggregateFunctions.bloomAgg(col(c), expected, fpp)
         .as(s"${c}__bloom")) :+
       lit(expected).as("__expected") :+ lit(fpp).as("__fpp"))
-    // persisted: the sketch aggregation runs once for the coverage
-    // check AND the caller's write (see zoneMapRows)
-    val agged = graft.core.CacheScope.track(spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .persist())
-    val covered = agged.select(col("file")).collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-      .toSet
-    val missing = files.filterNot(covered)
-    if (missing.isEmpty) agged
-    else {
-      val emptyBloom = {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.spark.util.sketch.BloomFilter.create(expected, fpp)
-          .writeTo(bos)
-        bos.toByteArray
-      }
-      val fill = spark.createDataFrame(
-        spark.sparkContext.parallelize(missing.map { f =>
-          org.apache.spark.sql.Row.fromSeq(
-            f +: 0L +: cols.map(_ => emptyBloom) :+ expected :+ fpp)
-        }, 1), agged.schema)
-      agged.unionByName(fill)
+    lazy val emptyBloom = {
+      val bos = new java.io.ByteArrayOutputStream()
+      org.apache.spark.util.sketch.BloomFilter.create(expected, fpp).writeTo(bos)
+      bos.toByteArray
     }
+    perFileRows(spark, files, aggs)(0L +: cols.map(_ => emptyBloom) :+ expected :+ fpp)
   }
 
   def writeBloomManifest(spark: SparkSession, path: String,
@@ -493,8 +487,8 @@ object Layout {
   private[graft] def bloomPrunedFilesIfFresh(spark: SparkSession, path: String,
       column: String, values: Seq[String]): Option[Seq[String]] = {
     require(values.nonEmpty, "a point-lookup prune needs probe values")
-    healSwap(spark, s"$path/$BloomManifestDir")
-    val man = spark.read.parquet(s"$path/$BloomManifestDir")
+    val manPath = s"$path/$BloomManifestDir"
+    val man = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
       .select(col("file"), col(s"${column}__bloom")).collect()
     val norm = man.map(r =>
       new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
@@ -550,11 +544,10 @@ object Layout {
       spark: SparkSession, path: String,
       boxes: Seq[(String, Long, Long)],
       knownLive: Option[Set[String]] = None): Option[(Seq[String], Long)] = {
-    val manPath = new org.apache.hadoop.fs.Path(s"$path/$ManifestDir")
-    val fs = manPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healSwap(spark, manPath.toString)
-    if (!fs.exists(manPath)) return None
-    val man = spark.read.parquet(manPath.toString)
+    val man = readableManifest(spark, s"$path/$ManifestDir") match {
+      case Some(p) => spark.read.parquet(p)
+      case None => return None
+    }
     val have = man.columns.toSet
     val usable = boxes.filter { case (c, _, _) =>
       have(s"${c}__min") && have(s"${c}__max")

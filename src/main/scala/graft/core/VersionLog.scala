@@ -94,7 +94,10 @@ object VersionLog {
     * because the key carries the version FILE's content identity
     * (modificationTime, length) — read off the same getFileStatus the
     * existence check already pays, so the hardening costs zero extra
-    * RPCs. Bounded LRU (access-order, 4096 records) so a long-lived
+    * RPCs. The identity is only as fine as the filesystem's mtime: a
+    * re-created table whose same-length version file lands within one
+    * mtime tick of the old one (a whole second on some stores) still
+    * hits the stale record. Bounded LRU (access-order, 4096 records) so a long-lived
     * service over many tables evicts cold records instead of dumping
     * the whole memo. Without the memo every snapshot/step/changeFeed
     * walk re-opened and re-parsed the same records — one RPC+parse per

@@ -3,6 +3,7 @@ package graft.curation
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
 import graft.dedup.Dedup
 import graft.text.TextFunctions
 
@@ -351,8 +352,7 @@ object Curation {
     // different action subtrees (the chain probe inside collapsePairs
     // fires first), so without the cache the scan + content-hash
     // aggregate + semi-join run twice end to end
-    val exactKept = graft.core.CacheScope.track(
-      docs.join(survivors, Seq(idCol), "left_semi").persist())
+    val exactKept = persist(docs.join(survivors, Seq(idCol), "left_semi"))
     val pairs = Dedup.jaccardPairs(exactKept, idCol, textCol, n, tau)
     val drops = Dedup.collapsePairs(pairs).select(col("drop").as(idCol))
     val kept = exactKept.join(drops, Seq(idCol), "left_anti")
@@ -785,11 +785,10 @@ object Curation {
     */
   def sourceDivergence(
       df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
-    val cnt = graft.core.CacheScope.track(
+    val cnt = persist(
       df.select(col(sourceCol).as("src"),
           explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
-        .groupBy(col("src"), col("w")).agg(count(lit(1)).as("c"))
-        .persist())
+        .groupBy(col("src"), col("w")).agg(count(lit(1)).as("c")))
     val tot = cnt.groupBy(col("src")).agg(sum(col("c")).as("n"))
     val vocab = cnt.agg(countDistinct(col("w")).as("v"))
     val rows = cnt.select(col("src").as("sa"), col("w"), col("c").as("ca"))
@@ -1017,10 +1016,9 @@ object Curation {
     // both stats joins) — without the cache each reference re-runs
     // the corpus tokenize+explode (the KN sibling persists its bigram
     // table for the same reason)
-    val uni = graft.core.CacheScope.track(
+    val uni = persist(
       df.select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-        .persist())
+        .groupBy(col("w")).agg(count(lit(1)).as("c")))
     val totals = uni.agg(sum(col("c")).as("n"), count(lit(1)).as("v"))
     val bi = pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
     val stats = bi
@@ -1060,13 +1058,10 @@ object Curation {
       minCount: Int, k: Int): DataFrame = {
     require(minCount >= 1 && k >= 1)
     val pairs = bigramPairs(df, idCol, textCol)
-    val uni = graft.core.CacheScope.track(
+    val uni = persist(
       df.select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c"))
-        .persist())
-    val bi = graft.core.CacheScope.track(
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-        .persist())
+        .groupBy(col("w")).agg(count(lit(1)).as("c")))
+    val bi = persist(pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val totals = uni.agg(sum(col("c")).as("nu"))
       .crossJoin(bi.agg(sum(col("c12")).as("nb")))
     bi.filter(col("c12") >= minCount)
@@ -1106,9 +1101,8 @@ object Curation {
       discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1, "absolute discount must be in (0,1)")
     val pairs = bigramPairs(df, idCol, textCol)
-    val bi = graft.core.CacheScope.track(
-      pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-        .persist()) // model-sized; four rollups below would re-tokenize the corpus
+    // model-sized; four rollups below would re-tokenize the corpus
+    val bi = persist(pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val left = bi.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))
     val right = bi.groupBy(col("w2")).agg(count(lit(1)).as("n1b"))
@@ -1408,8 +1402,7 @@ object Curation {
     // caller's score expression (q166 feeds a full quality-score
     // pipeline), and the rank-bucket fold would inline it per boundary
     // (the q167 duplication hazard, see GlobalRanks).
-    val base = graft.core.CacheScope.track(
-      scored.select(col(idCol), col(sourceCol), col(scoreCol)).persist())
+    val base = persist(scored.select(col(idCol), col(sourceCol), col(scoreCol)))
     val ws = org.apache.spark.sql.expressions.Window
       .partitionBy(col(sourceCol))
       .orderBy(col(scoreCol).asc, col(idCol).asc)

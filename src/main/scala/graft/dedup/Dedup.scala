@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
 import graft.text.TextFunctions
 
 /** Deduplication operators for training-data pipelines, at three
@@ -61,10 +62,10 @@ object Dedup {
     * candidate-pair set shrinks ~4× (measured sf0.1: 1.13 M → 430 k)
     * and the per-pair work is one merge walk instead of a grouped
     * count riding a 1.3 M-row shuffle. The positional filter then
-    * halves the survivors again (430 k → 211 k measured — Scratch
-    * `candprobe`): invisible at sf0.1 where the verify is cheap, a 2×
-    * cut of the candidate shuffle + merge-verify stage at corpus
-    * scale, where that stage dominates.
+    * halves the survivors again (430 k → 211 k measured): invisible
+    * at sf0.1 where the verify is cheap, a 2× cut of the candidate
+    * shuffle + merge-verify stage at corpus scale, where that stage
+    * dominates.
     *
     * @param maxShingleDocFreq drop shingles occurring in more than this
     *   many docs from the CANDIDATE join (exactness caveat documented:
@@ -83,11 +84,10 @@ object Dedup {
     // hot-shingle df pass, and (plan-identical, CacheManager-deduped)
     // the exact verify's two array joins — one tokenize+sort pass
     // total instead of four
-    val arrs = graft.core.CacheScope.track(
+    val arrs = persist(
       df.select(col(idCol).as("doc"),
         graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs"))
-      .persist())
+      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
     val prefixLen = (col("nsh") - ceil(col("nsh") * tau - eps) + 1).cast("int")
     // posexplode: the 1-based prefix position feeds PPJoin's positional
     // filter below
@@ -419,8 +419,7 @@ object Dedup {
     // persisted: both sides of the term self-join derive from it —
     // without the cache the tokenize + tf/df aggregates + idf join run
     // once per side
-    val idx = graft.core.CacheScope.track(
-      weighted0.join(norms, Seq("doc")).persist())
+    val idx = persist(weighted0.join(norms, Seq("doc")))
     idx.as("l").join(idx.as("r").hint("shuffle_hash"), col("l.t") === col("r.t"))
       .filter(col("l.doc") < col("r.doc"))
       .groupBy(col("l.doc").as("doc_a"), col("l.n2").as("na"),
@@ -483,10 +482,9 @@ object Dedup {
     val sh = df.select(col(idCol).as("doc"), TextFunctions.shingles(col(textCol), n).as("sh"))
     // persisted: both sides of the bucket self-join derive from it —
     // without the cache the corpus shingles + minhashes twice
-    val buckets0 = graft.core.CacheScope.track(sh.select(
+    val buckets0 = persist(sh.select(
       col("doc"),
-      explode(lshBandKeys(col("sh"), numHashes, bands)).as("bucket"))
-      .persist())
+      explode(lshBandKeys(col("sh"), numHashes, bands)).as("bucket")))
     val buckets = graft.core.Skew.dropHotKeys(buckets0, "bucket", maxBucketDocFreq)
     val candidates = buckets.as("l")
       .join(buckets.as("r").hint("shuffle_hash"), col("l.bucket") === col("r.bucket"))
@@ -521,11 +519,10 @@ object Dedup {
     // re-tokenizes + re-sorts once per reference (4× per jaccardPairs
     // call). Spark's CacheManager dedups plan-identical caches, so a
     // caller that persisted the same construction shares this entry.
-    val arrs = graft.core.CacheScope.track(
+    val arrs = persist(
       df.select(col(idCol).as("doc"),
         graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs"))
-      .persist())
+      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
     candidates
       .join(arrs.select(col("doc").as("doc_a"), col("nsh").as("na"), col("shs").as("sa")), "doc_a")
       .join(arrs.select(col("doc").as("doc_b"), col("nsh").as("nb"), col("shs").as("sb")), "doc_b")
@@ -568,11 +565,10 @@ object Dedup {
     // persisted: prefix side, full side, and the df pass all derive
     // from it (plus the verify's plan-identical joins) — see
     // jaccardPairs
-    val arrs = graft.core.CacheScope.track(
+    val arrs = persist(
       df.select(col(idCol).as("doc"),
         graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs"))
-      .persist())
+      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
     val prefixLen = (col("nsh") - ceil(col("nsh") * tau - eps) + 1).cast("int")
     val pfx0 = arrs.select(col("doc"), col("nsh"),
         posexplode(slice(col("shs"), lit(1), prefixLen)).as(Seq("p0", "sh")))
@@ -652,16 +648,15 @@ object Dedup {
     val mask = (1L << width) - 1
     val sh = df.select(col(idCol).as("doc"), TextFunctions.shingles(col(textCol), n).as("sh"))
       .withColumn("sim", simhash60(col("sh")))
-    val pieceKeys0 = graft.core.CacheScope.track(sh.select(
+    // persisted: both sides of the piece self-join derive from it —
+    // without the cache the corpus shingles + simhashes twice
+    val pieceKeys0 = persist(sh.select(
       col("doc"), col("sim"),
       explode(array((0 until pieces).map { p =>
         concat_ws(":", lit(p),
           shiftrightunsigned(col("sim"), p * width).bitwiseAND(mask))
       }: _*)).as("piece"))
-      .select(col("doc"), col("sim"), col("piece"))
-      // persisted: both sides of the piece self-join derive from it —
-      // without the cache the corpus shingles + simhashes twice
-      .persist())
+      .select(col("doc"), col("sim"), col("piece")))
     val pieceKeys = graft.core.Skew.dropHotKeys(pieceKeys0, "piece", maxBucketDocFreq)
     val candidates = pieceKeys.as("l")
       .join(pieceKeys.as("r").hint("shuffle_hash"), col("l.piece") === col("r.piece"))
@@ -1143,10 +1138,9 @@ object Dedup {
     // persisted: both sides of the piece self-join derive from the
     // keyed rows — without the cache the caller's fingerprint pipeline
     // (media decode, simhash) evaluates once per side
-    val keyed = graft.core.CacheScope.track(
+    val keyed = persist(
       df.select(col(idCol).as("id"), col(fpCol).cast("long").as("fp"))
-        .select(col("id"), col("fp"), explode(array(pieceCols: _*)).as("bucket"))
-        .persist())
+        .select(col("id"), col("fp"), explode(array(pieceCols: _*)).as("bucket")))
     val b = graft.core.Skew.dropHotKeys(keyed, "bucket", maxBucketDocFreq)
     b.as("l")
       .join(b.as("r").hint("shuffle_hash"), col("l.bucket") === col("r.bucket"))
@@ -1177,15 +1171,15 @@ object Dedup {
     * Cache lifecycle: above the local threshold the returned labels
     * stay persisted (the caller's consumption reads them). Consume
     * inside [[graft.core.CacheScope.withReleased]] and the storage is
-    * released when the bracket closes; outside a bracket, release with
-    * unpersist/clearCache when done, like the collapse family's
-    * survivor maps.
+    * released when the bracket closes; a harness that owns the session
+    * sweeps unbracketed calls with [[graft.core.CacheScope.releaseAll]].
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 64,
       localLimit: Long = LocalResolveRows): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
-      .unionByName(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
-      .distinct().persist()
+    val edges = persist(
+      pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
+        .unionByName(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
+        .distinct())
     // size-adaptive local fast path (see LocalResolveRows): a bounded
     // edge set resolves with one collect + union-find instead of
     // per-round probe/join jobs whose scheduling floor dwarfs the data
@@ -1249,10 +1243,9 @@ object Dedup {
         org.apache.spark.sql.types.StructField("component_id", idType)))
       return spark.createDataFrame(out, schema)
     }
-    var labels = edges.groupBy(col("x"))
+    var labels = persist(edges.groupBy(col("x"))
       .agg(min(col("y")).as("_mn"))
-      .select(col("x").as("node"), least(col("x"), col("_mn")).as("label"))
-      .persist()
+      .select(col("x").as("node"), least(col("x"), col("_mn")).as("label")))
     var changed = true
     var it = 0
     while (changed && it < maxIters) {
@@ -1264,11 +1257,10 @@ object Dedup {
           least(col("label"), coalesce(col("_nmin"), col("label"))).as("label"))
       // compression: a label is itself a node id of the component, so
       // label-of-label is defined and never larger
-      val jumped = stepped
+      val jumped = persist(stepped
         .join(stepped.select(col("label").as("_pl"), col("node").as("label")),
           Seq("label"), "left")
-        .select(col("node"), coalesce(col("_pl"), col("label")).as("label"))
-        .persist()
+        .select(col("node"), coalesce(col("_pl"), col("label")).as("label")))
       changed = !jumped.select(col("node"), col("label").as("_new"))
         .join(labels.select(col("node"), col("label").as("_old")), Seq("node"))
         .filter(col("_new") =!= col("_old")).isEmpty
@@ -1283,7 +1275,6 @@ object Dedup {
     require(!changed,
       s"connectedComponents did not converge within $maxIters rounds")
     edges.unpersist(blocking = false)
-    graft.core.CacheScope.track(labels)
     labels.select(col("node").as("doc_id"), col("label").as("component_id"))
   }
 
@@ -1350,7 +1341,8 @@ object Dedup {
     *
     * Cache lifecycle: the returned mapping stays persisted for the
     * caller's consumption; a [[graft.core.CacheScope.withReleased]]
-    * bracket around build-and-consume releases it deterministically.
+    * bracket around build-and-consume releases it deterministically,
+    * and [[graft.core.CacheScope.releaseAll]] sweeps unbracketed calls.
     */
   /** Survivor maps at or under this row count resolve driver-side (one
     * collect + an in-memory walk) instead of spawning per-round probe
@@ -1368,7 +1360,7 @@ object Dedup {
     // map once, and every later pass plus the caller's own consumption
     // read the cache — without it each probe would re-run the whole
     // upstream pair generation.
-    var mapping = mapping0.persist()
+    var mapping = persist(mapping0)
     val n = mapping.count()
     if (n <= localLimit) {
       val rows = mapping.collect()
@@ -1413,14 +1405,14 @@ object Dedup {
     while (guard < 64 && hasChain(mapping)) {
       prev.foreach(_.unpersist(blocking = false))
       prev = Some(mapping)
-      mapping = mapping.join(parents(mapping), Seq("keep"), "left")
-        .select(coalesce(col("_parent"), col("keep")).as("keep"), col("drop"))
-        .persist()
+      mapping = persist(
+        mapping.join(parents(mapping), Seq("keep"), "left")
+          .select(coalesce(col("_parent"), col("keep")).as("keep"), col("drop")))
       guard += 1
     }
     // the loop condition materialized the returned mapping's cache, so
     // the second-to-last generation can release its storage
     prev.foreach(_.unpersist(blocking = false))
-    graft.core.CacheScope.track(mapping)
+    mapping
   }
 }

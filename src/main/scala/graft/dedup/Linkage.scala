@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** Record linkage (entity resolution) in the classic Fellegi–Sunter
   * shape: MULTI-PASS BLOCKING proposes candidate pairs cheaply, then
   * per-field agreement comparisons vote with log-odds-style integer
@@ -115,8 +117,7 @@ object Linkage {
     // persisted: both join legs below derive from the ranked frame —
     // without the cache the whole global-numbering pipeline (window
     // included) runs once per leg
-    val withB = graft.core.CacheScope.track(
-      ranked.withColumn("__b", expr(s"__rn div ${window}L")).persist())
+    val withB = persist(ranked.withColumn("__b", expr(s"__rn div ${window}L")))
     val probe = withB
       .select(col("__id"), col("__side"), col("__rn"),
         explode(array(col("__b") - 1, col("__b"), col("__b") + 1)).as("__b"))

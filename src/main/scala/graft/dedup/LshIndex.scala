@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
 import graft.text.TextFunctions
 
 /** On-disk MinHash-LSH index: write-once / probe-many near-duplicate
@@ -124,11 +125,10 @@ object LshIndex {
     // candidate join; without the cache the batch re-shingles per
     // consumer. Registered with CacheScope, released by the caller's
     // bracket.
-    val bBuckets = graft.core.CacheScope.track(
+    val bBuckets = persist(
       bsh.select(col("new_id"),
           explode(Dedup.lshBandKeys(col("sh"), m.numHashes, m.bands)).as("bucket"))
-        .withColumn("pb", pb(col("bucket"), m.numPartitions))
-        .persist())
+        .withColumn("pb", pb(col("bucket"), m.numPartitions)))
     // bounded collect: at most numPartitions distinct values
     val pbs = bBuckets.select(col("pb")).distinct()
       .collect().map(_.getInt(0)).sorted
@@ -137,11 +137,10 @@ object LshIndex {
     val guarded = graft.core.Skew.dropHotKeys(idx, "bucket", maxBucketDocFreq)
     // persisted: candidates feed the bounded sb-collect AND the verify
     // join — without the cache the pruned posting join runs twice
-    val candidates = graft.core.CacheScope.track(guarded
+    val candidates = persist(guarded
       .join(broadcast(bBuckets.select(col("new_id"), col("bucket"))), Seq("bucket"))
       .select(col("doc").as("ref_id"), col("new_id"))
-      .distinct()
-      .persist())
+      .distinct())
     // prune the signature scan to the candidates' id-hash partitions —
     // without this every probe scans the corpus-sized sigs table (the
     // shs array column is the fat one); bounded collect (≤ sigParts)
@@ -190,14 +189,12 @@ object LshIndex {
     // ONE shingle pass over the deleted set, persisted: pbs, sbs and
     // both anti-joins otherwise each re-scan (and re-shingle) the
     // takedown join — the same argument as probe's cached batch. The
-    // persist is self-managed (released in finally), so delete works
-    // outside any CacheScope bracket.
-    val del = docs.select(col(idCol).as("doc"),
-      explode(Dedup.lshBandKeys(
-        TextFunctions.shingles(col(textCol), m.n), m.numHashes, m.bands))
-        .as("bucket"))
-      .persist()
-    try {
+    // bracket is delete's own, so delete works outside any caller's.
+    graft.core.CacheScope.withReleased {
+      val del = persist(docs.select(col(idCol).as("doc"),
+        explode(Dedup.lshBandKeys(
+          TextFunctions.shingles(col(textCol), m.n), m.numHashes, m.bands))
+          .as("bucket")))
       // bounded collects (≤ numPartitions values each)
       val pbs = del
         .select(pb(col("bucket"), m.numPartitions).as("p"))
@@ -210,7 +207,7 @@ object LshIndex {
         spark, s"$path/buckets", "pb", pbs, "doc", ids)
       graft.core.PartitionedStore.deleteKeysFromPartitions(
         spark, s"$path/sigs", "sb", sbs, "doc", ids)
-    } finally del.unpersist()
+    }
   }
 
   private def pb(bucket: org.apache.spark.sql.Column, parts: Int) =
@@ -226,18 +223,17 @@ object LshIndex {
     // the cache the sigs write re-tokenized the whole input a second
     // time (measured ~2× the build cost at sf0.1). Spillable storage
     // (MEMORY_AND_DISK default), released in the bracket.
-    val sh = df.select(col(idCol).as("doc"),
-      TextFunctions.shingles(col(textCol), n).as("sh"),
-      graft.functions.SketchFunctions
-        .sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .persist()
-    // repartition ON the layout key before each partitionBy write: a
-    // dynamic-partition write from K input tasks lands up to
-    // K × numPartitions part files (one per task per partition value —
-    // the small-file explosion every probe/delete pays per file
-    // forever); clustered by the key, each pb/sb directory gets files
-    // from exactly one task (Iceberg's hash write-distribution mode).
-    try {
+    graft.core.CacheScope.withReleased {
+      val sh = persist(df.select(col(idCol).as("doc"),
+        TextFunctions.shingles(col(textCol), n).as("sh"),
+        graft.functions.SketchFunctions
+          .sorted_shingle_hashes(col(textCol), n).as("shs")))
+      // repartition ON the layout key before each partitionBy write: a
+      // dynamic-partition write from K input tasks lands up to
+      // K × numPartitions part files (one per task per partition value —
+      // the small-file explosion every probe/delete pays per file
+      // forever); clustered by the key, each pb/sb directory gets files
+      // from exactly one task (Iceberg's hash write-distribution mode).
       sh.select(col("doc"),
           explode(Dedup.lshBandKeys(col("sh"), numHashes, bands)).as("bucket"))
         .withColumn("pb", pb(col("bucket"), numPartitions))
@@ -249,7 +245,7 @@ object LshIndex {
         .withColumn("sb", pb(col("doc").cast("string"), numPartitions))
         .repartition(col("sb"))
         .write.mode(mode).partitionBy("sb").parquet(s"$path/sigs")
-    } finally { sh.unpersist(blocking = false); () }
+    }
   }
 
   /** The sketch parameters an index was built with (from `_meta/`). */

@@ -3,6 +3,9 @@ package graft.eth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
+import graft.core.CacheScope
+import graft.core.CacheScope.persist
+
 /** Thin CLI mirroring the reference's extractor commands
   * (/root/reference/extractor.py:6-25) over the Spark pipeline. The
   * command set maps 1:1; commands that need external adapters
@@ -41,11 +44,11 @@ class Cli(
         .join(have, Seq("id"), "left_anti")
       // Persist: the fetch is a non-deterministic network mapPartitions;
       // without it the append and the count would each run the fan-out.
-      val fetched = ContractMethods.fetchAbis(spark, need, src).persist()
-      try {
+      CacheScope.withReleased {
+        val fetched = persist(ContractMethods.fetchAbis(spark, need, src))
         store.append("contract_abi", fetched, now())
         fetched.count()
-      } finally fetched.unpersist(blocking = false)
+      }
   }
 
   /** extract-tokens: probe ERC-20 constants for new token contracts. */
@@ -59,15 +62,15 @@ class Cli(
         .select(col("address"))
       // Persist: one eth_call probe pass total — the append materializes
       // the cache, the count reads it back.
-      val described = ContractMethods.describeContracts(spark, need, src).persist()
-      try {
+      CacheScope.withReleased {
+        val described = persist(ContractMethods.describeContracts(spark, need, src))
         val withMeta = tokensMetadata match {
           case Some(tokens) => ContractMethods.withTokenMetadata(described, tokens)
           case None => described
         }
         store.append("contract_description", withMeta, now())
         described.count()
-      } finally described.unpersist(blocking = false)
+      }
   }
 
   /** download-prices: fetch daily close series for ERC-20 tokens and
@@ -87,11 +90,11 @@ class Cli(
         _.asInstanceOf[java.sql.Timestamp].toLocalDateTime.toLocalDate)
       val days = Prices.gapDays(lastDate, today())
       // Persist: one feed pass total (append materializes, count reads back)
-      val fetched = Prices.fetchDailyPrices(spark, tokens, src, days).persist()
-      try {
+      CacheScope.withReleased {
+        val fetched = persist(Prices.fetchDailyPrices(spark, tokens, src, days))
         store.append("price", Prices.priceRows(fetched), now())
         fetched.count()
-      } finally fetched.unpersist(blocking = false)
+      }
   }
 
   /** `POST /balances/` (server.py:8-12) as a library call: the

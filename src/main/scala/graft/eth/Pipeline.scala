@@ -3,7 +3,8 @@ package graft.eth
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Joins
+import graft.core.{CacheScope, Joins}
+import graft.core.CacheScope.persist
 
 /** Chain-data source boundary. Production backs these with JSON-RPC
   * `mapPartitions` adapters; tests back them with fixture DataFrames
@@ -182,16 +183,15 @@ class Pipeline(store: EthStore, source: ChainSource,
     val itx = store.tableFinal("internal_transaction")
       .filter(col("blockNumber") <= maxBlock && col("input").isNotNull)
     val (work, keyedHw) = abiDecodeWork("to", flagName, itx)
-    // Persist: the append materializes the decode once; the returned
-    // count reads the cache instead of re-running the ABI decode + join.
-    val decoded = work.select(
-      col("id"),
-      Abi.decode_input(col("abi"), col("input")).as("d"),
-      col("blockNumber"))
-      .select(col("id"), col("d.name").as("name"), col("d.params").as("params"),
+    CacheScope.withReleased {
+      // Persist: the append materializes the decode once; the returned
+      // count reads the cache instead of re-running the ABI decode + join.
+      val decoded = persist(work.select(
+        col("id"),
+        Abi.decode_input(col("abi"), col("input")).as("d"),
         col("blockNumber"))
-      .persist()
-    try {
+        .select(col("id"), col("d.name").as("name"), col("d.params").as("params"),
+          col("blockNumber")))
       store.append("transaction_input", decoded, now())
       // High-water marks written distributed — at mainnet scale this is
       // millions of contract ids; they never transit the driver.
@@ -200,7 +200,7 @@ class Pipeline(store: EthStore, source: ChainSource,
           lit(maxBlock).as("value")),
         now())
       decoded.count()
-    } finally decoded.unpersist(blocking = false)
+    }
   }
 
   /** B16: same decode over events, via the reconstructed pseudo-input. */
@@ -211,21 +211,20 @@ class Pipeline(store: EthStore, source: ChainSource,
     val events = store.tableFinal("event")
       .filter(col("blockNumber") <= maxBlock)
     val (work, keyedHw) = abiDecodeWork("address", flagName, events)
-    val decoded = work.select(
-      col("id"),
-      Abi.decode_input(col("abi"), Events.reconstructedInput).as("d"),
-      col("blockNumber"))
-      .select(col("id"), col("d.name").as("name"), col("d.params").as("params"),
+    CacheScope.withReleased {
+      val decoded = persist(work.select(
+        col("id"),
+        Abi.decode_input(col("abi"), Events.reconstructedInput).as("d"),
         col("blockNumber"))
-      .persist()
-    try {
+        .select(col("id"), col("d.name").as("name"), col("d.params").as("params"),
+          col("blockNumber")))
       store.append("event_input", decoded, now())
       store.append("contract_block",
         keyedHw.select(col("address").as("id"), lit(flagName).as("name"),
           lit(maxBlock).as("value")),
         now())
       decoded.count()
-    } finally decoded.unpersist(blocking = false)
+    }
   }
 
   /** One `start`-equivalent pass (clickhouse.py:151-159): sync to head,

@@ -338,16 +338,31 @@ object SketchOps {
     acc
   }
 
+  /** Equal lengths and no null element: the inputs on which the
+    * `aggregate(zip_with(...))` folds [[dotQ9]] and [[l2sq]] replace
+    * are not NULL.
+    */
+  def zippable(a: ArrayData, b: ArrayData): Boolean = {
+    val n = a.numElements()
+    if (n != b.numElements()) return false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i) || b.isNullAt(i)) return false
+      i += 1
+    }
+    true
+  }
+
   /** Quantized dot product: Σ floor(a_i·b_i·1e9 + 0.5) as an exact
     * int64 — bit-identical to the HOF chain
     * `aggregate(zip_with(a,b,(x,y)=>floor(x*y*1e9+0.5)), 0L, _+_)`
     * (Spark's floor on a double is math.floor(...).toLong; long
     * addition is exact and order-free), which as an interpreted lambda
     * (CodegenFallback) was the per-row hot loop of every logistic-
-    * regression gradient step and score.
+    * regression gradient step and score. Requires [[zippable]] inputs.
     */
   def dotQ9(a: ArrayData, b: ArrayData): Long = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0L
     var i = 0
     while (i < n) {
@@ -362,10 +377,10 @@ object SketchOps {
     * `aggregate(zip_with(a,b,(x,y)=>(x-y)*(x-y)), 0.0, _+_)` (each term
     * is a square, so the fold's `0.0 + t1` start adds nothing IEEE-
     * visible) and to DuckDB's `list_sum(list_transform(...))` replay
-    * the PQ oracles rely on.
+    * the PQ oracles rely on. Requires [[zippable]] inputs.
     */
   def l2sq(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {

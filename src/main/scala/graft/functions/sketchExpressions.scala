@@ -228,16 +228,22 @@ case class ArrayDot(left: Expression, right: Expression)
   * differences (oracle-deterministic — see SketchOps.l2sq). The
   * compiled replacement for the PQ plane's `aggregate(zip_with(...))`
   * block distance, which as a higher-order lambda ran interpreted
-  * (CodegenFallback) in the encode hot path.
+  * (CodegenFallback) in the encode hot path. NULL on unequal lengths or
+  * a null element, like the fold it replaces.
   */
 case class ArrayL2Sq(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchOps.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (SketchOps.zippable(x, y)) SketchOps.l2sq(x, y) else null
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchOps.l2sq($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.SketchOps.zippable($a, $b);\n" +
+        s"if (!${ev.isNull}) ${ev.value} = graft.functions.SketchOps.l2sq($a, $b);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "array_l2sq"
@@ -245,16 +251,22 @@ case class ArrayL2Sq(left: Expression, right: Expression)
 
 /** `array_dot_q9(a, b)` → Long: Σ floor(a_i·b_i·1e9 + 0.5), the exact
   * fixed-point dot the logistic-regression plane ranks and trains on
-  * (see SketchOps.dotQ9 for the bit-identity argument).
+  * (see SketchOps.dotQ9 for the bit-identity argument). NULL on unequal
+  * lengths or a null element, like the fold it replaces.
   */
 case class ArrayDotQ9(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = LongType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchOps.dotQ9(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (SketchOps.zippable(x, y)) SketchOps.dotQ9(x, y) else null
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchOps.dotQ9($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.SketchOps.zippable($a, $b);\n" +
+        s"if (!${ev.isNull}) ${ev.value} = graft.functions.SketchOps.dotQ9($a, $b);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "array_dot_q9"

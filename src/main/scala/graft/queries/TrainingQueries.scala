@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.CacheScope.persist
 import graft.curation.Curation
 import graft.dedup.{Dedup, Linkage}
 import graft.multimodal.Multimodal
@@ -1029,8 +1030,7 @@ object TrainingQueries {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
-      val pairs = graft.core.CacheScope.track(
-        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5).persist())
+      val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
       val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       graft.core.Graph.pageRank(docs.select(col("doc_id").as("id")), edges, iters = 5)
@@ -1271,8 +1271,7 @@ object TrainingQueries {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
-      val pairs = graft.core.CacheScope.track(
-        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5).persist())
+      val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
       val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       graft.core.Graph.pageRankPersonalized(
@@ -1290,8 +1289,7 @@ object TrainingQueries {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
-      val pairs = graft.core.CacheScope.track(
-        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5).persist())
+      val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
       val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       val labels = docs.select(col("doc_id").as("id"),
@@ -1458,10 +1456,9 @@ object TrainingQueries {
       // its bucket fold references `quality` once per boundary — the
       // cache evaluates the quality-score pipeline once per row
       // instead of ~35 times (the q167 inlining hazard)
-      val scored = graft.core.CacheScope.track(t(s, dir, "documents")
+      val scored = persist(t(s, dir, "documents")
         .select(col("doc_id"),
-          TextFunctions.qualityScore(col("text")).as("quality"))
-        .persist())
+          TextFunctions.qualityScore(col("text")).as("quality")))
       val (ranked, _) = graft.core.GlobalRanks.withGlobalRowNumber(
         scored, col("quality"), descending = false,
         tieBreak = Seq(col("doc_id")), out = "rn")
@@ -1927,10 +1924,9 @@ object TrainingQueries {
       // interpreted sigmoid pipeline into every reference — measured
       // 169 CPU-seconds in one 32-task stage at sf0.1. Materialized
       // once, the comparisons are codegen over a cached double.
-      val lab = graft.core.CacheScope.track(scores
+      val lab = persist(scores
         .join(docs.select(col("doc_id"),
-          (col("lang") === "en").cast("long").as("y")), "doc_id")
-        .persist())
+          (col("lang") === "en").cast("long").as("y")), "doc_id"))
       graft.core.GlobalRanks.ntileExact(lab, 10, col("score"),
         descending = false, tieBreak = Seq(col("doc_id")), out = "bin")
         .groupBy(col("bin"))
@@ -2038,8 +2034,7 @@ object TrainingQueries {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
-      val pairs = graft.core.CacheScope.track(
-        Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5).persist())
+      val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
       val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       graft.core.Graph.coreness(
@@ -2221,9 +2216,9 @@ object TrainingQueries {
     "q123_components_incremental" -> ((s, dir) => {
       // persisted: the standing/batch split filters the pair pipeline
       // twice — one candidate-join + verify instead of two
-      val pairs = graft.core.CacheScope.track(
+      val pairs = persist(
         Dedup.jaccardPairs(t(s, dir, "documents"), "doc_id", "text",
-          n = 3, tau = 0.5).select(col("doc_a"), col("doc_b")).persist())
+          n = 3, tau = 0.5).select(col("doc_a"), col("doc_b")))
       val split = pmod(xxhash64(col("doc_a"), col("doc_b")), lit(2))
       val standing = Dedup.connectedComponents(pairs.filter(split === 0))
       Dedup.connectedComponentsIncremental(standing, pairs.filter(split === 1))

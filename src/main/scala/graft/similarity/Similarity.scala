@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** Similarity search over an embedding column (`Array[Float]`):
   * brute-force cosine top-k as the exact baseline, and a random-
   * hyperplane LSH bucketed variant as the scale path.
@@ -305,8 +307,8 @@ object Similarity {
     // deterministic seed: the same md5-sampled quantizer ivfTopK
     // defaults to
     var cent = seedCentroids(corpus, nlist)
-    val c = corpus.withColumn("c_norm", norm(col("c_emb"))).persist()
-    try {
+    graft.core.CacheScope.withReleased {
+      val c = persist(corpus.withColumn("c_norm", norm(col("c_emb"))))
       for (_ <- 1 to iters) {
         val centLocal = cent.collect().map(r =>
           (r.getLong(0), r.getSeq[Double](1))) // nlist rows — bounded
@@ -335,7 +337,7 @@ object Similarity {
       val finalCent = cent.collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
       spark.createDataFrame(spark.sparkContext.parallelize(finalCent.toSeq, 1))
         .toDF("cent_id", "cent_emb")
-    } finally c.unpersist(blocking = false)
+    }
   }
 
   def ivfTopK(
@@ -510,7 +512,7 @@ object Similarity {
     // collect below and the scoring join — without it the query×
     // centroid stage would run twice. Bounded: |Q|·nprobe rows, the
     // small side by this operator's premise.
-    graft.core.CacheScope.track(probes.persist())
+    persist(probes)
     // bounded collect: the probed-cell union is at most nlist values
     val probedLists = probes.select(col("list_id")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -678,19 +680,18 @@ object Similarity {
     // persisted: the symmetrized union references the pair pipeline
     // twice, and the mutuality join references the kNN window twice —
     // without the caches the candidate generation runs up to 4×
-    val pairs = graft.core.CacheScope.track(
+    val pairs = persist(
       candidates.map(_.filter(col("cos") >= tau))
-        .getOrElse(cosinePairsExact(df, idCol, embCol, tau)).persist())
+        .getOrElse(cosinePairsExact(df, idCol, embCol, tau)))
     val directed = pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
       .unionByName(pairs
         .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
     val w = Window.partitionBy(col("src")).orderBy(col("cos").desc, col("dst"))
-    val knn = graft.core.CacheScope.track(
+    val knn = persist(
       directed.withColumn("rank", row_number().over(w))
         .filter(col("rank") <= k)
-        .select(col("src"), col("dst"), col("cos"))
-        .persist())
+        .select(col("src"), col("dst"), col("cos")))
     val rev = knn.select(col("dst").as("src"), col("src").as("dst"))
     knn.join(rev, Seq("src", "dst"))
       .filter(col("src") < col("dst"))
@@ -850,12 +851,11 @@ object Similarity {
     // (norms would recompute per reference), keyed0 feeds both sides
     // of the bucket self-join (the hyperplane signatures would
     // recompute per side)
-    val base = graft.core.CacheScope.track(
+    val base = persist(
       df.select(col(idCol).as("id"), col(embCol).as("emb"))
-        .withColumn("nrm", norm(col("emb"))).persist())
-    val keyed0 = graft.core.CacheScope.track(base.select(col("id"),
-      explode(lshBandBuckets(col("emb"), planesPerBand, bands, dim)).as("bucket"))
-      .persist())
+        .withColumn("nrm", norm(col("emb"))))
+    val keyed0 = persist(base.select(col("id"),
+      explode(lshBandBuckets(col("emb"), planesPerBand, bands, dim)).as("bucket")))
     // df-cap guard, same semantics as Dedup.minhashLshPairs: a dense
     // embedding region (boilerplate docs collapse to one point, so one
     // sign pattern) fills a bucket and its pair fan-out is |bucket|² —

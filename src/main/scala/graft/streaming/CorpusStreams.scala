@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.core.CacheScope.persist
+
 /** A novel (first-seen) document surviving streaming dedup:
   * `fp` = content fingerprint, `batchDups` = duplicates suppressed
   * from the same micro-batch that introduced it.
@@ -128,7 +130,7 @@ object CorpusStreams {
     graft.core.CacheScope.withReleased {
       // the batch feeds four consumers (probe, pair gen, anti-join,
       // append); persist once, release with the bracket
-      val b = graft.core.CacheScope.track(batch.persist())
+      val b = persist(batch)
       val crossDrops = graft.dedup.LshIndex.probe(
           spark, indexPath, b, idCol, textCol, tau, maxBucketDocFreq)
         .select(col("new_id").as(idCol))

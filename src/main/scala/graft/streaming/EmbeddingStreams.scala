@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
 import graft.similarity.Similarity
 
 /** Streaming SEMANTIC dedup against an on-disk IVF index — the
@@ -49,15 +50,14 @@ object EmbeddingStreams {
         .select(col("cent_id"), col("cent_emb"))
         .withColumn("cent_norm", Similarity.norm(col("cent_emb")))
       val b = batch.withColumn("c_norm", Similarity.norm(col("c_emb")))
-      val assigned = graft.core.CacheScope.track(
+      val assigned = persist(
         graft.core.Joins.lastByKey(
             b.crossJoin(broadcast(centN))
               .withColumn("a_score", Similarity.cosineWithNorms(
                 col("c_emb"), col("cent_emb"), col("c_norm"), col("cent_norm"))),
             Seq("c_id"), Seq(col("a_score"), -col("cent_id")))
           .select(col("cent_id").as("list_id"), col("c_id"),
-            col("c_emb"), col("c_norm"))
-          .persist())
+            col("c_emb"), col("c_norm")))
       // bounded collect: at most nlist cells
       val cells = assigned.select(col("list_id")).distinct()
         .collect().map(_.getLong(0)).sorted

@@ -4,7 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.core.{Layout, VersionLog}
+import graft.core.{CacheScope, Layout, VersionLog}
+import graft.core.CacheScope.persist
 
 /** Exactly-once VERSIONED ingestion: each micro-batch lands as its own
   * `b<batchId>/` parquet directory inside a [[graft.core.VersionLog]]
@@ -268,10 +269,10 @@ object IngestStreams {
           spark.read.parquet(hit: _*).select(col(keyCol)),
           Seq(keyCol), "left_anti")
       }
-    // cache across the count + write: the anti-join reads every
-    // bloom-admitted file — computing it twice doubles the probe cost
-    fresh.persist()
-    val landed = try {
+    val landed = CacheScope.withReleased {
+      // cache across the count + write: the anti-join reads every
+      // bloom-admitted file — computing it twice doubles the probe cost
+      persist(fresh)
       val n = fresh.count()
       if (n > 0) {
         // refuse drift BEFORE writing (the dedup path stays
@@ -289,7 +290,7 @@ object IngestStreams {
           .write.mode("overwrite").parquet(s"$tablePath/b$batchId")
       }
       n
-    } finally { fresh.unpersist(); () }
+    }
     fs.mkdirs(marker.getParent)
     fs.create(marker, false).close()
     if (landed > 0) {

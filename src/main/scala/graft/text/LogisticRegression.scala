@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** In-engine binary logistic regression over hashed bag-of-words
   * features — the trainable quality-classifier slot (the
   * fastText-style filter of DCLM/CCNet pipelines) beside the
@@ -107,8 +109,7 @@ object LogisticRegression {
       df: DataFrame, idCol: String, textCol: String, label: Column,
       buckets: Int = 64, iters: Int = 5, lr: Double = 0.25): Array[Double] = {
     require(buckets >= 1 && iters >= 0 && lr > 0)
-    fitOnFeatures(graft.core.CacheScope.track(
-      featurize(df, idCol, textCol, label, buckets).persist()),
+    fitOnFeatures(persist(featurize(df, idCol, textCol, label, buckets)),
       buckets, iters, lr)
   }
 
@@ -157,8 +158,7 @@ object LogisticRegression {
       df: DataFrame, idCol: String, textCol: String, label: Column,
       buckets: Int = 64, iters: Int = 5, lr: Double = 0.25): DataFrame = {
     require(buckets >= 1 && iters >= 0 && lr > 0)
-    val f = graft.core.CacheScope.track(
-      featurize(df, idCol, textCol, label, buckets).persist())
+    val f = persist(featurize(df, idCol, textCol, label, buckets))
     val w = fitOnFeatures(f, buckets, iters, lr)
     f.select(col("doc_id"), sigmoid(w).as("score"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** Multinomial Naive Bayes trained IN the engine — the one-pass,
   * closed-form classifier a curation pipeline can afford to retrain per
   * corpus snapshot (the fastText-style quality/language filter slot).
@@ -47,9 +49,8 @@ object NaiveBayes {
     // explode+aggregate each (exchange reuse does not cross the
     // separate action-subtrees the broadcasts spawn) — the cache holds
     // model-sized rows, never corpus rows, and is released by the
-    // session's next cache clear or an explicit unpersist.
-    val cnt = occ.groupBy(col(labelCol), col("token")).agg(count(lit(1)).as("c"))
-      .persist()
+    // caller's bracket or CacheScope.releaseAll.
+    val cnt = persist(occ.groupBy(col(labelCol), col("token")).agg(count(lit(1)).as("c")))
     val vocab = cnt.select(col("token")).distinct()
     val vsize = vocab.agg(count(lit(1)).as("v"))
     val ntoks = cnt.groupBy(col(labelCol)).agg(sum(col("c")).as("ntok"))

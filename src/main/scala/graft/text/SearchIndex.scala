@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** On-disk inverted text index: write-once / query-many BM25 — the
   * lexical-plane mirror of [[graft.dedup.LshIndex]] and
   * `Similarity.writeIvfIndex`.
@@ -103,12 +105,12 @@ object SearchIndex {
     val mode = if (overwrite) "overwrite" else "append"
     val toks = df.filter(col(textCol).isNotNull).select(
       col(idCol).as("doc"), TextFunctions.tokens(col(textCol)).as("__t"))
-    // persisted across the TWO writes: postings and the corpus stats
-    // each consumed the tokenization — one pass instead of two
-    // (spillable, released in the bracket)
-    val withDl = graft.core.CacheScope.track(toks.select(col("doc"),
-      size(col("__t")).cast("long").as("dl"), col("__t")).persist())
-    try {
+    graft.core.CacheScope.withReleased {
+      // persisted across the TWO writes: postings and the corpus stats
+      // each consumed the tokenization — one pass instead of two
+      // (spillable, released in the bracket)
+      val withDl = persist(toks.select(col("doc"),
+        size(col("__t")).cast("long").as("dl"), col("__t")))
       // cluster on the partition key before the dynamic-partition
       // write: an unclustered write lands one part file per (task,
       // tb value) — up to tasks × numPartitions small files whose
@@ -122,7 +124,7 @@ object SearchIndex {
         .write.mode(mode).partitionBy("tb").parquet(s"$path/postings")
       withDl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
         .coalesce(1).write.mode(mode).parquet(s"$path/stats")
-    } finally { withDl.unpersist(blocking = false); () }
+    }
   }
 
   private def readMeta(spark: SparkSession, path: String): Int =

@@ -128,6 +128,16 @@ class DmlSpec extends SparkSpec {
     assert(typeDrift.getMessage.contains("RETYPE"))
   }
 
+  test("mergeApply refuses a key that is both upserted and deleted") {
+    val dir = freshTable()
+    val overlap = intercept[IllegalArgumentException] {
+      Dml.mergeApply(spark, dir, Seq((5L, 5L, "x")).toDF("id", "k", "v"),
+        Seq(5L, 6L).toDF("id"), Seq("id"), upCount = 1L)
+    }
+    assert(overlap.getMessage.contains("disjoint"))
+    assert(VersionLog.latest(spark, dir) === 1)
+  }
+
   test("merge accounting stays sane when the TABLE holds duplicate keys") {
     val dir = java.nio.file.Files.createTempDirectory("dmldup").toString + "/t"
     Seq((1L, "x"), (1L, "y"), (2L, "z")).toDF("id", "v").write.parquet(dir)

@@ -252,4 +252,32 @@ class LayoutSpec extends SparkSpec {
     assert(kept.nonEmpty)
     assert(f.exists(man) && !f.exists(swap))
   }
+
+  test("readers use a staged complete .swap and leave it in place") {
+    val dir = java.nio.file.Files.createTempDirectory("swapread").toString + "/t"
+    val df = (0 until 200).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
+      .toDF("id", "x", "y")
+    Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)
+    Layout.writeManifest(spark, dir, Seq("x", "y"))
+    Layout.writeBloomManifest(spark, dir, Seq("x"), expectedPerFile = 100L)
+    val box = Seq(("x", 0L, 3L))
+    def reads() = (Layout.prunedFiles(spark, dir, box),
+      Layout.prunedFilesIfFresh(spark, dir, box),
+      Layout.countFromManifest(spark, dir),
+      Layout.bloomPrunedFilesIfFresh(spark, dir, "x", Seq("3")))
+    val want = reads()
+    assert(want._1.nonEmpty && want._3 === 200L && want._4.exists(_.nonEmpty))
+    // the writeSwapped crash window for both manifests: complete .swap
+    // dirs staged, targets gone
+    val f = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = Seq(Layout.ManifestDir, Layout.BloomManifestDir).map { name =>
+      val man = new org.apache.hadoop.fs.Path(s"$dir/$name")
+      val swap = new org.apache.hadoop.fs.Path(man.getParent, s".$name.swap")
+      assert(f.rename(man, swap))
+      (man, swap)
+    }
+    assert(reads() === want)
+    staged.foreach { case (man, swap) => assert(!f.exists(man) && f.exists(swap)) }
+  }
 }

@@ -101,6 +101,22 @@ class CacheScopeSpec extends SparkSpec {
     assertStorageEmpty()
   }
 
+  test("releaseAll reaches the raw-RDD caches clearCache cannot") {
+    CacheScope.releaseAll(spark)
+    val nodes = (1L to 6L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 5L), (5L, 6L))
+      .toDF("src", "dst")
+    // no bracket open; holding the result keeps its persisted
+    // generations reachable, so the ContextCleaner cannot release them
+    // between the checks below
+    val ranks = graft.core.Graph.pageRank(nodes, edges, iters = 3)
+    assert(ranks.count() === 6L)
+    spark.catalog.clearCache()
+    assert(persistedRddCount > 0, "clearCache alone should leave the raw-RDD caches")
+    CacheScope.releaseAll(spark)
+    assertStorageEmpty()
+  }
+
   test("bracket releases on exception and is a no-op with no registrations") {
     spark.catalog.clearCache()
     val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")

@@ -817,13 +817,21 @@ class SimilaritySpec extends SparkSpec {
       val b = Array.tabulate(8)(j => math.cos(i * 8 + j + 1) * math.pow(10, (j % 5) - 2))
       (i.toLong, a.toSeq, b.toSeq)
     }
-    val df = rows.toDF("id", "a", "b")
+    // the fold yields NULL on unequal lengths or a null slot; so must the kernel
+    val edge = Seq(
+      (200L, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0))),
+      (201L, Seq(Some(1.0), None), Seq(Some(3.0), Some(4.0))))
+    val df = rows.toDF("id", "a", "b").unionByName(edge.toDF("id", "a", "b"))
     val got = df.select(col("id"),
         graft.functions.SketchFunctions.array_l2sq(col("a"), col("b")).as("k"),
         aggregate(zip_with(col("a"), col("b"), (x, y) => (x - y) * (x - y)),
           lit(0.0), _ + _).as("h"))
       .collect()
-    got.foreach { r =>
+    assert(got.length === 202)
+    val (nulls, values) = got.partition(_.isNullAt(2))
+    assert(nulls.map(_.getLong(0)).toSet === Set(200L, 201L))
+    nulls.foreach(r => assert(r.isNullAt(1), s"row ${r.getLong(0)}: kernel ${r.get(1)} != NULL"))
+    values.foreach { r =>
       assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ===
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)),
         s"row ${r.getLong(0)}: kernel ${r.getDouble(1)} != hof ${r.getDouble(2)}")

@@ -73,12 +73,21 @@ class LogisticRegressionSpec extends SparkSpec {
       val b = Array.tabulate(65)(k => math.cos(i + k) * math.pow(10, (i % 5) - 2))
       (i.toLong, a.toSeq, b.toSeq)
     }
-    val got = rows.toDF("id", "a", "b").select(col("id"),
+    // inputs the fold maps to NULL (unequal lengths, a null slot) and
+    // one it does not (two empty arrays sum to 0)
+    val edge = Seq(
+      (100L, Seq(Some(1.0), Some(2.0)), Seq(Some(3.0))),
+      (101L, Seq(Some(1.0), None), Seq(Some(3.0), Some(4.0))),
+      (102L, Seq.empty[Option[Double]], Seq.empty[Option[Double]]))
+    val got = rows.toDF("id", "a", "b").unionByName(edge.toDF("id", "a", "b"))
+      .select(col("id"),
         graft.functions.SketchFunctions.array_dot_q9(col("a"), col("b")).as("k"),
         aggregate(zip_with(col("a"), col("b"),
             (x, y) => floor(x * y * lit(1e9) + lit(0.5))),
           lit(0L), (acc, v) => acc + v).as("h"))
       .collect()
-    got.foreach(r => assert(r.getLong(1) === r.getLong(2), s"row ${r.getLong(0)}"))
+    assert(got.length === 103)
+    got.foreach(r => assert(r.get(1) === r.get(2), s"row ${r.getLong(0)}"))
+    assert(got.filter(r => r.isNullAt(1)).map(_.getLong(0)).toSet === Set(100L, 101L))
   }
 }
