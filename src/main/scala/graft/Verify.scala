@@ -30,6 +30,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
       }
+      // every query starts storage-empty: a leaked cache (a raw-RDD
+      // persist clearCache cannot see) would otherwise pile up on the
+      // heap across the whole dump
+      finally core.CacheScope.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -78,11 +78,7 @@ object Cdc {
           // partitioning (one part file per shuffle partition for a
           // delta-sized feed), and every later MERGE/DELETE pays per
           // file (guide §6)
-          val rowsPerFile = spark.conf
-            .getOption("spark.graft.dml.insertFileRows")
-            .map(_.toLong).getOrElse(1L << 20)
-          upserts.coalesce(
-              math.max(1L, (nUp + rowsPerFile - 1) / rowsPerFile).toInt)
+          upserts.coalesce(VersionLog.filesFor(nUp))
             .write.mode("overwrite")
             .parquet(VersionLog.rootUriPath(targetDir))
           VersionLog.snapshot(spark, targetDir)

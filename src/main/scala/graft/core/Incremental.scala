@@ -31,16 +31,7 @@ object Incremental {
     val p = new Path(cursorPath)
     val f = fs(spark, cursorPath)
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val bytes =
-        try {
-          val out = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, out, 4096, false)
-          out.toByteArray
-        } finally in.close()
-      Some(new String(bytes, StandardCharsets.UTF_8).trim.toInt)
-    }
+    else Some(VersionLog.readText(f, p).trim.toInt)
   }
 
   private def writeCursor(spark: SparkSession, cursorPath: String, v: Int): Unit = {
@@ -64,32 +55,21 @@ object Incremental {
     * version — a no-op, `process` is not called.
     */
   def runOnce(spark: SparkSession, dir: String, cursorPath: String)(
-      process: DataFrame => Unit): Option[(Int, Int)] = {
-    val latest = VersionLog.latest(spark, dir)
-    readCursor(spark, cursorPath) match {
-      case Some(v) if v >= latest => None
-      case Some(v) =>
-        val delta =
-          try VersionLog.readChanges(spark, dir, v, latest)
-          catch {
-            case e: IllegalArgumentException =>
-              throw new IllegalArgumentException(
-                s"cursor $cursorPath is stuck at source version $v: " +
-                  s"${e.getMessage}. A DML version needs a row-level " +
-                  "consumer (Incremental.runOnceFeed); a vacuumed " +
-                  "source needs an operator decision — reprocess " +
-                  "(Incremental.reset + a full run) or skip ahead " +
-                  "(Incremental.reset to the latest version).", e)
-          }
-        process(delta)
-        writeCursor(spark, cursorPath, latest)
-        Some((v, latest))
-      case None =>
-        process(VersionLog.readVersion(spark, dir, latest))
-        writeCursor(spark, cursorPath, latest)
-        Some((0, latest))
-    }
-  }
+      process: DataFrame => Unit): Option[(Int, Int)] =
+    cursorStep(spark, dir, cursorPath)(
+      VersionLog.readVersion(spark, dir, _),
+      (v, latest) =>
+        try VersionLog.readChanges(spark, dir, v, latest)
+        catch {
+          case e: IllegalArgumentException =>
+            throw new IllegalArgumentException(
+              s"cursor $cursorPath is stuck at source version $v: " +
+                s"${e.getMessage}. A DML version needs a row-level " +
+                "consumer (Incremental.runOnceFeed); a vacuumed " +
+                "source needs an operator decision — reprocess " +
+                "(Incremental.reset + a full run) or skip ahead " +
+                "(Incremental.reset to the latest version).", e)
+        })(process)
 
   /** [[runOnce]] over the row-level CHANGE FEED: `process` receives
     * inserts AND deletes (tagged `_change_type`/`_commit_version` —
@@ -102,19 +82,28 @@ object Incremental {
   def runOnceFeed(spark: SparkSession, dir: String, cursorPath: String)(
       process: DataFrame => Unit): Option[(Int, Int)] = {
     import org.apache.spark.sql.functions.lit
+    cursorStep(spark, dir, cursorPath)(
+      latest => VersionLog.readVersion(spark, dir, latest)
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", lit(latest)),
+      VersionLog.readChangeFeed(spark, dir, _, _))(process)
+  }
+
+  /** The cursor step both runs share: hand `process` the full latest
+    * version (`full`, first run) or the delta since the cursor
+    * (`delta(cursor, latest)`), then advance the cursor to the latest
+    * version. None, with `process` not called, when already caught up.
+    */
+  private def cursorStep(spark: SparkSession, dir: String, cursorPath: String)(
+      full: Int => DataFrame, delta: (Int, Int) => DataFrame)(
+      process: DataFrame => Unit): Option[(Int, Int)] = {
     val latest = VersionLog.latest(spark, dir)
-    readCursor(spark, cursorPath) match {
-      case Some(v) if v >= latest => None
-      case Some(v) =>
-        process(VersionLog.readChangeFeed(spark, dir, v, latest))
-        writeCursor(spark, cursorPath, latest)
-        Some((v, latest))
-      case None =>
-        process(VersionLog.readVersion(spark, dir, latest)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(latest)))
-        writeCursor(spark, cursorPath, latest)
-        Some((0, latest))
+    val cursor = readCursor(spark, cursorPath)
+    if (cursor.exists(_ >= latest)) None
+    else {
+      process(cursor.fold(full(latest))(delta(_, latest)))
+      writeCursor(spark, cursorPath, latest)
+      Some((cursor.getOrElse(0), latest))
     }
   }
 

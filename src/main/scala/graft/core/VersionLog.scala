@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Table version log — snapshot isolation and time travel for a plain
   * parquet directory, the Delta/Iceberg capability a standing 100 TB
@@ -24,6 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    is supported — a rewriter losing its race aborts loudly
   *    ([[CommitConflictException]]) instead of dropping the winner's
   *    rows, and must rerun against the new head;
+  *  - every rewriter (compact, ZORDER, restore, ALTER, and [[Dml]]'s
+  *    DELETE/MERGE) composes three primitives: [[head]] (the latest
+  *    version, its entries and frame), [[rewrite]] (a copy-on-write
+  *    pass over the affected files, kept file-granular) and [[commit]]
+  *    (the CAS at head + 1, where a lost race is that loud abort);
   *  - older versions stay readable after [[compact]]/DML until
   *    [[vacuum]] reclaims them — [[readVersion]] verifies every listed
   *    file still exists with its recorded length and fails LOUDLY
@@ -134,14 +140,7 @@ object VersionLog {
 
   private def readVersionFileUncached(f: org.apache.hadoop.fs.FileSystem,
       p: Path): (Map[String, String], Seq[(String, Long)]) = {
-    val in = f.open(p)
-    val bytes = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-      out.toByteArray
-    } finally in.close()
-    val lines = new String(bytes, StandardCharsets.UTF_8).split("\n").toSeq
-      .filter(_.nonEmpty)
+    val lines = readText(f, p).split("\n").toSeq.filter(_.nonEmpty)
     val (hdr, data) = lines.partition(_.startsWith("#"))
     val header = hdr.map { l =>
       val i = l.indexOf('=')
@@ -184,16 +183,20 @@ object VersionLog {
     val p = supersededPath(dir)
     val f = fs(spark, dir)
     if (!f.exists(p)) Set.empty
-    else {
-      val in = f.open(p)
-      val bytes = try {
-        val out = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
-        out.toByteArray
-      } finally in.close()
-      new String(bytes, StandardCharsets.UTF_8).split("\n")
-        .filter(_.nonEmpty).toSet
-    }
+    else readText(f, p).split("\n").filter(_.nonEmpty).toSet
+  }
+
+  /** The whole of a small metadata file (a version record, the
+    * superseded list, a cursor, a schema pin) as UTF-8 text.
+    */
+  private[graft] def readText(
+      f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try {
+      val out = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 65536, false)
+      new String(out.toByteArray, StandardCharsets.UTF_8)
+    } finally in.close()
   }
 
   /** Atomically replace `target` with `tmp` — there is NO window where
@@ -357,26 +360,43 @@ object VersionLog {
     * are forced nullable (rows in existing files read as NULL). The
     * "evolve" op is a logical no-op to every incremental consumer.
     */
-  def evolveSchema(spark: SparkSession, dir: String,
-      newSchema: org.apache.spark.sql.types.StructType): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"no versions at $dir — snapshot before evolving")
-    val current = readVersion(spark, dir, vs.last).schema
-    val newTypes = newSchema.fields.map(f =>
-      f.name -> f.dataType.catalogString).toMap
-    val dropped = current.fields.filter(f => !newTypes.contains(f.name))
-    require(dropped.isEmpty, "schema evolution is additive only — " +
-      s"dropping [${dropped.map(_.name).mkString(",")}] needs a rewrite")
-    val retyped = current.fields.filter(f =>
-      newTypes.get(f.name).exists(_ != f.dataType.catalogString))
-    require(retyped.isEmpty, "schema evolution is additive only — " +
-      s"retyping [${retyped.map(_.name).mkString(",")}] needs a rewrite")
-    if (newTypes.keySet == current.fields.map(_.name).toSet) return vs.last
-    val curNames = current.fields.map(_.name).toSet
-    val forced = org.apache.spark.sql.types.StructType(newSchema.fields.map(
-      f => if (curNames(f.name)) f else f.copy(nullable = true)))
-    writeEntries(spark, dir, vs.last + 1, readEntries(spark, dir, vs.last),
-      op = "evolve", schemaJson = Some(forced.json))
+  def evolveSchema(spark: SparkSession, dir: String, newSchema: StructType): Int = {
+    val h = head(spark, dir, "ALTER")
+    val (evolved, extras) =
+      evolveAdditively(h.df.schema, newSchema, s"ALTER of $dir")
+    if (extras.isEmpty) h.v
+    else commit(h, h.entries, "evolve", Some(evolved.json), "ALTER")
+  }
+
+  /** Additive schema evolution — the one rule MERGE ([[Dml]]), ALTER
+    * ([[evolveSchema]]) and evolving ingest
+    * ([[graft.streaming.IngestStreams]]) share. Names AND types compare
+    * nullability-insensitively (a name-only check would let an int32
+    * column land beside int64 files). A RETYPED column always refuses:
+    * it needs a rewrite. A column `incoming` lacks refuses unless
+    * `nullFills` admits it — the caller's choice (ingest NULL-fills the
+    * nullable ones). Columns only `incoming` carries are appended,
+    * nullable, after the table's. Returns (the evolved schema, the
+    * appended fields).
+    */
+  private[graft] def evolveAdditively(table: StructType, incoming: StructType,
+      what: String, nullFills: StructField => Boolean = _ => false)
+      : (StructType, Seq[StructField]) = {
+    def types(st: StructType) =
+      st.fields.map(f => f.name -> f.dataType.catalogString).toMap
+    val (tTypes, inTypes) = (types(table), types(incoming))
+    val retyped = table.fieldNames.filter(n => inTypes.get(n).exists(_ != tTypes(n)))
+    require(retyped.isEmpty,
+      s"$what would RETYPE columns [${retyped.map(n =>
+        s"$n: ${tTypes(n)} -> ${inTypes(n)}").mkString(",")}] — schema " +
+        "evolution is additive only; rewrite the table instead")
+    val dropped = table.fields.filter(f => !inTypes.contains(f.name) && !nullFills(f))
+    require(dropped.isEmpty,
+      s"$what would DROP columns [${dropped.map(_.name).mkString(",")}] — " +
+        "schema evolution is additive only; rewrite the table instead")
+    val extras = incoming.fields.toSeq
+      .filter(f => !tTypes.contains(f.name)).map(_.copy(nullable = true))
+    (StructType(table.fields ++ extras), extras)
   }
 
   def snapshot(spark: SparkSession, dir: String): Int =
@@ -389,6 +409,9 @@ object VersionLog {
   def snapshot(spark: SparkSession, dir: String,
       schemaJson: Option[String]): Int =
     snapshotDetailed(spark, dir, schemaJson = schemaJson)._1
+
+  /** Consecutive commit races a [[snapshotDetailed]] rebases through. */
+  private val MaxCommitRetries = 20
 
   /** [[snapshot]] plus its OCC retry count — (version, retries).
     *
@@ -405,9 +428,9 @@ object VersionLog {
     * rows. Retries are bounded; exhausting them surfaces the conflict.
     */
   def snapshotDetailed(spark: SparkSession, dir: String,
-      maxRetries: Int = 20, schemaJson: Option[String] = None): (Int, Int) = {
+      schemaJson: Option[String] = None): (Int, Int) = {
     var retries = 0
-    while (retries <= maxRetries) {
+    while (retries <= MaxCommitRetries) {
       val vs = versions(spark, dir)
       val live = committedLiveEntries(spark, dir)
       require(live.nonEmpty, s"refusing to snapshot an empty table at $dir")
@@ -421,7 +444,7 @@ object VersionLog {
       }
     }
     throw new IllegalStateException(
-      s"snapshot of $dir lost $maxRetries consecutive commit races — " +
+      s"snapshot of $dir lost $MaxCommitRetries consecutive commit races — " +
         "a runaway writer is flooding the log")
   }
 
@@ -556,6 +579,77 @@ object VersionLog {
     Step(v, op, added, removed ++ resized)
   }
 
+  /** The head version a rewriter works from: its number, its entries,
+    * the table root, and (lazily — [[restore]] is metadata-only) the
+    * [[readVersion]] frame.
+    */
+  private[core] final class Head(val spark: SparkSession, val dir: String,
+      val v: Int, val entries: Seq[(String, Long)]) {
+    val root: String = rootUriPath(dir)
+    lazy val df: DataFrame = readVersion(spark, dir, v)
+    /** `files` (root-relative) read with the head's schema. */
+    def read(files: Seq[String]): DataFrame =
+      spark.read.schema(df.schema).parquet(files.map(rel => s"$root/$rel"): _*)
+  }
+
+  /** Primitive 1 of the copy-on-write write path: read the head,
+    * refusing a table with no versions (`what` names the operation).
+    */
+  private[core] def head(spark: SparkSession, dir: String, what: String): Head = {
+    val vs = versions(spark, dir)
+    require(vs.nonEmpty, s"no versions at $dir — snapshot before $what")
+    new Head(spark, dir, vs.last, readEntries(spark, dir, vs.last))
+  }
+
+  /** Primitive 2: rewrite the head's `files` (root-relative) through
+    * `keep` into `<root>/<sub>` and return the written entries. The
+    * rewrite keeps the table's file granularity: K files rewrite to <= K
+    * files, never to one part file per scan split (the small-file
+    * cascade under repeated DML — guide §6).
+    */
+  private[core] def rewrite(h: Head, files: Seq[String], sub: String)(
+      keep: DataFrame => DataFrame): Seq[(String, Long)] =
+    writeDir(h, sub, keep(h.read(files)).coalesce(files.size))
+
+  /** Write `df` to `<root>/<sub>` and list the written data files as
+    * root-relative (path, length) entries — the one lister of a
+    * rewriter's fresh directory.
+    */
+  private[core] def writeDir(
+      h: Head, sub: String, df: DataFrame): Seq[(String, Long)] = {
+    df.write.mode("overwrite").parquet(s"${h.root}/$sub")
+    fs(h.spark, h.dir).listStatus(new Path(s"${h.root}/$sub")).toSeq
+      .filter(st => !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(st => (s"$sub/${st.getPath.getName}", st.getLen))
+      .sortBy(_._1)
+  }
+
+  /** Primitive 3: commit `entries` as version `h.v + 1`. A rewriter's
+    * entries derive from `h`, so losing the CAS race to any writer is a
+    * loud abort (the conflict kept as the cause), never a rebase that
+    * would drop the winner's rows — `what` names the operation.
+    */
+  private[core] def commit(h: Head, entries: Seq[(String, Long)], op: String,
+      schemaJson: Option[String], what: String): Int =
+    try writeEntries(h.spark, h.dir, h.v + 1, entries.sortBy(_._1), op, schemaJson)
+    catch {
+      case e: CommitConflictException => throw new IllegalStateException(
+        s"$what on ${h.dir} lost its commit race — the table changed " +
+          "under it; rerun it against the new head", e)
+    }
+
+  /** Rows per freshly inserted data file. */
+  private val RowsPerFile = 1L << 20
+
+  /** Files for `rows` freshly inserted rows: few right-sized files, not
+    * one part file per upstream scan split or shuffle partition — under
+    * chained DML those become the NEXT rewrite's affected files and the
+    * small-file count compounds (guide §6).
+    */
+  private[graft] def filesFor(rows: Long): Int =
+    math.max(1L, (rows + RowsPerFile - 1) / RowsPerFile).toInt
+
   /** OPTIMIZE: rewrite the LATEST version's content as `files` compact
     * files under `c<newVersion>/` and record that list as the next
     * version — WITHOUT touching the old files, so every older version
@@ -599,24 +693,9 @@ object VersionLog {
 
   private def compactWith(spark: SparkSession, dir: String)(
       layout: DataFrame => DataFrame): Int = {
-    val vs = versions(spark, dir)
-    require(vs.nonEmpty, s"nothing to compact: no versions at $dir")
-    val next = vs.last + 1
-    val root = rootUriPath(dir)
-    layout(readVersion(spark, dir, vs.last))
-      .write.mode("overwrite").parquet(s"$root/c$next")
-    val f = fs(spark, dir)
-    val entries = f.listStatus(new Path(s"$root/c$next")).toSeq
-      .filter(st => !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(st => (s"c$next/${st.getPath.getName}", st.getLen))
-      .sortBy(_._1)
-    try writeEntries(spark, dir, next, entries, op = "compact")
-    catch {
-      case e: CommitConflictException => throw new IllegalStateException(
-        s"OPTIMIZE of $dir lost its commit race — the table changed " +
-          "under the rewrite; rerun the compaction against the new head", e)
-    }
+    val h = head(spark, dir, "OPTIMIZE")
+    commit(h, writeDir(h, s"c${h.v + 1}", layout(h.df)), "compact", None,
+      "OPTIMIZE")
   }
 
   /** RESTORE: re-point the head at version `v`'s exact file list as a
@@ -629,42 +708,23 @@ object VersionLog {
     * head returns it unchanged.
     */
   def restore(spark: SparkSession, dir: String, v: Int): Int = {
-    val vs = versions(spark, dir)
-    require(vs.contains(v), s"version $v is not recorded at $dir/$LogDir")
-    val entries = readEntries(spark, dir, v)
+    val h = head(spark, dir, "RESTORE")
+    val entries = readEntries(spark, dir, v) // refuses an unrecorded v
+    val targetSchema = effectiveSchemaJson(spark, dir, v)
+    val headSchema = effectiveSchemaJson(spark, dir, h.v)
     // idempotence needs BOTH identities: an evolve version shares its
     // predecessor's file list but not its read schema — restoring
     // across it must still mint a version that re-pins the schema
-    if (readEntries(spark, dir, vs.last) == entries &&
-        effectiveSchemaJson(spark, dir, vs.last) ==
-          effectiveSchemaJson(spark, dir, v)) return vs.last
-    val root = rootUriPath(dir)
-    val f = fs(spark, dir)
-    val bad = entries.filter { case (rel, len) =>
-      val p = new Path(s"$root/$rel")
-      !f.exists(p) || f.getFileStatus(p).getLen != len
-    }
-    require(bad.isEmpty,
-      s"cannot restore version $v of $dir — ${bad.size} of " +
-        s"${entries.size} recorded files are missing or rewritten " +
-        s"(e.g. ${bad.take(3).map(_._1).mkString(", ")}); that history " +
-        "was vacuumed")
+    if (h.entries == entries && targetSchema == headSchema) return h.v
+    verifiedPaths(spark, dir, entries, s"restore target version $v",
+      "that history was vacuumed")
     // the restored version's effective schema travels with it: a
     // restore across an evolution boundary must read like the target —
     // including BACK to a pre-evolution version, where the explicit
     // empty sentinel pins "inferred" over the newer evolution header
-    val targetSchema = effectiveSchemaJson(spark, dir, v)
-    val headSchema = effectiveSchemaJson(spark, dir, vs.last)
-    val schemaJson =
-      if (targetSchema == headSchema) None
-      else Some(targetSchema.getOrElse(""))
-    try writeEntries(spark, dir, vs.last + 1, entries, op = "restore",
-      schemaJson = schemaJson)
-    catch {
-      case e: CommitConflictException => throw new IllegalStateException(
-        s"RESTORE of $dir lost its commit race — the table changed " +
-          "under it; re-check the target version and rerun", e)
-    }
+    commit(h, entries, "restore",
+      if (targetSchema == headSchema) None else Some(targetSchema.getOrElse("")),
+      "RESTORE")
   }
 
   /** VACUUM: drop all but the newest `keepLast` version records and
@@ -720,21 +780,9 @@ object VersionLog {
     * silently partial table.
     */
   def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame = {
-    val entries = readEntries(spark, dir, v)
-    val root = rootUriPath(dir)
-    val f = fs(spark, dir)
-    val bad = entries.filter { case (rel, len) =>
-      val p = new Path(s"$root/$rel")
-      !f.exists(p) || f.getFileStatus(p).getLen != len
-    }
-    require(bad.isEmpty,
-      s"version $v of $dir is no longer readable — ${bad.size} of " +
-        s"${entries.size} recorded files are missing or rewritten " +
-        s"(e.g. ${bad.take(3).map(_._1).mkString(", ")}); the history " +
-        "was compacted past this version")
-    readerFor(spark, dir, v,
-        entries.headOption.map { case (rel, _) => s"$root/$rel" })
-      .parquet(entries.map { case (rel, _) => s"$root/$rel" }: _*)
+    val paths = verifiedPaths(spark, dir, readEntries(spark, dir, v),
+      s"version $v", "the history was compacted past this version")
+    readerFor(spark, dir, v, paths.headOption).parquet(paths: _*)
   }
 
   /** DESCRIBE HISTORY: one row per recorded version — file count,
@@ -765,25 +813,28 @@ object VersionLog {
   }
 
   /** Verify `entries` are still on disk at their recorded lengths and
-    * return their absolute paths — the vacuum-horizon tripwire every
-    * incremental read shares: a change-feed file reclaimed by [[vacuum]]
-    * means that slice of history is gone, and the read fails loudly
-    * instead of silently misreporting.
+    * return their absolute paths — the vacuum-horizon tripwire
+    * [[readVersion]], [[restore]] and every incremental read share: a
+    * file reclaimed by [[vacuum]] or rewritten since means that slice of
+    * history is gone, and the read fails loudly (naming `horizon`)
+    * instead of silently misreporting. One getFileStatus per file.
     */
   private def verifiedPaths(spark: SparkSession, dir: String,
-      entries: Seq[(String, Long)], what: String): Seq[String] = {
+      entries: Seq[(String, Long)], what: String, horizon: String): Seq[String] = {
     val root = rootUriPath(dir)
     val f = fs(spark, dir)
     val bad = entries.filter { case (rel, len) =>
-      val p = new Path(s"$root/$rel")
-      !f.exists(p) || f.getFileStatus(p).getLen != len
+      try f.getFileStatus(new Path(s"$root/$rel")).getLen != len
+      catch { case _: java.io.FileNotFoundException => true }
     }
     require(bad.isEmpty,
-      s"$what of $dir is no longer readable — " +
-        s"${bad.take(3).map(_._1).mkString(", ")} missing or rewritten " +
-        "(vacuumed past the incremental-read horizon)")
+      s"$what of $dir is no longer readable — ${bad.size} of " +
+        s"${entries.size} recorded files are missing or rewritten " +
+        s"(e.g. ${bad.take(3).map(_._1).mkString(", ")}); $horizon")
     entries.map { case (rel, _) => s"$root/$rel" }
   }
+
+  private val IncrementalHorizon = "vacuumed past the incremental-read horizon"
 
   /** Rows INSERTED between two versions — the incremental-consumption
     * read a downstream cursor/MV catches up with. Walks the history
@@ -824,7 +875,7 @@ object VersionLog {
     if (fresh.isEmpty) readVersion(spark, dir, toV).limit(0)
     else {
       val paths = verifiedPaths(spark, dir, fresh.toSeq.sortBy(_._1),
-        s"the v$fromV→v$toV delta")
+        s"the v$fromV→v$toV delta", IncrementalHorizon)
       readerFor(spark, dir, toV, paths.headOption).parquet(paths: _*)
     }
   }
@@ -858,7 +909,8 @@ object VersionLog {
     def rd(entries: Seq[(String, Long)], v: Int): Option[DataFrame] =
       if (entries.isEmpty) None
       else {
-        val paths = verifiedPaths(spark, dir, entries, s"the v$v change feed")
+        val paths = verifiedPaths(spark, dir, entries, s"the v$v change feed",
+          IncrementalHorizon)
         Some(readerFor(spark, dir, v, paths.headOption).parquet(paths: _*))
       }
     def tag(df: DataFrame, typ: String, v: Int): DataFrame =

@@ -325,10 +325,10 @@ object SketchOps {
   /** Dot product of two double arrays, strict left-to-right fold —
     * bit-identical to `aggregate(zip_with(a,b,_*_), 0.0, _+_)` and to
     * DuckDB's `list_sum(list_transform(...))`, which the oracle
-    * comparisons rely on.
+    * comparisons rely on. Requires [[zippable]] inputs.
     */
   def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
+    val n = a.numElements()
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -339,8 +339,8 @@ object SketchOps {
   }
 
   /** Equal lengths and no null element: the inputs on which the
-    * `aggregate(zip_with(...))` folds [[dotQ9]] and [[l2sq]] replace
-    * are not NULL.
+    * `aggregate(zip_with(...))` folds [[dot]], [[dotQ9]] and [[l2sq]]
+    * replace are not NULL.
     */
   def zippable(a: ArrayData, b: ArrayData): Boolean = {
     val n = a.numElements()

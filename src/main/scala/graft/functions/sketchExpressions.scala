@@ -210,15 +210,22 @@ case class ProbeSharedCount(
   override def prettyName: String = "probe_shared_count"
 }
 
-/** `array_dot(a, b)` → Double, strict left fold (oracle-deterministic). */
+/** `array_dot(a, b)` → Double, strict left fold (oracle-deterministic).
+  * NULL on unequal lengths or a null element, like the fold it replaces.
+  */
 case class ArrayDot(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
   override def inputTypes = Seq(ArrayType(DoubleType), ArrayType(DoubleType))
   override def dataType: DataType = DoubleType
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SketchOps.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  override def nullable: Boolean = true
+  override def nullSafeEval(a: Any, b: Any): Any = {
+    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+    if (SketchOps.zippable(x, y)) SketchOps.dot(x, y) else null
+  }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.SketchOps.dot($a, $b)")
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.isNull} = !graft.functions.SketchOps.zippable($a, $b);\n" +
+        s"if (!${ev.isNull}) ${ev.value} = graft.functions.SketchOps.dot($a, $b);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
   override def prettyName: String = "array_dot"

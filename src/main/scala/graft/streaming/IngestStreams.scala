@@ -100,13 +100,7 @@ object IngestStreams {
       pin(batch.schema)
       return (batch, None)
     }
-    val in = fs.open(p)
-    val pinnedStr =
-      try {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, bos, 4096, false)
-        new String(bos.toByteArray, "UTF-8")
-      } finally in.close()
+    val pinnedStr = VersionLog.readText(fs, p)
     val pinned: StructType =
       if (pinnedStr.trim.startsWith("{"))
         DataType.fromJson(pinnedStr).asInstanceOf[StructType]
@@ -126,24 +120,12 @@ object IngestStreams {
         s"[${canonical(pinned)}] vs batch [${canonical(batch.schema)}]; " +
         "pass evolveSchema=true for additive widening, or migrate the " +
         "table explicitly instead of mixing file schemas")
-    val pTypes = pinned.fields.map(f =>
-      f.name -> f.dataType.catalogString).toMap
-    val bTypes = batch.schema.fields.map(f =>
-      f.name -> f.dataType.catalogString).toMap
-    val retyped = pinned.fields.filter(f =>
-      bTypes.get(f.name).exists(_ != f.dataType.catalogString))
-    require(retyped.isEmpty,
-      s"batch RETYPES columns [${retyped.map(_.name).mkString(",")}] on " +
-        s"ingest into $tablePath — evolution is additive only")
-    val missing = pinned.fields.filter(f => !bTypes.contains(f.name))
-    val nonNullMissing = missing.filter(!_.nullable)
-    require(nonNullMissing.isEmpty,
-      s"batch omits NON-NULLABLE columns " +
-        s"[${nonNullMissing.map(_.name).mkString(",")}] — cannot NULL-fill")
-    val extras = batch.schema.fields.filter(f => !pTypes.contains(f.name))
-    val evolved = StructType(pinned.fields ++ extras.map(_.copy(nullable = true)))
+    // a missing NULLABLE column NULL-fills; any other drop refuses
+    val (evolved, extras) = VersionLog.evolveAdditively(pinned, batch.schema,
+      s"batch ingested into $tablePath", nullFills = _.nullable)
+    val batchCols = batch.columns.toSet
     val aligned = batch.select(evolved.fields.toSeq.map { f =>
-      if (bTypes.contains(f.name)) col(f.name)
+      if (batchCols(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
     if (extras.isEmpty) (aligned, None)
@@ -283,10 +265,7 @@ object IngestStreams {
         // batch dir otherwise carries one part file per upstream
         // partition, and every file costs a bloom-manifest row + a
         // probe candidate forever after (guide §6)
-        val rowsPerFile = spark.conf
-          .getOption("spark.graft.dml.insertFileRows")
-          .map(_.toLong).getOrElse(1L << 20)
-        fresh.coalesce(math.max(1L, (n + rowsPerFile - 1) / rowsPerFile).toInt)
+        fresh.coalesce(VersionLog.filesFor(n))
           .write.mode("overwrite").parquet(s"$tablePath/b$batchId")
       }
       n

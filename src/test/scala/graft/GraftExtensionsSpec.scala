@@ -14,12 +14,16 @@ class GraftExtensionsSpec extends SparkSpec {
            uint256_lo128('0000000000000000000000000000000000000000000000000de0b6b3a7640000', 18) AS one_ether,
            hex_be_to_long('ff00') AS be,
            array_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dot,
-           z_interleave(3L, 1L) AS zv""").head()
+           z_interleave(3L, 1L) AS zv,
+           array_dot(array(1.0d, 2.0d), array(3.0d)) AS dot_short,
+           array_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(3.0d, 4.0d)) AS dot_null""").head()
     assert(r.getDouble(0) === 1.0)
     assert(r.getLong(1) === 0xff00L)
     assert(r.getDouble(2) === 11.0)
     // x=0b11 on even bits (1|4), y=0b1 on odd bit 1 (2) -> 7
     assert(r.getLong(3) === 7L)
+    // unequal lengths or a null slot: NULL, like the zip_with fold
+    assert(r.isNullAt(4) && r.isNullAt(5))
   }
 
   test("sketch kernels take literal width arguments and reject non-literals") {

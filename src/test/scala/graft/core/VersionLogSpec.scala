@@ -329,27 +329,50 @@ class VersionLogSpec extends SparkSpec {
   }
 
   test("a losing rewriter aborts loudly instead of dropping the winner") {
-    val dir = freshTable()
-    VersionLog.snapshot(spark, dir)
-    var fired = false
-    VersionLog.beforeVersionCommit = () => if (!fired) {
-      fired = true
-      // a concurrent appender wins version 2 first
-      (100L until 102L).map(i => (i, i)).toDF("id", "k")
-        .write.mode("append").parquet(dir)
+    val upsert = Seq((5L, 50L)).toDF("id", "k")
+    val key6 = Seq(6L).toDF("id")
+    // (rewriter, setup before the race, the rewrite itself)
+    val rewriters: Seq[(String, String => Unit, String => Any)] = Seq(
+      ("compact", _ => (), dir => VersionLog.compact(spark, dir, files = 1)),
+      ("restore", { dir =>
+        Seq((200L, 0L)).toDF("id", "k").write.mode("append").parquet(dir)
+        VersionLog.snapshot(spark, dir)
+        ()
+      }, dir => VersionLog.restore(spark, dir, 1)),
+      ("deleteWhere", _ => (),
+        dir => Dml.deleteWhere(spark, dir, col("id") === 5L)),
+      ("deleteMatching", _ => (),
+        dir => Dml.deleteMatching(spark, dir, key6, Seq("id"))),
+      ("mergeInto", _ => (),
+        dir => Dml.mergeInto(spark, dir, upsert, Seq("id"))),
+      ("mergeApply", _ => (),
+        dir => Dml.mergeApply(spark, dir, upsert, key6, Seq("id"), upCount = 1L)))
+    rewriters.foreach { case (name, setup, rewrite) =>
+      val dir = freshTable()
       VersionLog.snapshot(spark, dir)
-    }
-    try {
-      val e = intercept[IllegalStateException] {
-        VersionLog.compact(spark, dir, files = 1)
+      setup(dir)
+      val before = VersionLog.latest(spark, dir)
+      val rows = VersionLog.readVersion(spark, dir, before).count()
+      var fired = false
+      VersionLog.beforeVersionCommit = () => if (!fired) {
+        fired = true
+        // a concurrent appender wins the next version first
+        (100L until 102L).map(i => (i, i)).toDF("id", "k")
+          .write.mode("append").parquet(dir)
+        VersionLog.snapshot(spark, dir)
       }
-      assert(e.getMessage.contains("commit race"))
-      assert(e.getCause.isInstanceOf[CommitConflictException])
-    } finally VersionLog.beforeVersionCommit = () => ()
-    // nothing was lost: the winner's append is the head, the loser's
-    // orphan c-dir is invisible to snapshots
-    assert(VersionLog.readVersion(spark, dir, 2).count() === 102L)
-    assert(VersionLog.snapshot(spark, dir) === 2)
+      try {
+        val e = intercept[IllegalStateException](rewrite(dir))
+        assert(e.getMessage.contains("commit race"), name)
+        assert(e.getCause.isInstanceOf[CommitConflictException], name)
+      } finally VersionLog.beforeVersionCommit = () => ()
+      // nothing was lost: the winner's append is the head, the loser's
+      // orphan dir is invisible to snapshots
+      assert(VersionLog.latest(spark, dir) === before + 1, name)
+      assert(VersionLog.readVersion(spark, dir, before + 1).count() ===
+        rows + 2L, name)
+      assert(VersionLog.snapshot(spark, dir) === before + 1, name)
+    }
   }
 
   test("concurrent appenders all land exactly once under commit races") {
