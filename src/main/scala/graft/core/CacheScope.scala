@@ -7,15 +7,16 @@ import org.apache.spark.sql.catalyst.InternalRow
 /** The one owner of every operator-managed cache. Operators never call
   * `persist()` themselves; three cases cover every cache.
   *
-  * '''Two entry points.''' [[persist]] persists a Dataset;
-  * [[persistRows]] persists a frame's copied INTERNAL rows as a raw RDD
-  * — the lineage cut for multi-action and iterative operators: a
-  * Dataset persist caches data but not the plan, so every later action
-  * re-analyzes the whole upstream tree, while a frame rebuilt over the
-  * RDD (`GraftBridge.internalCreateDataFrame`) plans as a flat scan.
-  * Internal rows, not `df.rdd`, skip the external `Row` decode and
-  * re-encode. Both register their release with the innermost open
-  * bracket; with none open they register nothing.
+  * '''Three entry points.''' [[persist]] persists a Dataset;
+  * [[persistRdd]] persists an RDD, such as the co-partitioned state of
+  * an RDD-iterated operator; [[persistRows]] persists a frame's copied
+  * INTERNAL rows as a raw RDD — the lineage cut for multi-action and
+  * iterative operators: a Dataset persist caches data but not the plan,
+  * so every later action re-analyzes the whole upstream tree, while a
+  * frame rebuilt over the RDD (`GraftBridge.internalCreateDataFrame`)
+  * plans as a flat scan. Internal rows, not `df.rdd`, skip the external
+  * `Row` decode and re-encode. Each registers its release with the
+  * innermost open bracket; with none open they register nothing.
   *
   * '''Brackets, for operator-internal caches.''' [[withReleased]]
   * unpersists every cache registered while it is open when it closes,
@@ -69,15 +70,21 @@ object CacheScope {
     ds
   }
 
+  /** Persist `rdd` (default storage level) and register its release.
+    * Returns `rdd`; lazy like any persist.
+    */
+  def persistRdd[T](rdd: RDD[T]): RDD[T] = {
+    rdd.persist()
+    register(() => { rdd.unpersist(blocking = false); () })
+    rdd
+  }
+
   /** Persist the copied internal rows of `df` (the scan reuses row
     * buffers) and register their release. Lazy: nothing runs until the
     * first action on the returned RDD.
     */
-  def persistRows(df: DataFrame): RDD[InternalRow] = {
-    val rdd = df.queryExecution.toRdd.map(_.copy()).persist()
-    register(() => { rdd.unpersist(blocking = false); () })
-    rdd
-  }
+  def persistRows(df: DataFrame): RDD[InternalRow] =
+    persistRdd(df.queryExecution.toRdd.map(_.copy()))
 
   /** Run `body`; on exit (normal or exceptional) unpersist every
     * operator-managed cache registered inside it.

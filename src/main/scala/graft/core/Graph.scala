@@ -1,8 +1,14 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Join-based graph algorithms over plain (src, dst) edge frames — no
   * graph library, just the shuffles Spark already optimizes.
@@ -18,34 +24,47 @@ import org.apache.spark.sql.functions._
   * unrolls them as CTE generations, like the q125 logistic-regression
   * training replay).
   *
-  * Scale shape per iteration: contributions = edges ⋈ ranks on src
-  * (one hash shuffle of the edge table), received mass = groupBy dst
-  * (second shuffle, map-side partial sums), dangling mass = one-row
-  * aggregate broadcast back via crossJoin, then the rank frame
-  * left-joins the received sums. Nothing corpus-sized is collected or
-  * broadcast; per-iteration cost is two shuffles of the edge list —
-  * the canonical distributed PageRank shape. Only the node COUNT (one
-  * scalar) is computed driver-side, once. Iteration builds lineage
-  * depth `O(iters)`; for large `iters` callers should persist or
-  * checkpoint every few rounds (the near-dup-centrality use runs 5,
-  * where plan depth is a non-issue).
+  * Scale shape per iteration: before round 1 the edges are grouped
+  * ONCE into a `src → Array[dst]` adjacency under a `HashPartitioner`,
+  * and the rank rows `(id, fx, od, b)` are laid out with the same
+  * partitioner, so no round re-shuffles either side (Shark's
+  * co-partitioned iterated join). A round is one `zipPartitions` of
+  * adjacency and ranks emitting `fx div od` per edge, one
+  * `reduceByKey` of the received mass onto that partitioner (map-side
+  * partial sums; the round's only shuffle), and one `zipPartitions` of
+  * ranks and received mass applying the integer mix. The round's one
+  * job materializes the new generation and returns its dangling mass as
+  * per-partition sums collected to the driver, where the next round
+  * reads it as a scalar. Nothing corpus-sized is collected or
+  * broadcast; the node count comes from the job that lays out
+  * generation 0. Each generation is released once its successor has
+  * materialized, and the last round runs inside the caller's action.
   */
 object Graph {
 
-  /** Target edge rows per cached partition for the iterative
-    * operators' scans (see [[sizedEdgeCache]]).
+  /** Target edge rows per partition for the iterative operators (see
+    * [[partitionsFor]]).
     */
   private val EdgeRowsPerPartition = 1L << 18
 
-  /** Size-adaptive edge cache for the iterative operators. The edge
-    * frame is scanned 1-3× PER ROUND, so its cached partition count
+  /** Partition count for an iterative operator's edge-sized data: one
+    * per 2^18 rows, at most the session's parallelism. Every round
+    * repeats every task, so a layout inherited from a wide upstream
+    * stage would schedule byte-tiny tasks round after round.
+    */
+  private def partitionsFor(spark: SparkSession, rows: Long): Int =
+    math.min(rows / EdgeRowsPerPartition + 1,
+      math.max(1L, spark.sparkContext.defaultParallelism.toLong)).toInt
+
+  /** Size-adaptive edge cache for the DataFrame-iterated operators. The
+    * edge frame is scanned 1-3× PER ROUND, so its cached partition count
     * multiplies into every iteration's task count: an upstream pair
     * list that was verify-parallelized hands us 32+ byte-tiny
     * partitions, and 8 H-index rounds then schedule ~1000 near-empty
     * tasks (measured +0.6 s on q161 locally). Persist + one count (the
     * first round would materialize the cache anyway), then — only when
     * the row count says the inherited layout overshoots — re-lay the
-    * cache as ceil(n / 2^18) ROUND-ROBIN partitions. Round-robin, not
+    * cache as [[partitionsFor]] ROUND-ROBIN partitions. Round-robin, not
     * keyed: pinning HashPartitioning(join key, N) on the cache was
     * A/B-measured in round 12 at +2.0 s on coreness (it forces every
     * iteration stage to that count, defeating AQE's coalescing); a
@@ -60,11 +79,9 @@ object Graph {
     // scan without a second cache or any shuffle: each of the `want`
     // tasks reads its share of cached partitions from local memory.
     val rdd = CacheScope.persistRows(edges)
-    val n = rdd.count()
-    val maxP = spark.sparkContext.defaultParallelism.toLong
-    val want = math.min(n / EdgeRowsPerPartition + 1, math.max(1L, maxP)).toInt
+    val want = partitionsFor(spark, rdd.count())
     val laid =
-      if (want >= maxP || rdd.getNumPartitions <= want) rdd
+      if (want >= spark.sparkContext.defaultParallelism || rdd.getNumPartitions <= want) rdd
       else rdd.coalesce(want)
     org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
       spark, laid, edges.schema)
@@ -84,7 +101,10 @@ object Graph {
     * @param nodes one column `id` — the full node set, INCLUDING
     *   isolated nodes (they keep teleport + dangling mass).
     * @param edges columns `src`, `dst`; parallel edges each carry a
-    *   contribution (dedup first for simple-graph semantics).
+    *   contribution (dedup first for simple-graph semantics). An edge
+    *   to an id outside `nodes` (or to a null) counts toward its
+    *   source's out-degree and its share is lost; an edge from one
+    *   carries nothing.
     * @param iters power-iteration count (fixed, not convergence-based,
     *   so replay engines agree on the step count).
     * @return (id, rank_fx int64 at 1e-12 scale, rank double rounded to
@@ -92,55 +112,7 @@ object Graph {
     */
   def pageRank(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"pageRank requires iters >= 1, got $iters")
-    val n = nodes.select(col("id")).distinct()
-    // The edge frame is referenced once per iteration and each rank
-    // frame THREE times by its successor (contribution join, dangling
-    // aggregate, final left join). Dataset-persisting the ranks fixes
-    // the runtime recompute but NOT the logical plan: each generation
-    // still embeds its predecessor's tree 3×, so analysis/optimization
-    // walks 3^iters copies — measured 51 s of pure driver planning at
-    // 5 iterations over the sf0.1 near-dup graph. [[shortCircuit]]
-    // rebases every generation on its persisted RDD instead (the
-    // GraphX-style checkpoint move), keeping the plan constant-size
-    // per round. All persists release via CacheScope.
-    // size-adaptive round-robin cache — see [[sizedEdgeCache]] (keyed
-    // pre-partitioning was A/B-rejected in round 12: +2.0 s coreness)
-    val e = sizedEdgeCache(edges.select(col("src"), col("dst")))
-    // The one driver-side scalar: |V|. base = teleport share per node;
-    // the div truncation loses < N·1e-12 of total mass — the price of
-    // integer exactness.
-    val nCount = n.count()
-    require(nCount > 0, "pageRank requires a non-empty node set")
-    val base = Scale / nCount
-    // Out-degrees ride WITH the rank frame (one left join at init, not
-    // one per iteration): rank rows are (id, fx, od).
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val r0 = n
-      .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .select(col("id"), lit(base).as("fx"), coalesce(col("od"), lit(0L)).as("od"))
-    val ranks = (1 to iters).foldLeft(shortCircuit(r0)) { (r, _) =>
-      val contrib = e
-        .join(r.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), expr("fx div od").as("c"))
-      val recv = contrib.groupBy(col("id")).agg(sum(col("c")).as("recv"))
-      // Dangling mass: rank stuck on out-degree-0 nodes, redistributed
-      // uniformly. One row; the crossJoin broadcasts a scalar.
-      val dang = r.filter(col("od") === 0L)
-        .agg(coalesce(sum(col("fx")), lit(0L)).as("dang"))
-      shortCircuit(r.join(recv, Seq("id"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("id"),
-          (lit((DampDen - DampNum) * base) +
-            lit(DampNum) * (coalesce(col("recv"), lit(0L)) +
-              expr(s"dang div ${nCount}L"))).as("_mix"),
-          col("od"))
-        .select(col("id"), expr(s"_mix div ${DampDen}L").as("fx"), col("od")))
-    }
-    // Readable double via the q81 fixed-point idiom: one exact int64→
-    // double conversion (fx < 2^53), floor, one final division — both
-    // engines compute the identical double.
-    ranks.select(col("id"), col("fx").as("rank_fx"),
-      (floor(col("fx").cast("double") / lit(1000.0)) / lit(1e6)).as("rank"))
+    powerIteration(nodes, edges, None, iters)
   }
 
   /** Personalized PageRank (random walk with restart): teleport and
@@ -156,42 +128,121 @@ object Graph {
       seeds: DataFrame, // one column `id` ⊆ nodes
       iters: Int): DataFrame = {
     require(iters >= 1, s"pageRankPersonalized requires iters >= 1, got $iters")
-    val n = nodes.select(col("id")).distinct()
-    val sd = seeds.select(col("id")).distinct()
-    // size-adaptive round-robin cache — see [[sizedEdgeCache]] (keyed
-    // pre-partitioning was A/B-rejected in round 12: +2.0 s coreness)
-    val e = sizedEdgeCache(edges.select(col("src"), col("dst")))
-    val nSeeds = sd.count()
-    require(nSeeds > 0, "pageRankPersonalized requires a non-empty seed set")
-    val base = Scale / nSeeds
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("od"))
-    val r0 = n
-      .join(outdeg.withColumnRenamed("src", "id"), Seq("id"), "left")
-      .join(sd.withColumn("_s", lit(1)), Seq("id"), "left")
-      .select(col("id"),
-        when(col("_s").isNotNull, base).otherwise(0L).as("fx"),
-        coalesce(col("od"), lit(0L)).as("od"),
-        when(col("_s").isNotNull, 1L).otherwise(0L).as("b"))
-    val ranks = (1 to iters).foldLeft(shortCircuit(r0)) { (r, _) =>
-      val contrib = e
-        .join(r.withColumnRenamed("id", "src"), "src")
-        .filter(col("fx") > 0L)
-        .select(col("dst").as("id"), expr("fx div od").as("c"))
-      val recv = contrib.groupBy(col("id")).agg(sum(col("c")).as("recv"))
-      val dang = r.filter(col("od") === 0L)
-        .agg(coalesce(sum(col("fx")), lit(0L)).as("dang"))
-      shortCircuit(r.join(recv, Seq("id"), "left")
-        .crossJoin(broadcast(dang))
-        .select(col("id"),
-          (lit(DampDen - DampNum) * lit(base) * col("b") +
-            lit(DampNum) * (coalesce(col("recv"), lit(0L)) +
-              col("b") * expr(s"dang div ${nSeeds}L"))).as("_mix"),
-          col("od"), col("b"))
-        .select(col("id"), expr(s"_mix div ${DampDen}L").as("fx"),
-          col("od"), col("b")))
+    powerIteration(nodes, edges, Some(seeds), iters)
+  }
+
+  /** One node of a power-iteration generation: rank `fx` at [[Scale]],
+    * out-degree `od` (every edge leaving the node, whatever its dst) and
+    * teleport weight `b` (1 in the teleport set, else 0). A null `id`
+    * never equals an edge end: that node neither sends nor receives.
+    */
+  private final case class Rank(id: java.lang.Long, fx: Long, od: Long, b: Long)
+
+  /** The power iteration behind both PageRanks. `seeds = None` is the
+    * teleport-to-every-node case: b = 1 everywhere and |S| = |V|.
+    */
+  private def powerIteration(nodes: DataFrame, edges: DataFrame,
+      seeds: Option[DataFrame], iters: Int): DataFrame = {
+    val spark = nodes.sparkSession
+    val idType = nodes.schema("id").dataType
+    (Seq(nodes -> "id", edges -> "src", edges -> "dst") ++ seeds.map(_ -> "id")).foreach { case (df, c) =>
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(c).dataType),
+        s"PageRank ids must be integral; column $c is ${df.schema(c).dataType.simpleString}")
     }
-    ranks.select(col("id"), col("fx").as("rank_fx"),
-      (floor(col("fx").cast("double") / lit(1000.0)) / lit(1e6)).as("rank"))
+    // |S| before any graph work; the PageRank case counts its nodes in
+    // the layout job below
+    val seedCount = seeds.map(_.select(col("id")).distinct().count())
+    require(seedCount.forall(_ > 0), "pageRankPersonalized requires a non-empty seed set")
+
+    val flat = CacheScope.persistRows(
+      edges.select(col("src").cast(LongType), col("dst").cast(LongType)))
+    val part = new HashPartitioner(partitionsFor(spark, flat.count()))
+    // src → (od, non-null dsts): a null-dst edge counts toward its
+    // source's out-degree and carries its share nowhere; a null-src
+    // edge leaves no node
+    val adj = CacheScope.persistRdd(flat
+      .flatMap { r =>
+        if (r.isNullAt(0)) None
+        else Some(r.getLong(0) ->
+          (if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
+      }
+      .groupByKey(part)
+      .mapValues(ds => (ds.size.toLong, ds.iterator.filter(_ != null).map(_.longValue).toArray)))
+
+    // Node ids and seed ids (tagged true) take one shuffle onto the
+    // adjacency's partitioner. Equal ids meet in one partition, so the
+    // per-partition sets are the global distinct sets.
+    def ids(df: DataFrame, seed: Boolean): RDD[(java.lang.Long, Boolean)] =
+      df.select(col("id").cast(LongType)).queryExecution.toRdd.map { r =>
+        (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))) -> seed
+      }
+    val teleportAll = seeds.isEmpty
+    val tagged = seeds.foldLeft(ids(nodes, seed = false))(_ union ids(_, seed = true))
+    // generation 0 with fx unscaled (b); |V| is known only once it ran
+    val lay = CacheScope.persistRdd(adj.zipPartitions(tagged.partitionBy(part)) { (out, in) =>
+      val od = mutable.LongMap.empty[Long]
+      out.foreach { case (s, (d, _)) => od(s) = d }
+      val node = mutable.LongMap.empty[Unit]
+      val seed = mutable.LongMap.empty[Unit]
+      var nullNode = false
+      in.foreach {
+        case (null, isSeed) => if (!isSeed) nullNode = true
+        case (id, isSeed) => (if (isSeed) seed else node)(id) = ()
+      }
+      node.keysIterator.map { id =>
+        Rank(id, 0L, od.getOrElse(id, 0L), if (teleportAll || seed.contains(id)) 1L else 0L)
+      } ++ (if (nullNode) Iterator(Rank(null, 0L, 0L, if (teleportAll) 1L else 0L)) else Iterator.empty)
+    })
+    val (nNodes, nDanglingTeleport) = lay
+      .map(r => (1L, if (r.od == 0L) r.b else 0L))
+      .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
+    flat.unpersist(blocking = false)
+    val nSeeds = seedCount.getOrElse(nNodes)
+    require(nSeeds > 0, "pageRank requires a non-empty node set")
+    // base = teleport share per seed; the div truncation loses
+    // < |S|·1e-12 of total mass — the price of integer exactness
+    val base = Scale / nSeeds
+    val teleport = (DampDen - DampNum) * base
+
+    var ranks: RDD[Rank] = lay.map(r => r.copy(fx = r.b * base))
+    var dang = nDanglingTeleport * base
+    var stale = lay
+    for (k <- 1 to iters) {
+      val prev = ranks
+      val share = dang / nSeeds
+      val recv = adj.zipPartitions(prev) { (out, rs) =>
+        val c = mutable.LongMap.empty[Long]
+        rs.foreach(r => if (r.id != null && r.fx > 0L && r.od > 0L) c(r.id) = r.fx / r.od)
+        out.flatMap { case (s, (_, ds)) =>
+          c.get(s).fold(Iterator.empty[(Long, Long)])(x => ds.iterator.map(_ -> x))
+        }
+      }.reduceByKey(part, _ + _)
+      val next = prev.zipPartitions(recv) { (rs, in) =>
+        val got = mutable.LongMap.empty[Long]
+        in.foreach { case (id, x) => got(id) = x }
+        rs.map { r =>
+          val x = if (r.id == null) 0L else got.getOrElse(r.id, 0L)
+          r.copy(fx = (teleport * r.b + DampNum * (x + r.b * share)) / DampDen)
+        }
+      }
+      // every round but the last: one job materializes the generation,
+      // sums its dangling mass per partition, and frees its predecessor
+      if (k < iters) {
+        CacheScope.persistRdd(next)
+        dang = next.map(r => if (r.od == 0L) r.fx else 0L).fold(0L)(_ + _)
+        stale.unpersist(blocking = false)
+        stale = next
+      }
+      ranks = next
+    }
+    // Readable double via the q81 fixed-point idiom: one exact int64→
+    // double conversion (fx < 2^53), floor, one final division — both
+    // engines compute the identical double.
+    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(spark,
+      ranks.map(r => InternalRow(r.id, r.fx)),
+      StructType(Seq(StructField("id", LongType), StructField("rank_fx", LongType, nullable = false))))
+      .select(col("id").cast(idType).as("id"), col("rank_fx"),
+        (floor(col("rank_fx").cast("double") / lit(1000.0)) / lit(1e6)).as("rank"))
   }
 
   /** Clamped label propagation (Zhu & Ghahramani '02 shape) over an
@@ -201,7 +252,7 @@ object Graph {
     * its previous label when no labeled neighbor exists. Integer votes
     * + deterministic tie-break ⇒ engine-replayable. Per round: one
     * edge⋈labels shuffle, one (node, label) count, one max join —
-    * the same two-shuffle budget as a PageRank step.
+    * two shuffles per round.
     *
     * @param labels (id, lab nullable) — the full node universe.
     * @return (id, lab) after `iters` rounds (nullable: nodes never
@@ -302,7 +353,7 @@ object Graph {
     *
     * Scale shape per round: one edge⋈values hash join (edge-sized
     * shuffle) + one per-node sort window for the H-index + one node-
-    * sized left join — comparable to a PageRank step; no collect, no
+    * sized left join; no collect, no
     * broadcast of anything graph-sized. Peeling-based k-core needs
     * O(max-degeneracy) SEQUENTIAL peels; H-index iteration converges
     * in a handful of rounds on sparse dedup graphs and each round is

@@ -1022,10 +1022,11 @@ object TrainingQueries {
     // jaccard similarity graph ranks the docs whose content is most
     // echoed across the corpus — the boilerplate hubs a curation pass
     // inspects (and usually deletes) first. Integer fixed-point power
-    // iteration (core.Graph): 5 rounds, two edge-list shuffles each,
-    // dangling mass as a one-row broadcast; the oracle REPLAYS all 5
-    // iterations as unrolled CTEs, so the hash gates the whole
-    // iteration, not just the final ranking.
+    // iteration (core.Graph): 5 co-partitioned rounds of one shuffle
+    // and one job each, the dangling mass returned by the round's job
+    // as a driver-side scalar; the oracle REPLAYS all 5 iterations as
+    // unrolled CTEs, so the hash gates the whole iteration, not just
+    // the final ranking.
     "q141_neardup_pagerank" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
@@ -1265,8 +1266,8 @@ object TrainingQueries {
     // Personalized PageRank (random walk with restart): teleport and
     // dangling mass return only to the 5 seed docs, so rank measures
     // proximity to the seeds over the near-dup graph — the "related
-    // documents" explorer. Same int64 discipline and unrolled-CTE
-    // oracle as q141.
+    // documents" explorer. Same int64 discipline, round shape (one
+    // shuffle and one job per round) and unrolled-CTE oracle as q141.
     "q153_ppr_related" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair

@@ -29,20 +29,29 @@ class GraphSpec extends SparkSpec {
     fx
   }
 
-  private def run(nodes: Seq[Long], edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
+  /** (id → rank_fx) of a PageRank result, built and collected inside a
+    * bracket.
+    */
+  private def fx(ranks: => org.apache.spark.sql.DataFrame): Map[Long, Long] =
     CacheScope.withReleased {
-      Graph.pageRank(
-        nodes.toDF("id"), edges.toDF("src", "dst"), iters)
-        .select(col("id"), col("rank_fx")).as[(Long, Long)].collect().toMap
+      ranks.select(col("id"), col("rank_fx")).as[(Long, Long)].collect().toMap
     }
+
+  private def run(nodes: Seq[Long], edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] =
+    fx(Graph.pageRank(nodes.toDF("id"), edges.toDF("src", "dst"), iters))
 
   test("pageRank matches an independent local implementation on a mixed graph") {
     // hub (0 pointed to by all), a 2-cycle, a dangling node (4), an
     // isolated node (5).
     val nodes = Seq(0L, 1L, 2L, 3L, 4L, 5L)
     val edges = Seq((1L, 0L), (2L, 0L), (3L, 0L), (1L, 2L), (2L, 1L), (0L, 4L))
-    val got = run(nodes, edges, 5)
-    assert(got == localPageRank(nodes, edges, 5))
+    // an edge to 9 (no node) and one to a null: each counts toward its
+    // source's out-degree and its share is lost; the reference sees
+    // the null as one more outside node
+    val lossy = Seq((1L, Some(9L)), (3L, None))
+    val got = fx(Graph.pageRank(nodes.toDF("id"),
+      (edges.map(e => (e._1, Option(e._2))) ++ lossy).toDF("src", "dst"), 5))
+    assert(got == localPageRank(nodes, edges ++ lossy.map(e => (e._1, e._2.getOrElse(-1L))), 5))
     // the all-pointed-to hub and its sole successor outrank the
     // isolated node, which holds only teleport + dangling share
     assert(got(0L) > got(5L) && got(4L) > got(5L))
@@ -63,13 +72,44 @@ class GraphSpec extends SparkSpec {
     val nodes = (0L until 40L)
     val edges = nodes.flatMap(a => Seq((a, (a * 7 + 3) % 40), (a, (a * 13 + 1) % 40)))
     val a = run(nodes, edges, 4)
-    val b = CacheScope.withReleased {
-      Graph.pageRank(
-        nodes.toDF("id").repartition(7),
-        edges.toDF("src", "dst").repartition(11), 4)
-        .select(col("id"), col("rank_fx")).as[(Long, Long)].collect().toMap
-    }
+    val b = fx(Graph.pageRank(
+      nodes.toDF("id").repartition(7),
+      edges.toDF("src", "dst").repartition(11), 4))
     assert(a == b)
+    val seeds = Seq(0L, 5L, 17L)
+    val pa = fx(Graph.pageRankPersonalized(
+      nodes.toDF("id"), edges.toDF("src", "dst"), seeds.toDF("id"), 4))
+    val pb = fx(Graph.pageRankPersonalized(
+      nodes.toDF("id").repartition(7), edges.toDF("src", "dst").repartition(11),
+      seeds.toDF("id").repartition(3), 4))
+    assert(pa == pb)
+  }
+
+  test("pageRank matches the local implementation when the edges span several partitions") {
+    // >= 2^18 edges: the adjacency and the ranks are hash-laid over more
+    // than one partition, so contributions cross partitions each round
+    val n = 1L << 17
+    val nodes = 0L until n
+    val edges = nodes.filter(_ % 5 != 0)
+      .flatMap(a => Seq((a, (a * 7 + 3) % n), (a, (a * 13 + 1) % (n + 9)), (a, a)))
+    assert(edges.size >= (1 << 18))
+    val got = run(nodes, edges, 3)
+    val want = localPageRank(nodes, edges, 3)
+    // a bounded failure message: printing two 2^17-entry maps takes minutes
+    val off = nodes.filter(id => got.get(id) != want.get(id))
+    assert(got.size == want.size && off.isEmpty,
+      s"${off.size} ranks differ, e.g. ${off.take(3).map(id => (id, got.get(id), want.get(id)))}")
+  }
+
+  test("pageRankPersonalized with every node a seed equals pageRank fx for fx") {
+    // dangling sources (a % 4 == 3) and dsts outside the node set (12, 13)
+    val nodes = 0L until 12L
+    val edges = nodes.filter(_ % 4 != 3)
+      .flatMap(a => Seq((a, (a * 5 + 2) % 12), (a, (a * 3) % 14)))
+    val want = run(nodes, edges, 4)
+    val got = fx(Graph.pageRankPersonalized(
+      nodes.toDF("id"), edges.toDF("src", "dst"), nodes.toDF("id"), 4))
+    assert(got == want)
   }
 
   test("pageRankPersonalized: mass stays near the seeds; uniform-seed case degenerates to pageRank-like spread") {
