@@ -29,7 +29,9 @@ object ProfileQ {
           jobs(e.jobId) = Job(e.jobId,
             Option(e.properties)
               .flatMap(p => Option(p.getProperty("spark.job.description")))
-              .orElse(e.stageInfos.lastOption.map(_.name)).getOrElse(""),
+              // the result stage has the job's highest stage id; the
+              // other entries are parents, some of them skipped
+              .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse(""),
             e.time)
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =

@@ -35,12 +35,6 @@ class LakeCli(spark: SparkSession) {
 
   def snapshot(dir: String): Int = VersionLog.snapshot(spark, dir)
 
-  /** [[snapshot]] plus its OCC retry count — how many commit races
-    * this snapshot rebased through (0 on a quiet table).
-    */
-  def snapshotVerbose(dir: String): (Int, Int) =
-    VersionLog.snapshotDetailed(spark, dir)
-
   def versions(dir: String): Seq[Int] = VersionLog.versions(spark, dir)
 
   def history(dir: String): DataFrame = VersionLog.history(spark, dir)

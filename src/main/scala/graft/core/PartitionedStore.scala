@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Surgical maintenance of `PARTITIONED BY` parquet stores (the
-  * on-disk index layout both [[graft.dedup.LshIndex]] and
-  * [[graft.similarity.Similarity.writeIvfIndex]] use): rewrite ONLY
+  * on-disk index layout [[graft.dedup.LshIndex]] uses): rewrite ONLY
   * the named partitions, leave every other directory untouched.
   */
 object PartitionedStore {
@@ -29,26 +28,6 @@ object PartitionedStore {
     rewriteAndSwap(spark, dir, partCol, parts, kept)
   }
 
-  /** Compact the named partitions' files — the small-files
-    * housekeeping every incrementally-appended store needs: each
-    * `append` lands new files beside old ones, and a year of small
-    * batches turns one logical partition into thousands of tiny
-    * parquet files whose open/footer cost dominates the scan. Rewrites
-    * each listed partition as ONE task's output (split only past
-    * `maxRecordsPerFile`), content-identical, via the same pruned-read
-    * + swap path as deletion — partitions not listed are never opened.
-    */
-  def compactPartitions(
-      spark: SparkSession, dir: String, partCol: String,
-      parts: Seq[Int], maxRecordsPerFile: Long = 1000000L): Unit = {
-    if (parts.isEmpty) return
-    val rows = spark.read.parquet(dir)
-      .filter(col(partCol).isin(parts.map(Integer.valueOf): _*))
-      .repartition(col(partCol)) // one task per partition value
-    rewriteAndSwap(spark, dir, partCol, parts, rows,
-      Map("maxRecordsPerFile" -> maxRecordsPerFile.toString))
-  }
-
   /** Write `rows` (covering exactly the listed partitions) to a
     * scratch dir, then swap the affected `partCol=v` directories in
     * place. A partition with no surviving rows ends up absent.
@@ -65,8 +44,7 @@ object PartitionedStore {
     */
   private def rewriteAndSwap(
       spark: SparkSession, dir: String, partCol: String,
-      parts: Seq[Int], rows: DataFrame,
-      writeOptions: Map[String, String] = Map.empty): Unit = {
+      parts: Seq[Int], rows: DataFrame): Unit = {
     // Resolve the scratch dirs as true siblings via Path.getParent:
     // splicing "$dir/.." would hand HDFS a path with a ".." component,
     // which DFSUtil.isValidName rejects outright — the swap would fail
@@ -78,8 +56,7 @@ object PartitionedStore {
       sys.error(s"$dir has no parent directory to stage the swap in"))
     val tmp = new org.apache.hadoop.fs.Path(parent, s"${name}__rewrite_tmp").toString
     val bak = new org.apache.hadoop.fs.Path(parent, s"${name}__rewrite_bak").toString
-    rows.write.mode("overwrite").options(writeOptions)
-      .partitionBy(partCol).parquet(tmp)
+    rows.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     val bakRoot = new org.apache.hadoop.fs.Path(bak)

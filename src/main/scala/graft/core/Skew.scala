@@ -1,57 +1,15 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for equi-joins whose key distribution is Zipfian
-  * (popular token contracts, stop-ish shingles, hub addresses): a hot
-  * key's rows all hash to ONE reducer, so a single task runs as long
-  * as the whole stage. Salting splits every key into `salts`
-  * sub-partitions — the left (large, skewed) side gets a
-  * deterministic content-derived salt, the right side is replicated
-  * once per salt value, and the join key becomes (key, salt).
-  *
-  * This is the static complement to AQE's runtime skew-join split
-  * (`spark.sql.adaptive.skewJoin`, which only kicks in for sort-merge
-  * joins above size thresholds): use it when the skew is known and the
-  * right side is small enough to replicate `salts`×.
-  *
-  * Determinism: the salt derives from the left row's tiebreak column
-  * (any stable id), never from `rand()` — replays and retries produce
-  * identical partitioning, which straggler-recovery at 100 TB needs.
+/** Skew guards for the pair self-joins whose key distribution is
+  * Zipfian (stop-ish shingles, hub addresses, degenerate LSH buckets):
+  * a hot key's rows all hash to ONE reducer, so a single task runs as
+  * long as the whole stage.
   */
 object Skew {
 
-  /** Inner equi-join on `keys` with the left side salted `salts` ways.
-    * `leftSaltFrom` is any stable left column (an id) the salt derives
-    * from. Result columns = left ++ right-minus-keys, like
-    * `join(right, keys)`.
-    */
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      keys: Seq[String],
-      leftSaltFrom: Column,
-      salts: Int): DataFrame = {
-    require(salts >= 1)
-    val l = left.withColumn("_salt", pmod(xxhash64(leftSaltFrom), lit(salts)))
-    val r = right.withColumn("_salt",
-      explode(sequence(lit(0L), lit(salts - 1L))))
-    l.join(r, keys :+ "_salt").drop("_salt")
-  }
-
-  /** Drop rows whose `keyCol` value occurs in more than `cap` rows —
-    * the df-cap guard for inverted-index/LSH-bucket self-joins, where
-    * one degenerate hot key (a stop-shingle, an empty-document LSH
-    * bucket) contributes |key|² candidate pairs: a straggler task and
-    * a candidate-volume explosion in one. `None` = no guard. The key
-    * frequencies aggregate with map-side partials; the hot-key set is
-    * tiny on any Zipfian distribution (a handful of keys above cap),
-    * so AQE broadcasts the anti join at runtime — and when a
-    * pathological input really does have |rows|/cap hot keys, the
-    * fallback shuffle is on the same key the downstream pair join
-    * shuffles on anyway.
-    */
   /** Distinct over a candidate-PAIR list, pinned at real parallelism.
     * The pair list is BYTES-small (two ids per row) but every
     * surviving pair pays a CPU-dense verify downstream (a compiled
@@ -72,6 +30,18 @@ object Skew {
     df.repartition(p, keys.map(col): _*).dropDuplicates()
   }
 
+  /** Drop rows whose `keyCol` value occurs in more than `cap` rows —
+    * the df-cap guard for inverted-index/LSH-bucket self-joins, where
+    * one degenerate hot key (a stop-shingle, an empty-document LSH
+    * bucket) contributes |key|² candidate pairs: a straggler task and
+    * a candidate-volume explosion in one. `None` = no guard. The key
+    * frequencies aggregate with map-side partials; the hot-key set is
+    * tiny on any Zipfian distribution (a handful of keys above cap),
+    * so AQE broadcasts the anti join at runtime — and when a
+    * pathological input really does have |rows|/cap hot keys, the
+    * fallback shuffle is on the same key the downstream pair join
+    * shuffles on anyway.
+    */
   def dropHotKeys(df: DataFrame, keyCol: String, cap: Option[Int]): DataFrame =
     cap match {
       case Some(c) =>

@@ -27,13 +27,6 @@ object Upsert {
   def latestById(df: DataFrame, keys: Seq[String], version: Seq[Column]): DataFrame =
     graft.core.Joins.lastByKey(df, keys, version)
 
-  /** Version-free variant for when any row per id is acceptable
-    * (matches ClickHouse ANY semantics, not deterministic row choice).
-    * Cheaper: map-side partial dedup before the shuffle.
-    */
-  def anyById(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** Compaction: rewrite an append-log table to one row per key so the
     * dedup window on subsequent reads is cheap. At 100 TB this runs as a
     * periodic job, partitioned by the storage layout key.

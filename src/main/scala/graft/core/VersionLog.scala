@@ -736,19 +736,6 @@ object VersionLog {
     * referenced by dropped versions, so they are never touched either.
     * Returns (droppedVersionCount, deletedFileCount).
     */
-  /** [[vacuum]] that additionally PROTECTS every version at or above
-    * `floor` — the consumer-safety form: pass the minimum version any
-    * lagging cursor/MV/mirror has consumed up to, and the reclaim can
-    * never eat the version records or delta files its catch-up feed
-    * still needs (a plain vacuum would, leaving the consumer a loud
-    * error and a forced rebuild).
-    */
-  def vacuumKeeping(spark: SparkSession, dir: String, keepLast: Int,
-      floor: Int): (Int, Int) = {
-    val protectCount = versions(spark, dir).count(_ >= floor)
-    vacuum(spark, dir, math.max(keepLast, protectCount))
-  }
-
   def vacuum(spark: SparkSession, dir: String, keepLast: Int): (Int, Int) = {
     require(keepLast >= 1, "must keep at least the latest version")
     val vs = versions(spark, dir)

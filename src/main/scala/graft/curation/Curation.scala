@@ -536,10 +536,7 @@ object Curation {
     * changelog a versioned training corpus publishes per release:
     * per id, `added` (only in B), `removed` (only in A), `changed`
     * (content hash differs), `unchanged`. One full-outer hash join on
-    * the id over md5 fingerprints (text never crosses the shuffle);
-    * for a release process diffing the same tables repeatedly, write
-    * both sides bucketed by id ([[graft.core.Bucketing]]) and the
-    * join goes exchange-free.
+    * the id over md5 fingerprints (text never crosses the shuffle).
     */
   def corpusDiff(a: DataFrame, b: DataFrame,
       idCol: String, textCol: String): DataFrame = {

@@ -434,13 +434,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("cos"))
   }
 
-  /** MinHash signature of a shingle set: `numHashes` independent
-    * min-hashes, hash j of shingle s = xxh64(s, seed=j). Compiled
-    * kernel (SketchOps) — stays in whole-stage codegen.
-    */
-  def minhashSignature(shingleSet: Column, numHashes: Int): Column =
-    graft.functions.SketchFunctions.minhash_sig(shingleSet, numHashes)
-
   /** LSH band-bucket keys straight from the shingle set (signature
     * computed once inside the kernel — an expression-level slice of a
     * signature column would be re-inlined per band by projection
@@ -678,23 +671,6 @@ object Dedup {
         posexplode(graft.functions.SketchFunctions.ngrams_all_strict(col(textCol), n))
           .as(Seq("pos0", "gram")))
       .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("gram"))
-
-  /** Substring-level duplication signal (the dedup granularity of Lee
-    * et al., "Deduplicating Training Data Makes Language Models
-    * Better", ACL'22 — there via suffix arrays): word n-grams occurring
-    * in >= minDocs DISTINCT documents, with corpus-wide document and
-    * occurrence counts. One aggregation keyed on the gram — map-side
-    * partial count-distinct via the (gram, doc) pre-aggregate, never a
-    * self-join.
-    */
-  def duplicatedSpans(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int, minDocs: Int = 2): DataFrame =
-    spanGrams(df, idCol, textCol, n)
-      .groupBy(col("gram"), col("doc_id")).agg(count(lit(1)).as("occ"))
-      .groupBy(col("gram"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("occ")).as("n_occurrences"))
-      .filter(col("n_docs") >= minDocs)
 
   /** In-place cross-document test over a `partCol` window: true iff at
     * least `minDocs` DISTINCT `docCol` values share the partition. The
@@ -1330,6 +1306,15 @@ object Dedup {
     relabeledOld.unionByName(newNodes)
   }
 
+  /** Survivor maps at or under this row count resolve driver-side (one
+    * collect + an in-memory walk) instead of spawning per-round probe
+    * and join jobs whose fixed scheduling cost dwarfs the data — the
+    * same size-adaptive switch AQE applies to broadcast joins. A
+    * million (keep, drop) pairs is a few tens of MB on the driver;
+    * above it the distributed pointer jumping takes over unchanged.
+    */
+  private[dedup] val LocalResolveRows: Long = 1L << 20
+
   /** Follow keeper chains in a (keep, drop) mapping to their roots by
     * POINTER JUMPING: each pass re-points a drop at its keeper's
     * keeper, halving every chain, so a chain of length L needs
@@ -1344,15 +1329,6 @@ object Dedup {
     * bracket around build-and-consume releases it deterministically,
     * and [[graft.core.CacheScope.releaseAll]] sweeps unbracketed calls.
     */
-  /** Survivor maps at or under this row count resolve driver-side (one
-    * collect + an in-memory walk) instead of spawning per-round probe
-    * and join jobs whose fixed scheduling cost dwarfs the data — the
-    * same size-adaptive switch AQE applies to broadcast joins. A
-    * million (keep, drop) pairs is a few tens of MB on the driver;
-    * above it the distributed pointer jumping takes over unchanged.
-    */
-  private[dedup] val LocalResolveRows: Long = 1L << 20
-
   private[dedup] def resolveChains(mapping0: DataFrame,
       localLimit: Long = LocalResolveRows): DataFrame = {
     // The mapping is persisted BEFORE anything probes it: the count

@@ -7,8 +7,7 @@ import graft.core.CacheScope.persist
 import graft.text.TextFunctions
 
 /** On-disk MinHash-LSH index: write-once / probe-many near-duplicate
-  * detection for INCREMENTAL ingestion — the dedup-plane mirror of
-  * [[graft.similarity.Similarity.writeIvfIndex]].
+  * detection for INCREMENTAL ingestion.
   *
   * [[Dedup.minhashLshPairs]] and [[Dedup.jaccardPairsAgainst]] re-shingle
   * and re-sign the full reference corpus on every call; at 100 TB an

@@ -184,14 +184,6 @@ object Abi {
       decodeSeq(cs, data, off).mkString("(", ", ", ")")
   }
 
-  /** Head/tail ABI decode of `types` (tuple-free type strings) at
-    * data. Throws on malformed input (caller converts to None /
-    * next-entry). The tuple-aware path is [[decodeInput]], which
-    * carries the `components` shape from the ABI JSON.
-    */
-  def decodeArgs(types: Seq[String], data: Array[Byte]): Seq[String] =
-    decodeSeq(types.map(parseType(_, null)), data, 0)
-
   private def hexToBytes(s0: String): Array[Byte] = {
     val s1 = if (s0.startsWith("0x")) s0.substring(2) else s0
     val s = if (s1.length % 2 == 1) "0" + s1 else s1

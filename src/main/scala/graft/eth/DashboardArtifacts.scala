@@ -17,9 +17,8 @@ import org.json4s.jackson.JsonMethods._
   * the picker substitutes them at render time, exactly as in the
   * reference (eth/Grafana.scala holds the engine-side equivalents).
   *
-  * Every query is a thin SQL spelling of a named panel function in
-  * [[Dashboards]]; DashboardsSpec executes them (macros substituted)
-  * against fixture views to keep the dialect valid.
+  * DashboardsSpec executes every panel (macros substituted) against
+  * fixture views and checks their values.
   */
 object DashboardArtifacts {
 

@@ -1,140 +1,15 @@
 package graft.eth
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Joins
 
-/** The reference's Grafana dashboard panels
-  * (/root/reference/grafana/dashboards/{ethereum,erc20_tokens,
-  * insights}.json) and the gas-price-estimation dataset
-  * (examples/gas_price_estimation/gas_price_estimation.ipynb), as
-  * named functions over the FINAL table views. Every panel shares one
-  * idiom: restrict to blocks in the picker's window via a semi-join on
-  * the (small, broadcastable) block table — `$timeFilter` — then
-  * aggregate; top-k panels add ORDER BY ... LIMIT 10.
+/** The gas-price-estimation notebook's training frame
+  * (examples/gas_price_estimation/gas_price_estimation.ipynb). The
+  * Grafana panels are SQL in [[DashboardArtifacts]].
   */
 object Dashboards {
-
-  /** `$timeFilter` subquery: block numbers whose timestamp is in
-    * [from, to) — broadcast to every panel's semi-join.
-    */
-  def blocksInWindow(blocks: DataFrame, from: String, to: String): DataFrame =
-    blocks.filter(Grafana.timeFilter(col("timestamp"), from, to))
-      .select(col("number").as("blockNumber"))
-
-  private def inWindow(df: DataFrame, windowBlocks: DataFrame): DataFrame =
-    df.join(broadcast(windowBlocks), Seq("blockNumber"), "left_semi")
-
-  // ---- ethereum.json --------------------------------------------------
-
-  /** "Transactions": count of value-moving transactions in window. */
-  def txCount(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(itx.filter(col("value") > 0), windowBlocks)
-      .agg(count(lit(1)).as("n"))
-
-  /** "ETH transferred": sum(value) in window. */
-  def ethTransferred(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(itx, windowBlocks).agg(sum(col("value")).as("eth"))
-
-  /** "Contracts created" in window. */
-  def contractsCreated(contracts: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(contracts, windowBlocks).agg(count(lit(1)).as("n"))
-
-  /** "Contract calls": transactions TO a known contract in window. */
-  def contractCalls(itx: DataFrame, contracts: DataFrame,
-      windowBlocks: DataFrame): DataFrame =
-    inWindow(itx, windowBlocks)
-      .join(contracts.select(col("address").as("to")), Seq("to"), "left_semi")
-      .agg(count(lit(1)).as("n"))
-
-  private def top10(df: DataFrame, key: String, agg: Column, as: String): DataFrame =
-    df.filter(col(key).isNotNull)
-      .groupBy(col(key).as("address")).agg(agg.as(as))
-      .orderBy(col(as).desc, col("address")).limit(10)
-
-  /** "Top ETH receivers/senders": sum(value) by to/from, top 10. */
-  def topEthReceivers(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    top10(inWindow(itx, windowBlocks), "to", sum(col("value")), "eth_received")
-
-  def topEthSenders(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    top10(inWindow(itx, windowBlocks), "from", sum(col("value")), "eth_sended")
-
-  /** "Top miners": reward rows per author, top 10. */
-  def topMiners(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(itx.filter(col("type") === "reward"), windowBlocks)
-      .groupBy(col("author")).agg(count(lit(1)).cast("double").as("blocks"))
-      .orderBy(col("blocks").desc, col("author")).limit(10)
-
-  /** "Top gas spenders": avg(gasUsed*gasPrice) by to, top 10. */
-  def topGasSpenders(itx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    top10(inWindow(itx, windowBlocks), "to",
-      avg(col("gasUsed") * col("gasPrice")), "gas_spended")
-
-  /** "Most called contracts" / "top contract callers", top 10. */
-  def topCalledContracts(itx: DataFrame, contracts: DataFrame,
-      windowBlocks: DataFrame): DataFrame =
-    top10(
-      inWindow(itx, windowBlocks)
-        .join(contracts.select(col("address").as("to")), Seq("to"), "left_semi"),
-      "to", count(lit(1)).cast("double"), "calls")
-
-  def topContractCallers(itx: DataFrame, contracts: DataFrame,
-      windowBlocks: DataFrame): DataFrame =
-    top10(
-      inWindow(itx, windowBlocks)
-        .join(contracts.select(col("address").as("to")), Seq("to"), "left_semi"),
-      "from", count(lit(1)).cast("double"), "calls_sended")
-
-  /** "Blocks per day" time series (whole history). */
-  def blocksPerDay(blocks: DataFrame): DataFrame =
-    blocks.groupBy(to_date(col("timestamp")).as("date"))
-      .agg(count(lit(1)).cast("double").as("blocks"))
-      .orderBy(col("date"))
-
-  // ---- erc20_tokens.json ----------------------------------------------
-
-  private val zeroAddr = "0x0000000000000000000000000000000000000000"
-
-  /** "Token transfers" count in window. */
-  def tokenTransferCount(tokenTx: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(tokenTx, windowBlocks).agg(count(lit(1)).cast("double").as("n"))
-
-  /** "Top tokens by holders": distinct receivers per token, ANY INNER
-    * joined to the token's name.
-    */
-  def topTokensByHolders(tokenTx: DataFrame, descriptions: DataFrame,
-      windowBlocks: DataFrame, exact: Boolean = true): DataFrame = {
-    val holders =
-      if (exact) countDistinct(col("to"))
-      else approx_count_distinct(col("to")) // the 100 TB variant
-    val top = inWindow(tokenTx.filter(col("token") =!= zeroAddr), windowBlocks)
-      .groupBy(col("token")).agg(holders.cast("double").as("holders"))
-      .orderBy(col("holders").desc, col("token")).limit(10)
-    Joins.anyJoin(top,
-      descriptions.select(col("id").as("token"), col("token_name")),
-      Seq("token"), "inner", broadcastRight = true)
-      .select(col("token"), col("token_name"), col("holders"))
-      .orderBy(col("holders").desc, col("token"))
-  }
-
-  /** "Addresses holding most unique tokens", top 10. */
-  def topAddressesByUniqueTokens(tokenTx: DataFrame,
-      windowBlocks: DataFrame): DataFrame =
-    inWindow(tokenTx.filter(col("from") =!= zeroAddr), windowBlocks)
-      .groupBy(col("from").as("address"))
-      .agg(countDistinct(col("token")).cast("double").as("unique_tokens"))
-      .orderBy(col("unique_tokens").desc, col("address")).limit(10)
-
-  // ---- insights.json ---------------------------------------------------
-
-  /** The insights dashboard is table counts in window — one generic
-    * panel fn (rows with a blockNumber semi-joined to the window).
-    */
-  def countInWindow(df: DataFrame, windowBlocks: DataFrame): DataFrame =
-    inWindow(df, windowBlocks).agg(count(lit(1)).as("n"))
-
-  // ---- gas_price_estimation.ipynb --------------------------------------
 
   /** The notebook's dataset query: per 1000-block bucket, median and
     * 20th-percentile gasPrice (in gwei) of FIRST-trace (`id LIKE

@@ -26,15 +26,6 @@ object Events {
       .withColumn("id",
         concat(col("transactionHash"), lit("."), col("transactionLogIndex").cast("string")))
 
-  /** B22/A18: distinct range buckets of size `rangeSize` covering the
-    * given block numbers — the unit of a getLogs fetch.
-    */
-  def rangeBuckets(blockNumbers: DataFrame, rangeSize: Int = 5): DataFrame =
-    blockNumbers.select(
-      (floor(col("number") / rangeSize).cast("long") * rangeSize).as("start"))
-      .distinct()
-      .withColumn("end", col("start") + rangeSize - 1)
-
   /** B16: rebuild a callable input from an event:
     * selector = topics[0][0:10] (0x + 4 bytes), then the remaining
     * topics stripped of 0x, then data stripped of 0x.

@@ -1,24 +1,13 @@
 package graft.eth
 
-import java.sql.Timestamp
-
-/** Case-class models for the chain tables — the typed core promised in
-  * SURVEY §1.1: `Dataset[T]` where compile-time field safety helps
-  * (pipeline internals, tests), `DataFrame` at the dynamic SQL
-  * boundary. Field names/types mirror [[Schemas]] exactly (reference
-  * schema: /root/reference/schema/schema.py:1-82); Scala keywords are
-  * backticked, nullable columns are Options.
+/** Case-class models for the chain tables read through
+  * [[EthStore.typedFinal]]: `Dataset[T]` where compile-time field
+  * safety helps, `DataFrame` at the dynamic SQL boundary. Field
+  * names/types mirror [[Schemas]] exactly (the reference's
+  * schema/schema.py); Scala keywords are backticked, nullable columns
+  * are Options.
   */
 object Models {
-
-  case class Block(number: Long, timestamp: Option[Timestamp], id: String)
-
-  case class BlockFlag(id: String, name: String, value: Option[Short])
-
-  case class ContractBlock(id: String, name: String, value: Option[Long])
-
-  case class ContractAbi(id: String, abi: Option[String],
-      abi_extracted: Option[Boolean])
 
   case class Event(
       `type`: Option[String],
@@ -31,51 +20,6 @@ object Models {
       blockHash: Option[String],
       blockNumber: Option[Long],
       topics: Option[Seq[String]],
-      id: String)
-
-  case class TokenTransaction(
-      `from`: Option[String],
-      to: Option[String],
-      value: Option[Double],
-      id: String,
-      token: Option[String],
-      transactionHash: Option[String],
-      blockNumber: Option[Long])
-
-  case class DecodedParam(`type`: Option[String], value: Option[String])
-
-  case class DecodedInput(
-      id: String,
-      name: Option[String],
-      params: Option[Seq[DecodedParam]],
-      blockNumber: Option[Long])
-
-  case class Contract(
-      id: String,
-      blockNumber: Option[Long],
-      address: Option[String],
-      owner: Option[String],
-      bytecode: Option[String],
-      standard_erc20: Option[Short],
-      standard_erc223: Option[Short],
-      standard_bancor_converter: Option[Short])
-
-  case class ContractDescription(
-      token_name: Option[String],
-      token_symbol: Option[String],
-      decimals: Option[Short],
-      total_supply: Option[Long],
-      token_owner: Option[String],
-      cmc_id: Option[String],
-      website_slug: Option[String],
-      id: String)
-
-  case class Price(
-      address: Option[String],
-      USD: Option[Double],
-      BTC: Option[Double],
-      ETH: Option[Double],
-      timestamp: Option[Timestamp],
       id: String)
 
   case class InternalTransaction(

@@ -117,14 +117,6 @@ object Schemas {
     StructField("transactionHash", StringType),
     StructField("blockNumber", LongType)))
 
-  /** Every physical table name, as in the reference's INDICES map
-    * (config.py:14-32), minus the ClickHouse prefixes.
-    */
-  val tableNames: Seq[String] = Seq(
-    "block", "internal_transaction", "block_flag", "contract_abi",
-    "contract_block", "event", "transaction_input", "event_input",
-    "price", "contract_description")
-
   /** Schema-policed ingestion (custom_clickhouse._filter_schema
     * analog): keep exactly the declared columns — extras dropped,
     * missing filled with NULL.

@@ -235,8 +235,8 @@ object Similarity {
     * broadcast to both assignment joins, so the corpus never shuffles
     * for assignment — the only wide exchange is the per-query top-k.
     */
-  /** Default seed quantizer shared by [[semDedup]], [[ivfTopK]],
-    * [[writeIvfIndex]] and [[kmeansCentroids]]: the `nlist` corpus
+  /** Default seed quantizer shared by [[semDedup]], [[ivfTopK]]
+    * and [[kmeansCentroids]]: the `nlist` corpus
     * vectors that sort first by `md5(c_id)` — a deterministic uniform
     * sample. NOT the lowest-id vectors: real corpora arrive sorted by
     * source or time, so an id-prefix seed concentrates every centroid
@@ -373,41 +373,8 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
   }
 
-  /** [[semDedup]] over a materialized [[writeIvfIndex]] directory —
-    * the at-scale form: the cluster assignment is computed ONCE when
-    * the index is written (the ad-hoc `semDedup` recomputes it on both
-    * sides of its self-join), and the pair join reads the
-    * already-partitioned, norm-precomputed cells.
-    */
-  def semDedupIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      tau: Double,
-      saltCellRows: Int = 0,
-      maxSalts: Int = 64): DataFrame = {
-    require(saltCellRows >= 0 && maxSalts >= 1)
-    val assigned = spark.read.parquet(path)
-      .select(col("list_id"), col("c_id"), col("c_emb"), col("c_norm"))
-    // same cell-salting skew guard as the ad-hoc form: an index cell
-    // the quantizer let grow dense is exactly as much of a straggler
-    // when it is read back from disk
-    cellPairDrops(assigned, tau, saltCellRows, maxSalts)
-  }
-
-  /** Materialize an IVF index on disk: the corpus stored PARTITIONED
-    * BY its coarse-quantizer cell (`list_id=<n>/` directories) plus the
-    * centroid table under `_centroids/`. The point at 100 TB: a probe
-    * that touches `nprobe` of `nlist` cells then reads only those
-    * partitions — partition pruning at the file-listing level, the
-    * storage analog of an inverted list. Norms are precomputed into
-    * the index so probes skip the sqrt pass.
-    */
-  /** THE cell-assignment rule, shared verbatim by index build, append
-    * and delete: nearest broadcast centroid by cosine, ties to the
-    * LOWEST cent_id. One definition on purpose — delete finds a
-    * vector's partition by REPLAYING this assignment, so a tweak that
-    * reached only one copy would silently leave "forgotten" vectors
-    * probeable in a cell delete never opens.
+  /** The cell-assignment rule: nearest broadcast centroid by cosine,
+    * ties to the LOWEST cent_id.
     */
   private def assignToCentroids(vectors: DataFrame, centN: DataFrame): DataFrame =
     graft.core.Joins.lastByKey(
@@ -416,115 +383,6 @@ object Similarity {
         .withColumn("a_score",
           cosineWithNorms(col("c_emb"), col("cent_emb"), col("c_norm"), col("cent_norm"))),
       Seq("c_id"), Seq(col("a_score"), -col("cent_id")))
-
-  /** The index's frozen quantizer, read back normed. */
-  private def frozenCentroids(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/_centroids")
-      .select(col("cent_id"), col("cent_emb"))
-      .withColumn("cent_norm", norm(col("cent_emb")))
-
-  def writeIvfIndex(
-      corpus: DataFrame, // (c_id, c_emb: array<double>)
-      path: String,
-      nlist: Int = 16,
-      centroids: Option[DataFrame] = None): Unit = {
-    val cent = centroids.getOrElse(seedCentroids(corpus, nlist))
-      .select(col("cent_id"), col("cent_emb"))
-    val centN = cent.withColumn("cent_norm", norm(col("cent_emb")))
-    assignToCentroids(corpus, centN)
-      .select(col("cent_id").as("list_id"), col("c_id"), col("c_emb"), col("c_norm"))
-      .write.mode("overwrite").partitionBy("list_id").parquet(path)
-    cent.write.mode("overwrite").parquet(s"$path/_centroids")
-  }
-
-  /** Append a vector batch to an existing [[writeIvfIndex]] directory —
-    * the similarity-plane mirror of [[graft.dedup.LshIndex.append]]:
-    * new vectors assign to the index's FROZEN centroids (read back from
-    * `_centroids/`, broadcast) and land in their `list_id=` partitions
-    * via dynamic-partition append — no rewrite of existing cells, no
-    * re-quantization. Identical to having built the index over the
-    * union with the same centroids (spec-asserted), so probes see
-    * appended vectors exactly as original ones. At 100 TB this is the
-    * ingestion path: the coarse quantizer trains once, batches stream
-    * in forever; re-train (a fresh [[writeIvfIndex]]) only when drift
-    * makes cells unbalanced. The caller owns id uniqueness across
-    * appends, as with the LSH index.
-    */
-  def appendIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      batch: DataFrame // (c_id, c_emb: array<double>)
-  ): Unit =
-    assignToCentroids(batch, frozenCentroids(spark, path))
-      .select(col("cent_id").as("list_id"), col("c_id"), col("c_emb"), col("c_norm"))
-      .write.mode("append").partitionBy("list_id").parquet(path)
-
-  /** Remove vectors from a [[writeIvfIndex]] directory — the
-    * right-to-be-forgotten operation mirroring
-    * [[graft.dedup.LshIndex.delete]]. Takes the vectors' (c_id, c_emb)
-    * rows — the forget flow reads them from the embedding table by
-    * id — because a vector's rows live in the `list_id=` partition its
-    * EMBEDDING quantizes to under the index's frozen centroids.
-    * Re-assigning the deleted batch is deleted-set-sized work; the
-    * rewrite touches only the assigned cells' directories, never the
-    * index (SimilaritySpec asserts untouched cells survive
-    * byte-identical and probes equal a fresh build without the
-    * vectors).
-    */
-  def deleteFromIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      vectors: DataFrame // (c_id, c_emb: array<double>)
-  ): Unit = {
-    val assigned = assignToCentroids(vectors, frozenCentroids(spark, path))
-    // bounded collect: at most nlist cells
-    val cells = assigned.select(col("cent_id").cast("int"))
-      .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
-    graft.core.PartitionedStore.deleteKeysFromPartitions(
-      spark, path, "list_id", cells, "c_id", vectors.select(col("c_id")).distinct())
-  }
-
-  /** ANN top-k over a [[writeIvfIndex]] directory. Probe cells are
-    * chosen per query against the (bounded, nlist-row) centroid table;
-    * the UNION of probed cells — at most nlist longs — becomes a
-    * literal partition filter, so the corpus scan lists and reads ONLY
-    * those `list_id=` directories. Scoring then matches [[ivfTopK]]
-    * exactly.
-    */
-  def ivfTopKIndexed(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      queries: DataFrame, // (q_id, q_emb: array<double>)
-      k: Int,
-      nprobe: Int = 4): DataFrame = {
-    val cent = spark.read.parquet(s"$path/_centroids")
-      .withColumn("cent_norm", norm(col("cent_emb")))
-    val q = queries.withColumn("q_norm", norm(col("q_emb")))
-    val probeW = Window.partitionBy(col("q_id")).orderBy(col("p_score").desc, col("cent_id"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("p_score",
-        cosineWithNorms(col("q_emb"), col("cent_emb"), col("q_norm"), col("cent_norm")))
-      .withColumn("p_rank", row_number().over(probeW))
-      .filter(col("p_rank") <= nprobe)
-      .select(col("q_id"), col("q_emb"), col("q_norm"), col("cent_id").as("list_id"))
-    // persist: the probe assignment feeds BOTH the bounded driver
-    // collect below and the scoring join — without it the query×
-    // centroid stage would run twice. Bounded: |Q|·nprobe rows, the
-    // small side by this operator's premise.
-    persist(probes)
-    // bounded collect: the probed-cell union is at most nlist values
-    val probedLists = probes.select(col("list_id")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    val lists = spark.read.parquet(path)
-      .filter(col("list_id").isin(probedLists.toIndexedSeq: _*))
-    val scored = lists.join(probes, Seq("list_id"))
-      .withColumn("cos", cosineWithNorms(col("q_emb"), col("c_emb"), col("q_norm"), col("c_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
-  }
 
   /** Per-vector int8 scalar quantization: scale = max|x|/127, stored
     * value = floor(x/scale + 0.5) ∈ [-127, 127]. At 100 TB this is the
@@ -754,10 +612,6 @@ object Similarity {
     cellPairDrops(assigned, tau, saltCellRows, maxSalts)
   }
 
-  /** The within-cell pair join + smallest-keeper reduction shared by
-    * [[semDedup]] and [[semDedupIndexed]], with the cell-salting skew
-    * guard. `assigned` = (list_id, c_id, c_emb, c_norm).
-    */
   /** The auto-tuned salting threshold: sub-buckets sized at 4× the
     * mean cell (a cell under that is not skewed enough to be worth
     * splitting), floored at 1024 rows (under ~half a million pairs a
@@ -766,6 +620,10 @@ object Similarity {
   def autoSaltRows(meanCellRows: Double): Long =
     math.max(1024L, math.ceil(meanCellRows * 4.0).toLong)
 
+  /** The within-cell pair join + smallest-keeper reduction of
+    * [[semDedup]], with the cell-salting skew guard. `assigned` =
+    * (list_id, c_id, c_emb, c_norm).
+    */
   private[graft] def cellPairDrops(
       assigned: DataFrame,
       tau: Double,

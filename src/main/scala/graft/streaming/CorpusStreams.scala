@@ -170,105 +170,6 @@ object CorpusStreams {
           indexPath, outPath, tau, maxBucketDocFreq)
     }
 
-  /** One micro-batch of the streaming drift monitor: PSI of the
-    * incoming batch's quality distribution against the frozen
-    * reference histogram, appended as one row per source to
-    * `outPath` with the batch id — the time series a pipeline alerts
-    * on. Public so replay semantics are directly testable.
-    */
-  def driftBatch(batch: DataFrame, batchId: Long, textCol: String,
-      refPath: String, outPath: String, nBuckets: Int): Unit = {
-    import org.apache.spark.sql.functions.{floor => ffloor, least, lit}
-    val spark = batch.sparkSession
-    val ref = spark.read.parquet(refPath)
-    def sided(df: DataFrame, side: String): DataFrame =
-      df.select(col("source"), lit(side).as("side"),
-        least(ffloor(graft.text.TextFunctions.qualityScore(col(textCol))
-          * nBuckets).cast("int"), lit(nBuckets - 1)).as("bucket"))
-    graft.curation.Curation.populationStability(
-        sided(ref, "a").unionByName(sided(batch, "b")),
-        "source", "side", "bucket", nBuckets)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(outPath)
-  }
-
-  /** Streaming drift monitor: every micro-batch is PSI-scored against
-    * a frozen reference corpus (the [[graft.curation.TrainCli.drift]]
-    * gate as a standing stream) — wire with
-    * `.option("checkpointLocation", …).start()`. The reference
-    * histogram is re-read per batch from `refPath` (refresh it by
-    * overwriting the reference corpus; batches are independent, so
-    * at-least-once replay appends a duplicate scored row for a
-    * replayed batch id rather than corrupting state — readers key on
-    * (batch_id, source)).
-    */
-  def driftMonitor(stream: DataFrame, textCol: String,
-      refPath: String, outPath: String, nBuckets: Int = 10)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        driftBatch(batch.toDF(), batchId, textCol, refPath, outPath, nBuckets)
-    }
-
-  /** One micro-batch of the streaming profile monitor: the
-    * [[graft.core.Profile.columnProfile]] ANALYZE report over the
-    * arriving batch, appended with the batch id — the schema-drift /
-    * data-quality time series beside [[driftBatch]]'s distributional
-    * PSI (null-rate spikes, cardinality collapses and range walks
-    * surface per batch, not at the next full-table audit). Public so
-    * replay semantics are directly testable.
-    */
-  def profileBatch(batch: DataFrame, batchId: Long,
-      fields: Seq[(String, org.apache.spark.sql.Column)],
-      outPath: String): Unit =
-    graft.core.Profile.columnProfile(batch, fields)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(outPath)
-
-  /** Streaming profile monitor: every micro-batch profiled (rows,
-    * nulls, distincts, min/max per field) into a standing time series
-    * — wire with `.option("checkpointLocation", …).start()`. Batches
-    * are independent (no cross-batch state), so at-least-once replay
-    * appends a duplicate row set for a replayed batch id rather than
-    * corrupting anything — readers key on (batch_id, column).
-    */
-  def profileMonitor(stream: DataFrame,
-      fields: Seq[(String, org.apache.spark.sql.Column)],
-      outPath: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        profileBatch(batch.toDF(), batchId, fields, outPath)
-    }
-
-  /** Streaming canary/blocklist monitor: one Aho-Corasick automaton
-    * pass per arriving document ([[graft.functions.AcFunctions
-    * .multiContains]] — map-only, so it runs UNCHANGED on a stream),
-    * then a watermarked per-window per-pattern hit count. The alerting
-    * view an ingestion pipeline keeps over leaked-canary and policy
-    * patterns: pattern volume spikes surface within a window of
-    * arrival instead of at the next batch audit.
-    *
-    * Output (append mode, closed windows): window, pat (index into
-    * `patterns`), hits (documents containing that pattern — the
-    * automaton emits each matched pattern once per doc).
-    */
-  def canaryMonitor(
-      stream: DataFrame, // must carry textCol + an event-time tsCol
-      textCol: String,
-      tsCol: String,
-      patterns: Seq[String],
-      windowDur: String = "1 minute",
-      watermark: String = "2 minutes"): DataFrame =
-    stream
-      .withWatermark(tsCol, watermark)
-      .select(col(tsCol),
-        explode(graft.functions.AcFunctions.multiContains(col(textCol), patterns))
-          .as("pat"))
-      .groupBy(window(col(tsCol), windowDur), col("pat"))
-      .agg(count(lit(1)).as("hits"))
-      .select(col("window"), col("pat"), col("hits"))
-
   /** Exact first-seen-wins dedup: emits each distinct content exactly
     * once, on the micro-batch that first contains it (smallest id wins
     * inside that batch — deterministic); every later occurrence only

@@ -280,13 +280,4 @@ object IngestStreams {
     }
     (landed, batchRows - landed)
   }
-
-  /** Streaming form of [[ingestBatchDedup]]. */
-  def ingestDedup(stream: DataFrame, tablePath: String, keyCol: String,
-      expectedPerFile: Long = 1 << 20, fpp: Double = 0.01): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        ingestBatchDedup(batch, batchId, tablePath, keyCol, expectedPerFile, fpp)
-        ()
-    }
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.CacheScope.persist
 
 /** On-disk inverted text index: write-once / query-many BM25 — the
-  * lexical-plane mirror of [[graft.dedup.LshIndex]] and
-  * `Similarity.writeIvfIndex`.
+  * lexical-plane mirror of [[graft.dedup.LshIndex]].
   *
   * [[Search.bm25TopK]] tokenizes the full corpus per query; at 100 TB
   * a retrieval service answering many queries cannot pay a corpus scan

@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus vocabulary statistics — the precursor a tokenizer-training /
@@ -31,24 +31,6 @@ object Vocab {
     dfreq.join(tf, Seq("term"))
       .select(col("term"), col("doc_freq"), col("term_freq"))
   }
-
-  /** Approximate heavy-hitter terms via the engine's `approx_top_k`
-    * sketch aggregate (SpaceSaving-family, mergeable) — the 100 TB
-    * alternative to a full [[vocabulary]] aggregation when only the
-    * head of the distribution matters: sketch memory is
-    * O(maxItemsTracked) per partition instead of O(|vocab|) shuffle
-    * state, and counts are EXACT whenever the tracked capacity covers
-    * the live vocabulary (asserted in TextSpec against [[vocabulary]]).
-    * Ties at the k boundary resolve sketch-internally, so this is a
-    * rows-only operator by design — the exact q58 path is the oracle
-    * surface.
-    */
-  def approxTopTerms(df: DataFrame, textCol: String, k: Int,
-      maxItemsTracked: Int = 10000): DataFrame =
-    df.select(explode(TextFunctions.tokens(col(textCol))).as("term"))
-      .agg(expr(s"approx_top_k(term, $k, $maxItemsTracked)").as("tk"))
-      .select(explode(col("tk")).as("e"))
-      .select(col("e.item").as("term"), col("e.count").as("term_freq"))
 
   /** BPE merge-pair statistics — the quantity a byte-pair-encoding
     * tokenizer trainer maximizes at every merge step: for each
@@ -191,32 +173,6 @@ object Vocab {
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("pos"), col("pieces")))),
         x => x.getField("pieces"))).as("pieces"))
-  }
-
-  /** Smooth IDF: ln((N + 1) / (doc_freq + 1)) + 1. */
-  def idf(docFreq: Column, corpusSize: Long): Column =
-    log((lit(corpusSize + 1d)) / (docFreq + lit(1d))) + lit(1d)
-
-  /** Per-document top-k distinctive terms by TF-IDF (score rounded to
-    * 6 decimals; ties broken by term). The vocabulary's doc-frequency
-    * side is aggregated first (vocab-sized) and joined back to the
-    * exploded terms — a bounded-key join, never doc × vocab.
-    */
-  def tfidfTopTerms(df: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val n = df.count()
-    val terms = df.select(col(idCol).as("doc"),
-        explode(TextFunctions.tokens(col(textCol))).as("term"))
-      .groupBy(col("doc"), col("term")).agg(count(lit(1)).as("tf"))
-    val dfreq = terms.select(col("term"), col("doc")).distinct()
-      .groupBy(col("term")).agg(count(lit(1)).as("doc_freq"))
-    val w = Window.partitionBy(col("doc"))
-      .orderBy(col("score").desc, col("term"))
-    terms.join(dfreq, Seq("term"))
-      .withColumn("score", round(col("tf") * idf(col("doc_freq"), n), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("doc"), col("term"), col("score"), col("rank"))
   }
 
   /** Document-level PMI collocations: for token pairs co-occurring in

@@ -73,27 +73,6 @@ class CoreSpec extends SparkSpec {
     assert(df.filter(p4).count() === 11)
   }
 
-  test("saltedJoin equals the plain join and spreads a hot key across salts") {
-    val s = spark
-    import s.implicits._
-    // 900 rows of one hot key + a long tail
-    val left = ((1 to 900).map(i => (i.toLong, "hot")) ++
-      (901 to 1000).map(i => (i.toLong, s"k${i % 7}"))).toDF("id", "k")
-    val right = (Seq("hot") ++ (0 until 7).map(i => s"k$i"))
-      .zipWithIndex.map { case (k, v) => (k, v.toLong) }.toDF("k", "v")
-    val plain = left.join(right, Seq("k")).select("id", "v")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val salted = Skew.saltedJoin(left, right, Seq("k"), col("id"), salts = 8)
-      .select("id", "v")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(salted === plain)
-    // the hot key's rows really land in several salt buckets
-    val buckets = left.filter(col("k") === "hot")
-      .select(pmod(xxhash64(col("id")), lit(8)).as("s"))
-      .distinct().count()
-    assert(buckets >= 6)
-  }
-
   test("dropHotKeys removes exactly the rows of keys above the cap") {
     val s = spark
     import s.implicits._
@@ -130,30 +109,5 @@ class CoreSpec extends SparkSpec {
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("UDF") || plan.contains("ScalaUDF"),
       s"bloom membership filter missing from the plan:\n$plan")
-  }
-
-  test("PartitionedStore.compactPartitions: content identical, fewer files, untouched partitions intact") {
-    val s = spark
-    import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("pstore").toString + "/t"
-    // partition 0 fragmented across 8 appends; partition 1 written once
-    (1 to 8).foreach { b =>
-      Seq.tabulate(10)(i => (b * 100L + i, 0)).toDF("id", "p")
-        .coalesce(1).write.mode("append").partitionBy("p").parquet(dir)
-    }
-    Seq.tabulate(10)(i => (i.toLong, 1)).toDF("id", "p")
-      .coalesce(1).write.mode("append").partitionBy("p").parquet(dir)
-    def files(p: Int): Seq[java.io.File] =
-      new java.io.File(s"$dir/p=$p").listFiles.toSeq
-        .filter(f => f.getName.endsWith(".parquet"))
-    val sizeBefore1 = files(1).map(f => (f.getName, f.lastModified)).toSet
-    assert(files(0).size === 8, "fixture must be fragmented")
-    val before = spark.read.parquet(dir).orderBy("id", "p").collect().toSeq
-    PartitionedStore.compactPartitions(spark, dir, "p", Seq(0))
-    val after = spark.read.parquet(dir).orderBy("id", "p").collect().toSeq
-    assert(after === before, "compaction must not change content")
-    assert(files(0).size === 1, "fragmented partition must compact to one file")
-    assert(files(1).map(f => (f.getName, f.lastModified)).toSet === sizeBefore1,
-      "unlisted partition must not be touched")
   }
 }

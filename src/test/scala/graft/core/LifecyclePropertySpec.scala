@@ -94,31 +94,4 @@ class LifecyclePropertySpec extends SparkSpec {
         VersionLog.readVersion(spark, src, VersionLog.latest(spark, src))))
     }
   }
-
-  test("vacuumKeeping protects a lagging consumer's catch-up horizon") {
-    val root = java.nio.file.Files.createTempDirectory("vkeep").toString
-    val dir = s"$root/t"
-    (0L until 20L).map(i => (i, i % 3)).toDF("id", "k").write.parquet(dir)
-    VersionLog.snapshot(spark, dir) // v1
-    val cursor = s"$root/cursor"
-    Incremental.runOnce(spark, dir, cursor)(_ => ()) // consumer at v1
-    (1 to 3).foreach { i =>
-      (100L * i until 100L * i + 5L).map(x => (x, x % 3)).toDF("id", "k")
-        .write.mode("append").parquet(dir)
-      VersionLog.snapshot(spark, dir)
-    }
-    VersionLog.compact(spark, dir, files = 1) // v5 supersedes the deltas
-    // a plain vacuum would reclaim v2-v4's records and delta files and
-    // strand the consumer; the protected form keeps them
-    val floor = Incremental.readCursor(spark, cursor).get
-    val (dropped, _) = VersionLog.vacuumKeeping(spark, dir,
-      keepLast = 1, floor = floor)
-    assert(dropped === 0)
-    var got = -1L
-    Incremental.runOnce(spark, dir, cursor)(d => got = d.count())
-    assert(got === 15L) // all three deltas, the compact skipped
-    // consumer caught up: the plain vacuum is now safe
-    val (dropped2, _) = VersionLog.vacuum(spark, dir, keepLast = 1)
-    assert(dropped2 === 4)
-  }
 }

@@ -196,6 +196,44 @@ class CliSpec extends SparkSpec {
     assert(out.toString.contains(""""0x2": 0.0"""))
     assert(out.toString.contains(""""0x1": 400.0"""))
   }
+
+  test("artifact commands write the dashboards, the balances CSV and the gas-stats frame") {
+    val root = Files.createTempDirectory("cliart").toString
+    val store = new EthStore(spark, root)
+    store.append("block", Seq((0L, "2020-01-01 09:00:00", "b0"),
+        (1L, "2020-01-01 10:00:00", "b1"), (2L, "2020-01-01 11:00:00", "b2"))
+      .toDF("number", "t", "id").withColumn("timestamp", col("t").cast("timestamp")), 1L)
+    store.append("contract", Seq(("0xc0ffee", 1L, "0xc0ffee")).toDF("id", "blockNumber", "address"), 1L)
+    // (id, blockNumber, from, to, value, type, author, gasUsed, gasPrice)
+    store.append("internal_transaction", Seq(
+        ("0xt1.0", 1L, "0xa", "0xb", 5.0, "call", null, 21000L, 2e-9),
+        ("0xt2.0", 2L, "0xa", "0xc0ffee", 1.0, "call", null, 50000L, 4e-9),
+        ("0xt3.0", 2L, "0xb", "0xa", 2.0, "call", null, 21000L, 6e-9))
+      .toDF("id", "blockNumber", "from", "to", "value", "type", "author", "gasUsed", "gasPrice"), 1L)
+    val cli = new Cli(store, fixtureSource)
+
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) { cli.run(s"grafana $root/grafana") }
+    assert(out.toString.linesIterator.toSeq.map(l => new java.io.File(l).getName).sorted ===
+      Seq("erc20_tokens.json", "ethereum.json", "insights.json", "spark.json"))
+
+    cli.run(s"balances-csv $root/balances")
+    def csv(path: String) =
+      spark.read.option("header", "true").option("inferSchema", "true").csv(path)
+    val balances = csv(s"$root/balances")
+    assert(balances.columns.toSeq === Seq("address", "balance"))
+    // balances.sql: no rewards, so balance = income - fee - outcome
+    val bal = balances.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(math.abs(bal("0xb") - (5.0 - 21000 * 6e-9 - 2.0)) < 1e-12)
+
+    cli.run(s"gas-stats $root/gas")
+    // first-trace wallet calls per 1000-block bucket: t1 (2 gwei) and
+    // t3 (6 gwei) in bucket 0, joined to block 0's timestamp; t2 goes
+    // to a contract
+    val gas = csv(s"$root/gas").collect()
+    assert(gas.length === 1 && gas.head.getAs[Int]("block") === 0)
+    assert(gas.head.getAs[Double]("gas") === 2.0 && gas.head.getAs[Double]("minGas") === 2.0)
+  }
 }
 
 /** JVM-global adapter-call counters: local mode shares the JVM, but

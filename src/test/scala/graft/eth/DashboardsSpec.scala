@@ -1,10 +1,11 @@
 package graft.eth
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Grafana panel functions + the notebook gas-stats frame over a
+/** The Grafana panel SQL + the notebook gas-stats frame over a
   * hand-computed mini-chain.
   */
 class DashboardsSpec extends SparkSpec {
@@ -46,38 +47,68 @@ class DashboardsSpec extends SparkSpec {
     ("0xtok1", "Token One"), ("0xtok2", "Token Two"))
     .toDF("id", "token_name")
 
-  private lazy val win = Dashboards.blocksInWindow(blocks, "2020-01-01", "2020-01-02")
+  /** Every emitted panel query, run on fixture views with the Grafana
+    * macros substituted (window = Jan 1, blocks 1-3), keyed by title.
+    */
+  private lazy val results: Map[String, Array[Row]] = {
+    blocks.createOrReplaceTempView("block")
+    itx.createOrReplaceTempView("internal_transaction")
+    contracts.withColumn("standard_erc20", lit(1))
+      .createOrReplaceTempView("contract")
+    tokenTx.createOrReplaceTempView("token_transaction")
+    descriptions.createOrReplaceTempView("contract_description")
+    Seq(("0xc0ffee", "[]")).toDF("id", "abi").createOrReplaceTempView("contract_abi")
+    Seq(("0xe1", 1L)).toDF("id", "blockNumber").createOrReplaceTempView("event")
+    Seq(("0xt1.0", "transfer")).toDF("id", "name")
+      .createOrReplaceTempView("transaction_input")
+    Seq(("0xe1", "Transfer")).toDF("id", "name")
+      .createOrReplaceTempView("event_input")
+    val timeFilter = "timestamp >= timestamp'2020-01-01 00:00:00' AND " +
+      "timestamp < timestamp'2020-01-02 00:00:00'"
+    DashboardArtifacts.all.flatMap(_.panels).map { p =>
+      val sql = p.query
+        .replace("$timeSeries", "date_trunc('HOUR', timestamp)")
+        .replace("$timeFilter", timeFilter)
+      p.title -> spark.sql(sql).collect()
+    }.toMap
+  }
 
   test("window semi-join restricts panels to the picked range") {
-    assert(win.count() === 3)
-    assert(Dashboards.txCount(itx, win).head().getLong(0) === 5L)
-    assert(Dashboards.ethTransferred(itx, win).head().getDouble(0) === 11.5)
-    assert(Dashboards.contractsCreated(contracts, win).head().getLong(0) === 1L)
-    assert(Dashboards.contractCalls(itx, contracts, win).head().getLong(0) === 1L)
+    assert(results("Actual block").head.getLong(0) === 3L)
+    assert(results("Ethereum transfers").head.getLong(0) === 5L)
+    assert(results("Ethereum transferred").head.getDouble(0) === 11.5)
+    assert(results("Smart Contracts Created").head.getLong(0) === 1L)
+    assert(results("Smart Contracts Called").head.getLong(0) === 1L)
   }
 
   test("top-10 panels aggregate and rank correctly") {
-    val recv = Dashboards.topEthReceivers(itx, win).collect()
+    val recv = results("TOP Ethereum Receivers")
     assert(recv.head.getString(0) === "0xb" && recv.head.getDouble(1) === 5.0)
-    val miners = Dashboards.topMiners(itx, win).head()
+    // senders in window: 0xa 5 + 1, the reward row's null sender 3,
+    // 0xb 2 + 0.5
+    assert(results("TOP Ethereum Senders").toSeq.map(r => (r.getString(0), r.getDouble(1)))
+      === Seq(("0xa", 6.0), (null, 3.0), ("0xb", 2.5)))
+    val miners = results("TOP Miners").head
     assert(miners.getString(0) === "0xminer" && miners.getDouble(1) === 1.0)
-    val gas = Dashboards.topGasSpenders(itx, win).head()
+    val gas = results("Top Gas Burners (Contracts)").head
     assert(gas.getString(0) === "0xc0ffee") // 50000*4e-9 highest avg
-    val called = Dashboards.topCalledContracts(itx, contracts, win).head()
+    val called = results("TOP Contracts").head
     assert(called.getString(0) === "0xc0ffee" && called.getDouble(1) === 1.0)
-    assert(Dashboards.blocksPerDay(blocks).collect()
-      .map(r => r.getDouble(1)).toSeq === Seq(3.0, 1.0))
+    // the one in-window contract call: t2, 0xa -> 0xc0ffee
+    assert(results("TOP Contract Callers").toSeq.map(r => (r.getString(0), r.getDouble(1)))
+      === Seq(("0xa", 1.0)))
+    assert(results("Gas Usage").map(r => r.getDouble(1)).toSeq === Seq(3.0, 1.0))
   }
 
   test("token panels: holders with name join, unique tokens") {
-    assert(Dashboards.tokenTransferCount(tokenTx, win).head().getDouble(0) === 3.0)
-    val top = Dashboards.topTokensByHolders(tokenTx, descriptions, win).collect()
-    assert(top.head.getString(0) === "0xtok1")
-    assert(top.head.getString(1) === "Token One")
-    assert(top.head.getDouble(2) === 2.0) // b, c
-    val uniq = Dashboards.topAddressesByUniqueTokens(tokenTx, win).collect()
+    assert(results("ERC20 Transactions").head.getDouble(0) === 3.0)
+    val top = results("TOP Tokens").map(r => r.getString(0) -> r).toMap
+    assert(top("0xtok1").getString(1) === "Token One")
+    assert(top("0xtok1").getDouble(2) === 2.0) // b, c
+    assert(top("0xtok2").getDouble(2) === 1.0) // c; h4 is outside the window
+    val uniq = results("TOP Token Holders")
     assert(uniq.head.getString(0) === "0xa" || uniq.head.getString(0) === "0xb")
-    assert(Dashboards.countInWindow(tokenTx, win).head().getLong(0) === 3L)
+    assert(results("ERC20 transactions").head.getLong(0) === 3L)
   }
 
   test("dashboard artifacts cover the reference panel sets and their SQL runs") {
@@ -138,33 +169,9 @@ class DashboardsSpec extends SparkSpec {
       assert(got === want, s"$slug panel set diverges from the reference")
     }
 
-    // every emitted query must be valid Spark SQL over the FINAL views:
-    // substitute the Grafana macros and run them all on fixture views
-    blocks.createOrReplaceTempView("block")
-    itx.createOrReplaceTempView("internal_transaction")
-    contracts.withColumn("standard_erc20", lit(1))
-      .createOrReplaceTempView("contract")
-    tokenTx.createOrReplaceTempView("token_transaction")
-    descriptions.createOrReplaceTempView("contract_description")
-    Seq(("0xc0ffee", "[]")).toDF("id", "abi").createOrReplaceTempView("contract_abi")
-    Seq(("0xe1", 1L)).toDF("id", "blockNumber").createOrReplaceTempView("event")
-    Seq(("0xt1.0", "transfer")).toDF("id", "name")
-      .createOrReplaceTempView("transaction_input")
-    Seq(("0xe1", "Transfer")).toDF("id", "name")
-      .createOrReplaceTempView("event_input")
-    val timeFilter = "timestamp >= timestamp'2020-01-01 00:00:00' AND " +
-      "timestamp < timestamp'2020-01-02 00:00:00'"
-    val results = DashboardArtifacts.all.flatMap(_.panels).map { p =>
-      val sql = p.query
-        .replace("$timeSeries", "date_trunc('HOUR', timestamp)")
-        .replace("$timeFilter", timeFilter)
-      p.title -> spark.sql(sql).collect()
-    }.toMap
-    // spot checks against the hand-computed fixtures
-    assert(results("Ethereum transfers").head.getLong(0) === 5L)
-    assert(results("Ethereum transferred").head.getDouble(0) === 11.5)
+    // every emitted query is valid Spark SQL over the FINAL views
+    assert(results.keySet === expected.values.flatten.map(_._1).toSet)
     assert(results("TOP Miners").head.getString(0) === "0xminer")
-    assert(results("TOP Tokens").head.getString(1) === "Token One")
     assert(results("Inputs for events").head.getLong(0) === 1L)
   }
 

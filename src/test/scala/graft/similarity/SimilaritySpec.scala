@@ -306,118 +306,6 @@ class SimilaritySpec extends SparkSpec {
       "cap must drop exactly the collapsed-region pairs")
   }
 
-  test("ivf index on disk: partition-pruned probes match the in-memory ivfTopK") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("c_id"),
-        col("embedding").cast("array<double>").as("c_emb"))
-    val queries = emb.filter(col("c_id") < 10)
-      .select(col("c_id").as("q_id"), col("c_emb").as("q_emb"))
-    val corpus = emb.filter(col("c_id") >= 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivfidx").toString
-    Similarity.writeIvfIndex(corpus, dir, nlist = 16)
-    val got = Similarity.ivfTopKIndexed(spark, dir, queries, k = 5, nprobe = 4)
-    val want = Similarity.ivfTopK(queries, corpus, k = 5, nlist = 16, nprobe = 4)
-    assert(got.orderBy(col("q_id"), col("rank")).collect().toSeq
-      === want.orderBy(col("q_id"), col("rank")).collect().toSeq)
-    // the probed-cell union reaches the scan as a partition filter —
-    // only those list_id= directories are listed and read
-    val p = got.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    assert(p.contains("PartitionFilters") && p.contains("list_id"),
-      "probe list filter did not reach the index scan as a partition filter")
-    // the indexed semantic dedup equals the ad-hoc one on the same cells
-    val adhoc = Similarity.semDedup(corpus, tau = 0.45, nlist = 16)
-      .orderBy(col("drop_id")).collect().toSeq
-    val indexed = Similarity.semDedupIndexed(spark, dir, tau = 0.45)
-      .orderBy(col("drop_id")).collect().toSeq
-    assert(indexed === adhoc)
-    // and the indexed form's cell salting is output-exact too
-    val indexedSalted = Similarity.semDedupIndexed(spark, dir, tau = 0.45,
-        saltCellRows = 1, maxSalts = 5)
-      .orderBy(col("drop_id")).collect().toSeq
-    assert(indexedSalted === adhoc)
-  }
-
-  test("appendIvfIndex: appended index == index built over the union with frozen centroids") {
-    val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(col("vec_id").cast("long").as("c_id"),
-        col("embedding").cast("array<double>").as("c_emb"))
-    val queries = emb.filter(col("c_id") < 10)
-      .select(col("c_id").as("q_id"), col("c_emb").as("q_emb"))
-    val seed = emb.filter(col("c_id") >= 10 && col("c_id") % 2 === 0)
-    val batch = emb.filter(col("c_id") >= 10 && col("c_id") % 2 =!= 0)
-    val dirApp = java.nio.file.Files.createTempDirectory("ivfapp").toString
-    Similarity.writeIvfIndex(seed, dirApp, nlist = 16)
-    Similarity.appendIvfIndex(spark, dirApp, batch)
-    // reference: one-shot build over the union with the SAME (seed-
-    // trained) centroids — appending must be indistinguishable from it
-    val cent = spark.read.parquet(s"$dirApp/_centroids")
-    val dirFull = java.nio.file.Files.createTempDirectory("ivffull").toString
-    Similarity.writeIvfIndex(seed.unionByName(batch), dirFull, nlist = 16,
-      centroids = Some(cent))
-    // identical cell assignment row-for-row...
-    val rows = (d: String) => spark.read.parquet(d)
-      .select(col("list_id").cast("long"), col("c_id"))
-      .orderBy("c_id").collect().toSeq
-    assert(rows(dirApp) === rows(dirFull))
-    // ...and identical probe results, appended vectors included
-    val topk = (d: String) =>
-      Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nprobe = 4)
-        .orderBy(col("q_id"), col("rank")).collect().toSeq
-    val got = topk(dirApp)
-    assert(got === topk(dirFull))
-    val batchIds = batch.select("c_id").collect().map(_.getLong(0)).toSet
-    assert(got.exists(r => batchIds.contains(r.getLong(1))),
-      "appended vectors must be reachable through the probe")
-  }
-
-  test("deleteFromIvfIndex: probes == fresh build without the vectors; untouched cells byte-identical") {
-    val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
-      .select(col("vec_id").cast("long").as("c_id"),
-        col("embedding").cast("array<double>").as("c_emb"))
-    val queries = emb.filter(col("c_id") < 10)
-      .select(col("c_id").as("q_id"), col("c_emb").as("q_emb"))
-    val corpus = emb.filter(col("c_id") >= 10)
-    val dir = java.nio.file.Files.createTempDirectory("ivfdel").toString
-    Similarity.writeIvfIndex(corpus, dir, nlist = 16)
-    def snapshot(): Map[String, (Long, Long)] = {
-      val out = scala.collection.mutable.Map[String, (Long, Long)]()
-      java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p)
-            && p.toString.contains("list_id="))
-          out(p.toString) = (java.nio.file.Files.size(p),
-            java.nio.file.Files.getLastModifiedTime(p).toMillis)
-      }
-      out.toMap
-    }
-    val before = snapshot()
-    // a small forget set so some cells stay untouched (the pruning
-    // assert below must not be vacuous)
-    val toForget = corpus.filter(col("c_id") % 97 === 0)
-    Similarity.deleteFromIvfIndex(spark, dir, toForget)
-    val after = snapshot()
-    // probes equal a FRESH index over corpus \ forgotten (frozen cents)
-    val cent = spark.read.parquet(s"$dir/_centroids")
-    val dirFresh = java.nio.file.Files.createTempDirectory("ivffresh").toString
-    Similarity.writeIvfIndex(corpus.filter(col("c_id") % 97 =!= 0), dirFresh,
-      nlist = 16, centroids = Some(cent))
-    val topk = (d: String) =>
-      Similarity.ivfTopKIndexed(spark, d, queries, k = 5, nprobe = 16)
-        .orderBy(col("q_id"), col("rank")).collect().toSeq
-    val got = topk(dir)
-    assert(got === topk(dirFresh))
-    val forgotten = toForget.select("c_id").collect().map(_.getLong(0)).toSet
-    assert(forgotten.nonEmpty && !got.exists(r => forgotten.contains(r.getLong(1))),
-      "forgotten vectors must be unreachable at full probe width")
-    // surviving files outside the rewritten cells are byte-identical,
-    // and the small forget set must leave some cells untouched
-    val survivors = before.keySet.intersect(after.keySet)
-    assert(survivors.nonEmpty, "fixture must leave untouched cells")
-    val changedSurvivors = survivors.filter(k => before(k) != after(k))
-    assert(changedSurvivors.isEmpty,
-      s"files rewritten in place (must be swap-or-keep): $changedSurvivors")
-  }
-
   test("ivfPqTopK at nprobe=nlist equals the single-query ADC primitive per query") {
     val emb = graft.Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
       .select(col("vec_id").cast("long").as("c_id"),

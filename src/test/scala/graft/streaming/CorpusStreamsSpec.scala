@@ -147,83 +147,6 @@ class CorpusStreamsSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 2L)
   }
 
-  test("driftMonitor: each micro-batch PSI-scores against the frozen reference") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("driftstream").toString
-    val (in, ref, out, ckpt) = (s"$root/docs", s"$root/ref", s"$root/psi", s"$root/ckpt")
-    val good = "the quick brown fox jumps over the lazy dog again and again today"
-    (1 to 20).map(i => (i.toLong, good, "web"))
-      .toDF("doc_id", "text", "source").write.parquet(ref)
-    // batch file 1: same distribution as the reference
-    (101 to 120).map(i => (i.toLong, good, "web"))
-      .toDF("doc_id", "text", "source").coalesce(1).write.mode("append").parquet(in)
-    // batch file 2: degenerate quality — must flag
-    (201 to 220).map(i => (i.toLong, "x", "web"))
-      .toDF("doc_id", "text", "source").coalesce(1).write.mode("append").parquet(in)
-
-    val q = CorpusStreams.driftMonitor(
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING")
-          .option("maxFilesPerTrigger", 1).parquet(in),
-        "text", ref, out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val rows = spark.read.parquet(out)
-      .select(col("batch_id"), col("source"), col("psi"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2)))
-      .sortBy(_._1)
-    assert(rows.length === 2, s"one PSI row per batch per source: ${rows.toSeq}")
-    val bySeverity = rows.sortBy(_._3)
-    assert(bySeverity(0)._3 === 0.0, "the matching batch must score PSI 0")
-    assert(bySeverity(1)._3 > 0.5, "the degenerate batch must flag loudly")
-  }
-
-  test("profileMonitor: per-batch ANALYZE rows equal the batch profile; replay appends, never corrupts") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("profstream").toString
-    val (in, out, ckpt) = (s"$root/docs", s"$root/prof", s"$root/ckpt")
-    // batch file 1: clean; batch file 2: nulls + cardinality collapse
-    val b1 = (1 to 20).map(i => (i.toLong, s"body $i", "web"))
-    val b2 = (21 to 40).map(i => (i.toLong, if (i % 2 == 0) null else "x", "web"))
-    b1.toDF("doc_id", "text", "source").coalesce(1).write.mode("append").parquet(in)
-    b2.toDF("doc_id", "text", "source").coalesce(1).write.mode("append").parquet(in)
-    val fields = Seq(
-      "doc_id" -> col("doc_id"),
-      "text" -> col("text"))
-    val q = CorpusStreams.profileMonitor(
-        spark.readStream.schema("doc_id LONG, text STRING, source STRING")
-          .option("maxFilesPerTrigger", 1).parquet(in),
-        fields, out)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val rows = spark.read.parquet(out)
-    assert(rows.select("batch_id").distinct().count() === 2)
-    // each batch's rows equal the batch-mode profile of that file
-    val nullBatch = rows
-      .filter(col("column") === "text" && col("n_nulls") > 0).collect()
-    assert(nullBatch.length === 1, "exactly one batch carries text nulls")
-    assert(nullBatch(0).getAs[Long]("n_nulls") === 10L)
-    assert(nullBatch(0).getAs[Long]("n_distinct") === 1L, "cardinality collapse visible")
-    val clean = graft.core.Profile.columnProfile(
-      b1.toDF("doc_id", "text", "source"), fields)
-      .collect().map(_.toSeq).toSet
-    val cleanBatchId = rows.filter(col("column") === "text" && col("n_nulls") === 0)
-      .head().getAs[Long]("batch_id")
-    val streamedClean = rows.filter(col("batch_id") === cleanBatchId)
-      .drop("batch_id").collect().map(_.toSeq).toSet
-    assert(streamedClean === clean, "stream profile must equal the batch profile")
-    // at-least-once replay: re-running the batch fn appends a duplicate
-    // keyed row set, leaving existing rows intact
-    CorpusStreams.profileBatch(b1.toDF("doc_id", "text", "source"), 0L, fields, out)
-    assert(spark.read.parquet(out).count() === rows.count() + fields.size)
-  }
-
   test("map-only curation ops (splitByHash, hashSample) run unchanged on a stream") {
     val s = spark
     import s.implicits._
@@ -336,43 +259,5 @@ class CorpusStreamsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got.map(_._2) === Set("same words here", "different words"))
     assert(got.size === 2)
-  }
-
-  test("canaryMonitor: per-window per-pattern hit counts on a live stream") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("corpusstream3").toString
-    val in = s"$root/docs"
-    Seq(
-      (1L, "a leaked canary phrase appears here", Timestamp.valueOf("2026-01-01 10:00:10")),
-      (2L, "nothing suspicious in this one", Timestamp.valueOf("2026-01-01 10:00:20")),
-      (3L, "canary phrase again plus banned words", Timestamp.valueOf("2026-01-01 10:00:40")),
-      (4L, "banned words only, later window", Timestamp.valueOf("2026-01-01 10:01:30")))
-      .toDF("doc_id", "text", "ts").write.mode("append").parquet(in)
-
-    val out = s"$root/alerts"
-    def runOnce(): Unit = {
-      val q = DerivedStreams.refreshOnce(
-        CorpusStreams.canaryMonitor(
-          CorpusStreams.docStream(spark, in), "text", "ts",
-          patterns = Seq("canary phrase", "banned words"))
-          .select(col("window.start").cast("string").as("w"), col("pat"), col("hits")),
-        out, s"$root/ckpt")
-      q.awaitTermination()
-    }
-    runOnce()
-    // append mode emits only watermark-closed windows — advance the
-    // watermark with a far-future patternless row, second pass, same
-    // checkpoint (the DerivedStreamsSpec window idiom)
-    Seq((9L, "plain text", Timestamp.valueOf("2026-01-01 10:30:00")))
-      .toDF("doc_id", "text", "ts").write.mode("append").parquet(in)
-    runOnce()
-
-    val got = spark.read.parquet(out).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    assert(got == Set(
-      ("2026-01-01 10:00:00", 0, 2L), // canary phrase: docs 1, 3
-      ("2026-01-01 10:00:00", 1, 1L), // banned words: doc 3
-      ("2026-01-01 10:01:00", 1, 1L))) // banned words: doc 4
   }
 }
