@@ -68,6 +68,11 @@ object ProfileQ {
       println(f"== $name: $wall%.3f s wall, $n rows, ${snap.size} jobs, $stageCount stages, shuffleR=${shuffleRead / 1024}KB shuffleW=${shuffleWrite / 1024}KB")
       val jobTotal = snap.map(j => (j.end - j.start).max(0L)).sum / 1e3
       println(f"   sum of job walls: $jobTotal%.3f s (gap to wall = driver/metadata time)")
+      // what the query left persisted: every RDD, then the raw ones that
+      // clearCache() cannot reach (layerbench's cache.rdds_left)
+      val left = spark.sparkContext.getPersistentRDDs.size
+      spark.catalog.clearCache()
+      println(s"   persisted RDDs left: $left, raw: ${spark.sparkContext.getPersistentRDDs.size}")
       val show = sys.env.get("PROFILE_JOBS").map(_.toInt).getOrElse(12)
       snap.sortBy(j => -(j.end - j.start)).take(show).foreach { j =>
         val d = (j.end - j.start).max(0L) / 1e3

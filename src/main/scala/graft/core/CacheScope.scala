@@ -10,13 +10,15 @@ import org.apache.spark.sql.catalyst.InternalRow
   * '''Three entry points.''' [[persist]] persists a Dataset;
   * [[persistRdd]] persists an RDD, such as the co-partitioned state of
   * an RDD-iterated operator; [[persistRows]] persists a frame's copied
-  * INTERNAL rows as a raw RDD — the lineage cut for multi-action and
-  * iterative operators: a Dataset persist caches data but not the plan,
-  * so every later action re-analyzes the whole upstream tree, while a
-  * frame rebuilt over the RDD (`GraftBridge.internalCreateDataFrame`)
-  * plans as a flat scan. Internal rows, not `df.rdd`, skip the external
-  * `Row` decode and re-encode. Each registers its release with the
-  * innermost open bracket; with none open they register nothing.
+  * INTERNAL rows as a raw RDD, for an operator that reads one input in
+  * several jobs: the graph operators' edge list (counted, then grouped),
+  * and the lineage cut of a multi-action operator — a Dataset persist
+  * caches data but not the plan, so every later action re-analyzes the
+  * whole upstream tree, while a frame rebuilt over the RDD
+  * (`GraftBridge.internalCreateDataFrame`) plans as a flat scan.
+  * Internal rows, not `df.rdd`, skip the external `Row` decode and
+  * re-encode. Each registers its release with the innermost open
+  * bracket; with none open they register nothing.
   *
   * '''Brackets, for operator-internal caches.''' [[withReleased]]
   * unpersists every cache registered while it is open when it closes,

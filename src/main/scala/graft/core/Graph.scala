@@ -1,17 +1,35 @@
 package graft.core
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Join-based graph algorithms over plain (src, dst) edge frames — no
-  * graph library, just the shuffles Spark already optimizes.
+/** Graph algorithms over plain (src, dst) edge frames — no graph
+  * library, just Spark shuffles.
+  *
+  * The four iterated operators ([[pageRank]], [[pageRankPersonalized]],
+  * [[labelPropagation]], [[coreness]]) are message, gather and apply
+  * functions of ONE vertex-iteration primitive, [[Adjacency]]. Before
+  * round 1 the edges are grouped ONCE into a `sender → receivers`
+  * adjacency under a `HashPartitioner`, and the node states are laid
+  * out with the same partitioner, so no round re-shuffles either side
+  * (Shark's co-partitioned iterated join). A round is one
+  * `zipPartitions` of adjacency and states sending each node's message
+  * along its out-edges, one gather shuffle of the messages onto that
+  * partitioner (the round's only shuffle), and one `zipPartitions` of
+  * states and gathered messages applying the update. Every round but
+  * the last is materialized by one job, which may return a scalar the
+  * next round reads (PageRank's dangling mass); the stale generation is
+  * then released, and the last round runs inside the caller's action.
+  * Nothing corpus-sized is collected or broadcast. Node and edge ids
+  * are integral; a null id never equals an edge end.
   *
   * [[pageRank]] is damped PageRank by power iteration in INTEGER
   * fixed-point arithmetic: ranks live as int64 multiples of 1e-12
@@ -22,25 +40,12 @@ import org.apache.spark.sql.types._
   * join order, and float-sum order — and a SQL engine replaying the
   * same iterations reproduces it bit-for-bit (the DuckDB oracle
   * unrolls them as CTE generations, like the q125 logistic-regression
-  * training replay).
-  *
-  * Scale shape per iteration: before round 1 the edges are grouped
-  * ONCE into a `src → Array[dst]` adjacency under a `HashPartitioner`,
-  * and the rank rows `(id, fx, od, b)` are laid out with the same
-  * partitioner, so no round re-shuffles either side (Shark's
-  * co-partitioned iterated join). A round is one `zipPartitions` of
-  * adjacency and ranks emitting `fx div od` per edge, one
-  * `reduceByKey` of the received mass onto that partitioner (map-side
-  * partial sums; the round's only shuffle), and one `zipPartitions` of
-  * ranks and received mass applying the integer mix. The round's one
-  * job materializes the new generation and returns its dangling mass as
-  * per-partition sums collected to the driver, where the next round
-  * reads it as a scalar. Nothing corpus-sized is collected or
-  * broadcast; the node count comes from the job that lays out
-  * generation 0. Each generation is released once its successor has
-  * materialized, and the last round runs inside the caller's action.
+  * training replay). Its gather is a `reduceByKey` (map-side partial
+  * sums); label propagation and coreness gather with `groupByKey`.
   */
 object Graph {
+
+  private type Id = java.lang.Long
 
   /** Target edge rows per partition for the iterative operators (see
     * [[partitionsFor]]).
@@ -52,40 +57,9 @@ object Graph {
     * repeats every task, so a layout inherited from a wide upstream
     * stage would schedule byte-tiny tasks round after round.
     */
-  private def partitionsFor(spark: SparkSession, rows: Long): Int =
+  private def partitionsFor(spark: org.apache.spark.sql.SparkSession, rows: Long): Int =
     math.min(rows / EdgeRowsPerPartition + 1,
       math.max(1L, spark.sparkContext.defaultParallelism.toLong)).toInt
-
-  /** Size-adaptive edge cache for the DataFrame-iterated operators. The
-    * edge frame is scanned 1-3× PER ROUND, so its cached partition count
-    * multiplies into every iteration's task count: an upstream pair
-    * list that was verify-parallelized hands us 32+ byte-tiny
-    * partitions, and 8 H-index rounds then schedule ~1000 near-empty
-    * tasks (measured +0.6 s on q161 locally). Persist + one count (the
-    * first round would materialize the cache anyway), then — only when
-    * the row count says the inherited layout overshoots — re-lay the
-    * cache as [[partitionsFor]] ROUND-ROBIN partitions. Round-robin, not
-    * keyed: pinning HashPartitioning(join key, N) on the cache was
-    * A/B-measured in round 12 at +2.0 s on coreness (it forces every
-    * iteration stage to that count, defeating AQE's coalescing); a
-    * compact unkeyed cache leaves each round's shuffles free to
-    * AQE-coalesce while the scans stay proportional to the data.
-    */
-  private def sizedEdgeCache(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    // INTERNAL-row cache (the shortCircuit representation): the count
-    // below materializes it — work the first iteration would have paid
-    // anyway — and a NARROW coalesce over the cached blocks re-lays the
-    // scan without a second cache or any shuffle: each of the `want`
-    // tasks reads its share of cached partitions from local memory.
-    val rdd = CacheScope.persistRows(edges)
-    val want = partitionsFor(spark, rdd.count())
-    val laid =
-      if (want >= spark.sparkContext.defaultParallelism || rdd.getNumPartitions <= want) rdd
-      else rdd.coalesce(want)
-    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
-      spark, laid, edges.schema)
-  }
 
   /** Fixed-point scale: ranks are int64 multiples of 1e-12. */
   val Scale: Long = 1000000000000L
@@ -95,6 +69,109 @@ object Graph {
     */
   val DampNum = 85L
   val DampDen = 100L
+
+  /** `(doc_a, doc_b)` pairs as a symmetric `(src, dst)` edge list, each
+    * pair in both directions — the near-duplicate graph the iterated
+    * operators run on.
+    */
+  def symmetric(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+
+  /** Column `c` of `df` as int64, after checking that it is integral. */
+  private def integral(df: DataFrame, c: String): Column = {
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(c).dataType),
+      s"graph ids must be integral; column $c is ${df.schema(c).dataType.simpleString}")
+    col(c).cast(LongType)
+  }
+
+  /** The rows of `df` keyed by its `id` column (a null id stays null),
+    * each carrying `v` of the row, whose columns are `id` then `more`.
+    */
+  private def byId[V](df: DataFrame, more: Column*)(v: InternalRow => V): RDD[(Id, V)] =
+    df.select(integral(df, "id") +: more: _*).queryExecution.toRdd.map { r =>
+      (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))) -> v(r)
+    }
+
+  /** The vertex-iteration primitive: the `from → to` edges of `edges`
+    * grouped once into `sender → (out-degree, receivers)` under [[part]].
+    * A null-receiver edge counts toward its sender's out-degree and
+    * carries nothing; a null-sender edge leaves no node.
+    */
+  private final class Adjacency(edges: DataFrame, from: String, to: String) {
+    private val flat = CacheScope.persistRows(
+      edges.select(integral(edges, from), integral(edges, to)))
+    val part = new HashPartitioner(partitionsFor(edges.sparkSession, flat.count()))
+    private val out: RDD[(Long, (Long, Array[Long]))] = CacheScope.persistRdd(flat
+      .flatMap { r =>
+        if (r.isNullAt(0)) None
+        else Some(r.getLong(0) ->
+          (if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
+      }
+      .groupByKey(part)
+      .mapValues(ds => (ds.size.toLong, ds.iterator.filter(_ != null).map(_.longValue).toArray)))
+    /** Persisted RDDs that the next materializing job makes stale. */
+    private var stale: Seq[RDD[_]] = Seq(flat)
+
+    /** Generation 0: `rows` shuffled onto [[part]], so every copy of an
+      * id meets in one partition, where `init` turns them into states,
+      * given the out-degree of an id (0 for a null or edgeless one).
+      */
+    def layout[V: ClassTag, S](rows: RDD[(Id, V)])(
+        init: (Id => Long, Iterator[(Id, V)]) => Iterator[(Id, S)]): RDD[(Id, S)] = {
+      val lay = CacheScope.persistRdd(out.zipPartitions(rows.partitionBy(part)) { (es, in) =>
+        val od = mutable.LongMap.empty[Long]
+        es.foreach { case (s, (d, _)) => od(s) = d }
+        init(id => if (id == null) 0L else od.getOrElse(id, 0L), in)
+      })
+      stale :+= lay
+      lay
+    }
+
+    /** `iters` rounds from `s0`. In a round every node with a `send`
+      * message sends it to its receivers, `gather` shuffles the messages
+      * onto [[part]], and `apply(z, state, gathered)` updates each node,
+      * where `z` is what `job` returned on the previous generation (`z0`
+      * before round 1). `job` materializes every generation but the last.
+      */
+    def iterate[S, M: ClassTag, G](s0: RDD[(Id, S)], iters: Int, z0: Long)(
+        send: S => Option[M], gather: RDD[(Long, M)] => RDD[(Long, G)],
+        apply: (Long, S, Option[G]) => S, job: RDD[(Id, S)] => Long): RDD[(Id, S)] = {
+      def round(state: RDD[(Id, S)], z: Long): RDD[(Id, S)] = {
+        val sent = out.zipPartitions(state) { (es, ss) =>
+          val m = mutable.LongMap.empty[M]
+          ss.foreach { case (id, s) => if (id != null) send(s).foreach(m(id) = _) }
+          es.flatMap { case (s, (_, ds)) =>
+            m.get(s).fold(Iterator.empty[(Long, M)])(x => ds.iterator.map(_ -> x))
+          }
+        }
+        state.zipPartitions(gather(sent)) { (ss, in) =>
+          val got = mutable.LongMap.empty[G]
+          in.foreach { case (id, g) => got(id) = g }
+          ss.map { case (id, s) => id -> apply(z, s, if (id == null) None else got.get(id)) }
+        }
+      }
+      var state = s0
+      var z = z0
+      for (_ <- 1 until iters) {
+        state = CacheScope.persistRdd(round(state, z))
+        z = job(state)
+        stale.foreach(_.unpersist(blocking = false))
+        stale = Seq(state)
+      }
+      round(state, z)
+    }
+  }
+
+  /** The operators' one exit: `(id, value)` states as a frame, `id`
+    * cast back to the caller's id type.
+    */
+  private def frame[S](nodes: DataFrame, state: RDD[(Id, S)], value: StructField)(
+      v: S => Any): DataFrame =
+    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(nodes.sparkSession,
+      state.map { case (id, s) => InternalRow(id, v(s)) },
+      StructType(Seq(StructField("id", LongType), value)))
+      .select(col("id").cast(nodes.schema("id").dataType).as("id"), col(value.name))
 
   /** Damped PageRank over `edges` restricted to the `nodes` universe.
     *
@@ -133,128 +210,66 @@ object Graph {
 
   /** One node of a power-iteration generation: rank `fx` at [[Scale]],
     * out-degree `od` (every edge leaving the node, whatever its dst) and
-    * teleport weight `b` (1 in the teleport set, else 0). A null `id`
-    * never equals an edge end: that node neither sends nor receives.
+    * teleport weight `b` (1 in the teleport set, else 0).
     */
-  private final case class Rank(id: java.lang.Long, fx: Long, od: Long, b: Long)
+  private final case class Rank(fx: Long, od: Long, b: Long)
 
   /** The power iteration behind both PageRanks. `seeds = None` is the
     * teleport-to-every-node case: b = 1 everywhere and |S| = |V|.
     */
   private def powerIteration(nodes: DataFrame, edges: DataFrame,
       seeds: Option[DataFrame], iters: Int): DataFrame = {
-    val spark = nodes.sparkSession
-    val idType = nodes.schema("id").dataType
-    (Seq(nodes -> "id", edges -> "src", edges -> "dst") ++ seeds.map(_ -> "id")).foreach { case (df, c) =>
-      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(df.schema(c).dataType),
-        s"PageRank ids must be integral; column $c is ${df.schema(c).dataType.simpleString}")
-    }
     // |S| before any graph work; the PageRank case counts its nodes in
     // the layout job below
-    val seedCount = seeds.map(_.select(col("id")).distinct().count())
+    val seedCount = seeds.map(s => s.select(integral(s, "id")).distinct().count())
     require(seedCount.forall(_ > 0), "pageRankPersonalized requires a non-empty seed set")
-
-    val flat = CacheScope.persistRows(
-      edges.select(col("src").cast(LongType), col("dst").cast(LongType)))
-    val part = new HashPartitioner(partitionsFor(spark, flat.count()))
-    // src → (od, non-null dsts): a null-dst edge counts toward its
-    // source's out-degree and carries its share nowhere; a null-src
-    // edge leaves no node
-    val adj = CacheScope.persistRdd(flat
-      .flatMap { r =>
-        if (r.isNullAt(0)) None
-        else Some(r.getLong(0) ->
-          (if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))))
-      }
-      .groupByKey(part)
-      .mapValues(ds => (ds.size.toLong, ds.iterator.filter(_ != null).map(_.longValue).toArray)))
-
-    // Node ids and seed ids (tagged true) take one shuffle onto the
-    // adjacency's partitioner. Equal ids meet in one partition, so the
-    // per-partition sets are the global distinct sets.
-    def ids(df: DataFrame, seed: Boolean): RDD[(java.lang.Long, Boolean)] =
-      df.select(col("id").cast(LongType)).queryExecution.toRdd.map { r =>
-        (if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))) -> seed
-      }
+    val adj = new Adjacency(edges, "src", "dst")
+    // node ids and seed ids (tagged true) take one shuffle; generation 0
+    // gets its fx once the layout job has counted |V|. A null seed id
+    // teleports nothing.
     val teleportAll = seeds.isEmpty
-    val tagged = seeds.foldLeft(ids(nodes, seed = false))(_ union ids(_, seed = true))
-    // generation 0 with fx unscaled (b); |V| is known only once it ran
-    val lay = CacheScope.persistRdd(adj.zipPartitions(tagged.partitionBy(part)) { (out, in) =>
-      val od = mutable.LongMap.empty[Long]
-      out.foreach { case (s, (d, _)) => od(s) = d }
-      val node = mutable.LongMap.empty[Unit]
-      val seed = mutable.LongMap.empty[Unit]
-      var nullNode = false
-      in.foreach {
-        case (null, isSeed) => if (!isSeed) nullNode = true
-        case (id, isSeed) => (if (isSeed) seed else node)(id) = ()
+    val tagged = seeds.foldLeft(byId(nodes)(_ => false))(_ union byId(_)(_ => true))
+    val lay = adj.layout(tagged) { (od, in) =>
+      in.toSeq.groupBy(_._1).iterator.collect { case (id, tags) if tags.exists(!_._2) =>
+        id -> Rank(0L, od(id), if (teleportAll || (id != null && tags.exists(_._2))) 1L else 0L)
       }
-      node.keysIterator.map { id =>
-        Rank(id, 0L, od.getOrElse(id, 0L), if (teleportAll || seed.contains(id)) 1L else 0L)
-      } ++ (if (nullNode) Iterator(Rank(null, 0L, 0L, if (teleportAll) 1L else 0L)) else Iterator.empty)
-    })
+    }
     val (nNodes, nDanglingTeleport) = lay
-      .map(r => (1L, if (r.od == 0L) r.b else 0L))
+      .map { case (_, r) => (1L, if (r.od == 0L) r.b else 0L) }
       .fold((0L, 0L))((x, y) => (x._1 + y._1, x._2 + y._2))
-    flat.unpersist(blocking = false)
     val nSeeds = seedCount.getOrElse(nNodes)
     require(nSeeds > 0, "pageRank requires a non-empty node set")
     // base = teleport share per seed; the div truncation loses
     // < |S|·1e-12 of total mass — the price of integer exactness
     val base = Scale / nSeeds
     val teleport = (DampDen - DampNum) * base
-
-    var ranks: RDD[Rank] = lay.map(r => r.copy(fx = r.b * base))
-    var dang = nDanglingTeleport * base
-    var stale = lay
-    for (k <- 1 to iters) {
-      val prev = ranks
-      val share = dang / nSeeds
-      val recv = adj.zipPartitions(prev) { (out, rs) =>
-        val c = mutable.LongMap.empty[Long]
-        rs.foreach(r => if (r.id != null && r.fx > 0L && r.od > 0L) c(r.id) = r.fx / r.od)
-        out.flatMap { case (s, (_, ds)) =>
-          c.get(s).fold(Iterator.empty[(Long, Long)])(x => ds.iterator.map(_ -> x))
-        }
-      }.reduceByKey(part, _ + _)
-      val next = prev.zipPartitions(recv) { (rs, in) =>
-        val got = mutable.LongMap.empty[Long]
-        in.foreach { case (id, x) => got(id) = x }
-        rs.map { r =>
-          val x = if (r.id == null) 0L else got.getOrElse(r.id, 0L)
-          r.copy(fx = (teleport * r.b + DampNum * (x + r.b * share)) / DampDen)
-        }
-      }
-      // every round but the last: one job materializes the generation,
-      // sums its dangling mass per partition, and frees its predecessor
-      if (k < iters) {
-        CacheScope.persistRdd(next)
-        dang = next.map(r => if (r.od == 0L) r.fx else 0L).fold(0L)(_ + _)
-        stale.unpersist(blocking = false)
-        stale = next
-      }
-      ranks = next
-    }
+    val ranks = adj.iterate[Rank, Long, Long](lay.mapValues(r => r.copy(fx = r.b * base)), iters,
+      nDanglingTeleport * base)(
+      r => if (r.fx > 0L && r.od > 0L) Some(r.fx / r.od) else None,
+      _.reduceByKey(adj.part, _ + _),
+      (dang, r, x) =>
+        r.copy(fx = (teleport * r.b + DampNum * (x.getOrElse(0L) + r.b * (dang / nSeeds))) / DampDen),
+      // the dangling mass the next round shares out
+      _.map { case (_, r) => if (r.od == 0L) r.fx else 0L }.fold(0L)(_ + _))
     // Readable double via the q81 fixed-point idiom: one exact int64→
     // double conversion (fx < 2^53), floor, one final division — both
     // engines compute the identical double.
-    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(spark,
-      ranks.map(r => InternalRow(r.id, r.fx)),
-      StructType(Seq(StructField("id", LongType), StructField("rank_fx", LongType, nullable = false))))
-      .select(col("id").cast(idType).as("id"), col("rank_fx"),
+    frame(nodes, ranks, StructField("rank_fx", LongType, nullable = false))(_.fx)
+      .select(col("id"), col("rank_fx"),
         (floor(col("rank_fx").cast("double") / lit(1000.0)) / lit(1e6)).as("rank"))
   }
 
   /** Clamped label propagation (Zhu & Ghahramani '02 shape) over an
     * edge list: nodes with a non-null initial label are SEEDS and keep
     * it; every round each node takes the majority label of its
-    * in-neighbors (tie → lexicographically smallest label), keeping
-    * its previous label when no labeled neighbor exists. Integer votes
-    * + deterministic tie-break ⇒ engine-replayable. Per round: one
-    * edge⋈labels shuffle, one (node, label) count, one max join —
-    * two shuffles per round.
+    * in-neighbors, one vote per edge (tie → the smallest label in
+    * Spark's ordering of the label type), keeping its previous label
+    * when no labeled neighbor exists. Integer votes + deterministic
+    * tie-break ⇒ engine-replayable.
     *
-    * @param labels (id, lab nullable) — the full node universe.
+    * @param labels (id, lab nullable) — the full node universe, one row
+    *   per non-null id (a duplicate is refused); `lab` of any orderable
+    *   type. Rows with a null id keep their label and send nothing.
     * @return (id, lab) after `iters` rounds (nullable: nodes never
     *   reached by any labeled neighbor stay null).
     */
@@ -263,28 +278,33 @@ object Graph {
       edges: DataFrame,
       iters: Int): DataFrame = {
     require(iters >= 1, s"labelPropagation requires iters >= 1, got $iters")
-    // size-adaptive round-robin cache — see [[sizedEdgeCache]] (keyed
-    // pre-partitioning was A/B-rejected in round 12: +2.0 s coreness)
-    val e = sizedEdgeCache(edges.select(col("src"), col("dst")))
-    val seeds = labels.select(col("id"), col("lab").as("_seed"))
-    val l0 = labels.select(col("id"), col("lab"))
-    val result = (1 to iters).foldLeft(shortCircuit(l0)) { (l, _) =>
-      val votes = e
-        .join(l.withColumnRenamed("id", "src"), "src")
-        .filter(col("lab").isNotNull)
-        .groupBy(col("dst").as("id"), col("lab"))
-        .agg(count(lit(1)).as("c"))
-      val mx = votes.groupBy(col("id")).agg(max(col("c")).as("mc"))
-      val best = votes.join(mx, Seq("id"))
-        .filter(col("c") === col("mc"))
-        .groupBy(col("id")).agg(min(col("lab")).as("_new"))
-      shortCircuit(l
-        .join(best, Seq("id"), "left")
-        .join(seeds, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("_seed"), col("_new"), col("lab")).as("lab")))
+    val labType = labels.schema("lab").dataType
+    val adj = new Adjacency(edges, "src", "dst")
+    // state: (seed, current label); internal label values, copied out
+    // of the scan's reused row buffers
+    val l0 = adj.layout(byId(labels, col("lab"))(r =>
+        if (r.isNullAt(1)) null else InternalRow.copyValue(r.get(1, labType)))) { (_, in) =>
+      val seen = mutable.LongMap.empty[Unit]
+      in.map { case (id, lab) =>
+        require(id == null || seen.put(id, ()).isEmpty, s"labelPropagation: duplicate id $id")
+        id -> (lab != null, lab)
+      }
     }
-    result
+    val result = adj.iterate[(Boolean, Any), Any, Iterable[Any]](l0, iters, 0L)(
+      s => Option(s._2),
+      _.groupByKey(adj.part),
+      (_, s, votes) => if (s._1) s else votes.fold(s) { vs =>
+        val ord = PhysicalDataType.ordering(labType)
+        // runs of equal labels in ascending order; maxBy keeps the first
+        // (smallest) of the largest runs
+        val runs = vs.toSeq.sorted(ord).foldLeft(List.empty[(Any, Int)]) {
+          case ((l, n) :: t, x) if ord.equiv(l, x) => (l, n + 1) :: t
+          case (acc, x) => (x, 1) :: acc
+        }
+        (false, runs.reverse.maxBy(_._2)._1)
+      },
+      _.count())
+    frame(labels, result, StructField("lab", labType))(_._2)
   }
 
   /** Per-node degree + triangle counts over an undirected pair list —
@@ -351,59 +371,34 @@ object Graph {
     * replaying the same count always agree (the pageRank replay
     * discipline — fixed rounds, not a convergence test).
     *
-    * Scale shape per round: one edge⋈values hash join (edge-sized
-    * shuffle) + one per-node sort window for the H-index + one node-
-    * sized left join; no collect, no
-    * broadcast of anything graph-sized. Peeling-based k-core needs
-    * O(max-degeneracy) SEQUENTIAL peels; H-index iteration converges
-    * in a handful of rounds on sparse dedup graphs and each round is
-    * fully parallel — that is why it is the distributed formulation.
+    * Each round is fully parallel, while peeling-based k-core needs
+    * O(max-degeneracy) SEQUENTIAL peels; H-index iteration converges in
+    * a handful of rounds on sparse dedup graphs — that is why it is the
+    * distributed formulation.
     *
     * @param nodes one column `id` — full universe (isolated ⇒ 0).
     * @param edges (src, dst), SYMMETRIZED by the caller (each
     *   undirected edge in both directions), parallel edges deduped.
+    *   A node's starting degree counts the edges that end at it,
+    *   including those from null and non-node srcs; on a symmetric
+    *   list that is its degree.
     * @param iters fixed H-index rounds; converged-and-beyond is exact.
     * @return (id, coreness).
     */
   def coreness(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"coreness requires iters >= 1, got $iters")
-    // size-adaptive round-robin cache — see [[sizedEdgeCache]] (keyed
-    // pre-partitioning was A/B-rejected in round 12: +2.0 s coreness)
-    val e = sizedEdgeCache(edges.select(col("src"), col("dst")))
-    val n = nodes.select(col("id")).distinct()
-    val deg = e.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-    val c0 = n.join(deg, Seq("id"), "left")
-      .select(col("id"), coalesce(col("d"), lit(0L)).as("c"))
-    val result = (1 to iters).foldLeft(shortCircuit(c0)) { (c, _) =>
-      val nbr = e
-        .join(c.withColumnRenamed("id", "dst").withColumnRenamed("c", "cd"), "dst")
-        .select(col("src"), col("cd"))
-      // H-index per node: neighbors sorted by value desc, h =
-      // max(min(rank, value)) — tie order among equal values cannot
-      // change the result, so row_number needs no tiebreak column.
-      val w = Window.partitionBy(col("src")).orderBy(col("cd").desc)
-      val h = nbr
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .groupBy(col("src").as("id"))
-        .agg(max(least(col("rnk"), col("cd"))).as("h"))
-      shortCircuit(n.join(h, Seq("id"), "left")
-        .select(col("id"), coalesce(col("h"), lit(0L)).as("c")))
+    // a src takes the H-index of its dsts' values: values flow dst → src
+    val adj = new Adjacency(edges, "dst", "src")
+    val c0 = adj.layout(byId(nodes)(_ => ())) { (od, in) =>
+      in.map(_._1).distinct.map(id => id -> od(id))
     }
-    result.select(col("id"), col("c").as("coreness"))
+    val result = adj.iterate[Long, Long, Iterable[Long]](c0, iters, 0L)(
+      c => Some(c),
+      _.groupByKey(adj.part),
+      // neighbors sorted by value desc, h = max(min(rank, value))
+      (_, _, vs) => vs.fold(0L)(_.toSeq.sorted(Ordering[Long].reverse)
+        .iterator.zipWithIndex.map { case (v, i) => math.min(i + 1L, v) }.max),
+      _.count())
+    frame(nodes, result, StructField("coreness", LongType, nullable = false))(identity)
   }
-
-  /** Rebase an iteration result on its own persisted RDD: the returned
-    * frame's logical plan is a flat scan of that RDD, so a recurrence
-    * referencing it N times costs N short subtrees, not N copies of
-    * the whole upstream tree (without this, k self-referencing
-    * generations give a 3^k-node plan and analysis time explodes —
-    * the Dataset-API analog of GraphX's iteration checkpointing).
-    * Lazy: nothing runs until the first action; the RDD persist makes
-    * later references reuse, and the bracket releases it. After
-    * release the frame recomputes from lineage like any unpersisted
-    * cache.
-    */
-  private def shortCircuit(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftBridge.internalCreateDataFrame(
-      df.sparkSession, CacheScope.persistRows(df), df.schema)
 }

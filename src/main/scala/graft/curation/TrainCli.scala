@@ -401,11 +401,8 @@ class TrainCli(spark: SparkSession, idCol: String = "doc_id", textCol: String = 
   }
 
   /** Symmetric near-dup edge list, the input the graph commands share. */
-  private def neardupEdges(docs: DataFrame, n: Int, tau: Double): DataFrame = {
-    val pairs = Dedup.jaccardPairs(docs, idCol, textCol, n, tau)
-    pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-  }
+  private def neardupEdges(docs: DataFrame, n: Int, tau: Double): DataFrame =
+    graft.core.Graph.symmetric(Dedup.jaccardPairs(docs, idCol, textCol, n, tau))
 
   /** Boilerplate-hub ranking ([[graft.core.Graph.pageRank]] over the
     * near-dup graph): the docs whose content is most echoed across

@@ -234,8 +234,7 @@ object TrainingQueries {
     val rawCos = "list_sum(list_transform(range(1, 65), t -> a.emb[t] * b.emb[t])) / (a.nrm * b.nrm)"
     // every generation MATERIALIZED: sel_i references sel_{i-1} twice,
     // so default CTE inlining re-expands the whole pick chain 3^k
-    // times (the same blowup Graph.shortCircuit kills on the Spark
-    // side — here the fix is DuckDB's materialization hint).
+    // times; the materialization hint evaluates each generation once.
     val picks = (2 to 10).map { i =>
       s"""pick$i AS MATERIALIZED (
            SELECT c.id, (7 * c.rel_fx - 3 * (
@@ -1032,8 +1031,7 @@ object TrainingQueries {
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
       val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = graft.core.Graph.symmetric(pairs)
       graft.core.Graph.pageRank(docs.select(col("doc_id").as("id")), edges, iters = 5)
         .select(col("id").as("doc_id"), col("rank_fx"), col("rank").as("pr"))
         .orderBy(col("doc_id"))
@@ -1273,8 +1271,7 @@ object TrainingQueries {
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
       val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = graft.core.Graph.symmetric(pairs)
       graft.core.Graph.pageRankPersonalized(
         docs.select(col("doc_id").as("id")), edges,
         docs.filter(col("doc_id") < 5).select(col("doc_id").as("id")), iters = 5)
@@ -1285,14 +1282,14 @@ object TrainingQueries {
     // Clamped label propagation: even docs carry their lang as a seed
     // label, 3 majority-vote rounds spread it across the near-dup
     // graph (tie → smallest label) — weak-supervision label expansion
-    // for partially-annotated corpora.
+    // for partially-annotated corpora. Co-partitioned rounds (core.Graph)
+    // of one vote shuffle and one job each; the oracle replays all 3.
     "q154_label_prop" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
       val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = graft.core.Graph.symmetric(pairs)
       val labels = docs.select(col("doc_id").as("id"),
         when(col("doc_id") % 2 === 0, col("lang")).as("lab"))
       graft.core.Graph.labelPropagation(labels, edges, iters = 3)
@@ -2030,14 +2027,14 @@ object TrainingQueries {
     // report (q155) can't give: high-coreness docs sit inside dense
     // template families even when their own degree is modest. 8 fixed
     // rounds (idempotent past convergence; the oracle replays the
-    // identical 8).
+    // identical 8), co-partitioned (core.Graph): one shuffle of neighbor
+    // values and one job per round, the H-index taken per node locally.
     "q161_kcore" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // persisted: the symmetrized edge union references the pair
       // pipeline twice — one candidate-join + verify instead of two
       val pairs = persist(Dedup.jaccardPairs(docs, "doc_id", "text", n = 3, tau = 0.5))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = graft.core.Graph.symmetric(pairs)
       graft.core.Graph.coreness(
         docs.select(col("doc_id").as("id")), edges, iters = 8)
         .select(col("id").as("doc_id"), col("coreness"))

@@ -21,13 +21,12 @@ object GraftBridge {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
-  /** Wrap an RDD of INTERNAL rows as a DataFrame — the seam an
-    * iterative operator's lineage short-circuit needs: `df.rdd` +
-    * `createDataFrame(rdd, schema)` round-trips every row through the
-    * external `Row` representation (decode + re-encode per row per
-    * iteration), while the internal-row path persists the UnsafeRow
-    * bytes as-is. `internalCreateDataFrame` is `private[sql]`, hence
-    * this re-export.
+  /** Wrap an RDD of INTERNAL rows as a DataFrame — the seam through
+    * which the RDD-iterated graph operators return their result, and a
+    * multi-action operator scans its persisted rows as a flat plan:
+    * `createDataFrame(rdd, schema)` over external `Row`s would encode
+    * every row once more, while internal rows go in as they are.
+    * `internalCreateDataFrame` is `private[sql]`, hence this re-export.
     */
   def internalCreateDataFrame(spark: SparkSession,
       rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],

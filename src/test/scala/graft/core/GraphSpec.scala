@@ -85,13 +85,19 @@ class GraphSpec extends SparkSpec {
     assert(pa == pb)
   }
 
+  /** >= 2^18 edges: the adjacency and the node states are hash-laid
+    * over more than one partition, so messages cross partitions each
+    * round. Some edges end outside the node set, and every fifth node
+    * sends nothing.
+    */
+  private val wideN = 1L << 17
+  private lazy val wideEdges: Seq[(Long, Long)] = (0L until wideN).filter(_ % 5 != 0)
+    .flatMap(a => Seq((a, (a * 7 + 3) % wideN), (a, (a * 13 + 1) % (wideN + 9)), (a, a)))
+
   test("pageRank matches the local implementation when the edges span several partitions") {
-    // >= 2^18 edges: the adjacency and the ranks are hash-laid over more
-    // than one partition, so contributions cross partitions each round
-    val n = 1L << 17
+    val n = wideN
     val nodes = 0L until n
-    val edges = nodes.filter(_ % 5 != 0)
-      .flatMap(a => Seq((a, (a * 7 + 3) % n), (a, (a * 13 + 1) % (n + 9)), (a, a)))
+    val edges = wideEdges
     assert(edges.size >= (1 << 18))
     val got = run(nodes, edges, 3)
     val want = localPageRank(nodes, edges, 3)
@@ -268,6 +274,148 @@ class GraphSpec extends SparkSpec {
     val und = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L))
     val nodes = 0L to 4L
     assert(corenessRun(nodes, und, iters = 3) === corenessRun(nodes, und, iters = 12))
+  }
+
+  /** Local label propagation: seeds keep their label; every other node
+    * with a non-null id takes the most frequent label among its
+    * labeled in-neighbors, one vote per edge, ties to the smallest;
+    * null-id rows keep theirs.
+    */
+  private def localLabels[L](labels: Seq[(Option[Long], Option[L])],
+      edges: Seq[(Option[Long], Option[Long])], iters: Int)(
+      implicit ord: Ordering[L]): Seq[(Option[Long], Option[L])] = {
+    val seeds = labels.collect { case (Some(id), Some(_)) => id }.toSet
+    val in = edges.collect { case (Some(s), Some(d)) => (d, s) }
+      .groupBy(_._1).map { case (d, ss) => d -> ss.map(_._2) }
+    var cur = labels.collect { case (Some(id), l) => id -> l }.toMap
+    for (_ <- 1 to iters) cur = cur.map { case (id, l) =>
+      val votes = in.getOrElse(id, Nil).flatMap(s => cur.get(s).flatten)
+      if (seeds(id) || votes.isEmpty) id -> l
+      else {
+        val counts = votes.groupBy(identity).map { case (v, vs) => v -> vs.size }
+        id -> Some(counts.collect { case (v, c) if c == counts.values.max => v }.min)
+      }
+    }
+    labels.map { case (id, l) => id -> id.fold(l)(cur) }
+  }
+
+  /** Local H-index rounds over a symmetric list: start from the number
+    * of edges leaving each node, then take the H-index of the values of
+    * the nodes its edges reach; a null node holds 0.
+    */
+  private def localHIndex(nodes: Seq[Option[Long]],
+      edges: Seq[(Option[Long], Option[Long])], iters: Int): Map[Option[Long], Long] = {
+    val ids = nodes.flatten.toSet
+    val nbrs = edges.collect { case (Some(s), Some(d)) if ids(d) => (s, d) }
+      .groupBy(_._1).map { case (s, ds) => s -> ds.map(_._2) }
+    val deg = edges.flatMap(_._1).groupBy(identity).map { case (s, ss) => s -> ss.size.toLong }
+    var c = ids.map(n => n -> deg.getOrElse(n, 0L)).toMap
+    for (_ <- 1 to iters) c = ids.map { n =>
+      val vs = nbrs.getOrElse(n, Nil).map(c).sorted.reverse
+      n -> vs.zipWithIndex.map { case (v, i) => math.min(v, i + 1L) }.foldLeft(0L)(math.max)
+    }.toMap
+    c.map { case (n, v) => Option(n) -> v } ++
+      (if (nodes.contains(None)) Map(Option.empty[Long] -> 0L) else Map.empty)
+  }
+
+  private def labelRun(labels: Seq[(Option[Long], Option[String])],
+      edges: Seq[(Option[Long], Option[Long])], iters: Int,
+      parts: Option[Int] = None): Seq[(Option[Long], Option[String])] =
+    CacheScope.withReleased {
+      def laid(df: org.apache.spark.sql.DataFrame) = parts.fold(df)(df.repartition(_))
+      Graph.labelPropagation(laid(labels.toDF("id", "lab")), laid(edges.toDF("src", "dst")), iters)
+        .as[(Option[Long], Option[String])].collect().toSeq
+    }
+
+  private def hIndexRun(nodes: Seq[Option[Long]], edges: Seq[(Option[Long], Option[Long])],
+      iters: Int, parts: Option[Int] = None): Map[Option[Long], Long] =
+    CacheScope.withReleased {
+      def laid(df: org.apache.spark.sql.DataFrame) = parts.fold(df)(df.repartition(_))
+      val rows = Graph.coreness(laid(nodes.toDF("id")), laid(edges.toDF("src", "dst")), iters)
+        .as[(Option[Long], Long)].collect().toSeq
+      assert(rows.map(_._1).distinct.size == rows.size, "one row per distinct node id")
+      rows.toMap
+    }
+
+  /** A seeded random graph over ids 0 until n: some edge ends are null
+    * or outside the node set (n, n+1, n+2), and the first edges repeat.
+    */
+  private def randomGraph(seed: Long): (Long, Seq[(Option[Long], Option[Long])]) = {
+    val rnd = new scala.util.Random(seed)
+    val n = 10L + rnd.nextInt(20)
+    def end(): Option[Long] =
+      if (rnd.nextInt(12) == 0) None else Some(rnd.nextInt(n.toInt + 3).toLong)
+    val es = Seq.fill(2 * n.toInt)((end(), end()))
+    (n, es ++ es.take(3))
+  }
+
+  private def sorted(rows: Seq[(Option[Long], Option[String])]) = rows.sortBy(_.toString)
+
+  test("labelPropagation matches a local implementation on seeded random graphs") {
+    for (seed <- 1L to 8L) {
+      val (n, edges) = randomGraph(seed)
+      val rnd = new scala.util.Random(seed * 31)
+      // two null-id rows, which keep their labels
+      val labels = (0L until n).map(id =>
+        Option(id) -> (if (rnd.nextInt(3) == 0) Some(s"l${rnd.nextInt(3)}") else None)) ++
+        Seq(None -> Some("z"), None -> None)
+      val iters = 1 + (seed % 4).toInt
+      val parts = if (seed % 2 == 0) Some(5) else None
+      assert(sorted(labelRun(labels, edges, iters, parts)) ===
+        sorted(localLabels(labels, edges, iters)), s"seed $seed")
+    }
+  }
+
+  test("labelPropagation breaks ties in the ordering of a non-string label type") {
+    val s = spark
+    import s.implicits._
+    // ties at 3 (10, 9, 20) and at 4 (-1, -5) go to the smaller int, which
+    // is not the smaller string; 7 gets two votes for 7, one for -1
+    val labels = Seq((0L, Some(10)), (1L, Some(9)), (2L, Some(20)), (3L, None),
+      (4L, None), (5L, Some(-1)), (6L, Some(-5)), (7L, None), (8L, Some(7)))
+      .toDF("id", "lab")
+    val edges = Seq((0L, 3L), (1L, 3L), (2L, 3L), (5L, 4L), (6L, 4L),
+      (8L, 7L), (8L, 7L), (5L, 7L)).toDF("src", "dst")
+    val got = CacheScope.withReleased {
+      Graph.labelPropagation(labels, edges, 1).as[(Long, Option[Int])].collect().toMap
+    }
+    assert(got(3L) === Some(9) && got(4L) === Some(-5) && got(7L) === Some(7))
+  }
+
+  test("labelPropagation refuses a duplicated id") {
+    val e = intercept[Exception] {
+      labelRun(Seq((Some(0L), Some("a")), (Some(1L), None), (Some(1L), Some("b"))),
+        Seq((Some(0L), Some(1L))), 2)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("duplicate id 1")), e.toString)
+  }
+
+  test("coreness rounds match a local H-index iteration on seeded random symmetric graphs") {
+    for (seed <- 1L to 8L) {
+      val (n, und) = randomGraph(seed)
+      val sym = und ++ und.map(_.swap)
+      // a null node id and a repeated one
+      val nodes = (0L until n).map(Option(_)) ++ Seq(None, Some(0L))
+      val iters = 1 + (seed % 3).toInt
+      val parts = if (seed % 2 == 1) Some(4) else None
+      assert(hIndexRun(nodes, sym, iters, parts) === localHIndex(nodes, sym, iters), s"seed $seed")
+    }
+  }
+
+  test("labelPropagation and coreness match the local implementations when the edges span several partitions") {
+    val nodes = (0L until wideN).map(Option(_))
+    val edges = wideEdges.map(e => (Option(e._1), Option(e._2)))
+    val labels = nodes.map(id => id -> id.filter(_ % 3 == 0).map(i => s"l${i % 4}"))
+    val got = labelRun(labels, edges, 3)
+    val want = localLabels(labels, edges, 3)
+    assert(got.size == want.size && got.toMap == want.toMap, "label propagation differs")
+    val sym = edges ++ edges.map(_.swap)
+    val core = hIndexRun(nodes, sym, 3)
+    val wantCore = localHIndex(nodes, sym, 3)
+    val off = nodes.filter(id => core.get(id) != wantCore.get(id))
+    assert(core.size == wantCore.size && off.isEmpty,
+      s"${off.size} core values differ, e.g. ${off.take(3).map(id => (id, core.get(id), wantCore.get(id)))}")
   }
 
   test("pageRank releases its operator-managed persists inside a CacheScope bracket") {

@@ -234,6 +234,24 @@ class CliSpec extends SparkSpec {
     assert(gas.length === 1 && gas.head.getAs[Int]("block") === 0)
     assert(gas.head.getAs[Double]("gas") === 2.0 && gas.head.getAs[Double]("minGas") === 2.0)
   }
+
+  test("read-only commands run without --rpc; a fetching command still needs one") {
+    val root = Files.createTempDirectory("clinorpc").toString
+    new EthStore(spark, root).append("internal_transaction", Seq(
+        ("1", Some("0x1"), Some("0x2"), None: Option[String], 0L, 0.0, "call", None: Option[String], 1L, 5.0))
+      .toDF("id", "from", "to", "author", "gasUsed", "gasPrice", "type",
+        "rewardType", "blockNumber", "value"), 1L)
+    // the parsed command runs on the suite's session, which main would stop
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out)) {
+      Cli.command(Array("balances", "0x2", "--store", root))(spark)
+      Cli.command(Array("grafana", s"$root/grafana", "--store", root))(spark)
+    }
+    assert(out.toString.contains(""""0x2": 5.0"""))
+    assert(out.toString.contains("ethereum.json"))
+    val e = intercept[IllegalArgumentException](Cli.command(Array("start", "--store", root)))
+    assert(e.getMessage.contains("at least one --rpc url[@from[-to]] required"))
+  }
 }
 
 /** JVM-global adapter-call counters: local mode shares the JVM, but

@@ -604,16 +604,15 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("multi_contains"), "kernel missing from the Generate")
   }
 
-  test("q141: no unpartitioned window; iteration frames are RDD-rebased (bounded plan)") {
+  test("q141: no cartesian; PageRank's result scans its rounds' RDD (bounded plan)") {
     val p = plan("q141_neardup_pagerank")
     assert(!p.contains("CartesianProduct"))
-    // the shortCircuit rebase keeps the final plan small: the last
-    // generation scans an existing RDD instead of replaying 3^iters
-    // copies of the jaccard pipeline
+    // the rounds run as RDDs, so the final plan is a scan of the last
+    // round's output, not the jaccard pipeline replayed per round
     assert(p.contains("Scan ExistingRDD"),
-      "PageRank generations must rebase on their persisted RDDs")
+      "the PageRank result must scan the rounds' RDD")
     assert(p.linesIterator.size < 400,
-      s"q141 plan exploded to ${p.linesIterator.size} lines — lineage rebase broken?")
+      s"q141 plan exploded to ${p.linesIterator.size} lines — rounds planned as frames?")
   }
 
   test("q160: incremental state merge aggregates with map-side partials, no join, no window") {
@@ -624,10 +623,10 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), "delta-agg should carry no join — merge is a union + aggregate")
   }
 
-  test("q161: coreness iteration frames are RDD-rebased; H-index windows are per-node partitions") {
+  test("q161: coreness result scans its rounds' RDD (bounded plan, no cartesian)") {
     val p = plan("q161_kcore")
     assert(p.contains("Scan ExistingRDD"),
-      "coreness generations must rebase on their persisted RDDs")
+      "the coreness result must scan the rounds' RDD")
     assert(p.linesIterator.size < 400,
       s"q161 plan exploded to ${p.linesIterator.size} lines")
     assert(!p.contains("CartesianProduct"))
