@@ -28,10 +28,8 @@ import graft.text.TextFunctions
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.registrations.foreach(ext.injectFunction)
-    // planner capabilities, each config-gated and inert by default:
-    // range-join rewrite (spark.graft.intervalJoin.bucket/auto), as-of
-    // rewrite (spark.graft.asofJoin.rewrite), zone-map scan pruning
-    // (spark.graft.zonemap.auto)
+    // planner capabilities, each firing whenever its scope guards
+    // hold: range-join rewrite, as-of rewrite, zone-map scan pruning
     ext.injectOptimizerRule(_ => graft.plans.IntervalJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.AsofJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.ZoneMapPruneRule)

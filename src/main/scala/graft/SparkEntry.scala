@@ -18,15 +18,22 @@ object SparkEntry {
 
   /** The local session every harness and the test suite run on. Parquet
     * TIMESTAMP(NANOS) reads as a long; [[Tables.load]] converts it back.
+    * The three plan rules are installed here, so every query plans with
+    * them whichever query ran first.
     */
-  def localSession(cores: Int): SparkSession =
-    SparkSession.builder()
+  def localSession(cores: Int): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    graft.plans.IntervalJoinRewrite.install(s)
+    graft.plans.AsofJoinRewrite.install(s)
+    graft.plans.ZoneMapPruneRule.install(s)
+    s
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

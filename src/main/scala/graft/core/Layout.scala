@@ -526,7 +526,7 @@ object Layout {
     }
 
   /** [[prunedFiles]] without the hard staleness error — the contract
-    * the OPTIONAL auto-prune rule ([[graft.plans.ZoneMapPruneRule]])
+    * the automatic prune rule ([[graft.plans.ZoneMapPruneRule]])
     * needs: when the manifest is absent, stale, or carries stats for
     * none of the requested columns, the right response is "don't
     * prune" (the full scan is always row-correct), never a thrown

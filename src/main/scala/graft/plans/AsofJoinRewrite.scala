@@ -35,9 +35,7 @@ import org.apache.spark.sql.types.LongType
   * `IS NOT NULL`), strict vs non-strict lower bounds, and NULL quote
   * values in the winning row (the payload rides in one struct).
   *
-  * OPT-IN: fires only when `spark.graft.asofJoin.rewrite` = true
-  * (scope it try/finally per query, as q216 does). Guards, all
-  * required before firing:
+  * Fires whenever its guards hold, all required before firing:
   *  - INNER join; condition = >=1 equi conjunct + exactly the two
   *    sandwich conjuncts; both ts sides LongType and deterministic;
   *    tolerance a positive long literal;
@@ -63,23 +61,16 @@ import org.apache.spark.sql.types.LongType
   */
 object AsofJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  val EnabledConf = "spark.graft.asofJoin.rewrite"
-
   /** Hook into a LIVE session (same seam as [[IntervalJoinRewrite]]);
-    * idempotent, inert until [[EnabledConf]] is set.
+    * idempotent. `SparkEntry.localSession` installs it.
     */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
 
-  private def enabled: Boolean =
-    scala.util.Try(conf.getConfString(EnabledConf)).toOption
-      .flatMap(_.toBooleanOption).getOrElse(false)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case a @ Aggregate(_, _, j @ Join(_, _, Inner, Some(_), _), None) =>
         rewrite(a, j).getOrElse(a)
       // a pass-through Project (column pruning) between the aggregate

@@ -20,38 +20,22 @@ import org.apache.spark.sql.types.LongType
   * This is the (c)-tier Catalyst extension path: the user writes the
   * natural condition, the planner supplies the scalable strategy.
   *
-  * OPT-IN by config, two modes — the rule never fires behind the
-  * user's back:
-  *  - `spark.graft.intervalJoin.bucket` = positive long: fixed width,
-  *    operator-chosen (the r10 form);
-  *  - `spark.graft.intervalJoin.auto` = true: the rule DERIVES the
-  *    width from the data at rewrite time — one bounded driver-side
-  *    aggregation over the interval side (md5-gated 1/16 row sample
-  *    when it is large enough, full pass otherwise) yielding the p90
-  *    interval width and the max. Bucket = max(p90, max/1024, 1): p90
-  *    keeps the typical interval in O(1) buckets, the max/1024 floor
-  *    caps the worst single interval's explode fan-out at 1024 rows,
-  *    so a hand-set width can never silently multiply rows the way a
-  *    day-bucket over year-wide intervals would. The explicit bucket
-  *    conf, when set, overrides the sample. The choice is logged.
-  * A third opt-in, `spark.graft.intervalJoin.keyed` = true, widens the
-  * match to KEYED sandwiches — `l.k = r.k AND p >= lo AND p < hi`, the
-  * dominant real shape (per-user lookback windows, per-provider IP
-  * ranges). Catalyst already plans those as an equi-join on `k` with
-  * the range as a residual, which is fine when keys are selective —
-  * but a skewed / low-cardinality key degenerates to a per-key-group
-  * cartesian (every point × every interval of the hot key flows
-  * through the residual). Adding the bucket id as a SECOND hash key
-  * splits each key group by time bucket, bounding the candidate set
-  * per (key, bucket) regardless of key skew. Because selective keys
-  * are better off WITHOUT the explode fan-out, the keyed form never
-  * fires unless this conf says so.
+  * The rule fires whenever its scope guards hold, and the bucket width
+  * is always DERIVED from the data at rewrite time ([[deriveBucket]]):
+  * one bounded driver-side aggregation over the interval side
+  * (md5-gated 1/16 row sample when it is large enough, full pass
+  * otherwise) yielding the p90 interval width and the max. Bucket =
+  * max(p90, max/1024, 1): p90 keeps the typical interval in O(1)
+  * buckets, the max/1024 floor caps the worst single interval's
+  * explode fan-out at 1024 rows, so the width can never silently
+  * multiply rows the way a day-bucket over year-wide intervals would.
+  * The choice is logged. KEYED sandwiches (`l.k = r.k AND p >= lo AND
+  * p < hi`) are left to Catalyst's equi-join on `k`; a hot key that
+  * needs the time bucket as a second hash key calls
+  * [[graft.core.Ranges.intervalJoin]] with its keys explicitly.
   *
   * Scope guards, all required before firing:
-  *  - INNER join whose condition is the two sandwich conjuncts, plus
-  *    (keyed mode only) any number of cross-side equality conjuncts —
-  *    every non-sandwich conjunct must be a deterministic `EqualTo`
-  *    spanning the two children or the rule stays out;
+  *  - INNER join whose condition is exactly the two sandwich conjuncts;
   *  - point expression from one side only, both bounds from the other,
   *    all LongType and deterministic;
   *  - rows with NULL point/bounds produce no output either way (the
@@ -60,13 +44,10 @@ import org.apache.spark.sql.types.LongType
   *  - empty intervals (hi <= lo) are pre-filtered, matching both the
   *    predicate semantics and Sequence's boundary contract.
   * Registered via `GraftExtensions` (config path) or
-  * [[IntervalJoinRewrite.install]] on a live session.
+  * [[IntervalJoinRewrite.install]] on a live session;
+  * `SparkEntry.localSession` installs it.
   */
 object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
-
-  val BucketConf = "spark.graft.intervalJoin.bucket"
-  val AutoConf = "spark.graft.intervalJoin.auto"
-  val KeyedConf = "spark.graft.intervalJoin.keyed"
 
   /** Smallest gated-sample size the width stats are trusted at; below
     * it the derivation falls back to the ungated full-pass stats (tiny
@@ -87,34 +68,33 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
   /** Hook into a LIVE session (extensions can only be injected at
     * build time; `experimental.extraOptimizations` is the sanctioned
-    * post-hoc seam). Idempotent. The rule stays inert until the
-    * bucket config is set.
+    * post-hoc seam). Idempotent.
     */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
 
-  private def bucketWidth: Option[Long] =
-    scala.util.Try(conf.getConfString(BucketConf)).toOption
-      .flatMap(_.toLongOption).filter(_ > 0)
-
-  private def autoEnabled: Boolean =
-    scala.util.Try(conf.getConfString(AutoConf)).toOption
-      .flatMap(_.toBooleanOption).getOrElse(false)
-
-  private def keyedEnabled: Boolean =
-    scala.util.Try(conf.getConfString(KeyedConf)).toOption
-      .flatMap(_.toBooleanOption).getOrElse(false)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (deriving.get() || (bucketWidth.isEmpty && !autoEnabled)) plan
-    else plan.transformUp {
+    if (deriving.get()) plan else rewriteJoins(plan)(deriveBucket)
+
+  /** Rewrite every matching join at the fixed width `b` instead of the
+    * derived one — the width-independence check's entry point.
+    */
+  private[plans] def atWidth(plan: LogicalPlan, b: Long): LogicalPlan =
+    rewriteJoins(plan)((_, _, _) => Some(b))
+
+  /** `width(intervals, lo, hi)` picks the bucket for each matched join;
+    * None leaves that join as declared.
+    */
+  private def rewriteJoins(plan: LogicalPlan)(
+      width: (LogicalPlan, Expression, Expression) => Option[Long]): LogicalPlan =
+    plan.transformUp {
       case j @ Join(_, _, Inner, Some(cond), _) =>
-        rewrite(j, cond).getOrElse(j)
+        rewrite(j, cond, width).getOrElse(j)
     }
 
-  /** AUTO-mode width: one bounded aggregation over the interval side.
+  /** The derived width: one bounded aggregation over the interval side.
     * Gated (md5(lo) 1/16) stats are preferred when the gate keeps at
     * least [[MinGatedSample]] rows — at scale the gate keeps the
     * percentile state small; on tiny sides the ungated pass is
@@ -173,35 +153,25 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None
   }
 
-  private def rewrite(j: Join, cond: Expression): Option[LogicalPlan] = {
-    // Never re-fire on our own output: the rewritten join's condition
-    // (bucket equality + original conjuncts) would itself match the
-    // KEYED pattern — the bucket equality parses as just another key —
-    // and the optimizer's fixed-point batch would stack a fresh
-    // explode + width-sampling job per iteration, up to the 100-pass
-    // cap (row-correct but catastrophically slow). The marker
-    // attributes are ours alone, so their presence means "done".
+  private def rewrite(
+      j: Join, cond: Expression,
+      width: (LogicalPlan, Expression, Expression) => Option[Long]): Option[LogicalPlan] = {
+    // Never re-fire on our own output: each firing costs a
+    // width-sampling job. The marker attributes are ours alone.
     if (cond.references.exists(a =>
       a.name == "__graft_pb" || a.name == "__graft_ib")) return None
-    val conjuncts = splitConjunctivePredicates(cond)
-    // Locate ONE sandwich pair anywhere in the conjunct list; in keyed
-    // mode everything else must be a cross-side equality. Keyless mode
-    // keeps the strict two-conjunct contract (an equality key means
-    // Catalyst already has an equi-join — extra fan-out only pays off
-    // when the operator opts in for skewed keys).
-    val idx = conjuncts.indices
-    val sandwich = (for {
-      i <- idx.iterator
-      k <- idx.iterator if i != k
-      (p1, lo) <- asLower(conjuncts(i)).iterator
-      (p2, hi) <- asUpper(conjuncts(k)).iterator
-      if p1.semanticEquals(p2)
-    } yield (i, k, p1, lo, hi)).nextOption()
-    val (li, ui, point, lo, hi) = sandwich.getOrElse(return None)
-    val keys = conjuncts.zipWithIndex.collect {
-      case (c, n) if n != li && n != ui => c
+    // Exactly the two sandwich conjuncts, in either order: an extra
+    // equality key means Catalyst already has an equi-join.
+    val (point, lo, hi) = splitConjunctivePredicates(cond) match {
+      case Seq(x, y) =>
+        Seq((x, y), (y, x)).iterator.flatMap { case (l, u) =>
+          for {
+            (p1, lo) <- asLower(l)
+            (p2, hi) <- asUpper(u) if p1.semanticEquals(p2)
+          } yield (p1, lo, hi)
+        }.nextOption().getOrElse(return None)
+      case _ => return None
     }
-    if (keys.nonEmpty && !keyedEnabled) return None
     if (point.dataType != LongType || lo.dataType != LongType ||
       hi.dataType != LongType) return None
     if (!point.deterministic || !lo.deterministic || !hi.deterministic)
@@ -211,26 +181,15 @@ object IntervalJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       e.references.nonEmpty && e.references.subsetOf(j.left.outputSet)
     val fromRight = (e: Expression) =>
       e.references.nonEmpty && e.references.subsetOf(j.right.outputSet)
-    // every key conjunct: a deterministic equality spanning the sides
-    val keysOk = keys.forall {
-      case EqualTo(a, b) if a.deterministic && b.deterministic =>
-        (fromLeft(a) && fromRight(b)) || (fromRight(a) && fromLeft(b))
-      case _ => false
-    }
-    if (!keysOk) return None
     val pointOnLeft =
       if (fromLeft(point) && fromRight(lo) && fromRight(hi)) true
       else if (fromRight(point) && fromLeft(lo) && fromLeft(hi)) false
       else return None
 
-    // Fixed conf width wins; otherwise AUTO mode samples the interval
-    // side. Both unavailable (sampling failed / empty side) → no
-    // rewrite, nested loop stands.
-    val b = bucketWidth.orElse {
-      if (autoEnabled)
-        deriveBucket(if (pointOnLeft) j.right else j.left, lo, hi)
-      else None
-    }.getOrElse(return None)
+    // No width (sampling failed / empty side) → no rewrite, the
+    // nested loop stands.
+    val b = width(if (pointOnLeft) j.right else j.left, lo, hi)
+      .getOrElse(return None)
 
     val bLit = Literal(b, LongType)
     def div(e: Expression) = IntegralDivide(e, bLit)

@@ -23,6 +23,13 @@ class ZoneMapPrunedIndex(
     spark: SparkSession, files: Seq[Path], schema: StructType)
   extends InMemoryFileIndex(spark, files, Map.empty[String, String], Some(schema))
 
+object ZoneMapPrunedIndex {
+  /** File counts of the pruned scans in an optimized `plan`. */
+  def fileCounts(plan: LogicalPlan): Seq[Int] = plan.collect {
+    case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
+  }.collect { case z: ZoneMapPrunedIndex => z.allFiles().size }
+}
+
 /** Optimizer rule: AUTOMATIC zone-map data skipping. q224's
   * [[graft.core.Layout.prunedRead]] is the explicit API — the operator
   * calls it instead of `spark.read.parquet`; this rule is the (c)-tier
@@ -39,7 +46,7 @@ class ZoneMapPrunedIndex(
   * pruning) — each takes semantics a user DECLARES naturally and
   * substitutes the plan that survives 100 TB.
   *
-  * OPT-IN (`spark.graft.zonemap.auto` = true) and fail-safe: every
+  * Fires whenever its guards hold, and is fail-safe: every
   * guard below falls back to the untouched full scan, which is always
   * row-correct. In particular a STALE manifest (live files ≠
   * manifested files) silently disables pruning here — the opposite of
@@ -64,15 +71,13 @@ class ZoneMapPrunedIndex(
   *  - the rewrite is skipped when every file survives (nothing to
   *    gain) and never re-fires (the marker index class is ours alone).
   *
-  * Driver-side cost when armed: one read of the (file-count-sized)
-  * manifest table and one listing of the data directory per matched
-  * scan — the same metadata-scale bound every lakehouse planner
-  * accepts, and orders of magnitude below opening the footers of the
-  * files being skipped.
+  * Driver-side cost: none for a filter without an integral box; one
+  * read of the (file-count-sized) manifest table and one listing of
+  * the data directory per matched scan — the same metadata-scale
+  * bound every lakehouse planner accepts, and orders of magnitude
+  * below opening the footers of the files being skipped.
   */
 object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
-
-  val AutoConf = "spark.graft.zonemap.auto"
 
   /** Re-entrancy guard: reading the manifest inside [[apply]] triggers
     * a nested analysis/optimization of the manifest scan itself.
@@ -82,19 +87,15 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Hook into a LIVE session (extensions can only be injected at
-    * build time). Idempotent; inert until [[AutoConf]] is set.
+    * build time). Idempotent. `SparkEntry.localSession` installs it.
     */
   def install(spark: SparkSession): Unit =
     if (!spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ this
 
-  private def enabled: Boolean =
-    scala.util.Try(conf.getConfString(AutoConf)).toOption
-      .flatMap(_.toBooleanOption).getOrElse(false)
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (pruning.get() || !enabled) plan
+    if (pruning.get()) plan
     else plan.transformUp {
       case f @ Filter(cond, rel: LogicalRelation)
           if rel.relation.isInstanceOf[HadoopFsRelation] =>
@@ -219,6 +220,17 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
     if (!fs.fileFormat.isInstanceOf[ParquetFileFormat]) return None
     if (fs.partitionSchema.nonEmpty || fs.bucketSpec.nonEmpty) return None
     if (fs.location.rootPaths.isEmpty) return None
+
+    // boxes per column: intersect repeated constraints (a >= 10 AND
+    // a <= 50 → one [10, 50] box); a contradiction (lo > hi) keeps
+    // zero files, which the residual filter confirms with zero rows.
+    // Built before any file-system call: a filter without an integral
+    // box costs the rule nothing.
+    val boxes = splitConjunctivePredicates(cond).flatMap(asBox)
+      .groupBy(_._1).map { case (c, bs) =>
+        (c, bs.map(_._2).max, bs.map(_._3).min)
+      }.toSeq.sortBy(_._1)
+    if (boxes.isEmpty) return None
     val (root, knownLive) =
       if (fs.location.rootPaths.length == 1)
         (fs.location.rootPaths.head, None)
@@ -226,15 +238,6 @@ object ZoneMapPruneRule extends Rule[LogicalPlan] with PredicateHelper {
         case Some((r, live)) => (r, Some(live))
         case None => return None
       }
-
-    // boxes per column: intersect repeated constraints (a >= 10 AND
-    // a <= 50 → one [10, 50] box); a contradiction (lo > hi) keeps
-    // zero files, which the residual filter confirms with zero rows.
-    val boxes = splitConjunctivePredicates(cond).flatMap(asBox)
-      .groupBy(_._1).map { case (c, bs) =>
-        (c, bs.map(_._2).max, bs.map(_._3).min)
-      }.toSeq.sortBy(_._1)
-    if (boxes.isEmpty) return None
 
     val spark = fs.sparkSession
     // An unsatisfiable conjunction (a >= 10 AND a <= 5 merges to a

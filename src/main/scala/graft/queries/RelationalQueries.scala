@@ -377,43 +377,26 @@ object RelationalQueries {
     // The OPTIMIZER-RULE path for range joins: the query DECLARES the
     // natural keyless containment (t >= lo AND t < hi against a day
     // spine) — the shape Catalyst would plan as a BroadcastNestedLoop
-    // — and graft.plans.IntervalJoinRewrite (config-gated, injected
-    // via GraftExtensions / install) rewrites it into the bucketed
-    // equi-join q88/q211 hand-build. Same rows either way (rule-
-    // disabled equality is spec-asserted); the oracle replays the
-    // declared semantics directly.
+    // — and graft.plans.IntervalJoinRewrite rewrites it into the
+    // bucketed equi-join q88/q211 hand-build, at a width it derives
+    // from the spine's interval widths (md5-gated sample, p90). Same
+    // rows either way (rule-excluded equality is spec-asserted); the
+    // oracle replays the declared semantics directly.
     "q213_range_rule" -> ((s, dir) => {
       graft.plans.IntervalJoinRewrite.install(s)
-      // AUTO width (no hand-set bucket): the rule samples the interval
-      // side's widths at rewrite time (md5-gated, p90) and derives the
-      // bucket itself; BucketConf stays available as an override but is
-      // deliberately NOT set here. The conf is scoped try/finally so a
-      // session that runs q213 mid-suite doesn't leave the rewrite
-      // armed for every later keyless long-sandwich join.
-      s.conf.set(graft.plans.IntervalJoinRewrite.AutoConf, "true")
-      try {
-        val day = 86400L * 1000000L
-        val ev = t(s, dir, "events")
-          .select(col("event_id"), unix_micros(col("ts")).as("t_us"))
-        val bounds = ev.agg(min(col("t_us")).as("t0"), max(col("t_us")).as("t1"))
-        val spine = bounds.select(col("t0"),
-            explode(sequence(lit(0L), expr(s"(t1 - t0) div ${day}L"))).as("d"))
-          .select(col("d"),
-            (col("t0") + col("d") * lit(day)).as("lo"),
-            (col("t0") + (col("d") + lit(1L)) * lit(day)).as("hi"))
-        val out = ev.join(spine, col("t_us") >= col("lo") && col("t_us") < col("hi"))
-          .groupBy(col("d"))
-          .agg(count(lit(1)).as("n_events"))
-          .orderBy(col("d"))
-        // EXECUTE inside the armed scope: DataFrames are lazy, and any
-        // downstream action (.count, .write) re-optimizes the whole
-        // tree — after the finally that replan would fall back to the
-        // nested loop. The eager localCheckpoint runs the rewritten
-        // plan now and hands the caller its (days-sized) result; the
-        // plan-shape assert lives in IntervalJoinRewriteSpec, which
-        // builds the armed plan directly.
-        out.localCheckpoint(true)
-      } finally s.conf.unset(graft.plans.IntervalJoinRewrite.AutoConf)
+      val day = 86400L * 1000000L
+      val ev = t(s, dir, "events")
+        .select(col("event_id"), unix_micros(col("ts")).as("t_us"))
+      val bounds = ev.agg(min(col("t_us")).as("t0"), max(col("t_us")).as("t1"))
+      val spine = bounds.select(col("t0"),
+          explode(sequence(lit(0L), expr(s"(t1 - t0) div ${day}L"))).as("d"))
+        .select(col("d"),
+          (col("t0") + col("d") * lit(day)).as("lo"),
+          (col("t0") + (col("d") + lit(1L)) * lit(day)).as("hi"))
+      ev.join(spine, col("t_us") >= col("lo") && col("t_us") < col("hi"))
+        .groupBy(col("d"))
+        .agg(count(lit(1)).as("n_events"))
+        .orderBy(col("d"))
     }),
 
     // The OPTIMIZER-RULE path for AS-OF joins: the query DECLARES the
@@ -421,73 +404,54 @@ object RelationalQueries {
     // its 7-day lookback window, keep the latest per purchase via
     // max_by — the shape Catalyst executes by materializing EVERY
     // in-window (purchase, click) pair through the join (per-key
-    // cartesian on hot users). graft.plans.AsofJoinRewrite
-    // (config-gated, try/finally-scoped) rewrites it into the q84/q204
-    // carry-forward window plan: one shuffle per side, NO join in the
-    // physical plan. Rows identical either way (spec-asserted); the
-    // oracle is DuckDB's NATIVE ASOF JOIN plus the same staleness cut.
+    // cartesian on hot users). graft.plans.AsofJoinRewrite rewrites
+    // it into the q84/q204 carry-forward window plan: one shuffle per
+    // side, NO join in the physical plan. Rows identical either way
+    // (spec-asserted); the oracle is DuckDB's NATIVE ASOF JOIN plus the
+    // same staleness cut.
     "q216_declared_asof" -> ((s, dir) => {
       graft.plans.AsofJoinRewrite.install(s)
-      s.conf.set(graft.plans.AsofJoinRewrite.EnabledConf, "true")
-      try {
-        val tol = 7L * 86400L * 1000000L
-        val ev = t(s, dir, "events").withColumn("t_us", unix_micros(col("ts")))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id"), col("user_id"), col("t_us"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id").as("cu"), col("t_us").as("ct"),
-            round(col("value") * lit(100.0)).cast("long").as("cents"))
-          .groupBy(col("cu"), col("ct"))
-          .agg(max(col("cents")).as("cents")) // unique (user, ts): ties resolved
-        val out = purchases.join(clicks,
-            col("user_id") === col("cu") &&
-              col("ct") <= col("t_us") &&
-              col("ct") > col("t_us") - lit(tol))
-          .groupBy(col("event_id"), col("user_id"), col("t_us"))
-          .agg(max_by(col("cents"), col("ct")).as("click_cents"),
-            max(col("ct")).as("click_t_us"))
-          .orderBy(col("event_id"))
-        // Execute inside the armed scope (the q213 discipline): any
-        // later action would re-optimize with the rule disarmed.
-        out.localCheckpoint(true)
-      } finally s.conf.unset(graft.plans.AsofJoinRewrite.EnabledConf)
+      val tol = 7L * 86400L * 1000000L
+      val ev = t(s, dir, "events").withColumn("t_us", unix_micros(col("ts")))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id"), col("user_id"), col("t_us"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id").as("cu"), col("t_us").as("ct"),
+          round(col("value") * lit(100.0)).cast("long").as("cents"))
+        .groupBy(col("cu"), col("ct"))
+        .agg(max(col("cents")).as("cents")) // unique (user, ts): ties resolved
+      purchases.join(clicks,
+          col("user_id") === col("cu") &&
+            col("ct") <= col("t_us") &&
+            col("ct") > col("t_us") - lit(tol))
+        .groupBy(col("event_id"), col("user_id"), col("t_us"))
+        .agg(max_by(col("cents"), col("ct")).as("click_cents"),
+          max(col("ct")).as("click_t_us"))
+        .orderBy(col("event_id"))
     }),
 
-    // The KEYED range-join rule: the query DECLARES the dominant real
+    // The KEYED lookback join: the query DECLARES the dominant real
     // shape — user key equality + time sandwich (clicks inside each
-    // purchase's 3-day lookback). Catalyst alone plans an equi-join on
+    // purchase's 3-day lookback). Catalyst plans it as an equi-join on
     // user_id with the range as a residual — fine when users are
-    // selective, a per-key cartesian when one user is hot. With
-    // spark.graft.intervalJoin.keyed=true IntervalJoinRewrite adds the
-    // time bucket as a SECOND hash key (auto-derived width: every
-    // lookback is exactly 3 days wide, so p90 = one 3-day bucket),
-    // bounding candidates per (user, bucket) regardless of skew. Rows
-    // identical either way (IntervalJoinRewriteSpec asserts it on a
-    // deliberately hot key); the oracle replays the declared join.
+    // selective, a per-key cartesian when one user is hot; a hot key
+    // takes Ranges.intervalJoin(..., keys), which adds the time bucket
+    // as a second hash key (q88, q211). The oracle replays the
+    // declared join.
     "q223_keyed_range_rule" -> ((s, dir) => {
-      graft.plans.IntervalJoinRewrite.install(s)
-      s.conf.set(graft.plans.IntervalJoinRewrite.AutoConf, "true")
-      s.conf.set(graft.plans.IntervalJoinRewrite.KeyedConf, "true")
-      try {
-        val look = 3L * 86400L * 1000000L
-        val ev = t(s, dir, "events").withColumn("t_us", unix_micros(col("ts")))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("event_id").as("p_id"), col("user_id").as("pu"),
-            (col("t_us") - lit(look)).as("lo"), col("t_us").as("hi"))
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("user_id"), col("t_us"))
-        val out = clicks.join(purchases,
-            col("user_id") === col("pu") &&
-              col("t_us") >= col("lo") && col("t_us") < col("hi"))
-          .groupBy(col("p_id"))
-          .agg(count(lit(1)).as("n_clicks"))
-          .orderBy(col("p_id"))
-        // Execute inside the armed scope (the q213 discipline).
-        out.localCheckpoint(true)
-      } finally {
-        s.conf.unset(graft.plans.IntervalJoinRewrite.AutoConf)
-        s.conf.unset(graft.plans.IntervalJoinRewrite.KeyedConf)
-      }
+      val look = 3L * 86400L * 1000000L
+      val ev = t(s, dir, "events").withColumn("t_us", unix_micros(col("ts")))
+      val purchases = ev.filter(col("event_type") === "purchase")
+        .select(col("event_id").as("p_id"), col("user_id").as("pu"),
+          (col("t_us") - lit(look)).as("lo"), col("t_us").as("hi"))
+      val clicks = ev.filter(col("event_type") === "click")
+        .select(col("user_id"), col("t_us"))
+      clicks.join(purchases,
+          col("user_id") === col("pu") &&
+            col("t_us") >= col("lo") && col("t_us") < col("hi"))
+        .groupBy(col("p_id"))
+        .agg(count(lit(1)).as("n_clicks"))
+        .orderBy(col("p_id"))
     }),
 
     // Ordered funnel signup → click → purchase: chained running-min
@@ -1149,12 +1113,12 @@ object RelationalQueries {
     // AUTOMATIC zone-map pruning — the optimizer-rule form of q224's
     // explicit prunedRead: the query DECLARES a plain
     // `read.parquet(dir).filter(box)` and graft.plans.ZoneMapPruneRule
-    // (config-gated, try/finally-scoped) prunes the scan's FILE LIST
-    // from the `_graft_zonemaps` manifest at optimization time, before
-    // any footer opens; the declared filter stays as the residual so
-    // rows match the full scan exactly. The tripwire asserts the scan
-    // really was pruned (marker index, < all files); the oracle replays
-    // the declared filter over ALL events.
+    // prunes the scan's FILE LIST from the `_graft_zonemaps` manifest
+    // at optimization time, before any footer opens; the declared
+    // filter stays as the residual so rows match the full scan exactly.
+    // The tripwire asserts the returned frame's scan really was pruned
+    // (marker index, < all files); the oracle replays the declared
+    // filter over ALL events.
     "q226_zonemap_rule" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
@@ -1166,33 +1130,18 @@ object RelationalQueries {
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "minute"))
       val m0 = ev.agg(min(col("minute"))).collect()(0).getLong(0)
       graft.plans.ZoneMapPruneRule.install(s)
-      s.conf.set(graft.plans.ZoneMapPruneRule.AutoConf, "true")
-      try {
-        val q = s.read.parquet(tmp)
-          .filter(col("user_id") >= 10L && col("user_id") <= 50L &&
-            col("minute") >= m0 && col("minute") <= m0 + 1439L)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"),
-            min(col("minute")).as("minute_min"),
-            max(col("minute")).as("minute_max"))
-          .orderBy(col("user_id"))
-        val pruned = q.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            l.relation match {
-              case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                h.location match {
-                  case z: graft.plans.ZoneMapPrunedIndex => z.allFiles().size
-                  case _ => Int.MaxValue
-                }
-              case _ => Int.MaxValue
-            }
-        }
-        require(pruned.nonEmpty && pruned.min < 16,
-          s"zone-map rule failed to prune the declared scan: $pruned")
-        // EXECUTE inside the armed scope (same discipline as q213): a
-        // later action would re-optimize after the finally disarms.
-        q.localCheckpoint(true)
-      } finally s.conf.unset(graft.plans.ZoneMapPruneRule.AutoConf)
+      val q = s.read.parquet(tmp)
+        .filter(col("user_id") >= 10L && col("user_id") <= 50L &&
+          col("minute") >= m0 && col("minute") <= m0 + 1439L)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n"),
+          min(col("minute")).as("minute_min"),
+          max(col("minute")).as("minute_max"))
+        .orderBy(col("user_id"))
+      val pruned = graft.plans.ZoneMapPrunedIndex.fileCounts(q.queryExecution.optimizedPlan)
+      require(pruned.nonEmpty && pruned.min < 16,
+        s"zone-map rule failed to prune the declared scan: $pruned")
+      q
     }),
 
     // TIME TRAVEL via the version log (core/VersionLog): base events
@@ -1825,8 +1774,9 @@ object RelationalQueries {
     // the DECLARED query — readVersion(head).filter(box) — and the
     // optimizer rule recognizes the committed view (multi-root scan ==
     // committed live set) and prunes its file list before any footer
-    // opens. Plan tripwire: the marker index must be in the optimized
-    // plan. The oracle replays the declared box over all events.
+    // opens. Plan tripwire: the marker index must be in the returned
+    // frame's optimized plan. The oracle replays the declared box over
+    // all events.
     "q250_versioned_autoprune" -> ((s, dir) => {
       import graft.core.{Layout, VersionLog}
       import graft.streaming.IngestStreams
@@ -1848,24 +1798,14 @@ object RelationalQueries {
       }
       val m0 = ev.agg(min(col("minute"))).collect()(0).getLong(0)
       graft.plans.ZoneMapPruneRule.install(s)
-      s.conf.set(graft.plans.ZoneMapPruneRule.AutoConf, "true")
-      try {
-        val q = VersionLog.readVersion(s, tmp, VersionLog.latest(s, tmp))
-          .filter(col("minute") >= m0 && col("minute") <= m0 + 1439L)
-        val fired = q.queryExecution.optimizedPlan.collect {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if l.relation.isInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-                l.relation.asInstanceOf[
-                  org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-                  .location.isInstanceOf[graft.plans.ZoneMapPrunedIndex] => 1
-        }.sum
-        require(fired == 1,
-          "the rule must prune the declared versioned scan")
-        q.groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
-          .orderBy(col("user_id"))
-      } finally s.conf.unset(graft.plans.ZoneMapPruneRule.AutoConf)
+      val q = VersionLog.readVersion(s, tmp, VersionLog.latest(s, tmp))
+        .filter(col("minute") >= m0 && col("minute") <= m0 + 1439L)
+        .groupBy(col("user_id"))
+        .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
+        .orderBy(col("user_id"))
+      require(graft.plans.ZoneMapPrunedIndex.fileCounts(q.queryExecution.optimizedPlan).size == 1,
+        "the rule must prune the declared versioned scan")
+      q
     }),
 
     // RESTORE (un-DML): a bad MERGE corrupts md5-gated rows; restore

@@ -14,6 +14,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     super.beforeAll()
     graft.core.CacheScope.releaseAll(spark)
   }
+
+  /** Run `body` with an installed optimizer rule switched off through
+    * Spark's own `spark.sql.optimizer.excludedRules` — the reference
+    * plan a rewrite must match row for row. Plan and run the frame
+    * inside `body`: a query keeps the plan it optimized first.
+    */
+  def withoutRule[T](rule: org.apache.spark.sql.catalyst.rules.Rule[_])(body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", rule.ruleName)
+    try body
+    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+  }
 }
 
 object SparkSpec {

@@ -4,19 +4,12 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The declared-ASOF rewrite: identical rows to the pair-join plan, a
-  * JOIN-FREE physical plan when armed, strict/non-strict lower bounds,
-  * NULL payload carry, and the scope guards.
+/** The declared-ASOF rewrite: identical rows to the pair-join plan
+  * (the rule excluded), a JOIN-FREE physical plan, strict/non-strict
+  * lower bounds, NULL payload carry, and the scope guards.
   */
 class AsofJoinRewriteSpec extends SparkSpec {
   import spark.implicits._
-
-  private def armed[T](body: => T): T = {
-    AsofJoinRewrite.install(spark)
-    spark.conf.set(AsofJoinRewrite.EnabledConf, "true")
-    try body
-    finally spark.conf.unset(AsofJoinRewrite.EnabledConf)
-  }
 
   private lazy val dir = {
     // parquet-backed: LocalRelation fixtures constant-fold and hide plans
@@ -52,14 +45,18 @@ class AsofJoinRewriteSpec extends SparkSpec {
         if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSeq
 
   test("armed: identical rows to the pair-join plan, and the physical plan is JOIN-FREE") {
-    val baseline = rows(declared(tol = 50L))
-    val (got, plan) = armed {
+    val baseline = withoutRule(AsofJoinRewrite) {
       val d = declared(tol = 50L)
-      (rows(d), d.queryExecution.executedPlan.toString)
+      assert(d.queryExecution.executedPlan.toString.contains("Join"),
+        "baseline must be the pair-join plan the rewrite replaces")
+      rows(d)
     }
+    val d = declared(tol = 50L)
+    val got = rows(d)
+    val plan = d.queryExecution.executedPlan.toString
     assert(got === baseline, "rewrite must not change rows")
     assert(!plan.contains("Join"),
-      s"armed declared-asof must plan without any join operator:\n$plan")
+      s"declared asof must plan without any join operator:\n$plan")
     assert(plan.contains("Window"), "expected the carry-forward window plan")
     // hand-checked: pid1/pid5 (k=1,t=100) → qt=90 v=9; pid2 (t=250,
     // tol=50) → qt=240 within (200,250], v NULL carried as NULL;
@@ -72,14 +69,16 @@ class AsofJoinRewriteSpec extends SparkSpec {
 
   test("strict vs non-strict lower bound at exactly t - tol") {
     // k=3: quote at 300, probe at 500, tol=200 → boundary qt == t - tol
-    val strictRows = armed { rows(declared(tol = 200L, strictLower = true)) }
-    val inclRows = armed { rows(declared(tol = 200L, strictLower = false)) }
+    val strictRows = rows(declared(tol = 200L, strictLower = true))
+    val inclRows = rows(declared(tol = 200L, strictLower = false))
     assert(!strictRows.exists(_._1 == 4L), "strict bound excludes the boundary quote")
     assert(inclRows.exists(r => r._1 == 4L && r._3 == 300L),
       "non-strict bound includes the boundary quote")
     // both agree with their unrewritten selves
-    assert(strictRows === rows(declared(200L, strictLower = true)))
-    assert(inclRows === rows(declared(200L, strictLower = false)))
+    withoutRule(AsofJoinRewrite) {
+      assert(strictRows === rows(declared(200L, strictLower = true)))
+      assert(inclRows === rows(declared(200L, strictLower = false)))
+    }
   }
 
   test("coarser grouping than a probe row still matches the pair-join winner") {
@@ -88,45 +87,37 @@ class AsofJoinRewriteSpec extends SparkSpec {
           col("qt") > col("t") - lit(50L))
       .groupBy(probes("k"))
       .agg(max_by(col("v"), col("qt")).as("v"), max(col("qt")).as("qt"))
-    val baseline = d().orderBy("k").collect().map(_.toSeq).toSeq
-    val (got, plan) = armed {
-      val x = d(); (x.orderBy("k").collect().map(_.toSeq).toSeq,
-        x.queryExecution.executedPlan.toString)
-    }
+    val baseline = withoutRule(AsofJoinRewrite)(
+      d().orderBy("k").collect().map(_.toSeq).toSeq)
+    val x = d()
+    val got = x.orderBy("k").collect().map(_.toSeq).toSeq
+    val plan = x.queryExecution.executedPlan.toString
     assert(got === baseline)
     assert(!plan.contains("Join"), s"coarse grouping must still rewrite:\n$plan")
   }
 
   test("guards: count(*) aggregates, outer joins and keyless sandwiches stay untouched") {
-    armed {
-      // count(*) counts PAIRS — the carry plan can't reproduce it
-      val counted = probes.join(quotes,
-          probes("k") === quotes("k") && col("qt") <= col("t") &&
-            col("qt") > col("t") - lit(50L))
-        .groupBy(probes("pid")).agg(count(lit(1)).as("n"))
-      assert(counted.queryExecution.optimizedPlan.toString.contains("Join"),
-        "pair-count must keep the join")
-      assert(counted.orderBy("pid").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 1L)))
-      // outer join: rule matches Inner only
-      val outer = probes.join(quotes,
-          probes("k") === quotes("k") && col("qt") <= col("t") &&
-            col("qt") > col("t") - lit(50L), "left")
-        .groupBy(probes("pid"))
-        .agg(max_by(col("v"), col("qt")).as("v"))
-      assert(outer.queryExecution.optimizedPlan.toString.contains("Join"))
-      // keyless: no equi conjunct → global-sort territory, out of scope
-      val keyless = probes.join(quotes,
-          col("qt") <= col("t") && col("qt") > col("t") - lit(50L))
-        .groupBy(probes("pid"))
-        .agg(max_by(col("v"), col("qt")).as("v"))
-      assert(keyless.queryExecution.optimizedPlan.toString.contains("Join"))
-    }
-  }
-
-  test("inert without the conf") {
-    AsofJoinRewrite.install(spark)
-    val plan = declared(50L).queryExecution.executedPlan.toString
-    assert(plan.contains("Join"), "rule must not fire unarmed")
+    // count(*) counts PAIRS — the carry plan can't reproduce it
+    val counted = probes.join(quotes,
+        probes("k") === quotes("k") && col("qt") <= col("t") &&
+          col("qt") > col("t") - lit(50L))
+      .groupBy(probes("pid")).agg(count(lit(1)).as("n"))
+    assert(counted.queryExecution.optimizedPlan.toString.contains("Join"),
+      "pair-count must keep the join")
+    assert(counted.orderBy("pid").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      === Seq((1L, 1L), (2L, 1L), (3L, 1L), (5L, 1L)))
+    // outer join: rule matches Inner only
+    val outer = probes.join(quotes,
+        probes("k") === quotes("k") && col("qt") <= col("t") &&
+          col("qt") > col("t") - lit(50L), "left")
+      .groupBy(probes("pid"))
+      .agg(max_by(col("v"), col("qt")).as("v"))
+    assert(outer.queryExecution.optimizedPlan.toString.contains("Join"))
+    // keyless: no equi conjunct → global-sort territory, out of scope
+    val keyless = probes.join(quotes,
+        col("qt") <= col("t") && col("qt") > col("t") - lit(50L))
+      .groupBy(probes("pid"))
+      .agg(max_by(col("v"), col("qt")).as("v"))
+    assert(keyless.queryExecution.optimizedPlan.toString.contains("Join"))
   }
 }

@@ -1,22 +1,16 @@
 package graft.plans
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** The keyless range-join rewrite: same rows as the nested-loop plan,
-  * equi-join plan shape, opt-in gating, orientation symmetry, and the
-  * null/empty-interval edges.
+  * equi-join plan shape, the derived width, orientation symmetry, the
+  * scope guards, and the null/empty-interval edges.
   */
 class IntervalJoinRewriteSpec extends SparkSpec {
   import spark.implicits._
-
-  private def withBucket[T](b: Long)(body: => T): T = {
-    IntervalJoinRewrite.install(spark)
-    spark.conf.set(IntervalJoinRewrite.BucketConf, b.toString)
-    try body
-    finally spark.conf.unset(IntervalJoinRewrite.BucketConf)
-  }
 
   private lazy val dir = {
     // parquet-backed: LocalRelations get folded and would hide plans
@@ -35,20 +29,22 @@ class IntervalJoinRewriteSpec extends SparkSpec {
 
   private def points = spark.read.parquet(s"$dir/points")
   private def intervals = spark.read.parquet(s"$dir/intervals")
+  private def declared = points.join(intervals, col("p") >= col("lo") && col("p") < col("hi"))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.select(col("pid"), col("iid")).orderBy("pid", "iid")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   test("keyless range join rewrites to a bucketed equi-join with identical rows") {
-    val q = points.join(intervals, col("p") >= col("lo") && col("p") < col("hi"))
-    val naive = rows(q) // rule inert without the conf: the BNLJ baseline
-    assert(q.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
-      "baseline must be the nested-loop plan the rewrite exists to kill")
-    val (fast, plan) = withBucket(100L) {
-      val f = points.join(intervals, col("p") >= col("lo") && col("p") < col("hi"))
-      (rows(f), f.queryExecution.executedPlan.toString)
+    val naive = withoutRule(IntervalJoinRewrite) {
+      val q = declared
+      assert(q.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"),
+        "baseline must be the nested-loop plan the rewrite exists to kill")
+      rows(q)
     }
+    val f = declared
+    val fast = rows(f)
+    val plan = f.queryExecution.executedPlan.toString
     assert(fast === naive, "rewrite must not change the result")
     assert(fast.nonEmpty)
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
@@ -59,46 +55,39 @@ class IntervalJoinRewriteSpec extends SparkSpec {
   }
 
   test("orientation symmetry: intervals JOIN points rewrites too") {
-    val got = withBucket(100L) {
-      val f = intervals.join(points, col("p") >= col("lo") && col("p") < col("hi"))
-      (rows(f), f.queryExecution.executedPlan.toString)
-    }
-    assert(got._1 === Seq((1L, 10L), (2L, 11L), (3L, 11L), (5L, 14L)))
-    assert(!got._2.contains("BroadcastNestedLoopJoin"))
+    val f = intervals.join(points, col("p") >= col("lo") && col("p") < col("hi"))
+    assert(rows(f) === Seq((1L, 10L), (2L, 11L), (3L, 11L), (5L, 14L)))
+    assert(!f.queryExecution.executedPlan.toString.contains("BroadcastNestedLoopJoin"))
   }
 
   test("scope guards: keyed joins, non-sandwich conditions and outer joins are untouched") {
-    withBucket(100L) {
-      // an extra equality conjunct means Spark already has an equi key
-      val keyed = points.withColumn("k", col("pid") % 2)
-        .join(intervals.withColumn("k", col("iid") % 2),
-          Seq("k"))
-      assert(!keyed.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
-      // single inequality is not a sandwich
-      val half = points.join(intervals, col("p") >= col("lo"))
-      assert(!half.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
-      // left outer keeps its semantics (rule matches Inner only)
-      val outer = points.join(intervals,
-        col("p") >= col("lo") && col("p") < col("hi"), "left")
-      assert(!outer.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
-      assert(outer.count() === 6L, "outer join rows unchanged")
-    }
-  }
-
-  private def withAuto[T](body: => T): T = {
-    IntervalJoinRewrite.install(spark)
-    spark.conf.set(IntervalJoinRewrite.AutoConf, "true")
-    try body
-    finally spark.conf.unset(IntervalJoinRewrite.AutoConf)
+    // an extra equality conjunct means Spark already has an equi key
+    val keyed = points.withColumn("k", col("pid") % 2)
+      .join(intervals.withColumn("k", col("iid") % 2),
+        Seq("k"))
+    assert(!keyed.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
+    // ... also when it rides beside a full sandwich: a hot key takes
+    // Ranges.intervalJoin(..., keys) explicitly
+    val kp = points.withColumn("k", col("pid") % 2)
+    val ki = intervals.withColumn("k", col("iid") % 2)
+    val keyedSandwich = kp.join(ki,
+      kp("k") === ki("k") && col("p") >= col("lo") && col("p") < col("hi"))
+    assert(!keyedSandwich.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
+    // single inequality is not a sandwich
+    val half = points.join(intervals, col("p") >= col("lo"))
+    assert(!half.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
+    // left outer keeps its semantics (rule matches Inner only)
+    val outer = points.join(intervals,
+      col("p") >= col("lo") && col("p") < col("hi"), "left")
+    assert(!outer.queryExecution.optimizedPlan.toString.contains("__graft_ib"))
+    assert(outer.count() === 6L, "outer join rows unchanged")
   }
 
   test("auto mode derives the bucket from sampled interval widths — no width conf set") {
-    val naive = rows(points.join(intervals,
-      col("p") >= col("lo") && col("p") < col("hi")))
-    val (fast, plan) = withAuto {
-      val f = points.join(intervals, col("p") >= col("lo") && col("p") < col("hi"))
-      (rows(f), f.queryExecution.executedPlan.toString)
-    }
+    val naive = withoutRule(IntervalJoinRewrite)(rows(declared))
+    val f = declared
+    val fast = rows(f)
+    val plan = f.queryExecution.executedPlan.toString
     assert(fast === naive, "auto-derived bucket must not change rows")
     assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
       s"auto mode failed to rewrite:\n$plan")
@@ -107,110 +96,23 @@ class IntervalJoinRewriteSpec extends SparkSpec {
     assert(plan.contains("div 290"), s"expected the sampled p90 width 290:\n$plan")
   }
 
-  test("explicit bucket conf overrides the auto sample") {
-    val plan = withAuto {
-      withBucket(100L) {
-        points.join(intervals, col("p") >= col("lo") && col("p") < col("hi"))
-          .queryExecution.executedPlan.toString
-      }
-    }
-    assert(plan.contains("div 100") && !plan.contains("div 290"),
-      s"explicit width must win over the sample:\n$plan")
-  }
-
   test("auto mode leaves the join alone when the interval side is empty") {
-    val got = withAuto {
-      val f = points.join(intervals.filter(col("iid") < 0L),
-        col("p") >= col("lo") && col("p") < col("hi"))
-      (rows(f), f.queryExecution.optimizedPlan.toString)
-    }
-    assert(got._1.isEmpty)
-    assert(!got._2.contains("__graft_ib"), "no stats → no rewrite")
-  }
-
-  private def withKeyed[T](b: Long)(body: => T): T = {
-    IntervalJoinRewrite.install(spark)
-    spark.conf.set(IntervalJoinRewrite.BucketConf, b.toString)
-    spark.conf.set(IntervalJoinRewrite.KeyedConf, "true")
-    try body
-    finally {
-      spark.conf.unset(IntervalJoinRewrite.BucketConf)
-      spark.conf.unset(IntervalJoinRewrite.KeyedConf)
-    }
-  }
-
-  // ONE hot key: the shape where Catalyst's equi-join-on-key plan
-  // degenerates to a per-key cartesian through the range residual
-  private lazy val keyedDir = {
-    val root = java.nio.file.Files.createTempDirectory("ivjoink").toString
-    (0L until 200L).map(i => (i, 1L, i * 10L))
-      .toDF("pid", "k", "p").write.parquet(s"$root/points")
-    (0L until 50L).map(i => (1000L + i, 1L, i * 40L, i * 40L + 40L))
-      .toDF("iid", "k", "lo", "hi").write.parquet(s"$root/intervals")
-    root
-  }
-  private lazy val kpoints = spark.read.parquet(s"$keyedDir/points")
-  private lazy val kintervals = spark.read.parquet(s"$keyedDir/intervals")
-  private def keyedJoin = kpoints.join(kintervals,
-    kpoints("k") === kintervals("k") &&
+    val f = points.join(intervals.filter(col("iid") < 0L),
       col("p") >= col("lo") && col("p") < col("hi"))
-
-  test("keyed mode: equality key + sandwich gains the bucket as a second hash key") {
-    val naive = rows(keyedJoin) // key-only equi-join, range as residual
-    val (fast, opt) = withKeyed(40L) {
-      val f = keyedJoin
-      (rows(f), f.queryExecution.optimizedPlan.toString)
-    }
-    assert(fast === naive, "keyed rewrite must not change rows")
-    assert(fast.size === 200L, "every point lands in exactly one interval")
-    assert(opt.contains("__graft_pb") && opt.contains("__graft_ib"),
-      s"keyed sandwich did not rewrite:\n$opt")
-    // the bucket id must actually be a JOIN KEY, not a residual: the
-    // physical hash keys list both the user key and the bucket
-    val phys = withKeyed(40L)(keyedJoin.queryExecution.executedPlan.toString)
-    assert(phys.contains("__graft_pb"), s"bucket key absent from physical plan:\n$phys")
-  }
-
-  test("keyed mode stays out without the keyed conf, and out of non-equality extras") {
-    // same join, keyed conf NOT set: untouched even with bucket set
-    val opt = withBucket(40L)(keyedJoin.queryExecution.optimizedPlan.toString)
-    assert(!opt.contains("__graft_ib"),
-      "keyed sandwich must not rewrite unless spark.graft.intervalJoin.keyed=true")
-    // a non-equality extra conjunct blocks the keyed match too
-    val ineq = withKeyed(40L) {
-      kpoints.join(kintervals,
-        kpoints("k") =!= kintervals("k") &&
-          col("p") >= col("lo") && col("p") < col("hi"))
-        .queryExecution.optimizedPlan.toString
-    }
-    assert(!ineq.contains("__graft_ib"), "inequality extras must block the rewrite")
-  }
-
-  test("keyed mode: multiple equality keys all survive as join keys") {
-    val p2 = kpoints.withColumn("k2", col("pid") % 3)
-    val i2 = kintervals.withColumn("k2", col("iid") % 3)
-    val q = p2.join(i2,
-      p2("k") === i2("k") && p2("k2") === i2("k2") &&
-        col("p") >= col("lo") && col("p") < col("hi"))
-    val naive = rows(q)
-    val (fast, opt) = withKeyed(40L) {
-      val f = p2.join(i2,
-        p2("k") === i2("k") && p2("k2") === i2("k2") &&
-          col("p") >= col("lo") && col("p") < col("hi"))
-      (rows(f), f.queryExecution.optimizedPlan.toString)
-    }
-    assert(fast === naive)
-    assert(opt.contains("__graft_ib"), s"two-key sandwich did not rewrite:\n$opt")
+    assert(rows(f).isEmpty)
+    assert(!f.queryExecution.optimizedPlan.toString.contains("__graft_ib"),
+      "no stats → no rewrite")
   }
 
   test("wide intervals fan out by width/bucket, correctness independent of bucket choice") {
     Seq(7L, 64L, 1000000L).foreach { b =>
-      val got = withBucket(b) {
-        rows(points.join(intervals,
-          col("p") >= col("lo") && col("p") < col("hi")))
-      }
-      assert(got === Seq((1L, 10L), (2L, 11L), (3L, 11L), (5L, 14L)),
+      val f = GraftBridge.ofRows(spark,
+        IntervalJoinRewrite.atWidth(declared.queryExecution.analyzed, b))
+      assert(rows(f) === Seq((1L, 10L), (2L, 11L), (3L, 11L), (5L, 14L)),
         s"bucket=$b must not change rows")
+      val plan = f.queryExecution.executedPlan.toString
+      assert(plan.contains(s"div $b") && !plan.contains("BroadcastNestedLoopJoin"),
+        s"expected the fixed width $b:\n$plan")
     }
   }
 }

@@ -876,64 +876,34 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q213: the DECLARED keyless range join plans as an equi-join through the optimizer rule") {
-    // q213 itself hands back the rewritten plan's RESULT (an eager
-    // localCheckpoint — the armed conf is try/finally-scoped so the
-    // rewrite can't leak into later queries), so the plan-shape gate
-    // rebuilds the declared join here with AUTO mode armed: no width
-    // conf anywhere, the rule samples the spine's widths itself.
-    import org.apache.spark.sql.functions._
-    graft.plans.IntervalJoinRewrite.install(spark)
-    spark.conf.set(graft.plans.IntervalJoinRewrite.AutoConf, "true")
-    try {
-      val day = 86400L * 1000000L
-      val ev = graft.Tables.load(spark, dir, "events")
-        .select(col("event_id"), unix_micros(col("ts")).as("t_us"))
-      val bounds = ev.agg(min(col("t_us")).as("t0"), max(col("t_us")).as("t1"))
-      val spine = bounds.select(col("t0"),
-          explode(sequence(lit(0L), expr(s"(t1 - t0) div ${day}L"))).as("d"))
-        .select(col("d"),
-          (col("t0") + col("d") * lit(day)).as("lo"),
-          (col("t0") + (col("d") + lit(1L)) * lit(day)).as("hi"))
-      val p = ev.join(spine, col("t_us") >= col("lo") && col("t_us") < col("hi"))
-        .groupBy(col("d")).agg(count(lit(1)).as("n_events"))
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
-        "IntervalJoinRewrite must turn the declared containment into a bucketed equi-join")
-      assert(p.contains("__graft_ib"), "the rule's bucket key must appear in the plan")
-    } finally spark.conf.unset(graft.plans.IntervalJoinRewrite.AutoConf)
+    // the frame q213 returns: no width conf anywhere, the rule samples
+    // the spine's widths itself
+    val p = plan("q213_range_rule")
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"),
+      "IntervalJoinRewrite must turn the declared containment into a bucketed equi-join")
+    assert(p.contains("__graft_ib"), "the rule's bucket key must appear in the plan")
   }
 
   test("q216: the DECLARED asof aggregation plans JOIN-FREE through AsofJoinRewrite") {
-    // q216 returns the rewritten plan's result (localCheckpoint, armed
-    // conf scoped) — rebuild the declared shape armed, over the real
-    // events table, and demand the carry-window plan: no join operator
-    // of any kind in the physical plan.
-    import org.apache.spark.sql.functions._
-    graft.plans.AsofJoinRewrite.install(spark)
-    spark.conf.set(graft.plans.AsofJoinRewrite.EnabledConf, "true")
-    try {
-      val tol = 7L * 86400L * 1000000L
-      val ev = graft.Tables.load(spark, dir, "events")
-        .withColumn("t_us", unix_micros(col("ts")))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("t_us"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("cu"), col("t_us").as("ct"),
-          round(col("value") * lit(100.0)).cast("long").as("cents"))
-        .groupBy(col("cu"), col("ct"))
-        .agg(max(col("cents")).as("cents"))
-      val p = purchases.join(clicks,
-          col("user_id") === col("cu") &&
-            col("ct") <= col("t_us") &&
-            col("ct") > col("t_us") - lit(tol))
-        .groupBy(col("event_id"), col("user_id"), col("t_us"))
-        .agg(max_by(col("cents"), col("ct")).as("click_cents"),
-          max(col("ct")).as("click_t_us"))
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("Join"),
-        s"declared asof must plan join-free through the rewrite:\n$p")
-      assert(p.contains("Window"), "expected the carry-forward window plan")
-    } finally spark.conf.unset(graft.plans.AsofJoinRewrite.EnabledConf)
+    // the frame q216 returns must plan the carry-window: no join
+    // operator of any kind in the physical plan
+    val p = plan("q216_declared_asof")
+    assert(!p.contains("Join"),
+      s"declared asof must plan join-free through the rewrite:\n$p")
+    assert(p.contains("Window"), "expected the carry-forward window plan")
+  }
+
+  /** Scans of `name`'s returned frame that ZoneMapPruneRule pruned. */
+  private def prunedScans(name: String): Int =
+    graft.plans.ZoneMapPrunedIndex.fileCounts(
+      graft.SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan).size
+
+  test("q226: the returned frame plans a zone-map-pruned scan") {
+    assert(prunedScans("q226_zonemap_rule") === 1)
+  }
+
+  test("q250: the returned frame plans a zone-map-pruned versioned scan") {
+    assert(prunedScans("q250_versioned_autoprune") === 1)
   }
 
   test("q214: the sketch-merge frame join is a hash equi-join on the member day") {
