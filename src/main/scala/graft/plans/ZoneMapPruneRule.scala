@@ -23,13 +23,6 @@ class ZoneMapPrunedIndex(
     spark: SparkSession, files: Seq[Path], schema: StructType)
   extends InMemoryFileIndex(spark, files, Map.empty[String, String], Some(schema))
 
-object ZoneMapPrunedIndex {
-  /** File counts of the pruned scans in an optimized `plan`. */
-  def fileCounts(plan: LogicalPlan): Seq[Int] = plan.collect {
-    case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
-  }.collect { case z: ZoneMapPrunedIndex => z.allFiles().size }
-}
-
 /** Optimizer rule: AUTOMATIC zone-map data skipping. q224's
   * [[graft.core.Layout.prunedRead]] is the explicit API — the operator
   * calls it instead of `spark.read.parquet`; this rule is the (c)-tier

@@ -1116,9 +1116,8 @@ object RelationalQueries {
     // prunes the scan's FILE LIST from the `_graft_zonemaps` manifest
     // at optimization time, before any footer opens; the declared
     // filter stays as the residual so rows match the full scan exactly.
-    // The tripwire asserts the returned frame's scan really was pruned
-    // (marker index, < all files); the oracle replays the declared
-    // filter over ALL events.
+    // PlanSpec asserts the returned frame plans the pruned scan (marker
+    // index); the oracle replays the declared filter over ALL events.
     "q226_zonemap_rule" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
@@ -1130,7 +1129,7 @@ object RelationalQueries {
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "minute"))
       val m0 = ev.agg(min(col("minute"))).collect()(0).getLong(0)
       graft.plans.ZoneMapPruneRule.install(s)
-      val q = s.read.parquet(tmp)
+      s.read.parquet(tmp)
         .filter(col("user_id") >= 10L && col("user_id") <= 50L &&
           col("minute") >= m0 && col("minute") <= m0 + 1439L)
         .groupBy(col("user_id"))
@@ -1138,10 +1137,6 @@ object RelationalQueries {
           min(col("minute")).as("minute_min"),
           max(col("minute")).as("minute_max"))
         .orderBy(col("user_id"))
-      val pruned = graft.plans.ZoneMapPrunedIndex.fileCounts(q.queryExecution.optimizedPlan)
-      require(pruned.nonEmpty && pruned.min < 16,
-        s"zone-map rule failed to prune the declared scan: $pruned")
-      q
     }),
 
     // TIME TRAVEL via the version log (core/VersionLog): base events
@@ -1774,7 +1769,7 @@ object RelationalQueries {
     // the DECLARED query — readVersion(head).filter(box) — and the
     // optimizer rule recognizes the committed view (multi-root scan ==
     // committed live set) and prunes its file list before any footer
-    // opens. Plan tripwire: the marker index must be in the returned
+    // opens. PlanSpec asserts the marker index is in the returned
     // frame's optimized plan. The oracle replays the declared box over
     // all events.
     "q250_versioned_autoprune" -> ((s, dir) => {
@@ -1798,14 +1793,11 @@ object RelationalQueries {
       }
       val m0 = ev.agg(min(col("minute"))).collect()(0).getLong(0)
       graft.plans.ZoneMapPruneRule.install(s)
-      val q = VersionLog.readVersion(s, tmp, VersionLog.latest(s, tmp))
+      VersionLog.readVersion(s, tmp, VersionLog.latest(s, tmp))
         .filter(col("minute") >= m0 && col("minute") <= m0 + 1439L)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
         .orderBy(col("user_id"))
-      require(graft.plans.ZoneMapPrunedIndex.fileCounts(q.queryExecution.optimizedPlan).size == 1,
-        "the rule must prune the declared versioned scan")
-      q
     }),
 
     // RESTORE (un-DML): a bad MERGE corrupts md5-gated rows; restore

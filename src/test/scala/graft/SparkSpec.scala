@@ -18,12 +18,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Run `body` with an installed optimizer rule switched off through
     * Spark's own `spark.sql.optimizer.excludedRules` — the reference
     * plan a rewrite must match row for row. Plan and run the frame
-    * inside `body`: a query keeps the plan it optimized first.
+    * inside `body`: a query keeps the plan it optimized first. Adds to
+    * any exclusion already set and restores it on exit, so calls nest.
     */
   def withoutRule[T](rule: org.apache.spark.sql.catalyst.rules.Rule[_])(body: => T): T = {
-    spark.conf.set("spark.sql.optimizer.excludedRules", rule.ruleName)
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (prev.toSeq :+ rule.ruleName).mkString(","))
     try body
-    finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +14,7 @@ import graft.core.Layout
   */
 class ZoneMapPruneRuleSpec extends SparkSpec {
   import spark.implicits._
+  import ZoneMapPruneRuleSpec.prunedSizes
 
   /** (a, b, id) rows z-ordered into 8 files with a manifest on (a, b). */
   private lazy val dir = {
@@ -23,8 +25,6 @@ class ZoneMapPruneRuleSpec extends SparkSpec {
     s"$root/t"
   }
 
-  private def prunedSizes(df: DataFrame): Seq[Int] =
-    ZoneMapPrunedIndex.fileCounts(df.queryExecution.optimizedPlan)
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").orderBy("id").collect().map(_.getLong(0)).toSeq
@@ -170,6 +170,14 @@ class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def listStatus(p: Path): Array[FileStatus] = {
     CountingFs.calls.incrementAndGet(); super.listStatus(p)
   }
+}
+
+object ZoneMapPruneRuleSpec {
+  /** File counts of the scans ZoneMapPruneRule pruned in `df`'s plan. */
+  def prunedSizes(df: DataFrame): Seq[Int] =
+    df.queryExecution.optimizedPlan.collect {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location
+    }.collect { case z: ZoneMapPrunedIndex => z.allFiles().size }
 }
 
 object CountingFs {

@@ -895,8 +895,8 @@ class PlanSpec extends SparkSpec {
 
   /** Scans of `name`'s returned frame that ZoneMapPruneRule pruned. */
   private def prunedScans(name: String): Int =
-    graft.plans.ZoneMapPrunedIndex.fileCounts(
-      graft.SparkEntry.queries(name)(spark, dir).queryExecution.optimizedPlan).size
+    graft.plans.ZoneMapPruneRuleSpec.prunedSizes(
+      graft.SparkEntry.queries(name)(spark, dir)).size
 
   test("q226: the returned frame plans a zone-map-pruned scan") {
     assert(prunedScans("q226_zonemap_rule") === 1)
