@@ -69,10 +69,12 @@ object ProfileQ {
       val jobTotal = snap.map(j => (j.end - j.start).max(0L)).sum / 1e3
       println(f"   sum of job walls: $jobTotal%.3f s (gap to wall = driver/metadata time)")
       // what the query left persisted: every RDD, then the raw ones that
-      // clearCache() cannot reach (layerbench's cache.rdds_left)
+      // clearCache() cannot reach (layerbench's cache.rdds_left), and the
+      // directories it staged on disk
       val left = spark.sparkContext.getPersistentRDDs.size
       spark.catalog.clearCache()
-      println(s"   persisted RDDs left: $left, raw: ${spark.sparkContext.getPersistentRDDs.size}")
+      println(s"   persisted RDDs left: $left, raw: ${spark.sparkContext.getPersistentRDDs.size}" +
+        s", staged dirs left: ${graft.core.CacheScope.stagedLeft}")
       val show = sys.env.get("PROFILE_JOBS").map(_.toInt).getOrElse(12)
       snap.sortBy(j => -(j.end - j.start)).take(show).foreach { j =>
         val d = (j.end - j.start).max(0L) / 1e3

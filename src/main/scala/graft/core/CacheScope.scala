@@ -45,7 +45,8 @@ import org.apache.spark.sql.catalyst.InternalRow
   * '''[[releaseAll]], for harnesses.''' A caller that owns the whole
   * session (a bench measurement, a test suite) empties its storage in
   * one call, including what was persisted with no bracket open — raw
-  * RDDs that `clearCache()` cannot reach.
+  * RDDs that `clearCache()` cannot reach — and deletes every directory
+  * [[stage]] handed out.
   *
   * Caveat: Spark's CacheManager dedups Dataset caches by PLAN, so two
   * brackets caching plan-identical intermediates share one storage
@@ -103,12 +104,34 @@ object CacheScope {
     }
   }
 
+  private val stagedDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** A fresh directory under the system temp dir for a table a query
+    * stages for itself (a z-ordered copy, a versioned store, an index);
+    * [[releaseAll]] deletes it. Only the path string is held, so a
+    * caller that never releases keeps nothing but the strings.
+    */
+  def stage(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    stagedDirs.add(dir)
+    dir
+  }
+
+  /** How many [[stage]]d directories are still on disk. */
+  def stagedLeft: Int =
+    stagedDirs.stream.filter(d => new java.io.File(d).exists).count.toInt
+
   /** Empty the session's storage: every Dataset cache, then every
-    * persisted RDD, including the raw ones `clearCache()` cannot see.
-    * Blocking, so the next measurement starts with the blocks gone.
+    * persisted RDD, including the raw ones `clearCache()` cannot see,
+    * then every [[stage]]d directory. Blocking, so the next measurement
+    * starts with the blocks and the staged files gone.
     */
   def releaseAll(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    stagedDirs.forEach { d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+      stagedDirs.remove(d)
+    }
   }
 }

@@ -114,10 +114,9 @@ class LakeCli(spark: SparkSession) {
   private def healManifests(dir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${Layout.ManifestDir}")))
-      Layout.appendManifest(spark, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${Layout.BloomManifestDir}")))
-      Layout.appendBloomManifest(spark, dir)
+    Layout.Manifests
+      .filter(k => fs.exists(new org.apache.hadoop.fs.Path(s"$dir/${k.dir}")))
+      .foreach(Layout.append(spark, _, dir))
   }
 
   def mvRefresh(srcDir: String, mvDir: String,

@@ -1,10 +1,12 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
 import graft.core.CacheScope.persist
-import graft.functions.GraftFunctions
+import graft.functions.{AggregateFunctions, GraftFunctions}
 
 /** Multi-dimensional data layout via Z-ordering — the file-skipping
   * lever for 100 TB scans filtered on MORE THAN ONE column. A table
@@ -17,15 +19,18 @@ import graft.functions.GraftFunctions
   *
   * Mechanics: [[zValue]] Morton-interleaves the low 31 bits of two
   * dimension keys (a codegen'd Catalyst expression — see
-  * [[graft.functions.ZInterleave]]); [[writeZOrdered]] range-
-  * partitions on that key and sorts within partitions, so each output
-  * file covers one compact Z-range = one small (a, b) box. No shuffle
-  * beyond the one range exchange the sort itself needs; nothing
-  * driver-sized.
+  * [[graft.functions.ZInterleave]]); [[zOrdered]] range-partitions on
+  * that key and sorts within partitions, so each output file covers one
+  * compact Z-range = one small (a, b) box. No shuffle beyond the one
+  * range exchange the sort itself needs; nothing driver-sized.
   *
   * Dimensions wider than 31 bits should be bucketed first (e.g.
   * `unix_micros(ts) div 60000000` for minutes) — layout keys need
   * locality, not full resolution.
+  *
+  * The per-file manifests beside a table (zone maps and Blooms) share
+  * one path: one [[ManifestKind]] per statistic, one writer, one
+  * appender and one freshness read.
   */
 object Layout {
 
@@ -33,17 +38,32 @@ object Layout {
   def zValue(x: Column, y: Column): Column =
     GraftFunctions.z_interleave(x, y)
 
+  /** `df` clustered into `files` partitions in Z-curve order of 2 or 3
+    * dimension keys: Morton key, one range exchange, a sort within
+    * partitions, key dropped (it is re-derivable — the point is only
+    * WHERE rows land). The one Z-order transform behind
+    * [[writeZOrdered]], [[writeZOrdered3]] and
+    * [[VersionLog.compactZOrdered]]. 3-D keys take 21 bits per dim.
+    */
+  private[core] def zOrdered(df: DataFrame, dims: Seq[Column], files: Int): DataFrame = {
+    val zv = dims match {
+      case Seq(x, y) => zValue(x, y)
+      case Seq(x, y, z) => GraftFunctions.z_interleave3(x, y, z)
+      case _ => throw new IllegalArgumentException(
+        s"requirement failed: Z-order needs 2 or 3 dimension columns, got ${dims.size}")
+    }
+    df.withColumn("__graft_zv", zv)
+      .repartitionByRange(files, col("__graft_zv"))
+      .sortWithinPartitions(col("__graft_zv"))
+      .drop("__graft_zv")
+  }
+
   /** Write `df` parquet at `path` clustered into `files` Z-ordered
-    * files on (x, y). The layout key is dropped from the data — it is
-    * re-derivable, the point is only WHERE rows landed.
+    * files on (x, y).
     */
   def writeZOrdered(
       df: DataFrame, path: String, x: Column, y: Column, files: Int): Unit =
-    df.withColumn("_zv", zValue(x, y))
-      .repartitionByRange(files, col("_zv"))
-      .sortWithinPartitions(col("_zv"))
-      .drop("_zv")
-      .write.mode("overwrite").parquet(path)
+    zOrdered(df, Seq(x, y), files).write.mode("overwrite").parquet(path)
 
   /** 3-D form of [[writeZOrdered]] (tenant × time × key is the common
     * shape): every file gets a tight bounding box in ALL THREE
@@ -53,11 +73,7 @@ object Layout {
     */
   def writeZOrdered3(df: DataFrame, path: String,
       x: Column, y: Column, z: Column, files: Int): Unit =
-    df.withColumn("_zv", GraftFunctions.z_interleave3(x, y, z))
-      .repartitionByRange(files, col("_zv"))
-      .sortWithinPartitions(col("_zv"))
-      .drop("_zv")
-      .write.mode("overwrite").parquet(path)
+    zOrdered(df, Seq(x, y, z), files).write.mode("overwrite").parquet(path)
 
   /** Per-file bounding boxes of two dimension columns over a written
     * table — the pruning diagnostic: a file whose [min, max] box
@@ -83,90 +99,123 @@ object Layout {
         col("y_max") >= y0 && col("y_min") <= y1)
       .count()
 
-  /** Zone-map manifest directory name: the leading `_` keeps Spark's
-    * parquet reader from treating it as table data (hidden-file rule).
+  /** One kind of per-file manifest: per-file stats of listed columns in
+    * ONE small table beside the data, so a planner prunes the FILE LIST
+    * before any footer is touched — the job Delta's add-file stats and
+    * Iceberg's manifests do. Kinds differ only in the statistic they
+    * keep, as ClickHouse's `minmax` and `bloom_filter` skipping indexes
+    * do: `dir` is where the manifest lives (the leading `_` hides it
+    * from Spark's parquet reader), `stats(cols, sizing)` gives the
+    * per-file aggregates of `cols` and the values a zero-row file gets.
+    * `sizing` names constant columns carrying the build parameters, and
+    * `suffix` marks the stat columns, so an append re-derives both off
+    * the manifest itself and can never change the stat set or sizing.
     */
-  val ManifestDir = "_graft_zonemaps"
+  private[graft] final class ManifestKind(val dir: String, val writer: String,
+      val suffix: String, val sizing: Seq[String],
+      val stats: (Seq[String], Seq[Any]) => (Seq[Column], Seq[Any]))
+
+  /** Zone maps: per-file min/max of each column, long-cast. A zero-row
+    * file gets NULL stats, which prune correctly: no box test passes on
+    * them, and zero rows match nothing.
+    */
+  private val ZoneMaps = new ManifestKind(
+    "_graft_zonemaps", "writeManifest", "__min", Nil,
+    (cols, _) => (
+      cols.flatMap(c => Seq(
+        min(col(c).cast("long")).as(s"${c}__min"),
+        max(col(c).cast("long")).as(s"${c}__max"))),
+      cols.flatMap(_ => Seq(null, null))))
+
+  /** Blooms: per-file Bloom filters sized by (expected keys per file,
+    * fpp). Zone maps prune RANGE predicates; a point lookup on a
+    * hash-spread high-cardinality key intersects every min/max box, and
+    * the per-file Bloom answers "can this file hold key X?" with no
+    * false negatives. A zero-row file gets an empty sketch.
+    */
+  private val Blooms = new ManifestKind(
+    "_graft_blooms", "writeBloomManifest", "__bloom", Seq("__expected", "__fpp"),
+    { case (cols, Seq(expected: Long, fpp: Double)) =>
+      val empty = new java.io.ByteArrayOutputStream()
+      BloomFilter.create(expected, fpp).writeTo(empty)
+      (cols.map(c => AggregateFunctions.bloomAgg(col(c), expected, fpp)
+          .as(s"${c}__bloom")) :+
+        lit(expected).as("__expected") :+ lit(fpp).as("__fpp"),
+        cols.map(_ => empty.toByteArray) :+ expected :+ fpp)
+    })
+
+  private[graft] val Manifests = Seq(ZoneMaps, Blooms)
+
+  /** Zone-map manifest directory name. */
+  val ManifestDir: String = ZoneMaps.dir
+
+  /** Bloom manifest directory name. */
+  val BloomManifestDir: String = Blooms.dir
+
+  private def uriPath(file: String): String = new Path(file).toUri.getPath
+
+  /** One manifest row per listed file: `n_rows` and the kind's stats
+    * grouped by file, plus a fill row for each file the aggregate never
+    * sees (a ZERO-ROW part file — an anti-join with an empty partition
+    * writes one), so the manifest's file set can never miss a file the
+    * freshness identity will demand. The aggregation runs ONCE: without
+    * the persist, the coverage collect and the caller's write each
+    * re-scanned every listed file. Metadata-scale frame; [[write]] and
+    * [[append]] each open a [[CacheScope.withReleased]] bracket around
+    * build+write, so the persist releases when the maintenance call
+    * returns even outside any caller bracket (LakeCli, ingest loops).
+    */
+  private def manifestRows(spark: SparkSession, kind: ManifestKind,
+      files: Seq[String], cols: Seq[String], sizing: Seq[Any]): DataFrame = {
+    val (aggs, fill) = kind.stats(cols, sizing)
+    val agged = persist(spark.read.parquet(files: _*)
+      .groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n_rows"), aggs: _*))
+    val covered = agged.select(col("file")).collect()
+      .map(r => uriPath(r.getString(0))).toSet
+    val missing = files.filterNot(covered)
+    if (missing.isEmpty) agged
+    else agged.unionByName(spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        missing.map(f => Row.fromSeq(f +: 0L +: fill)), 1),
+      agged.schema))
+  }
+
+  /** Build a `kind` manifest of `cols` over the table's live files from
+    * scratch: one distributed scan, nothing driver-sized collected. The
+    * file list is explicit — a plain dir read skips non-partition
+    * subdirs (the versioned store's b<N>/ batch dirs), and the manifest
+    * must cover exactly what [[dataFiles]] lists.
+    */
+  private def write(spark: SparkSession, kind: ManifestKind, path: String,
+      cols: Seq[String], sizing: Seq[Any]): Unit = {
+    require(cols.nonEmpty, "a manifest needs at least one column")
+    val files = dataFiles(spark, path).toSeq.sorted
+    require(files.nonEmpty, s"no data files to manifest at $path")
+    CacheScope.withReleased {
+      manifestRows(spark, kind, files, cols, sizing)
+        .write.mode("overwrite").parquet(s"$path/${kind.dir}")
+    }
+  }
 
   /** Persist per-file zone maps — (file, row count, min/max per listed
     * column, long-cast) — beside the table. Parquet row-group stats
     * already prune WITHIN a file, but the scan still opens every
     * footer; at 100 TB the planner-side win is pruning the FILE LIST
-    * before any footer is touched, which needs the stats in ONE small
-    * table instead of a million footers — the job Delta's add-file
-    * stats and Iceberg's manifests do. One distributed scan builds it;
-    * nothing driver-sized is collected here.
+    * before any footer is touched.
     */
-  /** Per-file zone-map rows for an explicit file list; zero-row part
-    * files get all-NULL stat rows (min/max of nothing). NULL stats
-    * prune correctly: no box test passes on them, and zero rows match
-    * nothing.
-    */
-  private def zoneMapRows(spark: SparkSession, files: Seq[String],
-      cols: Seq[String]): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: cols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"${c}__min"),
-      max(col(c).cast("long")).as(s"${c}__max")))
-    perFileRows(spark, files, aggs)(0L +: cols.flatMap(_ => Seq(null, null)))
-  }
+  def writeManifest(spark: SparkSession, path: String, cols: Seq[String]): Unit =
+    write(spark, ZoneMaps, path, cols, Nil)
 
-  /** One row per listed file: `aggs` grouped by file, plus a
-    * `file +: fill` row for each file the aggregate never sees (a
-    * ZERO-ROW part file — an anti-join with an empty partition writes
-    * one), so the manifest's file set can never miss a file the
-    * staleness identity will demand. The aggregation runs ONCE: without
-    * the persist, the coverage collect and the caller's write each
-    * re-scanned every listed file. Metadata-scale frame; every caller
-    * ([[writeManifest]]/[[appendManifest]] and the bloom twins) opens
-    * its own [[CacheScope.withReleased]] bracket around build+write, so
-    * the persist releases when the maintenance call returns even when
-    * the application runs outside any bracket (LakeCli, ingest loops).
+  /** Persist per-file Bloom filters of the listed columns beside the
+    * table, so an `id IN (…)` probe opens only the files that might
+    * hold those ids (Iceberg/Delta's bloom-filter-index story, as one
+    * small table). `expectedPerFile`/`fpp` size the bit arrays.
     */
-  private def perFileRows(spark: SparkSession, files: Seq[String],
-      aggs: Seq[Column])(fill: => Seq[Any]): DataFrame = {
-    val agged = persist(spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*))
-    val covered = agged.select(col("file")).collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath)
-      .toSet
-    val missing = files.filterNot(covered)
-    if (missing.isEmpty) agged
-    else agged.unionByName(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        missing.map(f => org.apache.spark.sql.Row.fromSeq(f +: fill)), 1),
-      agged.schema))
-  }
+  def writeBloomManifest(spark: SparkSession, path: String,
+      cols: Seq[String], expectedPerFile: Long, fpp: Double = 0.01): Unit =
+    write(spark, Blooms, path, cols, Seq[Any](expectedPerFile, fpp))
 
-  def writeManifest(spark: SparkSession, path: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "zone maps need at least one column")
-    // explicit live-file list: a plain dir read skips non-partition
-    // subdirs (the versioned store's b<N>/ batch dirs), and the
-    // manifest must cover exactly what liveDataFiles sees
-    val files = dataFiles(spark, path).toSeq.sorted
-    require(files.nonEmpty, s"no data files to manifest at $path")
-    CacheScope.withReleased {
-      zoneMapRows(spark, files, cols)
-        .write.mode("overwrite").parquet(s"$path/$ManifestDir")
-    }
-  }
-
-  /** Incremental manifest maintenance — appends AND rewrites. A 100 TB
-    * store takes appends daily; rebuilding the manifest from scratch
-    * re-scans the WHOLE table for a batch that touched 0.1% of it.
-    * This scans ONLY the data files the manifest does not know yet
-    * (read by explicit path list), computes their zone maps, unions
-    * them in, and DROPS ghost rows for files no longer committed —
-    * which makes it the healing step after copy-on-write DELETE/MERGE
-    * and compact too: the work is bounded by the rewritten window
-    * (the d/m/c files scanned + the ghost filter), never the table,
-    * and the result is row-identical to a full rebuild
-    * (spec-asserted for append, DML, and compact). No-op when nothing
-    * changed.
-    *
-    * The column list is taken from the existing manifest's schema, so
-    * an append can never silently manifest a different stat set.
-    */
   /** Manifested file strings split into (kept rows' predicate, ghost
     * originals): ghosts are manifested files no longer in the table's
     * committed set (vacuumed, or a crashed attempt's orphans cleaned
@@ -176,10 +225,41 @@ object Layout {
     */
   private def ghostSplit(fileStrs: Seq[String],
       data: Set[String]): (Set[String], Seq[String]) = {
-    val pairs = fileStrs.map(f =>
-      (f, new org.apache.hadoop.fs.Path(f).toUri.getPath))
+    val pairs = fileStrs.map(f => (f, uriPath(f)))
     (pairs.collect { case (_, n) if data(n) => n }.toSet,
       pairs.collect { case (o, n) if !data(n) => o })
+  }
+
+  /** The sibling scratch dir [[writeSwapped]] stages a manifest in. */
+  private def swapPath(target: Path) =
+    new Path(target.getParent, s".${target.getName}.swap")
+
+  /** The manifest dir to read: the target, or — in a crashed
+    * [[writeSwapped]]'s only loss window, "target deleted, complete
+    * `.swap` not yet renamed in" — the `.swap` dir when its `_SUCCESS`
+    * marker says it is complete; None when neither exists. Read-only,
+    * so pruned reads proceed through the window without racing a
+    * writer's delete→rename. One exists() when the target is present
+    * (the normal case).
+    */
+  private def readableManifest(spark: SparkSession, manPath: String): Option[String] = {
+    val target = new Path(manPath)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(target)) Some(manPath)
+    else Some(swapPath(target))
+      .filter(tmp => fs.exists(new Path(tmp, "_SUCCESS")))
+      .map(_.toString)
+  }
+
+  /** Heal a crashed [[writeSwapped]] by renaming the complete `.swap`
+    * into place. Only [[append]] calls it; readers use
+    * [[readableManifest]].
+    */
+  private def healSwap(spark: SparkSession, manPath: String): Unit = {
+    val target = new Path(manPath)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    readableManifest(spark, manPath).filter(_ != manPath)
+      .foreach(swap => fs.rename(new Path(swap), target))
   }
 
   /** Replace a manifest dir with `rows` WITHOUT first materializing
@@ -191,40 +271,9 @@ object Layout {
     * maintenance discipline, same as before — readers racing an append
     * already face the staleness tripwire either way.
     */
-  private def swapPath(target: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}.swap")
-
-  /** The manifest dir to read: the target, or — in a crashed
-    * [[writeSwapped]]'s only loss window, "target deleted, complete
-    * `.swap` not yet renamed in" — the `.swap` dir when its `_SUCCESS`
-    * marker says it is complete; None when neither exists. Read-only,
-    * so pruned reads proceed through the window without racing a
-    * writer's delete→rename. One exists() when the target is present
-    * (the normal case).
-    */
-  private def readableManifest(spark: SparkSession, manPath: String): Option[String] = {
-    val target = new org.apache.hadoop.fs.Path(manPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) Some(manPath)
-    else Some(swapPath(target))
-      .filter(tmp => fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      .map(_.toString)
-  }
-
-  /** Heal a crashed [[writeSwapped]] by renaming the complete `.swap`
-    * into place. Only the write entry points call it ([[appendManifest]],
-    * [[appendBloomManifest]]); readers use [[readableManifest]].
-    */
-  private def healSwap(spark: SparkSession, manPath: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(manPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readableManifest(spark, manPath).filter(_ != manPath)
-      .foreach(swap => fs.rename(new org.apache.hadoop.fs.Path(swap), target))
-  }
-
   private def writeSwapped(spark: SparkSession, rows: DataFrame,
       manPath: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(manPath)
+    val target = new Path(manPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = swapPath(target)
     fs.delete(tmp, true)
@@ -238,36 +287,56 @@ object Layout {
       throw new IllegalStateException(s"manifest swap to $manPath failed")
   }
 
-  def appendManifest(spark: SparkSession, path: String): Unit = CacheScope.withReleased {
-    val manPath = s"$path/$ManifestDir"
+  /** Incremental manifest maintenance — appends AND rewrites. A 100 TB
+    * store takes appends daily; rebuilding a manifest from scratch
+    * re-scans the WHOLE table for a batch that touched 0.1% of it.
+    * This heals a crashed swap, scans ONLY the data files the manifest
+    * does not know yet (read by explicit path list), computes their
+    * stats under the manifest's own column list and sizing (one collect
+    * reads the file identity and the sizing), unions them in, and DROPS
+    * ghost rows for files no longer committed — which makes it the
+    * healing step after copy-on-write DELETE/MERGE and compact too: the
+    * work is bounded by the rewritten window (the d/m/c files scanned +
+    * the ghost filter), never the table, and the result is
+    * row-identical to a full rebuild (spec-asserted for append, DML,
+    * and compact). No-op when nothing changed.
+    */
+  private[graft] def append(spark: SparkSession, kind: ManifestKind,
+      path: String): Unit = CacheScope.withReleased {
+    val manPath = s"$path/${kind.dir}"
     healSwap(spark, manPath)
     val man = spark.read.parquet(manPath)
     val cols = man.columns.toSeq.collect {
-      case c if c.endsWith("__min") => c.stripSuffix("__min")
+      case c if c.endsWith(kind.suffix) => c.stripSuffix(kind.suffix)
     }
-    val data = dataFiles(spark, path)
-    val (known, ghosts) = ghostSplit(
-      man.select(col("file")).collect().map(_.getString(0)).toSeq, data)
-    val fresh = (data -- known).toSeq.sorted
-    if (fresh.isEmpty && ghosts.isEmpty) return
-    // ghost rows (vacuumed / orphan-cleaned files) drop in the same
-    // rewrite — a deleted file's stats would otherwise hold the
-    // staleness identity hostage until a full rebuild
-    val kept = if (ghosts.isEmpty) man
-      else man.filter(!col("file").isin(ghosts: _*))
-    // union under the OLD manifest's column order, then swap
-    val merged =
-      if (fresh.isEmpty) kept
-      else kept.unionByName(
-        zoneMapRows(spark, fresh, cols).select(man.columns.map(col): _*))
-    writeSwapped(spark, merged, manPath)
+    val ids = man.select((col("file") +: kind.sizing.map(col)): _*).collect()
+    val live = dataFiles(spark, path)
+    val (known, ghosts) = ghostSplit(ids.map(_.getString(0)).toSeq, live)
+    val fresh = (live -- known).toSeq.sorted
+    if (fresh.nonEmpty || ghosts.nonEmpty) {
+      val kept = if (ghosts.isEmpty) man
+        else man.filter(!col("file").isin(ghosts: _*))
+      // union under the OLD manifest's column order, then swap
+      val merged =
+        if (fresh.isEmpty) kept
+        else {
+          require(ids.nonEmpty || kind.sizing.isEmpty, s"empty manifest at $manPath")
+          kept.unionByName(manifestRows(spark, kind, fresh, cols,
+            ids.headOption.fold(Seq.empty[Any])(_.toSeq.tail))
+            .select(man.columns.map(col): _*))
+        }
+      writeSwapped(spark, merged, manPath)
+    }
   }
 
-  /** The table's live data files, scheme-normalized (`input_file_name`
-    * reports `file:///…` while Hadoop listings print `file:/…` — the
-    * URI path component is the stable identity). Hidden (`_`/`.`)
-    * entries are skipped exactly as Spark's own listing skips them.
-    */
+  /** [[append]] for the zone-map manifest. */
+  def appendManifest(spark: SparkSession, path: String): Unit =
+    append(spark, ZoneMaps, path)
+
+  /** [[append]] for the Bloom manifest. */
+  def appendBloomManifest(spark: SparkSession, path: String): Unit =
+    append(spark, Blooms, path)
+
   /** The files a MANIFEST over `path` must cover: for a plain
     * directory, every non-hidden on-disk file; for a VERSIONED table
     * (a `_graft_log` exists), only the COMMITTED live set — on-disk
@@ -278,10 +347,10 @@ object Layout {
     * path does not exist yet (a first ingest's target).
     */
   private[graft] def dataFiles(spark: SparkSession, path: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val f = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!f.exists(root)) Set.empty
-    else if (f.exists(new org.apache.hadoop.fs.Path(s"$path/${VersionLog.LogDir}"))) {
+    else if (f.exists(new Path(s"$path/${VersionLog.LogDir}"))) {
       val rootPath = {
         val p = root.toUri.getPath
         if (p.endsWith("/")) p.dropRight(1) else p
@@ -291,6 +360,11 @@ object Layout {
     } else liveDataFiles(spark, path)
   }
 
+  /** The table's live data files, scheme-normalized (`input_file_name`
+    * reports `file:///…` while Hadoop listings print `file:/…` — the
+    * URI path component is the stable identity). Hidden (`_`/`.`)
+    * entries are skipped exactly as Spark's own listing skips them.
+    */
   private[graft] def liveDataFiles(spark: SparkSession, path: String): Set[String] =
     liveDataEntries(spark, path).map(_._1)
 
@@ -301,9 +375,9 @@ object Layout {
     */
   private[graft] def liveDataEntries(
       spark: SparkSession, path: String): Set[(String, Long)] = {
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def walk(p: org.apache.hadoop.fs.Path): Iterator[(String, Long)] =
+    def walk(p: Path): Iterator[(String, Long)] =
       fs.listStatus(p).iterator.flatMap { st =>
         val name = st.getPath.getName
         if (name.startsWith("_") || name.startsWith(".")) Iterator.empty
@@ -313,167 +387,102 @@ object Layout {
     walk(root).toSet
   }
 
+  /** The one freshness read behind every pruned read and count: the
+    * readable `kind` manifest dir, ONE collect of `file` plus the
+    * columns `pick` chooses from the manifest's schema (metadata-scale
+    * rows — one short row per file), and ONE comparison of their file
+    * set against the committed live set, or against `knownLive` when
+    * the caller already listed it. None when the manifest is absent,
+    * `pick` declines, or the file sets differ: a file appended or
+    * rewritten after the build would otherwise vanish from results.
+    */
+  private def freshRows(spark: SparkSession, kind: ManifestKind, path: String,
+      knownLive: Option[Set[String]] = None)(
+      pick: Set[String] => Option[Seq[String]]): Option[Array[Row]] =
+    readableManifest(spark, s"$path/${kind.dir}").flatMap { dir =>
+      val man = spark.read.parquet(dir)
+      pick(man.columns.toSet)
+        .map(cs => man.select(("file" +: cs).map(col): _*).collect())
+        .filter(_.map(r => uriPath(r.getString(0))).toSet ==
+          knownLive.getOrElse(dataFiles(spark, path)))
+    }
+
+  /** The hard error of a stale (or missing) manifest: the explicit API
+    * fails loudly with a rebuild instruction instead of answering from
+    * a file set the table no longer has.
+    */
+  private def stale(kind: ManifestKind, path: String, use: String): Nothing =
+    throw new IllegalArgumentException(
+      s"requirement failed: manifest at $path/${kind.dir} is missing or " +
+        s"stale — rebuild it with Layout.${kind.writer} before $use")
+
+  /** The zone-map prune of a conjunction of `(column, lo, hi)` boxes
+    * (both bounds inclusive): the surviving files plus the manifest's
+    * file total. `strict` refuses a box on a column without stats; the
+    * soft form ignores such a box (pruning on a conjunct SUBSET is
+    * sound) and declines when no box has stats.
+    */
+  private def boxPrune(spark: SparkSession, path: String,
+      boxes: Seq[(String, Long, Long)], knownLive: Option[Set[String]],
+      strict: Boolean): Option[(Seq[String], Long)] =
+    freshRows(spark, ZoneMaps, path, knownLive) { have =>
+      val (usable, bare) = boxes.partition { case (c, _, _) => have(s"${c}__min") }
+      require(!strict || bare.isEmpty, s"zone-map manifest at " +
+        s"$path/${ZoneMaps.dir} has no stats for ${bare.map(_._1).mkString(", ")}")
+      Some(usable.flatMap { case (c, _, _) => Seq(s"${c}__min", s"${c}__max") })
+        .filter(_.nonEmpty || strict)
+    }.map { rows =>
+      val kept = rows.filter(r => boxes.forall { case (c, lo, hi) =>
+        // a box the read selected no stats for is ignored; max follows min
+        val mn = r.schema.fieldNames.indexOf(s"${c}__min")
+        mn < 0 || !r.isNullAt(mn) && !r.isNullAt(mn + 1) &&
+          r.getLong(mn + 1) >= lo && r.getLong(mn) <= hi
+      })
+      (kept.map(_.getString(0)).toSeq.sorted, rows.length.toLong)
+    }
+
   /** The data files a conjunction of `(column, lo, hi)` boxes (both
-    * bounds inclusive) must read, per the manifest. Collecting the
-    * surviving FILE LIST on the driver is the same metadata-scale
-    * bound every lakehouse planner accepts — one short string per
-    * file, never row data.
-    *
-    * Staleness is a hard error, not a wrong answer: the manifest's
-    * file set must exactly match the live listing, so a file appended
-    * (or a partition rewritten) after the manifest was built fails
-    * loudly with a rebuild instruction instead of silently vanishing
-    * from query results. (A conservative consequence: an all-empty
-    * part file — which a range write only produces on degenerate key
-    * distributions — also demands a rebuild, because an absent
-    * manifest row is indistinguishable from a missed file.)
+    * bounds inclusive) must read, per the zone-map manifest. Collecting
+    * the surviving FILE LIST on the driver is the same metadata-scale
+    * bound every lakehouse planner accepts — one short string per file,
+    * never row data. A stale manifest, or a box on a column without
+    * stats, is a hard error, never a wrong answer.
     */
   def prunedFiles(
       spark: SparkSession, path: String,
-      boxes: Seq[(String, Long, Long)]): Seq[String] = {
-    // ONE collect serves both the staleness identity and the box
-    // filter (the manifest is metadata-scale — one short row per
-    // file); two separate collects were two Spark jobs per pruned read
-    val manPath = s"$path/$ManifestDir"
-    val man = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
-    val cols = Seq("file") ++ boxes.flatMap { case (c, _, _) =>
-      Seq(s"${c}__min", s"${c}__max") }
-    val rows = man.select(cols.map(col): _*).collect()
-    val norm = rows.map(r =>
-      new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
-    val live = dataFiles(spark, path)
-    require(norm == live,
-      s"zone-map manifest at $path/$ManifestDir is stale " +
-        s"(${(live -- norm).size} unmanifested / ${(norm -- live).size} ghost " +
-        "files) — rebuild it with Layout.writeManifest before pruned reads")
-    rows.filter { r =>
-      boxes.zipWithIndex.forall { case ((_, lo, hi), i) =>
-        !r.isNullAt(2 * i + 1) && !r.isNullAt(2 * i + 2) &&
-          r.getLong(2 * i + 2) >= lo && r.getLong(2 * i + 1) <= hi
-      }
-    }.map(_.getString(0)).toSeq.sorted
-  }
+      boxes: Seq[(String, Long, Long)]): Seq[String] =
+    boxPrune(spark, path, boxes, None, strict = true)
+      .getOrElse(stale(ZoneMaps, path, "pruned reads"))._1
+
+  /** [[prunedFiles]] without the hard errors — the contract the
+    * automatic prune rule ([[graft.plans.ZoneMapPruneRule]]) needs:
+    * when the manifest is absent, stale, or carries stats for none of
+    * the requested columns, the right response is "don't prune" (the
+    * full scan is always row-correct), never a thrown error from inside
+    * the optimizer. Returns the surviving file list plus the manifest's
+    * total file count; boxes without manifest stats are ignored.
+    *
+    * @param knownLive the committed live set when the CALLER already
+    *   listed it (the auto-prune rule's versioned-root recognition does
+    *   — one listing serves both the root identity and the staleness
+    *   identity instead of two walks per pruned scan).
+    */
+  private[graft] def prunedFilesIfFresh(
+      spark: SparkSession, path: String,
+      boxes: Seq[(String, Long, Long)],
+      knownLive: Option[Set[String]] = None): Option[(Seq[String], Long)] =
+    boxPrune(spark, path, boxes, knownLive, strict = false)
 
   /** Metadata-only row count: `SELECT count(*)` answered from the
     * zone-map manifest's per-file `n_rows` — zero data files opened,
-    * the count-from-commit-log shortcut every lakehouse serves. The
-    * same staleness tripwire as [[prunedFiles]]: a count over a stale
-    * manifest would be silently wrong, so it is a hard error instead.
+    * the count-from-commit-log shortcut every lakehouse serves. A count
+    * over a stale manifest would be silently wrong, so it is a hard
+    * error instead.
     */
-  def countFromManifest(spark: SparkSession, path: String): Long = {
-    // one collect: staleness identity + the sum (metadata-scale rows)
-    val manPath = s"$path/$ManifestDir"
-    val rows = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
-      .select(col("file"), col("n_rows")).collect()
-    val norm = rows
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
-    require(norm == dataFiles(spark, path),
-      s"zone-map manifest at $path/$ManifestDir is stale — rebuild it " +
-        "with Layout.writeManifest before metadata-only counts")
-    rows.map(_.getLong(1)).sum
-  }
-
-  /** Per-file BLOOM manifest dir (hidden from table scans like
-    * [[ManifestDir]]).
-    */
-  val BloomManifestDir = "_graft_blooms"
-
-  /** Persist per-file Bloom filters of the listed columns beside the
-    * table. Zone maps prune RANGE predicates; a point lookup on a
-    * high-cardinality key that is ~uniform across files (any
-    * hash-distributed id) intersects every min/max box and prunes
-    * nothing — the per-file Bloom answers "can this file contain
-    * key X?" with no false negatives, so an `id IN (…)` probe opens
-    * only the files that might hold those ids (Iceberg/Delta's
-    * bloom-filter-index story, as one small table). One distributed
-    * scan; `expectedPerFile`/`fpp` size the bit arrays.
-    */
-  /** Per-file bloom rows for an explicit file list; zero-row part
-    * files get empty-sketch rows.
-    */
-  private def bloomRows(spark: SparkSession, files: Seq[String],
-      cols: Seq[String], expected: Long, fpp: Double): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: (cols.map(c =>
-      graft.functions.AggregateFunctions.bloomAgg(col(c), expected, fpp)
-        .as(s"${c}__bloom")) :+
-      lit(expected).as("__expected") :+ lit(fpp).as("__fpp"))
-    lazy val emptyBloom = {
-      val bos = new java.io.ByteArrayOutputStream()
-      org.apache.spark.util.sketch.BloomFilter.create(expected, fpp).writeTo(bos)
-      bos.toByteArray
-    }
-    perFileRows(spark, files, aggs)(0L +: cols.map(_ => emptyBloom) :+ expected :+ fpp)
-  }
-
-  def writeBloomManifest(spark: SparkSession, path: String,
-      cols: Seq[String], expectedPerFile: Long, fpp: Double = 0.01): Unit = {
-    require(cols.nonEmpty, "bloom manifests need at least one column")
-    // explicit live-file list, not the directory: a plain dir read
-    // skips non-partition subdirs (e.g. the versioned store's b<N>/
-    // batch dirs) and the manifest MUST cover exactly what
-    // liveDataFiles sees — the staleness contract's identity
-    val files = dataFiles(spark, path).toSeq.sorted
-    require(files.nonEmpty, s"no data files to manifest at $path")
-    CacheScope.withReleased {
-      bloomRows(spark, files, cols, expectedPerFile, fpp)
-        .write.mode("overwrite").parquet(s"$path/$BloomManifestDir")
-    }
-  }
-
-  /** Incremental bloom-manifest maintenance — the append path, the
-    * [[appendManifest]] twin: scans ONLY the data files the manifest
-    * does not know yet, sketches them with the SAME sizing the
-    * manifest was built with (carried in its `__expected`/`__fpp`
-    * columns, so an append can never silently change the fpp), and
-    * unions them in. Idempotent no-op when nothing is new.
-    */
-  def appendBloomManifest(spark: SparkSession, path: String): Unit = CacheScope.withReleased {
-    val manPath = s"$path/$BloomManifestDir"
-    healSwap(spark, manPath)
-    val man = spark.read.parquet(manPath)
-    val cols = man.columns.toSeq.collect {
-      case c if c.endsWith("__bloom") => c.stripSuffix("__bloom")
-    }
-    val live = dataFiles(spark, path)
-    // ONE collect serves the sizing params AND the file identity (was
-    // a head() job plus a collect job per maintenance call). Ghost
-    // rows (manifested file no longer committed — vacuumed or
-    // orphan-cleaned) drop in the same rewrite: a deleted file's sketch
-    // can only cause false "exists" answers. The ghost list is SMALL by
-    // construction (the rewritten window), so the filter is a short
-    // NOT-IN over original strings — never a UDF or a live-set-sized
-    // expression tree.
-    val idRows = man.select(col("file"), col("__expected"), col("__fpp"))
-      .collect()
-    require(idRows.nonEmpty, s"empty bloom manifest at $manPath")
-    val (expected, fpp) = (idRows(0).getLong(1), idRows(0).getDouble(2))
-    val (known, ghosts) = ghostSplit(idRows.map(_.getString(0)).toSeq, live)
-    val kept = if (ghosts.isEmpty) man
-      else man.filter(!col("file").isin(ghosts: _*))
-    val fresh = (live -- known).toSeq.sorted
-    if (fresh.isEmpty && ghosts.isEmpty) return
-    val merged =
-      if (fresh.isEmpty) kept
-      else kept.unionByName(
-        bloomRows(spark, fresh, cols, expected, fpp)
-          .select(man.columns.map(col): _*))
-    writeSwapped(spark, merged, manPath)
-  }
-
-  /** The files an `col IN (values)` point lookup must read, per the
-    * bloom manifest: a file survives when ANY probed value might be
-    * present. No false negatives ⇒ result-complete; fpp only costs
-    * extra files. Stale manifests are a hard error (same contract as
-    * [[prunedFiles]]). Driver-side cost: the file-count-sized manifest
-    * with one ~KB sketch per file — metadata scale.
-    */
-  def bloomPrunedFiles(spark: SparkSession, path: String,
-      column: String, values: Seq[String]): Seq[String] =
-    bloomPrunedFilesIfFresh(spark, path, column, values).getOrElse(
-      throw new IllegalArgumentException(
-        s"requirement failed: bloom manifest at $path/$BloomManifestDir " +
-          "is stale — rebuild it with Layout.writeBloomManifest before " +
-          "pruned point lookups"))
+  def countFromManifest(spark: SparkSession, path: String): Long =
+    freshRows(spark, ZoneMaps, path)(_ => Some(Seq("n_rows")))
+      .getOrElse(stale(ZoneMaps, path, "metadata-only counts"))
+      .map(_.getLong(1)).sum
 
   /** [[bloomPrunedFiles]] without the hard staleness error — None when
     * the manifest's file set no longer matches the committed live set.
@@ -487,102 +496,73 @@ object Layout {
   private[graft] def bloomPrunedFilesIfFresh(spark: SparkSession, path: String,
       column: String, values: Seq[String]): Option[Seq[String]] = {
     require(values.nonEmpty, "a point-lookup prune needs probe values")
-    val manPath = s"$path/$BloomManifestDir"
-    val man = spark.read.parquet(readableManifest(spark, manPath).getOrElse(manPath))
-      .select(col("file"), col(s"${column}__bloom")).collect()
-    val norm = man.map(r =>
-      new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
-    if (norm != dataFiles(spark, path)) return None
-    Some(man.filter { r =>
-      val bloom = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
-      values.exists(bloom.mightContainString)
-    }.map(_.getString(0)).toSeq.sorted)
+    freshRows(spark, Blooms, path)(_ => Some(Seq(s"${column}__bloom"))).map(
+      _.filter { r =>
+        val bloom = BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(r.getAs[Array[Byte]](1)))
+        values.exists(bloom.mightContainString)
+      }.map(_.getString(0)).toSeq.sorted)
+  }
+
+  /** The files an `col IN (values)` point lookup must read, per the
+    * bloom manifest: a file survives when ANY probed value might be
+    * present. No false negatives ⇒ result-complete; fpp only costs
+    * extra files. A stale manifest is a hard error. Driver-side cost:
+    * the file-count-sized manifest with one ~KB sketch per file —
+    * metadata scale.
+    */
+  def bloomPrunedFiles(spark: SparkSession, path: String,
+      column: String, values: Seq[String]): Seq[String] =
+    bloomPrunedFilesIfFresh(spark, path, column, values)
+      .getOrElse(stale(Blooms, path, "pruned point lookups"))
+
+  /** Manifest-pruned scan: read ONLY the files whose zone maps
+    * intersect every box, then re-apply the boxes as a residual so the
+    * result equals the full-scan filter row-for-row.
+    */
+  def prunedRead(
+      spark: SparkSession, path: String,
+      boxes: Seq[(String, Long, Long)]): DataFrame =
+    prunedRead(spark, path, boxes, prunedFiles(spark, path, boxes))
+
+  /** [[prunedRead]] over the `kept` files a [[prunedFiles]] call on
+    * the same boxes already returned — a caller that checks the file
+    * list reads the manifest once, not twice.
+    */
+  def prunedRead(spark: SparkSession, path: String,
+      boxes: Seq[(String, Long, Long)], kept: Seq[String]): DataFrame = {
+    require(boxes.nonEmpty, "a pruned read needs at least one box predicate")
+    keptRead(spark, path, kept, boxes.map { case (c, lo, hi) =>
+      col(c) >= lo && col(c) <= hi
+    }.reduce(_ && _))
   }
 
   /** Bloom-pruned point lookup: read only the files whose sketches
     * admit any probed value, then re-apply the IN as a residual —
     * row-identical to the full scan by the no-false-negative
-    * guarantee. Empty survivor list short-circuits.
+    * guarantee.
     */
   def bloomPrunedRead(spark: SparkSession, path: String,
-      column: String, values: Seq[String]): DataFrame = {
-    val kept = bloomPrunedFiles(spark, path, column, values)
-    val residual = col(column).cast("string").isin(values: _*)
-    if (kept.isEmpty) emptyLike(spark, path)
-    else spark.read.parquet(kept: _*).filter(residual)
-  }
+      column: String, values: Seq[String]): DataFrame =
+    bloomPrunedRead(spark, path, column, values,
+      bloomPrunedFiles(spark, path, column, values))
 
-  /** Zero-row frame with the table's schema, derived from the COMMITTED
-    * file list — a bare `spark.read.parquet(path)` cannot infer a
-    * schema on a versioned table whose data lives only under `b<N>/`
-    * subdirs (no top-level parquet files), so the empty-survivor branch
-    * of a pruned read must go through the same file list the prune did.
+  /** [[bloomPrunedRead]] over the `kept` files a [[bloomPrunedFiles]]
+    * call on the same probe already returned.
     */
-  private def emptyLike(spark: SparkSession, path: String): DataFrame =
-    dataFiles(spark, path).toSeq.sorted.headOption match {
-      case Some(f) => spark.read.parquet(f).filter(lit(false))
-      case None => spark.read.parquet(path).filter(lit(false))
-    }
+  def bloomPrunedRead(spark: SparkSession, path: String,
+      column: String, values: Seq[String], kept: Seq[String]): DataFrame =
+    keptRead(spark, path, kept, col(column).cast("string").isin(values: _*))
 
-  /** [[prunedFiles]] without the hard staleness error — the contract
-    * the automatic prune rule ([[graft.plans.ZoneMapPruneRule]])
-    * needs: when the manifest is absent, stale, or carries stats for
-    * none of the requested columns, the right response is "don't
-    * prune" (the full scan is always row-correct), never a thrown
-    * error from inside the optimizer. Returns the surviving file list
-    * plus the manifest's total file count; boxes without manifest
-    * stats are ignored (pruning on a conjunct SUBSET is sound — every
-    * matching row satisfies all conjuncts).
+  /** The one body of every pruned read: the `kept` files filtered by
+    * `residual`. An empty survivor list short-circuits to a zero-row
+    * frame with the table's schema, derived from the COMMITTED file
+    * list — a bare `spark.read.parquet(path)` cannot infer a schema on
+    * a versioned table whose data lives only under `b<N>/` subdirs.
     */
-  /** @param knownLive the committed live set when the CALLER already
-    *   listed it (the auto-prune rule's versioned-root recognition does
-    *   — one listing serves both the root identity and the staleness
-    *   identity instead of two walks per pruned scan).
-    */
-  private[graft] def prunedFilesIfFresh(
-      spark: SparkSession, path: String,
-      boxes: Seq[(String, Long, Long)],
-      knownLive: Option[Set[String]] = None): Option[(Seq[String], Long)] = {
-    val man = readableManifest(spark, s"$path/$ManifestDir") match {
-      case Some(p) => spark.read.parquet(p)
-      case None => return None
-    }
-    val have = man.columns.toSet
-    val usable = boxes.filter { case (c, _, _) =>
-      have(s"${c}__min") && have(s"${c}__max")
-    }
-    if (usable.isEmpty) return None
-    // one collect: staleness identity + driver-side box filter
-    val cs = Seq("file") ++ usable.flatMap { case (c, _, _) =>
-      Seq(s"${c}__min", s"${c}__max") }
-    val rows = man.select(cs.map(col): _*).collect()
-    val norm = rows
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath).toSet
-    if (norm != knownLive.getOrElse(dataFiles(spark, path))) return None
-    val kept = rows.filter { r =>
-      usable.zipWithIndex.forall { case ((_, lo, hi), i) =>
-        !r.isNullAt(2 * i + 1) && !r.isNullAt(2 * i + 2) &&
-          r.getLong(2 * i + 2) >= lo && r.getLong(2 * i + 1) <= hi
-      }
-    }.map(_.getString(0)).toSeq.sorted
-    Some((kept, rows.length.toLong))
-  }
-
-  /** Manifest-pruned scan: read ONLY the files whose zone maps
-    * intersect every box, then re-apply the boxes as a residual so the
-    * result equals the full-scan filter row-for-row. An empty survivor
-    * list short-circuits to a zero-row frame with the table's schema.
-    */
-  def prunedRead(
-      spark: SparkSession, path: String,
-      boxes: Seq[(String, Long, Long)]): DataFrame = {
-    require(boxes.nonEmpty, "a pruned read needs at least one box predicate")
-    val kept = prunedFiles(spark, path, boxes)
-    val residual = boxes.map { case (c, lo, hi) =>
-      col(c) >= lo && col(c) <= hi
-    }.reduce(_ && _)
-    if (kept.isEmpty) emptyLike(spark, path)
-    else spark.read.parquet(kept: _*).filter(residual)
-  }
+  private def keptRead(spark: SparkSession, path: String,
+      kept: Seq[String], residual: Column): DataFrame =
+    if (kept.nonEmpty) spark.read.parquet(kept: _*).filter(residual)
+    else spark.read.parquet(dataFiles(spark, path).toSeq.sorted.headOption
+      .getOrElse(path)).filter(lit(false))
 }

@@ -85,12 +85,6 @@ object VersionLog {
     }.sortBy(_._1)
   }
 
-  /** One version record: its `#key=value` header lines (op label,
-    * later the schema) and its (relativePath, length) entries. Header
-    * lines were introduced with the change-feed work; records without
-    * them (older logs) read back with an empty header and their op is
-    * inferred from the reserved-dir naming contract — see [[step]].
-    */
   /** Memo of parsed version records. SAFE because a version file is
     * IMMUTABLE once committed (the CAS primitive refuses an existing
     * target, and nothing ever rewrites one in place); deletion by
@@ -119,6 +113,12 @@ object VersionLog {
         size() > 4096
     })
 
+  /** One version record: its `#key=value` header lines (op label,
+    * later the schema) and its (relativePath, length) entries. Header
+    * lines were introduced with the change-feed work; records without
+    * them (older logs) read back with an empty header and their op is
+    * inferred from the reserved-dir naming contract — see [[step]].
+    */
   private[core] def readVersionFile(spark: SparkSession, dir: String,
       v: Int): (Map[String, String], Seq[(String, Long)]) = {
     val p = versionPath(dir, v)
@@ -239,16 +239,6 @@ object VersionLog {
     atomicReplace(spark, tmp, p)
   }
 
-  /** Record the table's current live file set as the next version —
-    * MINUS files a rewrite already superseded (listed by an older
-    * version but replaced since; including them would double-count
-    * their rows) and MINUS uncommitted reserved-dir files (a crashed
-    * compact/DML/ingest attempt's orphans — see [[ReservedDir]]).
-    * Idempotent: when the effective set equals the latest recorded
-    * version, no new version is written and the existing number is
-    * returned. The record is written to a temp name and renamed into
-    * place, so a reader can never observe a half-written version file.
-    */
   /** The table's COMMITTED live files — what [[snapshot]] would record
     * right now: on-disk files minus supersessions (honored only once
     * the latest version really dropped the file — [[writeEntries]]
@@ -399,6 +389,16 @@ object VersionLog {
     (StructType(table.fields ++ extras), extras)
   }
 
+  /** Record the table's current live file set as the next version —
+    * MINUS files a rewrite already superseded (listed by an older
+    * version but replaced since; including them would double-count
+    * their rows) and MINUS uncommitted reserved-dir files (a crashed
+    * compact/DML/ingest attempt's orphans — see [[ReservedDir]]).
+    * Idempotent: when the effective set equals the latest recorded
+    * version, no new version is written and the existing number is
+    * returned. The record is written to a temp name and renamed into
+    * place, so a reader can never observe a half-written version file.
+    */
   def snapshot(spark: SparkSession, dir: String): Int =
     snapshotDetailed(spark, dir)._1
 
@@ -663,10 +663,11 @@ object VersionLog {
     compactWith(spark, dir)(_.repartition(files))
 
   /** OPTIMIZE ZORDER: [[compact]] that also RE-CLUSTERS the rows on a
-    * 2-D or 3-D Z-curve ([[Layout.writeZOrdered]]'s layout, expressed
-    * as the compaction's partitioner), so the rewritten files carry
-    * tight bounding boxes in every listed dimension and zone-map /
-    * parquet-stat pruning works on the compacted table — Delta's
+    * 2-D or 3-D Z-curve ([[Layout.zOrdered]], the layout
+    * [[Layout.writeZOrdered]] writes, as the compaction's partitioner),
+    * so the rewritten files carry tight bounding boxes in every listed
+    * dimension and zone-map / parquet-stat pruning works on the
+    * compacted table — Delta's
     * OPTIMIZE ZORDER BY as one version-log rewrite. Rows are
     * bit-identical; only placement changes, so the version is a
     * logical no-op to every incremental consumer, exactly like a plain
@@ -674,22 +675,9 @@ object VersionLog {
     * must be bucketed first ([[Layout]]'s documented contract).
     */
   def compactZOrdered(spark: SparkSession, dir: String, files: Int,
-      dims: Seq[String]): Int = {
-    require(dims.size == 2 || dims.size == 3,
-      s"Z-order needs 2 or 3 dimension columns, got ${dims.size}")
-    import org.apache.spark.sql.functions.col
-    val zv =
-      if (dims.size == 2)
-        graft.functions.GraftFunctions.z_interleave(col(dims(0)), col(dims(1)))
-      else graft.functions.GraftFunctions.z_interleave3(
-        col(dims(0)), col(dims(1)), col(dims(2)))
-    compactWith(spark, dir) { df =>
-      df.withColumn("__graft_zv", zv)
-        .repartitionByRange(files, col("__graft_zv"))
-        .sortWithinPartitions(col("__graft_zv"))
-        .drop("__graft_zv")
-    }
-  }
+      dims: Seq[String]): Int =
+    compactWith(spark, dir)(Layout.zOrdered(_,
+      dims.map(org.apache.spark.sql.functions.col), files))
 
   private def compactWith(spark: SparkSession, dir: String)(
       layout: DataFrame => DataFrame): Int = {

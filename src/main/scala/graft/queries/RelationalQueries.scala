@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.core.{Funnels, Joins, Ranges, Sessions, Upsert}
+import graft.core.{CacheScope, Funnels, Joins, Ranges, Sessions, Upsert}
 import graft.functions.GraftFunctions
 
 /** Plane-A relational operators (SURVEY §2.A) expressed over the
@@ -836,8 +836,7 @@ object RelationalQueries {
     // oracle stays q187's EXACT rolling distinct.
     "q221_rolling_kmv_state" -> ((s, dir) => {
       val k = 65536
-      val statePath = java.nio.file.Files
-        .createTempDirectory("graft_kmv_state").toString
+      val statePath = CacheScope.stage("graft_kmv_state")
       val ev = t(s, dir, "events").select(col("user_id"),
         expr("unix_micros(ts) div 86400000000").as("day"),
         col("event_id"))
@@ -1057,8 +1056,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("zonemap_q").toString + "/events_z"
+      val tmp = CacheScope.stage("zonemap_q") + "/events_z"
       graft.core.Layout.writeZOrdered(
         ev, tmp, col("user_id"), col("minute"), files = 16)
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "minute"))
@@ -1068,7 +1066,7 @@ object RelationalQueries {
       val kept = graft.core.Layout.prunedFiles(s, tmp, boxes)
       require(kept.nonEmpty && kept.size < 16,
         s"zone maps failed to prune: ${kept.size}/16 files survive the box")
-      graft.core.Layout.prunedRead(s, tmp, boxes)
+      graft.core.Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"),
           min(col("minute")).as("minute_min"),
@@ -1091,8 +1089,7 @@ object RelationalQueries {
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
       val base = ev.filter(col("g") =!= "f").drop("g")
       val late = ev.filter(col("g") === "f").drop("g")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("zonemap_app_q").toString + "/events_z"
+      val tmp = CacheScope.stage("zonemap_app_q") + "/events_z"
       graft.core.Layout.writeZOrdered(
         base, tmp, col("user_id"), col("minute"), files = 16)
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "minute"))
@@ -1100,11 +1097,11 @@ object RelationalQueries {
       graft.core.Layout.appendManifest(s, tmp)
       val m0 = ev.agg(min(col("minute"))).collect()(0).getLong(0)
       val boxes = Seq(("user_id", 0L, 9L), ("minute", m0, m0 + 10079L))
-      val kept = graft.core.Layout.prunedFiles(s, tmp, boxes)
-      val total = s.read.parquet(s"$tmp/${graft.core.Layout.ManifestDir}").count()
+      val (kept, total) = graft.core.Layout.prunedFilesIfFresh(s, tmp, boxes)
+        .getOrElse(sys.error("the appended zone-map manifest is stale"))
       require(kept.nonEmpty && kept.size < total,
         s"zone maps failed to prune after append: ${kept.size}/$total files")
-      graft.core.Layout.prunedRead(s, tmp, boxes)
+      graft.core.Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
         .orderBy(col("user_id"))
@@ -1122,8 +1119,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("zonemap_rule_q").toString + "/events_z"
+      val tmp = CacheScope.stage("zonemap_rule_q") + "/events_z"
       graft.core.Layout.writeZOrdered(
         ev, tmp, col("user_id"), col("minute"), files = 16)
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "minute"))
@@ -1154,8 +1150,7 @@ object RelationalQueries {
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
       val base = ev.filter(col("g") =!= "f").drop("g")
       val late = ev.filter(col("g") === "f").drop("g")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("timetravel_q").toString + "/events_v"
+      val tmp = CacheScope.stage("timetravel_q") + "/events_v"
       base.repartition(4).write.parquet(tmp)
       val v1 = graft.core.VersionLog.snapshot(s, tmp)
       late.repartition(2).write.mode("append").parquet(tmp)
@@ -1209,8 +1204,7 @@ object RelationalQueries {
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
       val base = ev.filter(col("g") =!= "f").drop("g")
       val late = ev.filter(col("g") === "f").drop("g")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("vchanges_q").toString + "/events_v"
+      val tmp = CacheScope.stage("vchanges_q") + "/events_v"
       base.repartition(4).write.parquet(tmp)
       val v1 = graft.core.VersionLog.snapshot(s, tmp)
       late.repartition(2).write.mode("append").parquet(tmp)
@@ -1233,8 +1227,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("vingest_q").toString + "/events_ing"
+      val tmp = CacheScope.stage("vingest_q") + "/events_ing"
       val batches = Seq(
         ev.filter(col("g") < "5"),
         ev.filter(col("g") >= "5" && col("g") < "a"),
@@ -1265,8 +1258,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("incr_q").toString
+      val root = CacheScope.stage("incr_q")
       val table = s"$root/events_v"
       val acc = s"$root/acc"
       val cursor = s"$root/cursor"
@@ -1297,8 +1289,7 @@ object RelationalQueries {
     "q235_bloom_lookup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("bloom_q").toString + "/docs_b"
+      val tmp = CacheScope.stage("bloom_q") + "/docs_b"
       docs.repartition(16, col("doc_id")).write.parquet(tmp)
       graft.core.Layout.writeBloomManifest(
         s, tmp, Seq("doc_id"), expectedPerFile = 4096, fpp = 0.01)
@@ -1306,7 +1297,7 @@ object RelationalQueries {
       val kept = graft.core.Layout.bloomPrunedFiles(s, tmp, "doc_id", probes)
       require(kept.size < 16,
         s"bloom manifest failed to prune the point lookup: ${kept.size}/16")
-      graft.core.Layout.bloomPrunedRead(s, tmp, "doc_id", probes)
+      graft.core.Layout.bloomPrunedRead(s, tmp, "doc_id", probes, kept)
         .orderBy(col("doc_id"))
     }),
 
@@ -1317,8 +1308,7 @@ object RelationalQueries {
     "q236_metadata_count" -> ((s, dir) => {
       import s.implicits._
       val ev = t(s, dir, "events").select(col("event_id"), col("user_id"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("metacount_q").toString + "/events_m"
+      val tmp = CacheScope.stage("metacount_q") + "/events_m"
       ev.repartition(8).write.parquet(tmp)
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id"))
       Seq(graft.core.Layout.countFromManifest(s, tmp)).toDF("n_rows")
@@ -1336,7 +1326,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files.createTempDirectory("mv_q").toString
+      val root = CacheScope.stage("mv_q")
       val table = s"$root/events_v"
       val mv = s"$root/mv"
       ev.filter(col("g") =!= "f").drop("g").repartition(4).write.parquet(table)
@@ -1373,8 +1363,7 @@ object RelationalQueries {
     "q238_compact_vacuum" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("vacuum_q").toString + "/events_v"
+      val tmp = CacheScope.stage("vacuum_q") + "/events_v"
       ev.repartition(8).write.parquet(tmp)
       graft.core.VersionLog.snapshot(s, tmp)
       val v2 = graft.core.VersionLog.compact(s, tmp, files = 1)
@@ -1403,8 +1392,7 @@ object RelationalQueries {
     "q239_cow_delete" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("cowdel_q").toString + "/events_v"
+      val tmp = CacheScope.stage("cowdel_q") + "/events_v"
       ev.repartitionByRange(8, col("user_id")).write.parquet(tmp)
       graft.core.VersionLog.snapshot(s, tmp)
       val (v2, ndel) = graft.core.Dml.deleteWhere(
@@ -1432,8 +1420,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("cowmerge_q").toString + "/events_v"
+      val tmp = CacheScope.stage("cowmerge_q") + "/events_v"
       ev.drop("g").repartitionByRange(8, col("event_id")).write.parquet(tmp)
       graft.core.VersionLog.snapshot(s, tmp)
       val corrections = ev.filter(col("g") === "f").drop("g")
@@ -1465,8 +1452,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("ingmv_q").toString
+      val root = CacheScope.stage("ingmv_q")
       val table = s"$root/events_v"
       val mv = s"$root/mv"
       val keys = Seq("event_type")
@@ -1504,8 +1490,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("ddingest_q").toString + "/events_dd"
+      val tmp = CacheScope.stage("ddingest_q") + "/events_dd"
       import graft.streaming.IngestStreams
       val batches = Seq(
         ev.filter(col("g") < "8"),
@@ -1543,8 +1528,7 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("vzm_q").toString + "/events_v"
+      val tmp = CacheScope.stage("vzm_q") + "/events_v"
       import graft.streaming.IngestStreams
       import graft.core.{Layout, VersionLog}
       val batches = Seq(
@@ -1568,7 +1552,7 @@ object RelationalQueries {
       val kept = Layout.prunedFiles(s, tmp, boxes)
       require(kept.nonEmpty && kept.size < 12,
         s"zone maps over the versioned store failed to prune: ${kept.size}/12")
-      Layout.prunedRead(s, tmp, boxes)
+      Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
         .orderBy(col("user_id"))
@@ -1590,8 +1574,7 @@ object RelationalQueries {
       // width, which fits 21 bits for ~4 years of minutes
       val m0 = raw.agg(min(col("minute"))).collect()(0).getLong(0)
       val ev = raw.withColumn("rm", col("minute") - lit(m0)).drop("minute")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("z3_q").toString + "/events_z3"
+      val tmp = CacheScope.stage("z3_q") + "/events_z3"
       graft.core.Layout.writeZOrdered3(
         ev, tmp, col("user_id"), col("rm"), col("eb"), files = 27)
       graft.core.Layout.writeManifest(s, tmp, Seq("user_id", "rm", "eb"))
@@ -1600,7 +1583,7 @@ object RelationalQueries {
       val kept = graft.core.Layout.prunedFiles(s, tmp, boxes)
       require(kept.nonEmpty && kept.size < 27,
         s"3-D zone maps failed to prune: ${kept.size}/27 files")
-      graft.core.Layout.prunedRead(s, tmp, boxes)
+      graft.core.Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("eb")).as("eb_sum"))
         .orderBy(col("user_id"))
@@ -1618,8 +1601,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("cdf_q").toString + "/events_v"
+      val tmp = CacheScope.stage("cdf_q") + "/events_v"
       ev.filter(col("g") < "8").drop("g")
         .repartitionByRange(4, col("event_id")).write.parquet(tmp)
       VersionLog.snapshot(s, tmp) // v1
@@ -1652,8 +1634,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("mvcpt_q").toString
+      val root = CacheScope.stage("mvcpt_q")
       val table = s"$root/events_v"; val mv = s"$root/mv"
       val keys = Seq("event_type"); val sums = Seq("user_id")
       IngestStreams.ingestBatchWithMv(
@@ -1684,8 +1665,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("occ_q").toString + "/events_v"
+      val tmp = CacheScope.stage("occ_q") + "/events_v"
       val gates = Seq(("0", "4"), ("4", "8"), ("8", "c"), ("c", "g"))
       val futures = gates.zipWithIndex.map { case ((lo, hi), i) =>
         Future {
@@ -1715,8 +1695,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("sev_q").toString + "/events_v"
+      val tmp = CacheScope.stage("sev_q") + "/events_v"
       ev.select(col("event_id"), col("event_type"))
         .repartitionByRange(4, col("event_id")).write.parquet(tmp)
       VersionLog.snapshot(s, tmp) // v1: two columns
@@ -1747,8 +1726,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("dmlzm_q").toString + "/events_v"
+      val tmp = CacheScope.stage("dmlzm_q") + "/events_v"
       ev.repartitionByRange(8, col("minute")).write.parquet(tmp)
       VersionLog.snapshot(s, tmp)
       Layout.writeManifest(s, tmp, Seq("minute"))
@@ -1759,7 +1737,7 @@ object RelationalQueries {
       val boxes = Seq(("minute", m0, m0 + 1439L))
       val kept = Layout.prunedFiles(s, tmp, boxes) // stale ⇒ loud error
       require(kept.size < 9, s"healed manifest must prune: ${kept.size}")
-      Layout.prunedRead(s, tmp, boxes)
+      Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
         .orderBy(col("user_id"))
@@ -1779,8 +1757,7 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("vap_q").toString + "/events_v"
+      val tmp = CacheScope.stage("vap_q") + "/events_v"
       val batches = Seq(
         ev.filter(col("g") < "6"),
         ev.filter(col("g") >= "6" && col("g") < "b"),
@@ -1810,8 +1787,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("rst_q").toString + "/events_v"
+      val tmp = CacheScope.stage("rst_q") + "/events_v"
       ev.drop("g").repartitionByRange(4, col("event_id")).write.parquet(tmp)
       VersionLog.snapshot(s, tmp) // v1
       val bad = ev.filter(col("g") < "4").drop("g")
@@ -1838,8 +1814,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("curc_q").toString
+      val root = CacheScope.stage("curc_q")
       val table = s"$root/events_v"
       val sink = s"$root/sink"
       val cursor = s"$root/cursor"
@@ -1870,8 +1845,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("mvdml_q").toString
+      val root = CacheScope.stage("mvdml_q")
       val table = s"$root/events_v"; val mv = s"$root/mv"
       val keys = Seq("event_type"); val sums = Seq("user_id")
       ev.drop("g").repartitionByRange(4, col("event_id"))
@@ -1902,8 +1876,7 @@ object RelationalQueries {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val root = java.nio.file.Files
-        .createTempDirectory("cdc_q").toString
+      val root = CacheScope.stage("cdc_q")
       val src = s"$root/src"; val rep = s"$root/rep"
       ev.filter(col("g") < "8").drop("g")
         .repartitionByRange(4, col("event_id")).write.parquet(src)
@@ -1941,8 +1914,7 @@ object RelationalQueries {
         .select(col("event_id"), col("user_id"),
           expr("unix_micros(ts) div 60000000").as("minute"),
           substring(md5(col("event_id").cast("string")), 1, 1).as("g"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("optz_q").toString + "/events_v"
+      val tmp = CacheScope.stage("optz_q") + "/events_v"
       val batches = Seq(
         ev.filter(col("g") < "6"),
         ev.filter(col("g") >= "6" && col("g") < "b"),
@@ -1958,7 +1930,7 @@ object RelationalQueries {
       val kept = Layout.prunedFiles(s, tmp, boxes)
       require(kept.nonEmpty && kept.size < 8,
         s"the z-ordered layout must prune the 2-D box: ${kept.size}/8")
-      Layout.prunedRead(s, tmp, boxes)
+      Layout.prunedRead(s, tmp, boxes, kept)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n"), sum(col("minute")).as("minute_sum"))
         .orderBy(col("user_id"))

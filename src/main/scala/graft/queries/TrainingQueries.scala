@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.core.CacheScope
 import graft.core.CacheScope.persist
 import graft.curation.Curation
 import graft.dedup.{Dedup, Linkage}
@@ -823,7 +824,7 @@ object TrainingQueries {
     // this corpus's bimodal similarity distribution — q24's argument).
     "q122_lsh_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("lshidx_q").toString
+      val tmp = CacheScope.stage("lshidx_q")
       graft.dedup.LshIndex.write(docs.filter(col("doc_id") % 3 === 0),
         "doc_id", "text", tmp, n = 3, numHashes = 64, bands = 16,
         numPartitions = 16)
@@ -877,7 +878,7 @@ object TrainingQueries {
     // exactly as unfindable as one never indexed.
     "q206_index_forget" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("lshidx_f").toString
+      val tmp = CacheScope.stage("lshidx_f")
       graft.dedup.LshIndex.write(docs.filter(col("doc_id") % 3 === 0),
         "doc_id", "text", tmp, n = 3, numHashes = 64, bands = 16,
         numPartitions = 16)
@@ -1106,7 +1107,7 @@ object TrainingQueries {
     // bit-identical to the corpus-scan path.
     "q147_search_index" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val tmp = java.nio.file.Files.createTempDirectory("searchidx_q").toString
+      val tmp = CacheScope.stage("searchidx_q")
       graft.text.SearchIndex.write(docs, "doc_id", "text", tmp, numPartitions = 16)
       graft.text.SearchIndex.query(s, tmp, Seq("spark", "join", "window"), k = 25)
         .select(col("doc").as("doc_id"), col("score"), col("score_fx"))
@@ -1784,8 +1785,7 @@ object TrainingQueries {
     "q222_shard_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("source"), col("text"))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_shards").toString
+      val path = CacheScope.stage("graft_shards")
       Curation.writeTrainingShards(docs, "doc_id", path, numShards = 8)
       Curation.verifyShardManifest(
         Curation.readTrainingShards(s, path), docs,
@@ -1804,8 +1804,7 @@ object TrainingQueries {
       val docs = t(s, dir, "documents")
         .withColumn("payload", col("text").cast("binary"))
         .withColumn("meta", to_json(struct(col("lang"), col("source"))))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_tar").toString + "/wds"
+      val path = CacheScope.stage("graft_tar") + "/wds"
       val summary = graft.multimodal.TarShards.write(
         docs, "doc_id", "payload", "meta", path, shards = 8)
       val written = summary.agg(sum(col("n_docs"))).collect()(0).getLong(0)
@@ -1840,8 +1839,7 @@ object TrainingQueries {
     // the identity over the documents table.
     "q233_orc_roundtrip" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_orc").toString + "/docs_orc"
+      val path = CacheScope.stage("graft_orc") + "/docs_orc"
       graft.curation.CorpusIo.writeOrc(docs, path)
       graft.curation.CorpusIo.readOrc(s, path)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),

@@ -154,6 +154,23 @@ class LayoutSpec extends SparkSpec {
     assert(ids.contains(9999L))
   }
 
+  test("a box on a column without stats: prunedFiles names it, the soft form ignores it") {
+    val dir = java.nio.file.Files.createTempDirectory("zonemapcols").toString + "/t"
+    val df = (0 until 100).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
+      .toDF("id", "x", "y")
+    Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)
+    Layout.writeManifest(spark, dir, Seq("x"))
+    val boxes = Seq(("x", 0L, 3L), ("y", 0L, 1L))
+    val e = intercept[IllegalArgumentException] {
+      Layout.prunedFiles(spark, dir, boxes)
+    }
+    assert(e.getMessage.contains("no stats for y"), e.getMessage)
+    val xOnly = Layout.prunedFiles(spark, dir, boxes.take(1))
+    assert(xOnly.nonEmpty)
+    assert(Layout.prunedFilesIfFresh(spark, dir, boxes).map(_._1) === Some(xOnly))
+    assert(Layout.prunedFilesIfFresh(spark, dir, boxes.drop(1)) === None)
+  }
+
   test("incremental manifest append equals a full rebuild and only scans the new files") {
     val dir = java.nio.file.Files.createTempDirectory("zonemapapp").toString + "/t"
     val base = (0 until 1000).map(i => (i.toLong, i.toLong % 32, i.toLong % 17))

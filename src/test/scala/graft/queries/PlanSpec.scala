@@ -902,6 +902,18 @@ class PlanSpec extends SparkSpec {
     assert(prunedScans("q226_zonemap_rule") === 1)
   }
 
+  test("q224: releaseAll deletes the table the query staged") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def stagedCopies() =
+      tmpRoot.listFiles().filter(_.getName.startsWith("zonemap_q")).toSet
+    val before = stagedCopies()
+    assert(graft.SparkEntry.queries("q224_zonemap_scan")(spark, dir).count() > 0)
+    val staged = stagedCopies() -- before
+    assert(staged.size === 1 && graft.core.CacheScope.stagedLeft >= 1)
+    graft.core.CacheScope.releaseAll(spark)
+    assert(!staged.head.exists && graft.core.CacheScope.stagedLeft === 0)
+  }
+
   test("q250: the returned frame plans a zone-map-pruned versioned scan") {
     assert(prunedScans("q250_versioned_autoprune") === 1)
   }
