@@ -251,6 +251,18 @@ object Layout {
       .map(_.toString)
   }
 
+  /** A parquet dir read through its part files. Spark ignores a path
+    * whose name starts with `_` — every manifest dir's and every index's
+    * `_meta` does — and logs a warning each time it is handed one.
+    */
+  private[graft] def readParts(spark: SparkSession, dir: String): DataFrame = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val parts = fs.listStatus(root).map(_.getPath)
+      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+    spark.read.parquet(parts.map(_.toString).sorted.toIndexedSeq: _*)
+  }
+
   /** Heal a crashed [[writeSwapped]] by renaming the complete `.swap`
     * into place. Only [[append]] calls it; readers use
     * [[readableManifest]].
@@ -305,7 +317,7 @@ object Layout {
       path: String): Unit = CacheScope.withReleased {
     val manPath = s"$path/${kind.dir}"
     healSwap(spark, manPath)
-    val man = spark.read.parquet(manPath)
+    val man = readParts(spark, manPath)
     val cols = man.columns.toSeq.collect {
       case c if c.endsWith(kind.suffix) => c.stripSuffix(kind.suffix)
     }
@@ -400,7 +412,7 @@ object Layout {
       knownLive: Option[Set[String]] = None)(
       pick: Set[String] => Option[Seq[String]]): Option[Array[Row]] =
     readableManifest(spark, s"$path/${kind.dir}").flatMap { dir =>
-      val man = spark.read.parquet(dir)
+      val man = readParts(spark, dir)
       pick(man.columns.toSet)
         .map(cs => man.select(("file" +: cs).map(col): _*).collect())
         .filter(_.map(r => uriPath(r.getString(0))).toSet ==

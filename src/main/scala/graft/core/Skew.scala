@@ -3,6 +3,8 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope.persist
+
 /** Skew guards for the pair self-joins whose key distribution is
   * Zipfian (stop-ish shingles, hub addresses, degenerate LSH buckets):
   * a hot key's rows all hash to ONE reducer, so a single task runs as
@@ -50,4 +52,32 @@ object Skew {
         df.join(hot, Seq(keyCol), "left_anti")
       case None => df
     }
+
+  /** Distinct (a < b) id pairs that share a band key — the candidate
+    * generator of the banded near-dup operators (LSH band buckets,
+    * bit-sketch pieces). `keyed` has one row per
+    * (id, key) with any payload columns; each non-key column `c` comes
+    * out as `c_a` and `c_b`. The key rows are persisted (both sides of
+    * the self-join read them) and capped with [[dropHotKeys]].
+    * `narrow` filters and projects the pair rows before the distinct,
+    * so a pair test on payload columns need not carry them through it.
+    *
+    * SHUFFLE_HASH: neither side of the self-join fits a broadcast at
+    * real scale. Plain distinct, NOT the pinned [[parallelPairDistinct]]:
+    * banded candidates are bucket-co-residency-bounded (a small fraction
+    * of a prefix join's volume), and pinning 32 partitions on them was
+    * A/B-measured ~0.15-0.3 s SLOWER (scheduling overhead with no CPU
+    * to spread) where the jaccard prefix path wins 1.3×+.
+    */
+  private[graft] def bandPairs(keyed: DataFrame, id: String, key: String,
+      cap: Option[Int], narrow: DataFrame => DataFrame = identity): DataFrame = {
+    val rows = dropHotKeys(persist(keyed), key, cap)
+    val carried = keyed.columns.filter(_ != key).toSeq
+    narrow(rows.as("l")
+      .join(rows.as("r").hint("shuffle_hash"), col(s"l.$key") === col(s"r.$key"))
+      .filter(col(s"l.$id") < col(s"r.$id"))
+      .select(carried.map(c => col(s"l.$c").as(s"${c}_a")) ++
+        carried.map(c => col(s"r.$c").as(s"${c}_b")): _*))
+      .distinct()
+  }
 }

@@ -46,16 +46,118 @@ object Dedup {
       .select(col("doc"), size(col("arr")).as("nsh"), explode(col("arr")).as("sh0"))
       .select(col("doc"), col("nsh"), xxhash64(col("sh0")).as("sh"))
 
+  /** Pruning bounds are relaxed by this much so float rounding can only
+    * ADMIT extra candidates (the exact verify discards them), never
+    * drop a true pair.
+    */
+  private val Eps = 1e-9
+
+  /** The (doc, nsh, shs) table: each doc's sorted 64-bit shingle-hash
+    * array (one compiled kernel) and its size — the representation
+    * every prefix join, hot-shingle count and exact verify reads. The
+    * single-corpus operators persist it, so both prefix sides, the
+    * hot-shingle count and both verify joins share one tokenize+sort
+    * pass; [[jaccardPairsAgainst]] does not, because under AQE every
+    * scan of a cached relation is one more job (measured on q55: 7
+    * jobs unpersisted, 11 persisted).
+    */
+  private[dedup] def shingleArrays(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol).as("doc"),
+        graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
+      .select(col("doc"), size(col("shs")).as("nsh"), col("shs"))
+
+  /** The shingles occurring in more than `cap` documents, counted over
+    * the FULL postings of `arrs` (any frame with an `shs` column), not
+    * just the prefixes — the stop-shingle cap of the prefix joins, with
+    * the exactness caveat of [[jaccardPairs]]. None = no cap.
+    */
+  private def hotShingles(arrs: DataFrame, cap: Option[Int]): Option[DataFrame] =
+    cap.map(c => arrs.select(explode(col("shs")).as("sh"))
+      .groupBy(col("sh")).agg(count(lit(1)).as("df_"))
+      .filter(col("df_") > c).select(col("sh")))
+
+  /** τ-prefix positional postings (doc, nsh, p, sh) of a shingle-array
+    * table: the first `|s| - ⌈τ·|s|⌉ + 1` sorted hashes of each doc at
+    * 1-based position `p`, minus the `hot` shingles. Two docs whose
+    * overlap is at least τ·|s| MUST share a prefix element (missing the
+    * whole prefix bounds the overlap below τ·|s|); τ = 0 indexes every
+    * shingle.
+    */
+  private def prefixPostings(arrs: DataFrame, tau: Double, hot: Option[DataFrame]): DataFrame = {
+    val prefixLen = (col("nsh") - ceil(col("nsh") * tau - Eps) + 1).cast("int")
+    val pfx = arrs.select(col("doc"), col("nsh"),
+        posexplode(slice(col("shs"), lit(1), prefixLen)).as(Seq("p0", "sh")))
+      .select(col("doc"), col("nsh"), (col("p0") + 1).as("p"), col("sh"))
+    hot.fold(pfx)(h => pfx.join(h, Seq("sh"), "left_anti"))
+  }
+
+  /** Distinct candidate pairs (doc_a, doc_b) of two prefix-posting
+    * tables: postings that share a shingle, whose doc ids pass `order`,
+    * and that pass the size and POSITIONAL (the PP of PPJoin) filters
+    * for a required overlap of `need(na, nb)`. An overlap of `need`
+    * needs both sets at least that large, and a match at prefix
+    * positions (pa, pb) bounds the overlap by 1 + min(na-pa, nb-pb)
+    * (everything before the match in either sorted array is ruled
+    * out). Lossless: the pair's FIRST shared prefix element carries the
+    * true bound and one passing occurrence keeps the pair.
+    *
+    * SHUFFLE_HASH: same self-join rationale as [[jaccardPairsByCount]].
+    * The distinct is pinned at real parallelism: AQE would coalesce the
+    * byte-small pair list to one task and serialize the merge-walk
+    * verify (guide §2.5).
+    */
+  private def prefixPairs(l: DataFrame, r: DataFrame,
+      need: (Column, Column) => Column, order: (Column, Column) => Column): DataFrame = {
+    val (na, nb) = (col("l.nsh"), col("r.nsh"))
+    val alpha = need(na, nb) - Eps
+    val candidates = l.as("l")
+      .join(r.as("r").hint("shuffle_hash"),
+        col("l.sh") === col("r.sh") && order(col("l.doc"), col("r.doc")) &&
+          least(na, nb).cast("double") >= alpha &&
+          (lit(1) + least(na - col("l.p"), nb - col("r.p"))).cast("double") >= alpha)
+      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
+    graft.core.Skew.parallelPairDistinct(candidates, Seq("doc_a", "doc_b"))
+  }
+
+  /** The overlap J ≥ τ needs: |A ∩ B| ≥ τ/(1+τ)·(|A| + |B|). */
+  private def jaccardOverlap(tau: Double)(na: Column, nb: Column): Column =
+    (na + nb) * lit(tau / (1.0 + tau))
+
+  /** Exact overlap of each candidate pair: joins the pair's two sides'
+    * (doc, nsh, shs) arrays — from `a` for the candidates' first
+    * column, from `b` for the second — and adds their sizes `na`, `nb`
+    * and the compiled merge-intersect count `c`. Hash counts equal
+    * string-set counts up to the documented 2^-64 collision caveat,
+    * and a long merge walk beats `array_intersect` over n-gram strings.
+    */
+  private def overlapVerify(candidates: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    val Array(ia, ib) = candidates.columns
+    candidates
+      .join(a.select(col("doc").as(ia), col("nsh").as("na"), col("shs").as("sa")), ia)
+      .join(b.select(col("doc").as(ib), col("nsh").as("nb"), col("shs").as("sb")), ib)
+      .withColumn("c",
+        graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
+  }
+
+  /** The candidate pairs whose exact Jaccard, rounded to 1e-6, is at
+    * least `tau`: (first id, second id, jaccard).
+    */
+  private[dedup] def verifyByExactJaccard(
+      candidates: DataFrame, a: DataFrame, b: DataFrame, tau: Double): DataFrame = {
+    val Array(ia, ib) = candidates.columns
+    overlapVerify(candidates, a, b)
+      .withColumn("jaccard", round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6))
+      .filter(col("jaccard") >= tau)
+      .select(col(ia), col(ib), col("jaccard"))
+  }
+
   /** Exact n-gram Jaccard similar pairs (j >= tau, a < b), computed
     * with PREFIX FILTERING (the AllPairs/PPJoin family, Xiao et al.,
     * WWW'08): each doc's shingle set becomes a sorted hash array; only
-    * the first `|s| - ⌈tau·|s|⌉ + 1` hashes are indexed (a pair with
-    * J ≥ tau MUST share a prefix element — missing the whole prefix
-    * bounds the overlap below tau·|s|), candidates also pass the size
-    * filter `tau·|A| ≤ |B| ≤ |A|/tau`, and survivors are verified with
-    * an exact compiled merge-intersect. Every pruning bound is relaxed
-    * by 1e-9 so float rounding can only ADMIT extra candidates (the
-    * exact verify discards them) — never drop a true pair.
+    * its τ-prefix is indexed ([[prefixPostings]]), candidates also pass
+    * the size filter `tau·|A| ≤ |B| ≤ |A|/tau` and the positional
+    * filter ([[prefixPairs]]), and survivors are verified with an exact
+    * compiled merge-intersect ([[overlapVerify]]).
     *
     * vs the count-based postings join ([[jaccardPairsByCount]]): at
     * tau = 0.5 only ~half of each posting list is indexed, so the
@@ -79,53 +181,9 @@ object Dedup {
       n: Int,
       tau: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    val eps = 1e-9
-    // persisted: referenced by BOTH sides of the prefix self-join, the
-    // hot-shingle df pass, and (plan-identical, CacheManager-deduped)
-    // the exact verify's two array joins — one tokenize+sort pass
-    // total instead of four
-    val arrs = persist(
-      df.select(col(idCol).as("doc"),
-        graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
-    val prefixLen = (col("nsh") - ceil(col("nsh") * tau - eps) + 1).cast("int")
-    // posexplode: the 1-based prefix position feeds PPJoin's positional
-    // filter below
-    val pfx0 = arrs.select(col("doc"), col("nsh"),
-        posexplode(slice(col("shs"), lit(1), prefixLen)).as(Seq("p0", "sh")))
-      .select(col("doc"), col("nsh"), (col("p0") + 1).as("p"), col("sh"))
-    val pfx = maxShingleDocFreq match {
-      case Some(cap) =>
-        // document frequency over the FULL postings (same semantics as
-        // the count-based variant), not just the prefixes
-        val hot = arrs.select(explode(col("shs")).as("sh"))
-          .groupBy(col("sh")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > cap).select(col("sh"))
-        pfx0.join(hot, Seq("sh"), "left_anti")
-      case None => pfx0
-    }
-    // POSITIONAL filter (the PP of PPJoin): a match at 1-based prefix
-    // positions (pa, pb) bounds the overlap by 1 + min(na-pa, nb-pb)
-    // (everything before the match in either sorted array is ruled
-    // out); J >= tau needs overlap >= tau/(1+tau)·(na+nb). Lossless:
-    // the pair's FIRST shared prefix element carries the true bound
-    // and one passing occurrence keeps the pair (candidates are
-    // distinct-ed). Relaxed by eps — rounding only ever ADMITS.
-    val alpha = (col("l.nsh") + col("r.nsh")) * lit(tau / (1.0 + tau)) - eps
-    // SHUFFLE_HASH: same self-join rationale as jaccardPairsByCount.
-    val candidates = pfx.as("l")
-      .join(pfx.as("r").hint("shuffle_hash"),
-        col("l.sh") === col("r.sh") && col("l.doc") < col("r.doc") &&
-          col("r.nsh").cast("double") >= col("l.nsh") * tau - eps &&
-          col("l.nsh").cast("double") >= col("r.nsh") * tau - eps &&
-          (lit(1) + least(col("l.nsh") - col("l.p"), col("r.nsh") - col("r.p")))
-            .cast("double") >= alpha)
-      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
-    verifyByExactJaccard(df, idCol, textCol, n, tau,
-      // pair-key-pinned distinct: keeps the verify stage at real
-      // parallelism (AQE would coalesce the byte-small pair list to
-      // one task and serialize the merge-walk verify — guide §2.5)
-      graft.core.Skew.parallelPairDistinct(candidates, Seq("doc_a", "doc_b")))
+    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    val pfx = prefixPostings(arrs, tau, hotShingles(arrs, maxShingleDocFreq))
+    verifyByExactJaccard(prefixPairs(pfx, pfx, jaccardOverlap(tau), _ < _), arrs, arrs, tau)
   }
 
   /** Match-evidence report: for each near-dup pair, the `topK` RAREST
@@ -211,64 +269,17 @@ object Dedup {
       batch: DataFrame, batchIdCol: String, batchTextCol: String,
       n: Int, tau: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    val eps = 1e-9
-    def prefixes(df: DataFrame, id: String, text: String, as: String) = {
-      val arrs = df.select(col(id).as(as),
-          graft.functions.SketchFunctions.sorted_shingle_hashes(col(text), n).as("shs"))
-        .select(col(as), size(col("shs")).as(s"nsh_$as"), col("shs"))
-      val prefixLen =
-        (col(s"nsh_$as") - ceil(col(s"nsh_$as") * tau - eps) + 1).cast("int")
-      arrs.select(col(as), col(s"nsh_$as"),
-        posexplode(slice(col("shs"), lit(1), prefixLen)).as(Seq(s"p0_$as", "sh")))
-        .select(col(as), col(s"nsh_$as"), (col(s"p0_$as") + 1).as(s"p_$as"), col("sh"))
-    }
+    val refArrs = shingleArrays(ref, refIdCol, refTextCol, n)
+    val batchArrs = shingleArrays(batch, batchIdCol, batchTextCol, n)
     // stop-shingle cap, df counted over BOTH corpora's full postings —
     // a hot shingle blows up |ref posting| × |batch posting|; the 100 TB
-    // reference side is where that product turns into a straggler.
-    // Same exactness caveat as jaccardPairs' cap.
-    def fullPostings(df: DataFrame, id: String, text: String) =
-      df.select(graft.functions.SketchFunctions
-        .sorted_shingle_hashes(col(text), n).as("shs"))
-        .select(explode(col("shs")).as("sh"))
-    val dropHot: DataFrame => DataFrame = maxShingleDocFreq match {
-      case Some(cap) =>
-        val hot = fullPostings(ref, refIdCol, refTextCol)
-          .unionByName(fullPostings(batch, batchIdCol, batchTextCol))
-          .groupBy(col("sh")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > cap).select(col("sh"))
-        pfx => pfx.join(hot, Seq("sh"), "left_anti")
-      case None => identity
-    }
-    val refPfx = dropHot(prefixes(ref, refIdCol, refTextCol, "ref_id"))
-    val batchPfx = dropHot(prefixes(batch, batchIdCol, batchTextCol, "new_id"))
-    // positional (PPJoin) filter, same lossless bound as jaccardPairs:
-    // overlap <= 1 + min(remaining-after-match on each side)
-    val alpha = (col("nsh_ref_id") + col("nsh_new_id")) * lit(tau / (1.0 + tau)) - eps
-    val candidates0 = refPfx
-      .join(batchPfx.hint("shuffle_hash"),
-        refPfx("sh") === batchPfx("sh") &&
-          col("nsh_new_id").cast("double") >= col("nsh_ref_id") * tau - eps &&
-          col("nsh_ref_id").cast("double") >= col("nsh_new_id") * tau - eps &&
-          (lit(1) + least(col("nsh_ref_id") - col("p_ref_id"),
-            col("nsh_new_id") - col("p_new_id"))).cast("double") >= alpha)
-      .select(col("ref_id"), col("new_id"))
-    val candidates = graft.core.Skew.parallelPairDistinct(
-      candidates0, Seq("ref_id", "new_id")) // verify parallelism (§2.5)
-    val refArrs = ref.select(col(refIdCol).as("ref_id"),
-        graft.functions.SketchFunctions.sorted_shingle_hashes(col(refTextCol), n).as("sa"))
-      .withColumn("na", size(col("sa")))
-    val batchArrs = batch.select(col(batchIdCol).as("new_id"),
-        graft.functions.SketchFunctions.sorted_shingle_hashes(col(batchTextCol), n).as("sb"))
-      .withColumn("nb", size(col("sb")))
-    candidates
-      .join(refArrs, "ref_id")
-      .join(batchArrs, "new_id")
-      .withColumn("c",
-        graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
-      .withColumn("jaccard",
-        round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6))
-      .filter(col("jaccard") >= tau)
-      .select(col("ref_id"), col("new_id"), col("jaccard"))
+    // reference side is where that product turns into a straggler
+    val hot = hotShingles(
+      refArrs.select(col("shs")).unionByName(batchArrs.select(col("shs"))), maxShingleDocFreq)
+    val candidates = prefixPairs(prefixPostings(refArrs, tau, hot),
+        prefixPostings(batchArrs, tau, hot), jaccardOverlap(tau), (_, _) => lit(true))
+      .select(col("doc_a").as("ref_id"), col("doc_b").as("new_id"))
+    verifyByExactJaccard(candidates, refArrs, batchArrs, tau)
   }
 
   /** Drop every incoming-batch doc that near-duplicates the reference
@@ -473,57 +484,11 @@ object Dedup {
       bands: Int = 16,
       maxBucketDocFreq: Option[Int] = None): DataFrame = {
     val sh = df.select(col(idCol).as("doc"), TextFunctions.shingles(col(textCol), n).as("sh"))
-    // persisted: both sides of the bucket self-join derive from it —
-    // without the cache the corpus shingles + minhashes twice
-    val buckets0 = persist(sh.select(
-      col("doc"),
-      explode(lshBandKeys(col("sh"), numHashes, bands)).as("bucket")))
-    val buckets = graft.core.Skew.dropHotKeys(buckets0, "bucket", maxBucketDocFreq)
-    val candidates = buckets.as("l")
-      .join(buckets.as("r").hint("shuffle_hash"), col("l.bucket") === col("r.bucket"))
-      .filter(col("l.doc") < col("r.doc"))
-      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
-      // plain distinct, NOT the pinned parallelPairDistinct: banded
-      // candidates are bucket-co-residency-bounded (a small fraction of
-      // the prefix join's volume), and pinning 32 partitions on them
-      // was A/B-measured ~0.15-0.3 s SLOWER here (scheduling overhead
-      // with no CPU to spread) where the jaccard prefix path wins 1.3×+
-      .distinct()
-    verifyByExactJaccard(df, idCol, textCol, n, tau, candidates)
-  }
-
-  /** Exact-Jaccard verification of a (doc_a, doc_b) candidate edge
-    * list: re-derives each side's sorted shingle-hash array and scores
-    * with the compiled merge-intersect (same representation as
-    * [[jaccardPairs]] — hash counts equal string-set counts up to the
-    * documented 2^-64 collision caveat, and a long merge walk beats
-    * `array_intersect`/`array_union` over n-gram strings).
-    */
-  private def verifyByExactJaccard(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      tau: Double,
-      candidates: DataFrame): DataFrame = {
-    // persisted: the verify joins the array table TWICE (a-side and
-    // b-side), and the candidate generators upstream already derive
-    // the same (doc, nsh, shs) plan — without the cache the corpus
-    // re-tokenizes + re-sorts once per reference (4× per jaccardPairs
-    // call). Spark's CacheManager dedups plan-identical caches, so a
-    // caller that persisted the same construction shares this entry.
-    val arrs = persist(
-      df.select(col(idCol).as("doc"),
-        graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
-    candidates
-      .join(arrs.select(col("doc").as("doc_a"), col("nsh").as("na"), col("shs").as("sa")), "doc_a")
-      .join(arrs.select(col("doc").as("doc_b"), col("nsh").as("nb"), col("shs").as("sb")), "doc_b")
-      .withColumn("c",
-        graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
-      .withColumn("jaccard", round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6))
-      .filter(col("jaccard") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+    val candidates = graft.core.Skew.bandPairs(
+      sh.select(col("doc"), explode(lshBandKeys(col("sh"), numHashes, bands)).as("bucket")),
+      "doc", "bucket", maxBucketDocFreq)
+    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    verifyByExactJaccard(candidates, arrs, arrs, tau)
   }
 
   /** Asymmetric CONTAINMENT near-dup pairs: `C(A→B) = |sh(A) ∩ sh(B)|
@@ -554,44 +519,12 @@ object Dedup {
       n: Int,
       tau: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    val eps = 1e-9
-    // persisted: prefix side, full side, and the df pass all derive
-    // from it (plus the verify's plan-identical joins) — see
-    // jaccardPairs
-    val arrs = persist(
-      df.select(col(idCol).as("doc"),
-        graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs")))
-    val prefixLen = (col("nsh") - ceil(col("nsh") * tau - eps) + 1).cast("int")
-    val pfx0 = arrs.select(col("doc"), col("nsh"),
-        posexplode(slice(col("shs"), lit(1), prefixLen)).as(Seq("p0", "sh")))
-      .select(col("doc"), col("nsh"), (col("p0") + 1).as("p"), col("sh"))
-    val full0 = arrs.select(col("doc"), col("nsh"),
-        posexplode(col("shs")).as(Seq("p0", "sh")))
-      .select(col("doc"), col("nsh"), (col("p0") + 1).as("p"), col("sh"))
-    val (pfx, full) = maxShingleDocFreq match {
-      case Some(cap) =>
-        val hot = arrs.select(explode(col("shs")).as("sh"))
-          .groupBy(col("sh")).agg(count(lit(1)).as("df_"))
-          .filter(col("df_") > cap).select(col("sh"))
-        (pfx0.join(hot, Seq("sh"), "left_anti"),
-          full0.join(hot, Seq("sh"), "left_anti"))
-      case None => (pfx0, full0)
-    }
-    val needed = col("l.nsh") * lit(tau) - eps
-    val candidates = pfx.as("l")
-      .join(full.as("r").hint("shuffle_hash"),
-        col("l.sh") === col("r.sh") && col("l.doc") =!= col("r.doc") &&
-          col("r.nsh").cast("double") >= needed &&
-          (lit(1) + least(col("l.nsh") - col("l.p"), col("r.nsh") - col("r.p")))
-            .cast("double") >= needed)
-      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
-    graft.core.Skew.parallelPairDistinct( // verify parallelism (§2.5)
-        candidates, Seq("doc_a", "doc_b"))
-      .join(arrs.select(col("doc").as("doc_a"), col("nsh").as("na"), col("shs").as("sa")), "doc_a")
-      .join(arrs.select(col("doc").as("doc_b"), col("shs").as("sb")), "doc_b")
-      .withColumn("c",
-        graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
+    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    val hot = hotShingles(arrs, maxShingleDocFreq)
+    // the containing side indexes every shingle: τ = 0
+    val candidates = prefixPairs(prefixPostings(arrs, tau, hot), prefixPostings(arrs, 0.0, hot),
+      (na, _) => na * lit(tau), _ =!= _)
+    overlapVerify(candidates, arrs, arrs)
       .withColumn("containment", round(col("c").cast("double") / col("na"), 6))
       .filter(col("containment") >= tau)
       .select(col("doc_a"), col("doc_b"), col("containment"))
@@ -639,26 +572,19 @@ object Dedup {
     require(60 % pieces == 0, s"pieces=$pieces must divide 60")
     val width = 60 / pieces
     val mask = (1L << width) - 1
-    val sh = df.select(col(idCol).as("doc"), TextFunctions.shingles(col(textCol), n).as("sh"))
-      .withColumn("sim", simhash60(col("sh")))
-    // persisted: both sides of the piece self-join derive from it —
-    // without the cache the corpus shingles + simhashes twice
-    val pieceKeys0 = persist(sh.select(
-      col("doc"), col("sim"),
-      explode(array((0 until pieces).map { p =>
-        concat_ws(":", lit(p),
-          shiftrightunsigned(col("sim"), p * width).bitwiseAND(mask))
-      }: _*)).as("piece"))
-      .select(col("doc"), col("sim"), col("piece")))
-    val pieceKeys = graft.core.Skew.dropHotKeys(pieceKeys0, "piece", maxBucketDocFreq)
-    val candidates = pieceKeys.as("l")
-      .join(pieceKeys.as("r").hint("shuffle_hash"), col("l.piece") === col("r.piece"))
-      .filter(col("l.doc") < col("r.doc"))
-      .filter(bit_count(col("l.sim").bitwiseXOR(col("r.sim"))) <= maxHamming)
-      .select(col("l.doc").as("doc_a"), col("r.doc").as("doc_b"))
-      // plain distinct — banded candidate volume, see minhashLshPairs
-      .distinct()
-    verifyByExactJaccard(df, idCol, textCol, n, tau, candidates)
+    val sim = df.select(col(idCol).as("doc"),
+      simhash60(TextFunctions.shingles(col(textCol), n)).as("sim"))
+    val candidates = graft.core.Skew.bandPairs(
+        sim.select(col("doc"), col("sim"),
+          explode(array((0 until pieces).map { p =>
+            concat_ws(":", lit(p),
+              shiftrightunsigned(col("sim"), p * width).bitwiseAND(mask))
+          }: _*)).as("piece")),
+        "doc", "piece", maxBucketDocFreq,
+        _.filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= maxHamming)
+          .select(col("doc_a"), col("doc_b")))
+    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    verifyByExactJaccard(candidates, arrs, arrs, tau)
   }
 
   /** (doc, 1-based position, word n-gram) span rows — empty for docs
@@ -1111,20 +1037,14 @@ object Dedup {
         else shiftrightunsigned(col("fp"), lo).bitwiseAND(lit((1L << w) - 1L))
       concat_ws(":", lit(p), bitsv)
     }
-    // persisted: both sides of the piece self-join derive from the
-    // keyed rows — without the cache the caller's fingerprint pipeline
-    // (media decode, simhash) evaluates once per side
-    val keyed = persist(
-      df.select(col(idCol).as("id"), col(fpCol).cast("long").as("fp"))
-        .select(col("id"), col("fp"), explode(array(pieceCols: _*)).as("bucket")))
-    val b = graft.core.Skew.dropHotKeys(keyed, "bucket", maxBucketDocFreq)
-    b.as("l")
-      .join(b.as("r").hint("shuffle_hash"), col("l.bucket") === col("r.bucket"))
-      .filter(col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.fp").as("_fa"), col("r.fp").as("_fb"))
-      .distinct()
-      .withColumn("hamming", bit_count(col("_fa").bitwiseXOR(col("_fb"))).cast("long"))
+    // bandPairs persists the keyed rows: without the cache the
+    // caller's fingerprint pipeline (media decode, simhash) evaluates
+    // once per side
+    graft.core.Skew.bandPairs(
+        df.select(col(idCol).as("id"), col(fpCol).cast("long").as("fp"))
+          .select(col("id"), col("fp"), explode(array(pieceCols: _*)).as("bucket")),
+        "id", "bucket", maxBucketDocFreq)
+      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))).cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
@@ -1150,8 +1070,13 @@ object Dedup {
     * released when the bracket closes; a harness that owns the session
     * sweeps unbracketed calls with [[graft.core.CacheScope.releaseAll]].
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 64,
-      localLimit: Long = LocalResolveRows): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs, LocalResolveRows)
+
+  /** [[connectedComponents]] with the local fast path taken at or under
+    * `localLimit` edges (0 forces the distributed path).
+    */
+  private[dedup] def connectedComponents(pairs: DataFrame, localLimit: Long): DataFrame = {
     val edges = persist(
       pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
         .unionByName(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
@@ -1224,7 +1149,7 @@ object Dedup {
       .select(col("x").as("node"), least(col("x"), col("_mn")).as("label")))
     var changed = true
     var it = 0
-    while (changed && it < maxIters) {
+    while (changed && it < ComponentRounds) {
       val nbr = edges
         .join(labels.select(col("node").as("y"), col("label").as("_ly")), Seq("y"))
         .groupBy(col("x").as("node")).agg(min(col("_ly")).as("_nmin"))
@@ -1249,7 +1174,7 @@ object Dedup {
     // return a labeling where one component carries several ids. Fail
     // loudly instead (mirrors the resolveChains hop-cap rationale).
     require(!changed,
-      s"connectedComponents did not converge within $maxIters rounds")
+      s"connectedComponents did not converge within $ComponentRounds rounds")
     edges.unpersist(blocking = false)
     labels.select(col("node").as("doc_id"), col("label").as("component_id"))
   }
@@ -1281,9 +1206,14 @@ object Dedup {
     */
   def connectedComponentsIncremental(
       labels: DataFrame, // (doc_id, component_id)
-      newPairs: DataFrame, // (doc_a, doc_b)
-      maxIters: Int = 64,
-      localLimit: Long = LocalResolveRows): DataFrame = {
+      newPairs: DataFrame): DataFrame = // (doc_a, doc_b)
+    connectedComponentsIncremental(labels, newPairs, LocalResolveRows)
+
+  /** [[connectedComponentsIncremental]] with the batch-sized components
+    * resolved locally at or under `localLimit` edges.
+    */
+  private[dedup] def connectedComponentsIncremental(labels: DataFrame,
+      newPairs: DataFrame, localLimit: Long): DataFrame = {
     val l = labels.select(col("doc_id"), col("component_id"))
     val contracted = newPairs
       .join(l.select(col("doc_id").as("doc_a"), col("component_id").as("_ca")),
@@ -1293,7 +1223,7 @@ object Dedup {
       .select(coalesce(col("_ca"), col("doc_a")).as("doc_a"),
         coalesce(col("_cb"), col("doc_b")).as("doc_b"))
     // (old component id | new node) -> merged super label
-    val superMap = connectedComponents(contracted, maxIters, localLimit)
+    val superMap = connectedComponents(contracted, localLimit)
       .select(col("doc_id").as("_cid"), col("component_id").as("_super"))
     val relabeledOld = l
       .join(broadcast(superMap.withColumnRenamed("_cid", "component_id")),
@@ -1314,6 +1244,11 @@ object Dedup {
     * above it the distributed pointer jumping takes over unchanged.
     */
   private[dedup] val LocalResolveRows: Long = 1L << 20
+
+  /** Pointer jumping converges in O(log diameter) rounds; a labeling
+    * still changing after this many fails instead of being returned.
+    */
+  private val ComponentRounds = 64
 
   /** Follow keeper chains in a (keep, drop) mapping to their roots by
     * POINTER JUMPING: each pass re-points a drop at its keeper's

@@ -117,9 +117,7 @@ object LshIndex {
       maxBucketDocFreq: Option[Int] = None): DataFrame = {
     val m = readMeta(spark, path)
     val bsh = batch.select(col(idCol).as("new_id"),
-      TextFunctions.shingles(col(textCol), m.n).as("sh"),
-      graft.functions.SketchFunctions
-        .sorted_shingle_hashes(col(textCol), m.n).as("shs"))
+      TextFunctions.shingles(col(textCol), m.n).as("sh"))
     // persisted: the bucket rows feed the bounded pb-collect AND the
     // candidate join; without the cache the batch re-shingles per
     // consumer. Registered with CacheScope, released by the caller's
@@ -148,18 +146,8 @@ object LshIndex {
       .distinct().collect().map(_.getInt(0)).sorted
     val refArrs = spark.read.parquet(s"$path/sigs")
       .filter(col("sb").isin(sbs.map(Integer.valueOf).toIndexedSeq: _*))
-      .select(col("doc").as("ref_id"), col("nsh").as("na"), col("shs").as("sa"))
-    val batchArrs = bsh
-      .select(col("new_id"), size(col("shs")).as("nb"), col("shs").as("sb"))
-    candidates
-      .join(refArrs, "ref_id")
-      .join(batchArrs, "new_id")
-      .withColumn("c",
-        graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
-      .withColumn("jaccard",
-        round(col("c").cast("double") / (col("na") + col("nb") - col("c")), 6))
-      .filter(col("jaccard") >= tau)
-      .select(col("ref_id"), col("new_id"), col("jaccard"))
+    Dedup.verifyByExactJaccard(candidates, refArrs,
+      Dedup.shingleArrays(batch, idCol, textCol, m.n), tau)
   }
 
   /** Remove documents from the index — the right-to-be-forgotten
@@ -259,7 +247,7 @@ object LshIndex {
   private type Meta = Params
 
   private def readMeta(spark: SparkSession, path: String): Meta = {
-    val r = spark.read.parquet(s"$path/_meta")
+    val r = graft.core.Layout.readParts(spark, s"$path/_meta")
       .select(col("n"), col("num_hashes"), col("bands"), col("num_partitions"))
       .collect()(0)
     Params(r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3))

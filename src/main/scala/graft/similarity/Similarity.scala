@@ -706,26 +706,17 @@ object Similarity {
       bands: Int = 16,
       maxBucketDocFreq: Option[Int] = None): DataFrame = {
     // persisted: base feeds the bucket keying AND both verify joins
-    // (norms would recompute per reference), keyed0 feeds both sides
-    // of the bucket self-join (the hyperplane signatures would
-    // recompute per side)
+    // (norms would recompute per reference)
     val base = persist(
       df.select(col(idCol).as("id"), col(embCol).as("emb"))
         .withColumn("nrm", norm(col("emb"))))
-    val keyed0 = persist(base.select(col("id"),
-      explode(lshBandBuckets(col("emb"), planesPerBand, bands, dim)).as("bucket")))
     // df-cap guard, same semantics as Dedup.minhashLshPairs: a dense
     // embedding region (boilerplate docs collapse to one point, so one
     // sign pattern) fills a bucket and its pair fan-out is |bucket|² —
     // cap it and let SemDeDup/exact dedup own the collapsed region.
-    val keyed = graft.core.Skew.dropHotKeys(keyed0, "bucket", maxBucketDocFreq)
-    // SHUFFLE_HASH: same postings-index rationale as Dedup.jaccardPairs —
-    // neither side of the self-join fits a broadcast at real scale.
-    val candidates = keyed.as("l")
-      .join(keyed.as("r").hint("shuffle_hash"), col("l.bucket") === col("r.bucket"))
-      .filter(col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-      .distinct()
+    val candidates = graft.core.Skew.bandPairs(base.select(col("id"),
+        explode(lshBandBuckets(col("emb"), planesPerBand, bands, dim)).as("bucket")),
+      "id", "bucket", maxBucketDocFreq)
     candidates
       .join(base.select(col("id").as("id_a"), col("emb").as("emb_a"), col("nrm").as("n_a")), "id_a")
       .join(base.select(col("id").as("id_b"), col("emb").as("emb_b"), col("nrm").as("n_b")), "id_b")

@@ -127,6 +127,6 @@ object SearchIndex {
   }
 
   private def readMeta(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/_meta").select(col("num_partitions"))
+    graft.core.Layout.readParts(spark, s"$path/_meta").select(col("num_partitions"))
       .collect()(0).getInt(0)
 }

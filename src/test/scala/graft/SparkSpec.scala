@@ -15,6 +15,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.core.CacheScope.releaseAll(spark)
   }
 
+  private val scratchDirs = scala.collection.mutable.ArrayBuffer[java.io.File]()
+
+  /** A fresh directory under the system temp dir for the suite's own
+    * tables, deleted when the suite ends. `CacheScope.releaseAll` does
+    * not touch it, so a test that releases storage mid-suite keeps its
+    * tables.
+    */
+  def scratch(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    scratchDirs += dir
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try scratchDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+    finally super.afterAll()
+
   /** Run `body` with an installed optimizer rule switched off through
     * Spark's own `spark.sql.optimizer.excludedRules` — the reference
     * plan a rewrite must match row for row. Plan and run the frame

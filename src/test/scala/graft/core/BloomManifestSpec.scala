@@ -13,7 +13,7 @@ class BloomManifestSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val dir = {
-    val root = java.nio.file.Files.createTempDirectory("bloomman").toString
+    val root = scratch("bloomman")
     (0L until 2000L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(16, col("id")).write.parquet(s"$root/t")
     Layout.writeBloomManifest(spark, s"$root/t", Seq("id"), 256, 0.01)
@@ -41,7 +41,7 @@ class BloomManifestSpec extends SparkSpec {
   }
 
   test("stale manifests are hard errors for blooms and counts") {
-    val root = java.nio.file.Files.createTempDirectory("bloomstale").toString
+    val root = scratch("bloomstale")
     (0L until 50L).map(i => (i, i)).toDF("id", "k")
       .repartition(2).write.parquet(s"$root/t")
     Layout.writeBloomManifest(spark, s"$root/t", Seq("id"), 64)
@@ -67,7 +67,7 @@ class BloomManifestSpec extends SparkSpec {
     // data lives ONLY under b<N>/ subdirs — a bare dir read cannot
     // infer a schema, so the zero-survivor branch must derive its
     // empty frame from the committed file list
-    val dir = java.nio.file.Files.createTempDirectory("bmv").toString + "/t"
+    val dir = scratch("bmv") + "/t"
     (0L until 40L).map(i => (i, i % 4)).toDF("id", "k")
       .write.parquet(s"$dir/b0")
     val fs = new org.apache.hadoop.fs.Path(dir)

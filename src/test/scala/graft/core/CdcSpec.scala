@@ -23,7 +23,7 @@ class CdcSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
 
   test("the mirror follows append, delete, merge, compact, and restore") {
-    val root = java.nio.file.Files.createTempDirectory("cdc").toString
+    val root = scratch("cdc")
     val src = s"$root/src"; val rep = s"$root/rep"
     (0L until 40L).map(i => (i, i % 7, s"v$i")).toDF("id", "w", "v")
       .repartitionByRange(4, col("id")).write.parquet(src)
@@ -55,7 +55,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("applying a feed is idempotent; postimage wins a same-commit pair") {
-    val root = java.nio.file.Files.createTempDirectory("cdcid").toString
+    val root = scratch("cdcid")
     val src = s"$root/src"; val rep = s"$root/rep"
     (0L until 10L).map(i => (i, i, s"v$i")).toDF("id", "w", "v")
       .write.parquet(src)
@@ -80,7 +80,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("key-set DELETE removes exactly the listed keys, copy-on-write") {
-    val dir = java.nio.file.Files.createTempDirectory("delm").toString + "/t"
+    val dir = scratch("delm") + "/t"
     (0L until 100L).map(i => (i, i % 10, s"v$i")).toDF("id", "w", "v")
       .repartitionByRange(4, col("id")).write.parquet(dir)
     VersionLog.snapshot(spark, dir)
@@ -97,7 +97,7 @@ class CdcSpec extends SparkSpec {
   }
 
   test("the mirror follows its source through additive schema evolution") {
-    val root = java.nio.file.Files.createTempDirectory("cdcevo").toString
+    val root = scratch("cdcevo")
     val src = s"$root/src"; val rep = s"$root/rep"
     (0L until 20L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(src)
     VersionLog.snapshot(spark, src) // v1: two columns

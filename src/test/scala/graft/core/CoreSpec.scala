@@ -92,7 +92,7 @@ class CoreSpec extends SparkSpec {
     import s.implicits._
     // parquet-backed (a local fixture would be folded by
     // ConvertToLocalRelation and hide the filter from the plan)
-    val dir = java.nio.file.Files.createTempDirectory("bloomj").toString
+    val dir = scratch("bloomj")
     (1L to 2000L).map(i => (i % 500, s"l$i")).toDF("k", "lv")
       .write.parquet(s"$dir/left")
     (1L to 40L).map(i => (i * 7, s"r$i")).toDF("k", "rv")

@@ -12,7 +12,7 @@ class DmlSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("dml").toString + "/t"
+    val dir = scratch("dml") + "/t"
     (0L until 100L).map(i => (i, i % 10, s"v$i")).toDF("id", "k", "v")
       .repartitionByRange(4, col("id")).write.parquet(dir)
     VersionLog.snapshot(spark, dir)
@@ -36,7 +36,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("null predicates keep rows; no-match deletes mint no version") {
-    val dir = java.nio.file.Files.createTempDirectory("dmln").toString + "/t"
+    val dir = scratch("dmln") + "/t"
     Seq((1L, Some(5L)), (2L, None), (3L, Some(50L)))
       .toDF("id", "w").write.parquet(dir)
     VersionLog.snapshot(spark, dir)
@@ -59,7 +59,7 @@ class DmlSpec extends SparkSpec {
     // empty partition writes one); a later delete whose only non-empty
     // untouched files are those must still look at the kept rows of
     // the affected files before refusing as "would empty the table"
-    val dir = java.nio.file.Files.createTempDirectory("dmlz").toString + "/t"
+    val dir = scratch("dmlz") + "/t"
     (0L until 40L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(8).write.parquet(dir) // 8 tasks, some may be tiny
     VersionLog.snapshot(spark, dir)
@@ -139,7 +139,7 @@ class DmlSpec extends SparkSpec {
   }
 
   test("merge accounting stays sane when the TABLE holds duplicate keys") {
-    val dir = java.nio.file.Files.createTempDirectory("dmldup").toString + "/t"
+    val dir = scratch("dmldup") + "/t"
     Seq((1L, "x"), (1L, "y"), (2L, "z")).toDF("id", "v").write.parquet(dir)
     VersionLog.snapshot(spark, dir)
     val (v2, replaced, inserted) = Dml.mergeInto(spark, dir,

@@ -11,7 +11,7 @@ class IncrementalSpec extends SparkSpec {
   import spark.implicits._
 
   test("each run sees exactly its delta; caught-up runs no-op") {
-    val root = java.nio.file.Files.createTempDirectory("incr").toString
+    val root = scratch("incr")
     val dir = s"$root/t"
     val cursor = s"$root/cursor"
     var seen = Vector.empty[Seq[Long]]
@@ -32,7 +32,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("a compacted source is transparent to the cursor (zero-row delta)") {
-    val root = java.nio.file.Files.createTempDirectory("incrcompact").toString
+    val root = scratch("incrcompact")
     val dir = s"$root/t"
     val cursor = s"$root/cursor"
     (0L until 10L).map(Tuple1(_)).toDF("id").write.parquet(dir)
@@ -50,7 +50,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("a DML source guides to runOnceFeed, which delivers signed rows") {
-    val root = java.nio.file.Files.createTempDirectory("incrdml").toString
+    val root = scratch("incrdml")
     val dir = s"$root/t"
     val cursor = s"$root/cursor"
     (0L until 10L).map(i => (i, i % 2)).toDF("id", "k").write.parquet(dir)
@@ -78,7 +78,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("a crash before the cursor write replays the same delta (at-least-once)") {
-    val root = java.nio.file.Files.createTempDirectory("incrc").toString
+    val root = scratch("incrc")
     val dir = s"$root/t"
     val cursor = s"$root/cursor"
     (0L until 5L).map(Tuple1(_)).toDF("id").write.parquet(dir)

@@ -13,7 +13,7 @@ class LakeCliSpec extends SparkSpec {
 
   test("full lifecycle flow through the CLI surface") {
     val cli = new LakeCli(spark)
-    val root = java.nio.file.Files.createTempDirectory("lakecli").toString
+    val root = scratch("lakecli")
     val dir = s"$root/t"
     (0L until 50L).map(i => (i, i % 5)).toDF("id", "k")
       .repartition(2).write.parquet(dir)
@@ -45,7 +45,7 @@ class LakeCliSpec extends SparkSpec {
 
   test("forget leaves no readable version with the rows") {
     val cli = new LakeCli(spark)
-    val root = java.nio.file.Files.createTempDirectory("lakeforget").toString
+    val root = scratch("lakeforget")
     val dir = s"$root/t"
     (0L until 30L).map(i => (i, i % 3)).toDF("id", "k").write.parquet(dir)
     cli.snapshot(dir)
@@ -60,7 +60,7 @@ class LakeCliSpec extends SparkSpec {
 
   test("forget covers marker-committed batches the snapshot lagged on") {
     val cli = new LakeCli(spark)
-    val root = java.nio.file.Files.createTempDirectory("lakelag").toString
+    val root = scratch("lakelag")
     val dir = s"$root/t"
     (0L until 20L).map(i => (i, i % 2)).toDF("id", "k")
       .write.parquet(dir)
@@ -89,7 +89,7 @@ class LakeCliSpec extends SparkSpec {
 
   test("forget heals manifests on a manifested table") {
     val cli = new LakeCli(spark)
-    val root = java.nio.file.Files.createTempDirectory("lakefzm").toString
+    val root = scratch("lakefzm")
     val dir = s"$root/t"
     (0L until 100L).map(i => (i, i % 5)).toDF("id", "k")
       .repartitionByRange(4, col("id")).write.parquet(dir)

@@ -54,8 +54,8 @@ class LayoutSpec extends SparkSpec {
       ((i % 16).toLong, ((i / 16) % 16).toLong, (i / 256).toLong)
     }
     val df = rows.toDF("x", "y", "z")
-    val d3 = java.nio.file.Files.createTempDirectory("z3").toString + "/t"
-    val d2 = java.nio.file.Files.createTempDirectory("z2").toString + "/t"
+    val d3 = scratch("z3") + "/t"
+    val d2 = scratch("z2") + "/t"
     Layout.writeZOrdered3(df, d3, col("x"), col("y"), col("z"), files = 8)
     Layout.writeZOrdered(df, d2, col("x"), col("y"), files = 8)
     Layout.writeManifest(spark, d3, Seq("x", "y", "z"))
@@ -78,8 +78,8 @@ class LayoutSpec extends SparkSpec {
       (i.toLong, x, y)
     }
     val df = rows.toDF("id", "x", "y")
-    val zDir = java.nio.file.Files.createTempDirectory("zorder").toString + "/z"
-    val xDir = java.nio.file.Files.createTempDirectory("zorder").toString + "/x"
+    val zDir = scratch("zorder") + "/z"
+    val xDir = scratch("zorder") + "/x"
     Layout.writeZOrdered(df, zDir, col("x"), col("y"), files = 16)
     // baseline: same file count, sorted on x only
     df.repartitionByRange(16, col("x")).sortWithinPartitions(col("x"))
@@ -107,7 +107,7 @@ class LayoutSpec extends SparkSpec {
       val y = (i * 40503L) % 64
       (i.toLong, x, y)
     }
-    val dir = java.nio.file.Files.createTempDirectory("zonemap").toString + "/t"
+    val dir = scratch("zonemap") + "/t"
     Layout.writeZOrdered(rows.toDF("id", "x", "y"), dir,
       col("x"), col("y"), files = 16)
     Layout.writeManifest(spark, dir, Seq("x", "y"))
@@ -134,7 +134,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zone-map manifest: a file appended after the build fails the pruned read loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("zonemapstale").toString + "/t"
+    val dir = scratch("zonemapstale") + "/t"
     val df = (0 until 100).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
       .toDF("id", "x", "y")
     Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)
@@ -155,7 +155,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("a box on a column without stats: prunedFiles names it, the soft form ignores it") {
-    val dir = java.nio.file.Files.createTempDirectory("zonemapcols").toString + "/t"
+    val dir = scratch("zonemapcols") + "/t"
     val df = (0 until 100).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
       .toDF("id", "x", "y")
     Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)
@@ -172,7 +172,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("incremental manifest append equals a full rebuild and only scans the new files") {
-    val dir = java.nio.file.Files.createTempDirectory("zonemapapp").toString + "/t"
+    val dir = scratch("zonemapapp") + "/t"
     val base = (0 until 1000).map(i => (i.toLong, i.toLong % 32, i.toLong % 17))
       .toDF("id", "x", "y")
     Layout.writeZOrdered(base, dir, col("x"), col("y"), files = 8)
@@ -182,7 +182,7 @@ class LayoutSpec extends SparkSpec {
       .toDF("id", "x", "y")
       .repartition(2).write.mode("append").parquet(dir)
     Layout.appendManifest(spark, dir)
-    def manRows() = spark.read.parquet(s"$dir/${Layout.ManifestDir}")
+    def manRows() = Layout.readParts(spark, s"$dir/${Layout.ManifestDir}")
       .collect().map(r => (new org.apache.hadoop.fs.Path(r.getString(
         r.fieldIndex("file"))).toUri.getPath,
         r.getLong(r.fieldIndex("n_rows")),
@@ -206,7 +206,7 @@ class LayoutSpec extends SparkSpec {
 
   test("manifests heal incrementally through DELETE, MERGE, and compact") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("zmdml").toString + "/t"
+    val dir = scratch("zmdml") + "/t"
     (0L until 1000L).map(i => (i, i % 5)).toDF("x", "k")
       .repartitionByRange(8, col("x")).write.parquet(dir)
     VersionLog.snapshot(spark, dir)
@@ -239,7 +239,7 @@ class LayoutSpec extends SparkSpec {
 
   test("bloom manifests heal incrementally through DML and compact too") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bldml").toString + "/t"
+    val dir = scratch("bldml") + "/t"
     (0L until 1000L).map(i => (i, i % 5)).toDF("x", "k")
       .repartitionByRange(8, col("x")).write.parquet(dir)
     VersionLog.snapshot(spark, dir)
@@ -256,7 +256,7 @@ class LayoutSpec extends SparkSpec {
 
   test("a crashed manifest swap heals from the complete .swap dir") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("swapheal").toString + "/t"
+    val dir = scratch("swapheal") + "/t"
     val df = (0 until 200).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
       .toDF("id", "x", "y")
     Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)
@@ -277,7 +277,7 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("readers use a staged complete .swap and leave it in place") {
-    val dir = java.nio.file.Files.createTempDirectory("swapread").toString + "/t"
+    val dir = scratch("swapread") + "/t"
     val df = (0 until 200).map(i => (i.toLong, i.toLong % 8, i.toLong % 5))
       .toDF("id", "x", "y")
     Layout.writeZOrdered(df, dir, col("x"), col("y"), files = 4)

@@ -21,8 +21,7 @@ class LifecyclePropertySpec extends SparkSpec {
   test("random op interleavings: feed reproduces every version pair; mirror tracks") {
     val rnd = new scala.util.Random(20260815L)
     (0 until 3).foreach { trial =>
-      val root = java.nio.file.Files
-        .createTempDirectory(s"lprop$trial").toString
+      val root = scratch(s"lprop$trial")
       val src = s"$root/src"; val rep = s"$root/rep"
       (0L until 60L).map(i => (i, i % 5, s"p$i")).toDF("id", "k", "p")
         .repartitionByRange(3, col("id")).write.parquet(src)

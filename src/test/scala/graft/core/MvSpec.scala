@@ -15,7 +15,7 @@ class MvSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
   test("refreshes fold deltas; result equals the full recompute") {
-    val root = java.nio.file.Files.createTempDirectory("mv").toString
+    val root = scratch("mv")
     val src = s"$root/src"; val mv = s"$root/mv"
     Seq(("a", 1L), ("a", 2L), ("b", 10L)).toDF("k", "w").write.parquet(src)
     VersionLog.snapshot(spark, src)
@@ -29,7 +29,7 @@ class MvSpec extends SparkSpec {
   }
 
   test("a replay after marker loss rewrites the state, never double-folds") {
-    val root = java.nio.file.Files.createTempDirectory("mvr").toString
+    val root = scratch("mvr")
     val src = s"$root/src"; val mv = s"$root/mv"
     Seq(("a", 1L)).toDF("k", "w").write.parquet(src)
     VersionLog.snapshot(spark, src)
@@ -48,7 +48,7 @@ class MvSpec extends SparkSpec {
   }
 
   test("prune keeps the newest states and the MV stays readable") {
-    val root = java.nio.file.Files.createTempDirectory("mvp").toString
+    val root = scratch("mvp")
     val src = s"$root/src"; val mv = s"$root/mv"
     (1 to 4).foreach { i =>
       Seq((s"k$i", i.toLong)).toDF("k", "w").write.mode("append").parquet(src)
@@ -65,7 +65,7 @@ class MvSpec extends SparkSpec {
   }
 
   test("refresh survives compaction: ingest-refresh-compact-ingest-refresh") {
-    val root = java.nio.file.Files.createTempDirectory("mvc").toString
+    val root = scratch("mvc")
     val src = s"$root/src"; val mv = s"$root/mv"
     Seq(("a", 1L), ("b", 2L)).toDF("k", "w").write.parquet(src)
     VersionLog.snapshot(spark, src) // v1
@@ -83,7 +83,7 @@ class MvSpec extends SparkSpec {
   }
 
   test("refresh folds DELETE/MERGE deltas; emptied groups leave the MV") {
-    val root = java.nio.file.Files.createTempDirectory("mvd").toString
+    val root = scratch("mvd")
     val src = s"$root/src"; val mv = s"$root/mv"
     Seq(("a", 1L, 1L), ("a", 2L, 2L), ("b", 3L, 10L), ("c", 4L, 7L))
       .toDF("k", "id", "w").write.parquet(src)
@@ -106,7 +106,7 @@ class MvSpec extends SparkSpec {
   }
 
   test("a vacuumed source refuses incremental refresh; rebuild recovers") {
-    val root = java.nio.file.Files.createTempDirectory("mvv").toString
+    val root = scratch("mvv")
     val src = s"$root/src"; val mv = s"$root/mv"
     Seq(("a", 1L), ("b", 2L)).toDF("k", "w").write.parquet(src)
     VersionLog.snapshot(spark, src) // v1

@@ -35,7 +35,7 @@ class RangeDictJoinSpec extends SparkSpec {
 
   test("the plan has no join operator and stays in whole-stage codegen") {
     // parquet-backed: a LocalRelation would be constant-folded away
-    val root = java.nio.file.Files.createTempDirectory("rdict").toString
+    val root = scratch("rdict")
     points.write.parquet(s"$root/points")
     val pts = spark.read.parquet(s"$root/points")
     val q = Joins.rangeDictJoin(pts, "p", dims, "tid", "lo", "hi", "t")

@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,7 +11,7 @@ class SinksSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val df = Seq(("0xa", 1.5), ("0xb", 0.0)).toDF("address", "balance")
-    val path = Files.createTempDirectory("csvout").toString + "/balances"
+    val path = scratch("csvout") + "/balances"
     Sinks.writeCsv(df, path, singleFile = true)
     val back = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
     assert(back.columns.toSeq === Seq("address", "balance"))
@@ -31,7 +29,7 @@ class SinksSpec extends SparkSpec {
   test("A32: maxRecordsPerFile chunks the append into multiple files") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("chunkstore").toString
+    val root = scratch("chunkstore")
     val store = new graft.eth.EthStore(spark, root)
     val rows = (1 to 100).map(i => (s"0x$i", "f", 1.toShort))
       .toDF("id", "name", "value")
@@ -45,7 +43,7 @@ class SinksSpec extends SparkSpec {
   test("compact collapses versions; interrupted swap states recover on read") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("compactstore").toString
+    val root = scratch("compactstore")
     val store = new graft.eth.EthStore(spark, root)
     def flags(v: Short) = Seq(("0xa", "f", v), ("0xb", "f", v))
       .toDF("id", "name", "value")

@@ -12,7 +12,7 @@ class VersionLogSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("vlog").toString + "/t"
+    val dir = scratch("vlog") + "/t"
     (0L until 100L).map(i => (i, i % 10)).toDF("id", "k")
       .repartition(4).write.parquet(dir)
     dir
@@ -46,7 +46,7 @@ class VersionLogSpec extends SparkSpec {
     VersionLog.snapshot(spark, dir)
     // compact: rewrite the whole table as one file (old files gone)
     val all = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getLong(1)))
-    val tmp = java.nio.file.Files.createTempDirectory("vlogc").toString + "/c"
+    val tmp = scratch("vlogc") + "/c"
     all.toSeq.toDF("id", "k").coalesce(1).write.parquet(tmp)
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -72,7 +72,7 @@ class VersionLogSpec extends SparkSpec {
       VersionLog.readVersion(spark, dir, 7)
     }
     intercept[IllegalArgumentException] { VersionLog.latest(spark, dir) }
-    val empty = java.nio.file.Files.createTempDirectory("vloge").toString + "/t"
+    val empty = scratch("vloge") + "/t"
     new java.io.File(empty).mkdirs()
     intercept[IllegalArgumentException] { VersionLog.snapshot(spark, empty) }
   }
@@ -379,7 +379,7 @@ class VersionLogSpec extends SparkSpec {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = java.nio.file.Files.createTempDirectory("vlogocc").toString + "/t"
+    val dir = scratch("vlogocc") + "/t"
     (0L until 10L).map(i => (i, 0L)).toDF("id", "k").write.parquet(dir)
     VersionLog.snapshot(spark, dir)
     val futures = (0 until 4).map { w =>
@@ -439,7 +439,7 @@ class VersionLogSpec extends SparkSpec {
   }
 
   test("OPTIMIZE ZORDER re-clusters rows prunably and stays a no-op to feeds") {
-    val dir = java.nio.file.Files.createTempDirectory("vlogz").toString + "/t"
+    val dir = scratch("vlogz") + "/t"
     // two dims deliberately scattered: hash-partitioned writes give
     // every file a near-full range in both columns
     (0L until 4096L).map(i => (i % 64, i / 64, i)).toDF("a", "b", "id")

@@ -1,7 +1,5 @@
 package graft.curation
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,7 +17,7 @@ class CorpusIoSpec extends SparkSpec {
   test("writeJsonl -> readJsonl round-trips rows losslessly (gzip)") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("jsonl").toString
+    val root = scratch("jsonl")
     val docs = Seq(
       (1L, "plain text", "web"),
       (2L, "quotes \" and \\ backslashes and\nnewlines", "web"),
@@ -37,7 +35,7 @@ class CorpusIoSpec extends SparkSpec {
   }
 
   test("corrupt lines land in _corrupt, never kill the read, and drop on request") {
-    val root = Files.createTempDirectory("jsonlbad").toString
+    val root = scratch("jsonlbad")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/mixed.jsonl"),
       """{"doc_id": 1, "text": "good", "source": "web"}
@@ -63,7 +61,7 @@ class CorpusIoSpec extends SparkSpec {
   test("output field order follows the frame's column order (deterministic interchange)") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("jsonlord").toString
+    val root = scratch("jsonlord")
     CorpusIo.writeJsonl(
       Seq((9L, "t", "src")).toDF("doc_id", "text", "source"),
       s"$root/o", codec = "none")

@@ -138,7 +138,7 @@ class CurationSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val docs = (0 until 200).map(i => (i.toLong, s"text $i")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("shards").toString
+    val dir = scratch("shards")
     Curation.writeTrainingShards(docs, "doc_id", dir, numShards = 4)
     val back = spark.read.parquet(dir)
     assert(back.count() === 200)
@@ -163,7 +163,7 @@ class CurationSpec extends SparkSpec {
     val docs = (0 until 300).map(i =>
       (i.toLong, s"text body $i", if (i % 3 == 0) "a" else "b"))
       .toDF("doc_id", "text", "source")
-    val dir = java.nio.file.Files.createTempDirectory("shards_rt").toString
+    val dir = scratch("shards_rt")
     Curation.writeTrainingShards(docs, "doc_id", dir, numShards = 4)
 
     // reader round-trip: (shard, shard_pos)-ordered ids equal the

@@ -16,7 +16,7 @@ class OrcIoSpec extends SparkSpec {
       (2L, None, Seq.empty[Float], None),
       (3L, Some("tab\tline\nfeed"), Seq(0f), Some(-0.0)))
       .toDF("id", "txt", "vec", "score")
-    val dir = java.nio.file.Files.createTempDirectory("orc").toString + "/t"
+    val dir = scratch("orc") + "/t"
     CorpusIo.writeOrc(df, dir)
     val back = CorpusIo.readOrc(spark, dir)
     // ORC reads back nullable (like parquet); names and types must match
@@ -27,7 +27,7 @@ class OrcIoSpec extends SparkSpec {
   }
 
   test("filters push down to the ORC scan") {
-    val dir = java.nio.file.Files.createTempDirectory("orcp").toString + "/t"
+    val dir = scratch("orcp") + "/t"
     CorpusIo.writeOrc(spark.range(0, 1000).select(
       col("id"), (col("id") % 10).as("k")), dir)
     val q = CorpusIo.readOrc(spark, dir).filter(col("k") === 3L)

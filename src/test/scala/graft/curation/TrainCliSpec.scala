@@ -1,7 +1,5 @@
 package graft.curation
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -14,7 +12,7 @@ class TrainCliSpec extends SparkSpec {
   test("the command chain runs end-to-end on parquet dirs and is rerun-safe") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
 
     Seq(
@@ -42,7 +40,7 @@ class TrainCliSpec extends SparkSpec {
   test("dedupLines, cap, and token mix commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli2").toString
+    val root = scratch("traincli2")
     val cli = new TrainCli(spark)
     Seq(
       (1L, "unique one\nshared footer", "a"),
@@ -79,7 +77,7 @@ class TrainCliSpec extends SparkSpec {
   test("split and bloomGate commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli3").toString
+    val root = scratch("traincli3")
     val cli = new TrainCli(spark)
     (0L until 200L).map(i => (i, s"document body $i", "a"))
       .toDF("doc_id", "text", "source").write.parquet(s"$root/docs")
@@ -105,7 +103,7 @@ class TrainCliSpec extends SparkSpec {
   test("sample and encode commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli4").toString
+    val root = scratch("traincli4")
     val cli = new TrainCli(spark)
     (0L until 100L).map(i => (i, "lower slow the of and in to a words here"))
       .toDF("doc_id", "text").write.parquet(s"$root/docs")
@@ -126,7 +124,7 @@ class TrainCliSpec extends SparkSpec {
   test("search, classify, and overlap commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli5").toString
+    val root = scratch("traincli5")
     val cli = new TrainCli(spark)
     Seq(
       (1L, "spark spark engines", "en", "a"),
@@ -154,7 +152,7 @@ class TrainCliSpec extends SparkSpec {
   test("components, fuzzy, resample, and stratify commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli7").toString
+    val root = scratch("traincli7")
     val cli = new TrainCli(spark)
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river", "a"),
@@ -192,7 +190,7 @@ class TrainCliSpec extends SparkSpec {
   test("index lifecycle, ingest, incremental labels, chunkSnap, quality commands") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli3").toString
+    val root = scratch("traincli3")
     val cli = new TrainCli(spark)
     val A = "the quick brown fox jumps over the lazy dog by the river bank"
     val B = "structured streaming checkpoints its progress in a write ahead. log"
@@ -237,7 +235,7 @@ class TrainCliSpec extends SparkSpec {
   test("drift / overlapKmv / extractHtml: the batch-gate trio chains on parquet dirs") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli7").toString
+    val root = scratch("traincli7")
     val cli = new TrainCli(spark)
     val ref = (1 to 20).map(i =>
       (i.toLong, "the quick brown fox jumps over the lazy dog again and again", "web"))
@@ -271,7 +269,7 @@ class TrainCliSpec extends SparkSpec {
   test("pcaMoments folds batches into standing stats; pcaProject consumes them") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli8").toString
+    val root = scratch("traincli8")
     val cli = new TrainCli(spark)
     val rnd = new scala.util.Random(5)
     def batch(ids: Range): Seq[(Long, Seq[Double])] =
@@ -297,7 +295,7 @@ class TrainCliSpec extends SparkSpec {
   test("trainBpe writes the rank parquet encode consumes — the full tokenizer loop") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli6").toString
+    val root = scratch("traincli6")
     val cli = new TrainCli(spark)
     Seq((1L, "ab ab ab"), (2L, "abc")).toDF("doc_id", "text")
       .write.parquet(s"$root/docs")
@@ -311,7 +309,7 @@ class TrainCliSpec extends SparkSpec {
   test("graph commands: pagerank, related, propagate, splitSafe on a near-dup corpus") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
     Seq(
       (0L, "the quick brown fox jumps over the lazy dog near the river bank today", Some("en")),
@@ -348,7 +346,7 @@ class TrainCliSpec extends SparkSpec {
   test("searchIndexBuild/Query, cdc, canary commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
     Seq(
       (1L, "spark joins shuffle data between stages"),
@@ -380,7 +378,7 @@ class TrainCliSpec extends SparkSpec {
   test("semdecon, knnGraph, taggers commands round-trip through parquet") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
 
     // corpus: 10 ≈ probe direction (contaminated), 11 orthogonal,
@@ -422,7 +420,7 @@ class TrainCliSpec extends SparkSpec {
   test("importJsonl/exportJsonl: the interchange loop round-trips and quarantines bad lines") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/drop.jsonl"),
@@ -442,7 +440,7 @@ class TrainCliSpec extends SparkSpec {
   test("forget removes ids from corpus AND index; rerun-safe; probe finds nothing") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("traincli").toString
+    val root = scratch("traincli")
     val cli = new TrainCli(spark)
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog today", "web"),

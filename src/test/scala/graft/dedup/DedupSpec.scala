@@ -71,6 +71,18 @@ class DedupSpec extends SparkSpec {
         val slow = Dedup.jaccardPairsByCount(docs, "doc_id", "text", n = 2, tau = tau)
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
         assert(fast === slow, s"seed=$seed tau=$tau: filtered pairs diverged")
+        // reference/batch split: the cross-corpus join finds exactly the
+        // cross pairs, as (ref_id, new_id)
+        val isRef = col("doc_id") % 2 === 0
+        val against = Dedup.jaccardPairsAgainst(
+            docs.filter(isRef), "doc_id", "text",
+            docs.filter(!isRef), "doc_id", "text", n = 2, tau = tau)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        val cross = slow.collect {
+          case (a, b, j) if a % 2 == 0 && b % 2 != 0 => (a, b, j)
+          case (a, b, j) if a % 2 != 0 && b % 2 == 0 => (b, a, j)
+        }
+        assert(against === cross, s"seed=$seed tau=$tau: cross-corpus pairs diverged")
       }
     }
   }

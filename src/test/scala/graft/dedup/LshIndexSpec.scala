@@ -48,7 +48,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("probe == in-memory minhashLshPairs cross pairs; pruning reaches the scan") {
     spark.catalog.clearCache()
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = scratch("lshidx")
     LshIndex.write(ref, "doc_id", "text", dir,
       n = 3, numHashes = 64, bands = 16, numPartitions = 8)
     val (got, plan) = CacheScope.withReleased {
@@ -73,7 +73,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("append extends the index; probing after append sees the batch") {
     spark.catalog.clearCache()
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = scratch("lshidx")
     LshIndex.write(ref, "doc_id", "text", dir,
       n = 3, numHashes = 64, bands = 16, numPartitions = 8)
     LshIndex.append(spark, dir, batch, "doc_id", "text")
@@ -100,7 +100,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("delete forgets docs: probe == index rebuilt without them; untouched partitions not rewritten") {
     spark.catalog.clearCache()
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = scratch("lshidx")
     LshIndex.write(ref, "doc_id", "text", dir,
       n = 3, numHashes = 64, bands = 16, numPartitions = 8)
     // snapshot every partition file's (path, size, mtime) before delete
@@ -129,7 +129,7 @@ class LshIndexSpec extends SparkSpec {
         .orderBy("ref_id", "new_id").as[(Long, Long, Double)].collect().toSeq
     }
     // equality with a FRESH index over corpus \ deleted
-    val dir2 = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir2 = scratch("lshidx")
     LshIndex.write(ref.filter(!col("doc_id").isin(1L, 2L, 6L)),
       "doc_id", "text", dir2, n = 3, numHashes = 64, bands = 16, numPartitions = 8)
     val want = CacheScope.withReleased {
@@ -156,7 +156,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("hot-bucket guard drops template buckets like the in-memory form") {
     spark.catalog.clearCache()
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = scratch("lshidx")
     // 6 copies of one template: every band bucket of the template holds
     // 6 ref docs; cap 5 drops them all, so the probe of a 7th copy
     // finds nothing through LSH

@@ -2,7 +2,6 @@ package graft.eth
 
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
 
@@ -38,7 +37,7 @@ class BalancesServerSpec extends SparkSpec {
   }
 
   test("POST /balances/ and /token_balances/<token> serve the reference fixture maps") {
-    val root = Files.createTempDirectory("balsrv").toString
+    val root = scratch("balsrv")
     val store = new EthStore(spark, root)
     // the test_balances.py transaction fixture (dup-id uncle row -> id 5)
     val itx = Seq(
@@ -91,7 +90,7 @@ class BalancesServerSpec extends SparkSpec {
   }
 
   test("compact CLI command collapses the upsert history, FINAL view unchanged") {
-    val root = Files.createTempDirectory("clicompact").toString
+    val root = scratch("clicompact")
     val store = new EthStore(spark, root)
     val cli = new Cli(store, emptySource)
     // two upsert generations of the same key -> two raw rows

@@ -105,7 +105,7 @@ class BalancesSpec extends SparkSpec {
   }
 
   test("balances.sql end-to-end: universe -> five joins -> headered CSV") {
-    val path = java.nio.file.Files.createTempDirectory("balcsv").toString + "/balances"
+    val path = scratch("balcsv") + "/balances"
     Balances.batchBalancesCsv(miniChain, path)
     val back = spark.read.option("header", "true").option("inferSchema", "true")
       .csv(path)

@@ -1,6 +1,5 @@
 package graft.eth
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -56,7 +55,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("start-full populates blocks, traces, events, MVs, descriptions, ABIs, inputs") {
-    val root = Files.createTempDirectory("clistore").toString
+    val root = scratch("clistore")
     val store = new EthStore(spark, root)
 
     AdapterCallCounters.reset()
@@ -135,7 +134,7 @@ class CliSpec extends SparkSpec {
     // the exact fixture of examples/balances_api/tests/test_balances.py
     // :34-90 (the duplicate-id uncle row gets id 5 — the reference's
     // plain MergeTree test table keeps dup ids; our FINAL view dedups)
-    val root = Files.createTempDirectory("clibal").toString
+    val root = scratch("clibal")
     val store = new EthStore(spark, root)
     val itx = Seq(
       ("1", Some("0x1"), Some("0x2"), None: Option[String], 10000L, 0.01, "call", None: Option[String], 1L, 100.0),
@@ -198,7 +197,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("artifact commands write the dashboards, the balances CSV and the gas-stats frame") {
-    val root = Files.createTempDirectory("cliart").toString
+    val root = scratch("cliart")
     val store = new EthStore(spark, root)
     store.append("block", Seq((0L, "2020-01-01 09:00:00", "b0"),
         (1L, "2020-01-01 10:00:00", "b1"), (2L, "2020-01-01 11:00:00", "b2"))
@@ -236,7 +235,7 @@ class CliSpec extends SparkSpec {
   }
 
   test("read-only commands run without --rpc; a fetching command still needs one") {
-    val root = Files.createTempDirectory("clinorpc").toString
+    val root = scratch("clinorpc")
     new EthStore(spark, root).append("internal_transaction", Seq(
         ("1", Some("0x1"), Some("0x2"), None: Option[String], 0L, 0.0, "call", None: Option[String], 1L, 5.0))
       .toDF("id", "from", "to", "author", "gasUsed", "gasPrice", "type",

@@ -115,7 +115,7 @@ class DashboardsSpec extends SparkSpec {
     import org.json4s._
     import org.json4s.jackson.JsonMethods._
 
-    val dir = java.nio.file.Files.createTempDirectory("grafana").toString
+    val dir = scratch("grafana")
     val written = DashboardArtifacts.writeAll(dir)
     assert(written.size === 4) // 3 dashboards + datasource stub
 

@@ -1,6 +1,5 @@
 package graft.eth
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ class ModelsSpec extends SparkSpec {
   test("typedFinal round-trips events and internal transactions") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("typedstore").toString
+    val root = scratch("typedstore")
     val store = new EthStore(spark, root)
 
     store.append("event", Seq(

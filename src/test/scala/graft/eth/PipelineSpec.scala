@@ -1,6 +1,5 @@
 package graft.eth
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -101,7 +100,7 @@ class PipelineSpec extends SparkSpec {
   test("full pipeline run: sync, derive, decode, idempotent re-run") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("ethstore").toString
+    val root = scratch("ethstore")
     val store = new EthStore(spark, root)
     val genesisAllocs = Seq(("0xgenesis", 100.0)).toDF("address", "value")
     val pipeline = new Pipeline(store, fixtureSource, genesis = Some(genesisAllocs))
@@ -199,7 +198,7 @@ class PipelineSpec extends SparkSpec {
   test("decode work plan: ABI blobs never transit a broadcast, join key-partitioned") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("ethstore-plan").toString
+    val root = scratch("ethstore-plan")
     val store = new EthStore(spark, root)
     val pipeline = new Pipeline(store, fixtureSource)
     store.append("contract_abi",

@@ -58,7 +58,7 @@ class HeavyHittersSpec extends SparkSpec {
   test("streams: the sketch aggregates across micro-batches in complete mode") {
     val s = spark
     import s.implicits._
-    val root = java.nio.file.Files.createTempDirectory("hhstream").toString
+    val root = scratch("hhstream")
     val in = s"$root/toks"
     (Seq.fill(3)("a") ++ Seq("b")).toDF("tok").coalesce(1)
       .write.mode("append").parquet(in)

@@ -84,7 +84,7 @@ class MultimodalSpec extends SparkSpec {
           x => org.apache.spark.sql.functions.round(x, 6)).as("emb"))
     // persist like a real pipeline would (parquet-backed vectors, not
     // row-encoder arrays), then the banded-LSH path over the table
-    val dir = java.nio.file.Files.createTempDirectory("mediaemb").toString + "/emb"
+    val dir = scratch("mediaemb") + "/emb"
     emb.write.parquet(dir)
     val stored = spark.read.parquet(dir)
     val exact = graft.similarity.Similarity.cosinePairsExact(

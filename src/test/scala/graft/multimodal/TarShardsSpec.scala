@@ -22,7 +22,7 @@ class TarShardsSpec extends SparkSpec {
     .withColumn("payload", col("text").cast("binary"))
 
   test("round trip is lossless, including empty and unicode payloads") {
-    val dir = java.nio.file.Files.createTempDirectory("tar").toString + "/w"
+    val dir = scratch("tar") + "/w"
     val summary = TarShards.write(corpus, "id", "payload", "meta", dir, 3)
     assert(summary.agg(sum("n_docs")).collect()(0).getLong(0) === 5L)
     val back = TarShards.read(spark, dir)
@@ -33,8 +33,8 @@ class TarShardsSpec extends SparkSpec {
   }
 
   test("writes are byte-deterministic across runs") {
-    val d1 = java.nio.file.Files.createTempDirectory("tar1").toString + "/w"
-    val d2 = java.nio.file.Files.createTempDirectory("tar2").toString + "/w"
+    val d1 = scratch("tar1") + "/w"
+    val d2 = scratch("tar2") + "/w"
     TarShards.write(corpus, "id", "payload", "meta", d1, 2)
     TarShards.write(corpus.orderBy(rand(7)), "id", "payload", "meta", d2, 2)
     def bytes(d: String) = new java.io.File(d).listFiles().filter(_.getName.endsWith(".tar"))
@@ -74,7 +74,7 @@ class TarShardsSpec extends SparkSpec {
   }
 
   test("a sample missing its bin entry fails the read loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("tarbad").toString + "/w"
+    val dir = scratch("tarbad") + "/w"
     new java.io.File(dir).mkdirs()
     val meta = """{"lang":"en"}""".getBytes(StandardCharsets.UTF_8)
     val arch = TarShards.header("orphan.json", meta.length.toLong) ++ meta ++
@@ -87,7 +87,7 @@ class TarShardsSpec extends SparkSpec {
 
   test("duplicate ids are rejected at write time, not collapsed on read") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tardup").toString + "/w"
+    val dir = scratch("tardup") + "/w"
     val df = Seq(
       ("a", Array[Byte](1), "{}"),
       ("a", Array[Byte](2), "{}"),
@@ -100,7 +100,7 @@ class TarShardsSpec extends SparkSpec {
   }
 
   test("a foreign tar with repeated entry names fails the read loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("tardup2").toString + "/w"
+    val dir = scratch("tardup2") + "/w"
     new java.io.File(dir).mkdirs()
     val meta = "{}".getBytes(StandardCharsets.UTF_8)
     val bin = Array[Byte](1, 2, 3)

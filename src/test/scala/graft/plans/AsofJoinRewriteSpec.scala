@@ -13,7 +13,7 @@ class AsofJoinRewriteSpec extends SparkSpec {
 
   private lazy val dir = {
     // parquet-backed: LocalRelation fixtures constant-fold and hide plans
-    val root = java.nio.file.Files.createTempDirectory("asofrw").toString
+    val root = scratch("asofrw")
     // probes: (pid, k, t)
     Seq((1L, 1L, 100L), (2L, 1L, 250L), (3L, 2L, 100L), (4L, 3L, 500L),
       (5L, 1L, 100L) /* duplicate (k,t) under a distinct pid */)

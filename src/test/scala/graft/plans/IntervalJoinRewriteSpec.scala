@@ -14,7 +14,7 @@ class IntervalJoinRewriteSpec extends SparkSpec {
 
   private lazy val dir = {
     // parquet-backed: LocalRelations get folded and would hide plans
-    val root = java.nio.file.Files.createTempDirectory("ivjoin").toString
+    val root = scratch("ivjoin")
     Seq[(Long, Option[Long])]((1L, Some(5L)), (2L, Some(10L)),
       (3L, Some(250L)), (4L, Some(999L)), (5L, Some(-7L)), (6L, None))
       .toDF("pid", "p").write.parquet(s"$root/points")

@@ -18,7 +18,7 @@ class ZoneMapPruneRuleSpec extends SparkSpec {
 
   /** (a, b, id) rows z-ordered into 8 files with a manifest on (a, b). */
   private lazy val dir = {
-    val root = java.nio.file.Files.createTempDirectory("zmrule").toString
+    val root = scratch("zmrule")
     val df = (0L until 4096L).map(i => (i % 64, i / 64, i)).toDF("a", "b", "id")
     Layout.writeZOrdered(df, s"$root/t", col("a"), col("b"), files = 8)
     Layout.writeManifest(spark, s"$root/t", Seq("a", "b"))
@@ -59,7 +59,7 @@ class ZoneMapPruneRuleSpec extends SparkSpec {
   }
 
   test("stale manifest disables pruning but never correctness") {
-    val root = java.nio.file.Files.createTempDirectory("zmstale").toString
+    val root = scratch("zmstale")
     val t = s"$root/t"
     (0L until 100L).map(i => (i, i)).toDF("a", "id")
       .repartition(2).write.parquet(t)
@@ -75,7 +75,7 @@ class ZoneMapPruneRuleSpec extends SparkSpec {
     // id has no zone maps; a string predicate has no box at all
     val q1 = spark.read.parquet(dir).filter(col("id") <= 10L)
     assert(prunedSizes(q1).isEmpty)
-    val root = java.nio.file.Files.createTempDirectory("zmstr").toString
+    val root = scratch("zmstr")
     Seq((1L, "x"), (2L, "y")).toDF("a", "s").write.parquet(s"$root/t")
     Layout.writeManifest(spark, s"$root/t", Seq("a"))
     val q2 = spark.read.parquet(s"$root/t").filter(col("s") === "x")
@@ -123,7 +123,7 @@ class ZoneMapPruneRuleSpec extends SparkSpec {
   test("a versioned committed-view scan prunes; old versions never do") {
     import graft.core.VersionLog
     import graft.streaming.IngestStreams
-    val root = java.nio.file.Files.createTempDirectory("zmv").toString
+    val root = scratch("zmv")
     val t = s"$root/t"
     // three versioned landings, each range-clustered on `a` so files
     // carry tight boxes; the manifest is maintained incrementally

@@ -483,7 +483,7 @@ class PlanSpec extends SparkSpec {
   test("q122: index probe is broadcast-only — pruned scans, no shuffle joins, no cartesian") {
     // build once here (plan() would re-run the write each call)
     val docs = graft.Tables.load(spark, dir, "documents")
-    val tmp = java.nio.file.Files.createTempDirectory("lshplan").toString
+    val tmp = scratch("lshplan")
     graft.dedup.LshIndex.write(
       docs.filter(org.apache.spark.sql.functions.col("doc_id") % 3 === 0),
       "doc_id", "text", tmp, numPartitions = 16)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -13,7 +12,7 @@ class AggStreamsSpec extends SparkSpec {
   test("streamed state equals a batch recompute; replays are idempotent") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("aggstream").toString
+    val root = scratch("aggstream")
     val in = s"$root/events"
     val statePath = s"$root/state"
 

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("novelDocuments: first occurrence emitted once, cross-batch dups suppressed") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("corpusstream").toString
+    val root = scratch("corpusstream")
     val in = s"$root/docs"
 
     // batch file 1: two docs, one internal dup (4 dups 1)
@@ -59,7 +58,7 @@ class CorpusStreamsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     spark.catalog.clearCache()
-    val root = Files.createTempDirectory("lshingest").toString
+    val root = scratch("lshingest")
     val (idx, out) = (s"$root/idx", s"$root/out")
     val A = "the quick brown fox jumps over the lazy dog by the river bank"
     val B = "structured streaming checkpoints its progress in a write ahead log"
@@ -105,7 +104,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("nearDedupIngest: end-to-end streaming probe -> filter -> append loop") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("lshingeststream").toString
+    val root = scratch("lshingeststream")
     val (in, idx, out, ckpt) = (s"$root/docs", s"$root/idx", s"$root/out", s"$root/ckpt")
     val A = "the quick brown fox jumps over the lazy dog by the river bank"
     val B = "structured streaming checkpoints its progress in a write ahead log"
@@ -150,7 +149,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("map-only curation ops (splitByHash, hashSample) run unchanged on a stream") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("mapstream").toString
+    val root = scratch("mapstream")
     val in = s"$root/docs"
     val docs = (0L until 300L).map(i => (i, s"doc body $i"))
     docs.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
@@ -180,7 +179,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("bloom ingestion gate runs stateless on a stream and matches the batch gate") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("bloomstream").toString
+    val root = scratch("bloomstream")
     val in = s"$root/batchdocs"
     val ref = (0L until 200L).map(i => (i, s"reference text $i")).toDF("doc_id", "text")
     val arriving = ((500L until 540L).map(i => (i, s"novel text $i")) ++
@@ -208,7 +207,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("contaminationFilter drops probe-overlapping docs on a live stream") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("corpusstream3").toString
+    val root = scratch("corpusstream3")
     val in = s"$root/docs"
     Seq(
       (1L, "the quick brown fox jumps over the lazy dog"), // shares probe trigrams
@@ -239,7 +238,7 @@ class CorpusStreamsSpec extends SparkSpec {
   test("dedupWithinHorizon: watermarked fingerprint dedup keeps one row per content") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("corpusstream2").toString
+    val root = scratch("corpusstream2")
     val in = s"$root/docs"
     Seq(
       (1L, "same words here", Timestamp.valueOf("2026-01-01 10:00:00")),

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -30,7 +29,7 @@ class DerivedStreamsSpec extends SparkSpec {
   test("tokenTransfers stream dedups re-appended ids; highwater persists via foreachBatch") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("streamstore").toString
+    val root = scratch("streamstore")
     val store = new EthStore(spark, root)
 
     // first ingest: two events; then an upsert re-appends event e1
@@ -79,7 +78,7 @@ class DerivedStreamsSpec extends SparkSpec {
   test("windowedEventCounts: watermarked window agg over a deduped stream, append mode") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("streamstore3").toString
+    val root = scratch("streamstore3")
     val store = new EthStore(spark, root)
     // two events in hour 0, one in hour 1; e1 re-appended (upsert)
     store.append("event", eventRows(Seq(("e1", 10L), ("e2", 11L), ("e3", 12L)), 1L), 1L)
@@ -122,7 +121,7 @@ class DerivedStreamsSpec extends SparkSpec {
   test("null address/blockNumber rows are dropped before the typed highwater state") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("streamstore2").toString
+    val root = scratch("streamstore2")
     val store = new EthStore(spark, root)
     val withNull = eventRows(Seq(("e1", 10L)), 1L)
       .unionByName(eventRows(Seq(("e2", 0L)), 1L)

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -16,7 +15,7 @@ class IngestStreamsSpec extends SparkSpec {
   import spark.implicits._
 
   test("batches land exactly once; replays no-op; versions accrue") {
-    val dir = Files.createTempDirectory("ingest").toString + "/t"
+    val dir = scratch("ingest") + "/t"
     IngestStreams.ingestBatch(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), 0L, dir)
     IngestStreams.ingestBatch(Seq((3L, "c")).toDF("id", "v"), 1L, dir)
     IngestStreams.ingestBatch(Seq((3L, "c")).toDF("id", "v"), 1L, dir) // replay
@@ -32,7 +31,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("crash window 1: partial batch dir without a marker is rewritten cleanly") {
-    val dir = Files.createTempDirectory("ingestc1").toString + "/t"
+    val dir = scratch("ingestc1") + "/t"
     IngestStreams.ingestBatch(Seq((1L, "a")).toDF("id", "v"), 0L, dir)
     // simulate a crashed attempt of batch 1: data landed, no marker
     Seq((99L, "junk"), (98L, "junk")).toDF("id", "v")
@@ -44,7 +43,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("crash window 2: marker without snapshot = lag, repaired by the next snapshot") {
-    val dir = Files.createTempDirectory("ingestc2").toString + "/t"
+    val dir = scratch("ingestc2") + "/t"
     IngestStreams.ingestBatch(Seq((1L, "a")).toDF("id", "v"), 0L, dir)
     // simulate: batch 1 wrote data + marker, crashed before snapshot
     Seq((2L, "b")).toDF("id", "v").write.parquet(s"$dir/b1")
@@ -61,7 +60,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("schema drift on a later batch is a loud error, not a silent mix") {
-    val dir = Files.createTempDirectory("ingestsd").toString + "/t"
+    val dir = scratch("ingestsd") + "/t"
     IngestStreams.ingestBatch(Seq((1L, "a")).toDF("id", "v"), 0L, dir)
     // same names, different type → refuse
     val drift = intercept[IllegalArgumentException] {
@@ -79,7 +78,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("dedup ingest drops existing keys; crash orphans and manifest lag heal") {
-    val dir = Files.createTempDirectory("ingestdd").toString + "/t"
+    val dir = scratch("ingestdd") + "/t"
     def batch(ids: Seq[Long]) = ids.map(i => (i, s"p$i")).toDF("id", "v")
     assert(IngestStreams.ingestBatchDedup(batch(1L to 10L), 0L, dir, "id", 64L)
       === ((10L, 0L)))
@@ -103,7 +102,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("dedup ingest: empty batches commit and advance; null keys refuse") {
-    val dir = Files.createTempDirectory("ingestdde").toString + "/t"
+    val dir = scratch("ingestdde") + "/t"
     def batch(ids: Seq[Long]) = ids.map(i => (i, s"p$i")).toDF("id", "v")
     IngestStreams.ingestBatchDedup(batch(1L to 5L), 0L, dir, "id", 64L)
     // a no-data micro-batch (Spark runs them by design) must not wedge
@@ -124,7 +123,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("a crashed MERGE's orphan files never count as existing keys") {
-    val dir = Files.createTempDirectory("ingestddo").toString + "/t"
+    val dir = scratch("ingestddo") + "/t"
     def batch(ids: Seq[Long]) = ids.map(i => (i, s"p$i")).toDF("id", "v")
     IngestStreams.ingestBatchDedup(batch(1L to 5L), 0L, dir, "id", 64L)
     // crashed Dml.mergeInto: its insert dir landed, no version commit
@@ -140,7 +139,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("dedup ingest bootstraps a bloom manifest over a plain-ingest history") {
-    val dir = Files.createTempDirectory("ingestddb").toString + "/t"
+    val dir = scratch("ingestddb") + "/t"
     def batch(ids: Seq[Long]) = ids.map(i => (i, s"p$i")).toDF("id", "v")
     IngestStreams.ingestBatch(batch(1L to 5L), 0L, dir) // no manifest yet
     val (landed, dropped) =
@@ -152,7 +151,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("ingestWithMv keeps table and MV in lockstep across a full stream re-run") {
-    val root = Files.createTempDirectory("ingestmv").toString
+    val root = scratch("ingestmv")
     val in = s"$root/in"
     val table = s"$root/t"
     val mv = s"$root/mv"
@@ -181,7 +180,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("the streaming wrapper lands micro-batches like direct calls") {
-    val root = Files.createTempDirectory("ingests").toString
+    val root = scratch("ingests")
     val in = s"$root/in"
     val table = s"$root/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
@@ -207,7 +206,7 @@ class IngestStreamsSpec extends SparkSpec {
   }
 
   test("additive ingest evolution: widening batches re-pin, laggards NULL-fill") {
-    val dir = Files.createTempDirectory("ingevo").toString + "/t"
+    val dir = scratch("ingevo") + "/t"
     IngestStreams.ingestBatch(
       Seq((1L, "a")).toDF("id", "v"), 0L, dir)
     // a widened batch without the opt-in refuses (the old guard)

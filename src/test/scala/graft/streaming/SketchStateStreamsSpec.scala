@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -32,7 +31,7 @@ class SketchStateStreamsSpec extends SparkSpec {
   test("streamed per-day state == batch recompute; rolling answer == exact; replays no-op") {
     val s = spark
     import s.implicits._
-    val root = Files.createTempDirectory("kmvstream").toString
+    val root = scratch("kmvstream")
     val in = s"$root/events"
     val statePath = s"$root/state"
     val k = 64
@@ -88,7 +87,7 @@ class SketchStateStreamsSpec extends SparkSpec {
       .orderBy("d").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === got)
 
     // saturation trips the loud regime guard, not a silent undercount
-    val tiny = Files.createTempDirectory("kmvtiny").toString
+    val tiny = scratch("kmvtiny")
     SketchStateStreams.maintainBatch(
       (1L to 40L).map(u => (u, 0L)).toDF("user_id", "day"),
       0L, "user_id", "day", 16, tiny)

@@ -25,7 +25,7 @@ class SearchIndexSpec extends SparkSpec {
   private val terms = Seq("spark", "join", "window")
 
   test("index-backed query equals bm25TopK bit-for-bit; pruning reaches the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("searchidx").toString
+    val dir = scratch("searchidx")
     SearchIndex.write(docs, "doc_id", "text", dir, numPartitions = 8)
     val viaIndex = SearchIndex.query(spark, dir, terms, k = 10)
     val got = viaIndex.as[(Long, Double, Long)].collect().toSeq
@@ -42,10 +42,10 @@ class SearchIndexSpec extends SparkSpec {
   test("append: two-batch index answers identically to a one-shot index over the union") {
     val a = docs.filter(col("doc_id") <= 4)
     val b = docs.filter(col("doc_id") > 4)
-    val dirInc = java.nio.file.Files.createTempDirectory("searchidx").toString
+    val dirInc = scratch("searchidx")
     SearchIndex.write(a, "doc_id", "text", dirInc, numPartitions = 8)
     SearchIndex.append(spark, dirInc, b, "doc_id", "text")
-    val dirFull = java.nio.file.Files.createTempDirectory("searchidx").toString
+    val dirFull = scratch("searchidx")
     SearchIndex.write(docs, "doc_id", "text", dirFull, numPartitions = 8)
     val inc = SearchIndex.query(spark, dirInc, terms, k = 10)
       .as[(Long, Double, Long)].collect().toSeq
@@ -57,7 +57,7 @@ class SearchIndexSpec extends SparkSpec {
   test("null-text docs are excluded from postings AND stats (bm25TopK parity)") {
     val withNull = docs.unionByName(
       Seq((9L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val dir = java.nio.file.Files.createTempDirectory("searchidx").toString
+    val dir = scratch("searchidx")
     SearchIndex.write(withNull, "doc_id", "text", dir, numPartitions = 4)
     val got = SearchIndex.query(spark, dir, terms, k = 10)
       .as[(Long, Double, Long)].collect().toSeq
