@@ -20,13 +20,22 @@ import org.apache.spark.sql.catalyst.InternalRow
   * re-encode. Each registers its release with the innermost open
   * bracket; with none open they register nothing.
   *
+  * '''What is worth a cache.''' Persist only what two or more actions
+  * read, or a source that must not run twice (a remote fetch, an
+  * appended batch). A cache whose every read sits in one physical plan
+  * saves nothing, since exchange reuse already shares a subtree the
+  * plan reads twice, and under AQE each scan of the cached relation
+  * runs as one more job. Each persist call's comment names its second
+  * action, or the measurement that kept it.
+  *
   * '''Brackets, for operator-internal caches.''' [[withReleased]]
   * unpersists every cache registered while it is open when it closes,
   * normally or by exception, and touches nothing made outside it.
   * Operators bracket the caches they consume themselves; callers
   * bracket operators whose results stay persisted for consumption
   * (dedup survivor maps, component labelings, the curation survivor
-  * corpus, the bigram-LM model tables, the IVF probe assignment):
+  * corpus, the mutual-kNN pair and rank tables, the graph operators'
+  * edge lists and rank generations):
   *
   * {{{
   * val report = CacheScope.withReleased {

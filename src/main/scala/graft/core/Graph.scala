@@ -99,9 +99,11 @@ object Graph {
     * carries nothing; a null-sender edge leaves no node.
     */
   private final class Adjacency(edges: DataFrame, from: String, to: String) {
+    // persisted: counted (the partition count), then grouped
     private val flat = CacheScope.persistRows(
       edges.select(integral(edges, from), integral(edges, to)))
     val part = new HashPartitioner(partitionsFor(edges.sparkSession, flat.count()))
+    // persisted: the layout and every round's send read the grouped edges
     private val out: RDD[(Long, (Long, Array[Long]))] = CacheScope.persistRdd(flat
       .flatMap { r =>
         if (r.isNullAt(0)) None
@@ -119,6 +121,7 @@ object Graph {
       */
     def layout[V: ClassTag, S](rows: RDD[(Id, V)])(
         init: (Id => Long, Iterator[(Id, V)]) => Iterator[(Id, S)]): RDD[(Id, S)] = {
+      // persisted: generation 0, read by the first round and its job
       val lay = CacheScope.persistRdd(out.zipPartitions(rows.partitionBy(part)) { (es, in) =>
         val od = mutable.LongMap.empty[Long]
         es.foreach { case (s, (d, _)) => od(s) = d }
@@ -154,6 +157,7 @@ object Graph {
       var state = s0
       var z = z0
       for (_ <- 1 until iters) {
+        // each generation is read by its `job` and by the next round
         state = CacheScope.persistRdd(round(state, z))
         z = job(state)
         stale.foreach(_.unpersist(blocking = false))

@@ -3,8 +3,6 @@ package graft.core
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope.persist
-
 /** Skew guards for the pair self-joins whose key distribution is
   * Zipfian (stop-ish shingles, hub addresses, degenerate LSH buckets):
   * a hot key's rows all hash to ONE reducer, so a single task runs as
@@ -57,8 +55,9 @@ object Skew {
     * generator of the banded near-dup operators (LSH band buckets,
     * bit-sketch pieces). `keyed` has one row per
     * (id, key) with any payload columns; each non-key column `c` comes
-    * out as `c_a` and `c_b`. The key rows are persisted (both sides of
-    * the self-join read them) and capped with [[dropHotKeys]].
+    * out as `c_a` and `c_b`. The key rows are capped with
+    * [[dropHotKeys]] and not persisted: both sides of the self-join and
+    * the hot-key count read them in this one plan.
     * `narrow` filters and projects the pair rows before the distinct,
     * so a pair test on payload columns need not carry them through it.
     *
@@ -71,7 +70,7 @@ object Skew {
     */
   private[graft] def bandPairs(keyed: DataFrame, id: String, key: String,
       cap: Option[Int], narrow: DataFrame => DataFrame = identity): DataFrame = {
-    val rows = dropHotKeys(persist(keyed), key, cap)
+    val rows = dropHotKeys(keyed, key, cap)
     val carried = keyed.columns.filter(_ != key).toSeq
     narrow(rows.as("l")
       .join(rows.as("r").hint("shuffle_hash"), col(s"l.$key") === col(s"r.$key"))

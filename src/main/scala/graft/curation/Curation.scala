@@ -782,10 +782,9 @@ object Curation {
     */
   def sourceDivergence(
       df: DataFrame, sourceCol: String, textCol: String): DataFrame = {
-    val cnt = persist(
-      df.select(col(sourceCol).as("src"),
-          explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
-        .groupBy(col("src"), col("w")).agg(count(lit(1)).as("c")))
+    val cnt = df.select(col(sourceCol).as("src"),
+        explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
+      .groupBy(col("src"), col("w")).agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy(col("src")).agg(sum(col("c")).as("n"))
     val vocab = cnt.agg(countDistinct(col("w")).as("v"))
     val rows = cnt.select(col("src").as("sa"), col("w"), col("c").as("ca"))
@@ -1009,10 +1008,9 @@ object Curation {
       df: DataFrame, idCol: String, textCol: String,
       lambda: Double = 0.7): DataFrame = {
     val pairs = bigramPairs(df, idCol, textCol)
-    // persisted: vocab-sized, and referenced three times (totals +
-    // both stats joins) — without the cache each reference re-runs
-    // the corpus tokenize+explode (the KN sibling persists its bigram
-    // table for the same reason)
+    // persisted: the totals and both stats joins read it — without the
+    // cache q103's sf1 wall rose (median 3.84 → 4.22 s in 4 alternating
+    // runs), though its jobs fell 13 → 9
     val uni = persist(
       df.select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
         .groupBy(col("w")).agg(count(lit(1)).as("c")))
@@ -1055,9 +1053,11 @@ object Curation {
       minCount: Int, k: Int): DataFrame = {
     require(minCount >= 1 && k >= 1)
     val pairs = bigramPairs(df, idCol, textCol)
-    val uni = persist(
-      df.select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
-        .groupBy(col("w")).agg(count(lit(1)).as("c")))
+    val uni = df.select(explode(graft.text.TextFunctions.tokens(col(textCol))).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c"))
+    // persisted: the totals and the filtered join both read it, and
+    // without the cache q149's shuffle read rose (23 → 36 KB at sf0.1);
+    // `uni` is cheaper to recompute than to cache
     val bi = persist(pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val totals = uni.agg(sum(col("c")).as("nu"))
       .crossJoin(bi.agg(sum(col("c12")).as("nb")))
@@ -1098,7 +1098,10 @@ object Curation {
       discount: Double = 0.75): DataFrame = {
     require(discount > 0 && discount < 1, "absolute discount must be in (0,1)")
     val pairs = bigramPairs(df, idCol, textCol)
-    // model-sized; four rollups below would re-tokenize the corpus
+    // persisted: the four rollups below and the stats join read it in
+    // one plan, but their inferred null filters differ, so no exchange
+    // is reused and each re-runs the bigram explode — without the cache
+    // q111's sf1 wall rose (median 4.75 → 6.34 s, 8 alternating runs)
     val bi = persist(pairs.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val left = bi.groupBy(col("w1"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1f"))

@@ -54,17 +54,24 @@ object Dedup {
 
   /** The (doc, nsh, shs) table: each doc's sorted 64-bit shingle-hash
     * array (one compiled kernel) and its size — the representation
-    * every prefix join, hot-shingle count and exact verify reads. The
-    * single-corpus operators persist it, so both prefix sides, the
-    * hot-shingle count and both verify joins share one tokenize+sort
-    * pass; [[jaccardPairsAgainst]] does not, because under AQE every
-    * scan of a cached relation is one more job (measured on q55: 7
-    * jobs unpersisted, 11 persisted).
+    * every prefix join, hot-shingle count and exact verify reads. All
+    * of those readers sit in the operator's one physical plan, where
+    * exchange reuse shares the prefix side and [[overlapVerify]]'s two
+    * build sides, while under AQE every scan of a cached relation is
+    * one more job (measured at sf0.1: q55 7 jobs unpersisted and 11
+    * persisted, q23 5 and 11, with shuffle read unchanged and shuffle
+    * write lower unpersisted). So only [[containmentPairs]], whose two
+    * posting sides are different scans, persists it. A caller that
+    * reads a pair result in two actions persists the result instead.
+    * `nsh` is never null (0 for a null text, whose null array posts
+    * nothing): a nullable size makes the optimizer infer an
+    * `isnotnull(nsh)` scan filter that runs the kernel twice per row.
     */
   private[dedup] def shingleArrays(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol).as("doc"),
         graft.functions.SketchFunctions.sorted_shingle_hashes(col(textCol), n).as("shs"))
-      .select(col("doc"), size(col("shs")).as("nsh"), col("shs"))
+      .select(col("doc"), coalesce(size(col("shs")), lit(0)).as("nsh"),
+        col("shs"))
 
   /** The shingles occurring in more than `cap` documents, counted over
     * the FULL postings of `arrs` (any frame with an `shs` column), not
@@ -129,12 +136,18 @@ object Dedup {
     * and the compiled merge-intersect count `c`. Hash counts equal
     * string-set counts up to the documented 2^-64 collision caveat,
     * and a long merge walk beats `array_intersect` over n-gram strings.
+    * Each side joins its table unrenamed and renames after the join, so
+    * when `a` and `b` are one table both build sides plan alike and AQE
+    * reuses one exchange for them.
     */
   private def overlapVerify(candidates: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
     val Array(ia, ib) = candidates.columns
     candidates
-      .join(a.select(col("doc").as(ia), col("nsh").as("na"), col("shs").as("sa")), ia)
-      .join(b.select(col("doc").as(ib), col("nsh").as("nb"), col("shs").as("sb")), ib)
+      .join(a.as("a"), col(ia) === col("a.doc"))
+      .select(col(ia), col(ib), col("a.nsh").as("na"), col("a.shs").as("sa"))
+      .join(b.as("b"), col(ib) === col("b.doc"))
+      .select(col(ia), col(ib), col("na"), col("sa"),
+        col("b.nsh").as("nb"), col("b.shs").as("sb"))
       .withColumn("c",
         graft.functions.SketchFunctions.intersect_count_sorted(col("sa"), col("sb")))
   }
@@ -181,7 +194,7 @@ object Dedup {
       n: Int,
       tau: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    val arrs = shingleArrays(df, idCol, textCol, n)
     val pfx = prefixPostings(arrs, tau, hotShingles(arrs, maxShingleDocFreq))
     verifyByExactJaccard(prefixPairs(pfx, pfx, jaccardOverlap(tau), _ < _), arrs, arrs, tau)
   }
@@ -282,27 +295,11 @@ object Dedup {
     verifyByExactJaccard(candidates, refArrs, batchArrs, tau)
   }
 
-  /** Drop every incoming-batch doc that near-duplicates the reference
-    * corpus (the accept/reject gate of incremental ingestion): batch
-    * rows pass through unchanged unless [[jaccardPairsAgainst]] pairs
-    * them with any reference doc.
-    */
-  def dedupAgainst(
-      ref: DataFrame, refIdCol: String, refTextCol: String,
-      batch: DataFrame, batchIdCol: String, batchTextCol: String,
-      n: Int, tau: Double,
-      maxShingleDocFreq: Option[Int] = None): DataFrame = {
-    val dup = jaccardPairsAgainst(ref, refIdCol, refTextCol,
-        batch, batchIdCol, batchTextCol, n, tau, maxShingleDocFreq)
-      .select(col("new_id").as(batchIdCol)).distinct()
-    batch.join(dup, Seq(batchIdCol), "left_anti")
-  }
-
   /** Approximate exact-duplicate ingestion gate: drop every incoming
     * batch doc whose text fingerprint is (probably) already in the
     * reference corpus, tested against a Bloom filter built over the
     * reference fingerprints — the zero-shuffle prefilter in front of
-    * [[dedupAgainst]]'s near-dup machinery when only EXACT-duplicate
+    * [[jaccardPairsAgainst]]'s near-dup machinery when only EXACT-duplicate
     * hygiene is needed.
     *
     * Guarantees: no false negatives — a batch doc whose text verbatim-
@@ -427,10 +424,7 @@ object Dedup {
     val wDec = col("w").cast("decimal(38,0)")
     val norms = weighted0.groupBy(col("doc"))
       .agg(sum(wDec * wDec).as("n2"))
-    // persisted: both sides of the term self-join derive from it —
-    // without the cache the tokenize + tf/df aggregates + idf join run
-    // once per side
-    val idx = persist(weighted0.join(norms, Seq("doc")))
+    val idx = weighted0.join(norms, Seq("doc"))
     idx.as("l").join(idx.as("r").hint("shuffle_hash"), col("l.t") === col("r.t"))
       .filter(col("l.doc") < col("r.doc"))
       .groupBy(col("l.doc").as("doc_a"), col("l.n2").as("na"),
@@ -487,7 +481,7 @@ object Dedup {
     val candidates = graft.core.Skew.bandPairs(
       sh.select(col("doc"), explode(lshBandKeys(col("sh"), numHashes, bands)).as("bucket")),
       "doc", "bucket", maxBucketDocFreq)
-    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    val arrs = shingleArrays(df, idCol, textCol, n)
     verifyByExactJaccard(candidates, arrs, arrs, tau)
   }
 
@@ -519,6 +513,10 @@ object Dedup {
       n: Int,
       tau: Double,
       maxShingleDocFreq: Option[Int] = None): DataFrame = {
+    // persisted: the τ-prefix and the full postings are two different
+    // scans of the arrays, so without the cache the shingle kernel runs
+    // once per side and once more for the verify (q142's sf1 wall rose,
+    // median 3.33 → 4.04 s in 4 alternating runs)
     val arrs = persist(shingleArrays(df, idCol, textCol, n))
     val hot = hotShingles(arrs, maxShingleDocFreq)
     // the containing side indexes every shingle: τ = 0
@@ -583,7 +581,7 @@ object Dedup {
         "doc", "piece", maxBucketDocFreq,
         _.filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= maxHamming)
           .select(col("doc_a"), col("doc_b")))
-    val arrs = persist(shingleArrays(df, idCol, textCol, n))
+    val arrs = shingleArrays(df, idCol, textCol, n)
     verifyByExactJaccard(candidates, arrs, arrs, tau)
   }
 
@@ -1037,9 +1035,6 @@ object Dedup {
         else shiftrightunsigned(col("fp"), lo).bitwiseAND(lit((1L << w) - 1L))
       concat_ws(":", lit(p), bitsv)
     }
-    // bandPairs persists the keyed rows: without the cache the
-    // caller's fingerprint pipeline (media decode, simhash) evaluates
-    // once per side
     graft.core.Skew.bandPairs(
         df.select(col(idCol).as("id"), col(fpCol).cast("long").as("fp"))
           .select(col("id"), col("fp"), explode(array(pieceCols: _*)).as("bucket")),
@@ -1077,6 +1072,7 @@ object Dedup {
     * `localLimit` edges (0 forces the distributed path).
     */
   private[dedup] def connectedComponents(pairs: DataFrame, localLimit: Long): DataFrame = {
+    // persisted: counted, then collected or read by every round's join
     val edges = persist(
       pairs.select(col("doc_a").as("x"), col("doc_b").as("y"))
         .unionByName(pairs.select(col("doc_b").as("x"), col("doc_a").as("y")))
@@ -1144,6 +1140,8 @@ object Dedup {
         org.apache.spark.sql.types.StructField("component_id", idType)))
       return spark.createDataFrame(out, schema)
     }
+    // each generation is read by the round's emptiness probe and again
+    // by the next round (or the caller)
     var labels = persist(edges.groupBy(col("x"))
       .agg(min(col("y")).as("_mn"))
       .select(col("x").as("node"), least(col("x"), col("_mn")).as("label")))
@@ -1316,6 +1314,7 @@ object Dedup {
     while (guard < 64 && hasChain(mapping)) {
       prev.foreach(_.unpersist(blocking = false))
       prev = Some(mapping)
+      // read by the next hasChain probe, then by the next jump or the caller
       mapping = persist(
         mapping.join(parents(mapping), Seq("keep"), "left")
           .select(coalesce(col("_parent"), col("keep")).as("keep"), col("drop")))

@@ -212,6 +212,8 @@ class Pipeline(store: EthStore, source: ChainSource,
       .filter(col("blockNumber") <= maxBlock)
     val (work, keyedHw) = abiDecodeWork("address", flagName, events)
     CacheScope.withReleased {
+      // Persist: the append materializes the decode once; the returned
+      // count reads the cache (as in decodeTransactionInputs).
       val decoded = persist(work.select(
         col("id"),
         Abi.decode_input(col("abi"), Events.reconstructedInput).as("d"),

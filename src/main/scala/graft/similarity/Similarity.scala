@@ -308,6 +308,7 @@ object Similarity {
     // defaults to
     var cent = seedCentroids(corpus, nlist)
     graft.core.CacheScope.withReleased {
+      // persisted: every iteration's centroid collect reads the corpus
       val c = persist(corpus.withColumn("c_norm", norm(col("c_emb"))))
       for (_ <- 1 to iters) {
         val centLocal = cent.collect().map(r =>
@@ -537,7 +538,9 @@ object Similarity {
     // loose threshold can be reused across stricter calls)
     // persisted: the symmetrized union references the pair pipeline
     // twice, and the mutuality join references the kNN window twice —
-    // without the caches the candidate generation runs up to 4×
+    // without the caches the candidate generation runs up to 4× (at
+    // sf0.1, dropping either cache raised q192's shuffle read: 4312 →
+    // 7055 KB without `pairs`, 4312 → 5036 KB without `knn`)
     val pairs = persist(
       candidates.map(_.filter(col("cos") >= tau))
         .getOrElse(cosinePairsExact(df, idCol, embCol, tau)))
@@ -705,11 +708,8 @@ object Similarity {
       planesPerBand: Int = 6,
       bands: Int = 16,
       maxBucketDocFreq: Option[Int] = None): DataFrame = {
-    // persisted: base feeds the bucket keying AND both verify joins
-    // (norms would recompute per reference)
-    val base = persist(
-      df.select(col(idCol).as("id"), col(embCol).as("emb"))
-        .withColumn("nrm", norm(col("emb"))))
+    val base = df.select(col(idCol).as("id"), col(embCol).as("emb"))
+      .withColumn("nrm", norm(col("emb")))
     // df-cap guard, same semantics as Dedup.minhashLshPairs: a dense
     // embedding region (boilerplate docs collapse to one point, so one
     // sign pattern) fills a bucket and its pair fan-out is |bucket|² —

@@ -109,6 +109,8 @@ object LogisticRegression {
       df: DataFrame, idCol: String, textCol: String, label: Column,
       buckets: Int = 64, iters: Int = 5, lr: Double = 0.25): Array[Double] = {
     require(buckets >= 1 && iters >= 0 && lr > 0)
+    // persisted: read by the row count and every iteration's gradient
+    // collect
     fitOnFeatures(persist(featurize(df, idCol, textCol, label, buckets)),
       buckets, iters, lr)
   }
@@ -158,6 +160,8 @@ object LogisticRegression {
       df: DataFrame, idCol: String, textCol: String, label: Column,
       buckets: Int = 64, iters: Int = 5, lr: Double = 0.25): DataFrame = {
     require(buckets >= 1 && iters >= 0 && lr > 0)
+    // persisted: read by the row count, every gradient collect and the
+    // scoring projection
     val f = persist(featurize(df, idCol, textCol, label, buckets))
     val w = fitOnFeatures(f, buckets, iters, lr)
     f.select(col("doc_id"), sigmoid(w).as("score"))

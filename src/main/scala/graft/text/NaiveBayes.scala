@@ -4,8 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.CacheScope.persist
-
 /** Multinomial Naive Bayes trained IN the engine — the one-pass,
   * closed-form classifier a curation pipeline can afford to retrain per
   * corpus snapshot (the fastText-style quality/language filter slot).
@@ -45,12 +43,8 @@ object NaiveBayes {
     // Everything token-shaped derives from the ONE corpus-tokenizing
     // aggregate `cnt`: vocab, vocab size, per-class token totals, and
     // the model matrix are rollups of its (observed |V|·|C|)-row
-    // output. PERSISTED: four consumers otherwise re-run the corpus
-    // explode+aggregate each (exchange reuse does not cross the
-    // separate action-subtrees the broadcasts spawn) — the cache holds
-    // model-sized rows, never corpus rows, and is released by the
-    // caller's bracket or CacheScope.releaseAll.
-    val cnt = persist(occ.groupBy(col(labelCol), col("token")).agg(count(lit(1)).as("c")))
+    // output.
+    val cnt = occ.groupBy(col(labelCol), col("token")).agg(count(lit(1)).as("c"))
     val vocab = cnt.select(col("token")).distinct()
     val vsize = vocab.agg(count(lit(1)).as("v"))
     val ntoks = cnt.groupBy(col(labelCol)).agg(sum(col("c")).as("ntok"))

@@ -1,5 +1,7 @@
 package graft.dedup
 
+import org.apache.spark.sql.{CachedEntries, DataFrame}
+
 import graft.SparkSpec
 import graft.core.CacheScope
 import graft.curation.Curation
@@ -115,6 +117,42 @@ class CacheScopeSpec extends SparkSpec {
     assert(persistedRddCount > 0, "clearCache alone should leave the raw-RDD caches")
     CacheScope.releaseAll(spark)
     assertStorageEmpty()
+  }
+
+  test("operators whose every read sits in one plan leave no cache") {
+    CacheScope.releaseAll(spark)
+    val docs = Seq(
+      (1L, "a", "the quick brown fox jumps over the lazy dog again and again"),
+      (2L, "a", "the quick brown fox jumps over the lazy dog again and again today"),
+      (3L, "b", "the quick brown fox jumps over the lazy dog again and again"),
+      (4L, "b", "a cat and a mouse sleep in the old house by the river"))
+      .toDF("doc_id", "source", "text")
+    val fps = Seq((1L, 0x0fL), (2L, 0x0eL), (3L, -1L)).toDF("id", "fp")
+    val emb = (0 until 64).map(i => if (i % 2 == 0) 1.0 else 0.5)
+    val embs = Seq((1L, emb), (2L, emb.updated(0, 0.9)), (3L, emb.map(-_)))
+      .toDF("id", "emb")
+    val cap = Some(10)
+    val cases: Seq[(String, () => DataFrame)] = Seq(
+      "jaccardPairs" -> (() => Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.5, cap)),
+      "minhashLshPairs" -> (() => Dedup.minhashLshPairs(docs, "doc_id", "text",
+        maxBucketDocFreq = cap)),
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text",
+        maxBucketDocFreq = cap)),
+      "hammingPairs64" -> (() => Dedup.hammingPairs64(fps, "id", "fp",
+        maxBucketDocFreq = cap)),
+      "tfidfCosinePairs" -> (() => Dedup.tfidfCosinePairs(docs, "doc_id", "text", 0.5, cap)),
+      "cosinePairsLsh" -> (() => graft.similarity.Similarity.cosinePairsLsh(
+        embs, "id", "emb", 0.9, maxBucketDocFreq = cap)),
+      "sourceDivergence" -> (() => Curation.sourceDivergence(docs, "source", "text")),
+      "NaiveBayes.fit" -> (() => graft.text.NaiveBayes.fit(docs, "text", "source").mat))
+    cases.foreach { case (name, op) =>
+      val rdds = spark.sparkContext.getPersistentRDDs.keySet
+      val entries = CachedEntries(spark)
+      // collected with no bracket open: a persist would stay registered
+      assert(op().collect().nonEmpty, s"$name returned no rows")
+      assert(spark.sparkContext.getPersistentRDDs.keySet === rdds, s"$name left a persisted RDD")
+      assert(CachedEntries(spark) === entries, s"$name left a CacheManager entry")
+    }
   }
 
   test("bracket releases on exception and is a no-op with no registrations") {
