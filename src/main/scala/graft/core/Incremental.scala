@@ -1,7 +1,5 @@
 package graft.core
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -16,10 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Delivery contract, stated plainly: AT-LEAST-ONCE. A crash after the
   * transform's effects but before the cursor write reprocesses the
   * same delta on the next run — pair with an idempotent sink (the
-  * [[Upsert]] key discipline, [[graft.streaming.AggStreams]]-style
-  * markers keyed by the version range, or an overwrite-by-range
+  * [[Upsert]] key discipline, [[VersionLog.markCommitted]] markers
+  * keyed by the version range, or an overwrite-by-range
   * write) for exactly-once effects. The cursor write itself is
-  * tmp+rename, so a reader never sees a torn cursor.
+  * [[VersionLog.writeText]], so a reader never sees a torn cursor.
   */
 object Incremental {
 
@@ -34,18 +32,10 @@ object Incremental {
     else Some(VersionLog.readText(f, p).trim.toInt)
   }
 
-  private def writeCursor(spark: SparkSession, cursorPath: String, v: Int): Unit = {
-    val p = new Path(cursorPath)
-    val f = fs(spark, cursorPath)
-    f.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, s".${p.getName}.tmp")
-    val out = f.create(tmp, true)
-    try out.write(s"$v\n".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    // atomic overwrite, never delete-then-rename: a crash between the
-    // two would lose the cursor and silently reprocess from scratch
-    VersionLog.atomicReplace(spark, tmp, p)
-  }
+  // atomic overwrite, never delete-then-rename: a crash between the
+  // two would lose the cursor and silently reprocess from scratch
+  private def writeCursor(spark: SparkSession, cursorPath: String, v: Int): Unit =
+    VersionLog.writeText(spark, new Path(cursorPath), s"$v\n")
 
   /** Run one incremental step: apply `process` to the rows added since
     * the cursor (the FULL latest version on the first run), then

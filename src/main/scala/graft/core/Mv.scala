@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * DELETE/MERGE on its source, not just appends.
   *
   * EXACTLY-ONCE by the versioned-state discipline
-  * ([[graft.streaming.AggStreams]]'s, keyed by SOURCE VERSION instead
+  * ([[VersionLog.markCommitted]]'s, keyed by SOURCE VERSION instead
   * of batch id): state for source version N lands at `v=N/`, the
   * commit marker is written AFTER the state, readers take the highest
   * committed version, and a crash-replay of the same refresh rewrites
@@ -30,14 +30,8 @@ import org.apache.spark.sql.functions._
 object Mv {
 
   /** Source versions with committed MV state, ascending. */
-  def committedVersions(spark: SparkSession, mvDir: String): Seq[Int] = {
-    val commits = new Path(s"$mvDir/_commits")
-    val f = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(commits)) Seq.empty
-    else f.listStatus(commits).map(_.getPath.getName).toSeq
-      .collect { case n if n.startsWith("v") => n.stripPrefix("v").toInt }
-      .sorted
-  }
+  def committedVersions(spark: SparkSession, mvDir: String): Seq[Int] =
+    VersionLog.committed(spark, mvDir).map(_.toInt)
 
   /** Refresh the MV to the source's latest version. Returns the
     * (fromVersion, toVersion) range folded (from 0 on the first
@@ -75,7 +69,7 @@ object Mv {
     val dAgg = delta.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     val merged = (cur match {
       case Some(v) =>
-        val state = spark.read.parquet(s"$mvDir/v=$v")
+        val state = spark.read.parquet(VersionLog.stateDir(mvDir, v))
         // additive partials re-sum exactly; unionByName keeps the
         // merge one exchange over state + delta, not the source
         state.unionByName(dAgg)
@@ -88,19 +82,16 @@ object Mv {
     // MERGED state, never the delta, whose legitimate zero-n_rows
     // partials (an update within a group) must still fold in
     }).filter(col("n_rows") =!= 0L)
-    merged.write.mode("overwrite").parquet(s"$mvDir/v=$latest")
-    val marker = new Path(s"$mvDir/_commits/v$latest")
-    val f = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    f.mkdirs(marker.getParent)
-    if (!f.exists(marker)) f.create(marker, false).close()
+    merged.write.mode("overwrite").parquet(VersionLog.stateDir(mvDir, latest))
+    VersionLog.markCommitted(spark, mvDir, latest)
     Some((cur.getOrElse(0), latest))
   }
 
   /** The MV's current contents (highest committed state). */
   def read(spark: SparkSession, mvDir: String): DataFrame = {
-    val vs = committedVersions(spark, mvDir)
-    require(vs.nonEmpty, s"no committed MV state at $mvDir")
-    spark.read.parquet(s"$mvDir/v=${vs.last}")
+    val state = VersionLog.committedState(spark, mvDir)
+    require(state.nonEmpty, s"no committed MV state at $mvDir")
+    state.get
   }
 
   /** Rebuild the MV from scratch against the source's LATEST version —
@@ -131,8 +122,8 @@ object Mv {
     val drop = vs.dropRight(keepLast)
     val f = new Path(mvDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     drop.foreach { v =>
-      f.delete(new Path(s"$mvDir/v=$v"), true)
-      f.delete(new Path(s"$mvDir/_commits/v$v"), false)
+      f.delete(new Path(VersionLog.stateDir(mvDir, v)), true)
+      f.delete(VersionLog.commitMarker(mvDir, v), false)
     }
     drop.size
   }

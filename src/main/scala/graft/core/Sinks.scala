@@ -6,8 +6,6 @@ import org.apache.spark.sql.DataFrame
   *
   *  - A30 CSV sink — `INTO OUTFILE 'balances.csv' FORMAT CSVWithNames`
   *    (/root/reference/examples/sql_balances/balances.sql:62-63)
-  *  - A31 point-read scalar — `send_sql_request` returns the first
-  *    cell (/root/reference/clients/custom_clickhouse.py:191-206)
   *
   * (A32, the bulk upsert sink with chunk sizing, lives in
   * graft.eth.EthStore.append — `maxRecordsPerFile` is the
@@ -23,8 +21,4 @@ object Sinks {
     val out = if (singleFile) df.coalesce(1) else df
     out.write.option("header", "true").mode("overwrite").csv(path)
   }
-
-  /** A31: first cell of the first row, None on empty result. */
-  def scalar(df: DataFrame): Option[Any] =
-    df.limit(1).collect().headOption.map(_.get(0))
 }

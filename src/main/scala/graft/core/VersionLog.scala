@@ -209,7 +209,7 @@ object VersionLog {
     * OVERWRITE option (atomic on HDFS — the Delta/HDFS commit
     * primitive).
     */
-  private[graft] def atomicReplace(
+  private def atomicReplace(
       spark: SparkSession, tmp: Path, target: Path): Unit = {
     val scheme = Option(target.toUri.getScheme)
       .orElse(Option(fs(spark, target.toString).getUri.getScheme))
@@ -227,17 +227,77 @@ object VersionLog {
   }
 
   private def writeSuperseded(
-      spark: SparkSession, dir: String, rels: Set[String]): Unit = {
-    val p = supersededPath(dir)
-    val f = fs(spark, dir)
-    f.mkdirs(p.getParent)
-    val tmp = new Path(p.getParent, ".superseded.tmp")
+      spark: SparkSession, dir: String, rels: Set[String]): Unit =
+    writeText(spark, supersededPath(dir), rels.toSeq.sorted.map(_ + "\n").mkString)
+
+  /** Stage `text` in an attempt-unique temp file beside `target`, for
+    * [[atomicReplace]] or the version CAS to install: two writers of
+    * the same target never share a staging file, so neither can
+    * clobber or vanish the other's before it lands.
+    */
+  private def stageText(
+      f: org.apache.hadoop.fs.FileSystem, target: Path, text: String): Path = {
+    f.mkdirs(target.getParent)
+    val tmp = new Path(target.getParent,
+      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = f.create(tmp, true)
-    try out.write(rels.toSeq.sorted.map(_ + "\n")
-      .mkString.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    atomicReplace(spark, tmp, p)
+    try out.write(text.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    tmp
   }
+
+  /** The write twin of [[readText]]: replace a small metadata file (the
+    * superseded list, a cursor, a schema pin) with `text` atomically —
+    * a crash mid-write leaves the previous content, never a torn file.
+    */
+  private[graft] def writeText(spark: SparkSession, p: Path, text: String): Unit =
+    atomicReplace(spark, stageText(fs(spark, p.toString), p, text), p)
+
+  /** Commit markers: `<dir>/_commits/v<N>` says that unit `N` of a
+    * replayable writer (an ingest batch, a state fold, an MV refresh)
+    * landed completely. The writer checks [[isCommitted]] before doing
+    * any work and calls [[markCommitted]] only after its data is
+    * written, so a replay after any crash point redoes an unmarked
+    * unit and skips a marked one. Writers that keep versioned state
+    * put version `N` at [[stateDir]], and readers take the highest
+    * committed one ([[committedState]]): an unmarked `v=N/` is a
+    * crashed attempt's orphan and is never read.
+    */
+  private val CommitDir = "_commits"
+
+  private[graft] def commitMarker(dir: String, n: Long): Path =
+    new Path(s"$dir/$CommitDir/v$n")
+
+  /** The committed unit ids under `dir`, ascending. The name match is
+    * strict (`v` and digits), so a stray entry such as an editor
+    * backup is ignored instead of failing every reader.
+    */
+  private[graft] def committed(spark: SparkSession, dir: String): Seq[Long] = {
+    val commits = new Path(s"$dir/$CommitDir")
+    val f = fs(spark, dir)
+    if (!f.exists(commits)) Seq.empty
+    else f.listStatus(commits).map(_.getPath.getName).toSeq
+      .collect { case n if n.matches("v\\d+") => n.drop(1).toLong }
+      .sorted
+  }
+
+  private[graft] def isCommitted(spark: SparkSession, dir: String, n: Long): Boolean =
+    fs(spark, dir).exists(commitMarker(dir, n))
+
+  /** Mark unit `n` committed; a no-op when it already is. */
+  private[graft] def markCommitted(spark: SparkSession, dir: String, n: Long): Unit = {
+    val marker = commitMarker(dir, n)
+    val f = fs(spark, dir)
+    f.mkdirs(marker.getParent)
+    f.createNewFile(marker)
+  }
+
+  /** Where a versioned-state writer puts the state a marker `n` vouches for. */
+  private[graft] def stateDir(dir: String, n: Long): String = s"$dir/v=$n"
+
+  /** The highest committed state under `dir`, if any. */
+  private[graft] def committedState(
+      spark: SparkSession, dir: String): Option[DataFrame] =
+    committed(spark, dir).lastOption.map(n => spark.read.parquet(stateDir(dir, n)))
 
   /** The table's COMMITTED live files — what [[snapshot]] would record
     * right now: on-disk files minus supersessions (honored only once
@@ -258,13 +318,12 @@ object VersionLog {
     val latestFiles: Set[String] =
       if (vs.isEmpty) Set.empty
       else readEntries(spark, dir, vs.last).map(_._1).toSet
-    val f = fs(spark, dir)
     def committed(rel: String): Boolean = {
       val seg = rel.takeWhile(_ != '/')
       if (rel.indexOf('/') < 0 || ReservedDir.findFirstIn(seg).isEmpty) true
       else if (latestFiles(rel)) true
       else if (seg.startsWith("b"))
-        f.exists(new Path(s"$dir/_commits/v${seg.stripPrefix("b")}"))
+        isCommitted(spark, dir, seg.stripPrefix("b").toLong)
       else false // c/d/m dir no version references: a crashed rewrite
     }
     liveEntries(spark, dir)
@@ -455,7 +514,6 @@ object VersionLog {
       s"invalid op label '$op'")
     val f = fs(spark, dir)
     val target = versionPath(dir, next)
-    f.mkdirs(target.getParent)
     // maintain the cumulative superseded record FIRST: files the
     // previous version listed that this one drops were rewritten away.
     // Recording before the version commit makes the pair crash-safe in
@@ -479,22 +537,18 @@ object VersionLog {
       val marker = new Path(s"$dir/$LogDir/has_schema")
       if (!f.exists(marker)) f.create(marker, true).close()
     }
-    // attempt-UNIQUE temp name: two racers preparing the same version
-    // number must not clobber each other's staging file (the winner
-    // deletes its temp after linking — a shared name would leave the
-    // loser linking a vanished file instead of detecting the conflict)
-    val tmp = new Path(target.getParent,
-      s".v$next.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = f.create(tmp, true)
     // the op label travels INSIDE the version record (a `#op=` header
     // line), so classification commits atomically with the version —
     // a sidecar file would leave a crash window where a committed
-    // rewrite reads back as an append and poisons every change feed
+    // rewrite reads back as an append and poisons every change feed.
+    // The staging file is attempt-unique: two racers preparing the
+    // same version number must not clobber each other's (the winner
+    // deletes its temp after linking — a shared name would leave the
+    // loser linking a vanished file instead of detecting the conflict)
     val header = s"#op=$op\n" +
       schemaJson.map(j => s"#schema=$j\n").getOrElse("")
-    try out.write((header + entries.map { case (rel, len) => s"$len\t$rel\n" }
-      .mkString).getBytes(StandardCharsets.UTF_8))
-    finally out.close()
+    val tmp = stageText(f, target,
+      header + entries.map { case (rel, len) => s"$len\t$rel\n" }.mkString)
     beforeVersionCommit()
     if (!commitVersionFile(spark, tmp, target)) {
       f.delete(tmp, false)

@@ -36,7 +36,7 @@ object Curation {
     * RNG): each row draws `u = (hashKey + 1) / 2^60 ∈ (0, 1]` and
     * ranks by `ln(u) / w` descending — the classic `u^(1/w)` order in
     * log space — so the top-k IS a weighted sample without
-    * replacement of exactly k rows. Complements [[hashSample]]
+    * replacement of exactly k rows. Complements [[stratifiedHashSample]]
     * (per-row Bernoulli, size varies) and [[weightedHashSample]]
     * (per-row keep-probability): here the SIZE is exact and weights
     * bias inclusion. Deterministic: no RNG state, reproducible across
@@ -98,18 +98,10 @@ object Curation {
       .drop(key)
   }
 
-  /** Deterministic Bernoulli-style sample: keeps rows whose hash key
-    * falls under `fraction` of the key space. Unlike `df.sample`
-    * (seeded RNG walked in partition order), the decision is a pure
-    * function of the row's id.
-    */
-  def hashSample(df: DataFrame, idCol: String, fraction: Double): DataFrame =
-    df.filter(hashSampleKey(col(idCol)) < lit(sampleThreshold(fraction)))
-
   /** Weighted deterministic sample: keep a row with probability
     * `baseFraction · weight` (clamped to [0, 1]) — the selection step
     * of importance-weighted data curation (e.g. keep-probability ∝ a
-    * DSIR weight or quality score), with [[hashSample]]'s properties:
+    * DSIR weight or quality score), with [[hashSampleKey]]'s properties:
     * content-keyed, engine-reproducible, stable under partitioning and
     * corpus growth. Map-only. Exactness note: the threshold is one
     * double multiply + compare (IEEE-identical across engines) —
@@ -127,7 +119,7 @@ object Curation {
 
   /** Deterministic train/val/test split: every row is labeled with
     * the name of the hash-key interval its id falls in. Content-keyed
-    * like [[hashSample]], so the assignment is a pure function of the
+    * like [[hashSampleKey]], so the assignment is a pure function of the
     * id: stable across runs, engines, partitionings AND corpus growth
     * — a document never migrates between splits when new data
     * arrives, the property that keeps a held-out set held out for the
@@ -173,7 +165,7 @@ object Curation {
   /** Deterministic global training shuffle: every row gets a shard
     * (`hashKey mod numShards`) and a position within its shard
     * (ascending hash key, id tiebreak) — the reproducible random order
-    * a training run reads. Content-keyed like [[hashSample]]: the
+    * a training run reads. Content-keyed like [[hashSampleKey]]: the
     * permutation is a pure function of the ids, identical across
     * engines, runs, and cluster sizes.
     *
@@ -610,8 +602,8 @@ object Curation {
     * per domain" gate): within every group keep EXACTLY the `cap` rows
     * with the smallest content hash keys (id tiebreak; whole group when
     * it is under cap) — a reproducible uniform choice, like
-    * [[hashSample]] but with an exact count. Rows with a NULL group key
-    * form their own capped group, not a dropped one.
+    * [[stratifiedHashSample]] but with an exact count. Rows with a NULL
+    * group key form their own capped group, not a dropped one.
     *
     * Scale shape: `row_number <= cap` over a hash-key-ordered window is
     * rewritten by Spark into a map-side `WindowGroupLimit` — every map
@@ -1342,7 +1334,7 @@ object Curation {
     * `sum_w log(P_t(w) / P_c(w))` with add-one smoothing — the
     * domain-targeted data-selection signal. Positive = more
     * target-like than the corpus average; compose with
-    * [[hashSample]]/top-k for the actual resampling pass.
+    * [[weightedHashSample]]/top-k for the actual resampling pass.
     *
     * Engine-exact: each word's log-ratio is rounded to 6 decimals and
     * summed as DECIMAL, so the per-doc total is order-independent (the

@@ -8,7 +8,7 @@ import graft.functions.GraftFunctions
 
 /** The three derived tables of the reference, as deterministic batch
   * jobs (ClickHouse materialized views become recompute-or-refresh
-  * jobs; see also streaming.DerivedStreams for the incremental path):
+  * jobs):
   *
   *  - contracts MV (/root/reference/operations/contract_transactions.py:71-112)
   *  - token transfers MV (/root/reference/operations/token_holders.py:13-51)

@@ -49,7 +49,7 @@ class EthStore(val spark: SparkSession, val root: String) {
   def path(table: String): String = s"$root/$table"
 
   /** All store metadata IO goes through the Hadoop FileSystem resolved
-    * from `root`'s scheme, so the exists/marker/compact plumbing works
+    * from `root`'s scheme, so the exists/compact plumbing works
     * identically on file:, hdfs: and s3a: roots — java.io.File would
     * silently no-op everywhere but a local disk.
     */
@@ -81,14 +81,6 @@ class EthStore(val spark: SparkSession, val root: String) {
   def tableFinal(table: String): DataFrame =
     Upsert.latestById(read(table), keysOf(table), Seq(col("_seq")))
 
-  /** Typed FINAL view (`Dataset[T]` over a [[Models]] case class) for
-    * pipeline code where compile-time field safety helps; the ingest
-    * bookkeeping columns are dropped first.
-    */
-  def typedFinal[T: org.apache.spark.sql.Encoder](table: String):
-      org.apache.spark.sql.Dataset[T] =
-    tableFinal(table).drop("_seq", "_block_bucket").as[T]
-
   /** Schema-policed append (ingestion drops extra columns, fills
     * missing with NULL — custom_clickhouse._filter_schema analog).
     * A32 bulk upsert sink; `maxRecordsPerFile` is the insert chunk
@@ -111,32 +103,11 @@ class EthStore(val spark: SparkSession, val root: String) {
     writer.mode("append").parquet(path(table))
   }
 
-  /** Derived-table overwrite (MV recompute). Refused for
-    * stream-watched tables for the same reason as [[compact]].
-    */
+  /** Derived-table overwrite (MV recompute). */
   def overwrite(table: String, df: DataFrame, seq: Long): Unit = {
-    require(!isStreamWatched(table),
-      s"table '$table' is watched by a file stream; overwriting it would " +
-        "replay every row through the stream checkpoint.")
     val conformed = Schemas.conform(df, schemas(table)).withColumn("_seq", lit(seq))
     conformed.write.mode("overwrite").parquet(path(table))
   }
-
-  /** Marker dropped by DerivedStreams.eventStream: the parquet file
-    * stream checkpoints files by name, so rewriting a watched table
-    * (compact/overwrite) would make every rewritten file look new and
-    * replay the whole table into the derived outputs.
-    */
-  private def streamMarker(table: String): Path =
-    new Path(tablePath(table), "_stream_watched")
-
-  def markStreamWatched(table: String): Unit = {
-    val dir = tablePath(table)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    fs.createNewFile(streamMarker(table))
-  }
-
-  def isStreamWatched(table: String): Boolean = fs.exists(streamMarker(table))
 
   private def compactTmpPath(table: String) = new Path(path(table) + "__compact")
   private def compactOldPath(table: String) = new Path(path(table) + "__old")
@@ -165,9 +136,7 @@ class EthStore(val spark: SparkSession, val root: String) {
   }
 
   /** Compaction: rewrite a table to one row per key (keeps FINAL reads
-    * cheap; run periodically at scale). Refused for stream-watched
-    * tables — a rewrite would replay the entire table through any
-    * file-stream checkpoint watching it.
+    * cheap; run periodically at scale).
     *
     * Crash-safe ordering: write the compacted copy aside (its
     * `_SUCCESS` is the commit point), rename live → `__old`, rename
@@ -178,10 +147,6 @@ class EthStore(val spark: SparkSession, val root: String) {
     * "retry the swap", never data loss.
     */
   def compact(table: String): Unit = {
-    require(!isStreamWatched(table),
-      s"table '$table' is watched by a file stream; compacting it would " +
-        "replay every row through the stream checkpoint. Stream from a " +
-        "separate immutable landing path if compaction is needed.")
     val compacted = tableFinal(table)
     val tmp = compactTmpPath(table)
     compacted.write.mode("overwrite").parquet(tmp.toString)

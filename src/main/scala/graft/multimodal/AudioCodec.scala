@@ -198,48 +198,6 @@ object AudioCodec {
       sampleSum = sum)
   }
 
-  /** Real sample-rate conversion by linear interpolation over the
-    * UNSIGNED 8-bit sample sequence (mono): output frame k sits at
-    * source position `k · (n-1) / (m-1)` and blends its two
-    * neighbours. Deterministic integer-in/integer-out DSP (the blend
-    * rounds half-up), so specs can hand-compute expected samples.
-    */
-  def resampleLinear(samples: Array[Int], outFrames: Int): Array[Int] = {
-    require(outFrames > 0, s"bad target length $outFrames")
-    val n = samples.length
-    if (n == 0) return new Array[Int](0)
-    if (n == 1 || outFrames == 1) return Array.fill(outFrames)(samples(0))
-    val out = new Array[Int](outFrames)
-    var k = 0
-    while (k < outFrames) {
-      // fixed-point position: numerator over (outFrames-1)
-      val num = k.toLong * (n - 1)
-      val den = (outFrames - 1).toLong
-      val i = (num / den).toInt
-      val rem = num % den
-      out(k) =
-        if (rem == 0L) samples(i)
-        else {
-          val a = samples(i).toLong
-          val b = samples(i + 1).toLong
-          // linear blend, rounded half-up in exact integer arithmetic
-          ((a * (den - rem) + b * rem + den / 2) / den).toInt
-        }
-      k += 1
-    }
-    out
-  }
-
-  /** Resample a decoded clip to `toRate`, preserving duration:
-    * `outFrames = round(nFrames · toRate / fromRate)` (at least 1).
-    */
-  def resampleToRate(samples: Array[Int], fromRate: Int, toRate: Int): Array[Int] = {
-    require(fromRate > 0 && toRate > 0, s"bad rates $fromRate -> $toRate")
-    val outFrames = math.max(1L,
-      (samples.length.toLong * toRate + fromRate / 2) / fromRate).toInt
-    resampleLinear(samples, outFrames)
-  }
-
   /** Energy-band acoustic fingerprint over real decoded samples — the
     * audio slot of the perceptual-hash family (a chromaprint-shaped
     * signature without the FFT: temporal energy envelope instead of

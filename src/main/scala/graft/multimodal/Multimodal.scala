@@ -438,37 +438,6 @@ object Multimodal {
     }.toDF()
   }
 
-  case class ResampledRow(
-      media_id: Long, in_rate: Int, out_rate: Int,
-      in_frames: Long, out_frames: Long, out_sum: Long)
-
-  /** REAL audio transform: decode → linear-interpolation resample to
-    * `targetRate` → report the product's frame count and exact sample
-    * sum (read back from the resampled samples, not echoed from the
-    * arguments) — the audio counterpart of [[mediaTransformTable]]'s
-    * image path. Non-decodable rows are dropped (callers keep the
-    * stub path for those). Same contract as every codec call here:
-    * batched per-partition, narrow map, one row per decodable input.
-    */
-  def audioResampleTable(spark: SparkSession, media: DataFrame,
-      targetRate: Int): DataFrame = {
-    import spark.implicits._
-    media.as[MediaRow].mapPartitions { rows =>
-      rows.flatMap { r =>
-        if (r.kind != "audio") None
-        else AudioCodec.tryDecode(r.payload).map { case (fmt, pcm) =>
-          val in = AudioCodec.unsignedSamples(fmt, pcm)
-          val out = AudioCodec.resampleToRate(in, fmt.getSampleRate.toInt, targetRate)
-          var sum = 0L
-          var i = 0
-          while (i < out.length) { sum += out(i); i += 1 }
-          ResampledRow(r.media_id, fmt.getSampleRate.toInt, targetRate,
-            in.length.toLong, out.length.toLong, sum)
-        }
-      }
-    }.toDF()
-  }
-
   case class EmbeddedRow(media_id: Long, kind: String, embedding: Seq[Double])
 
   /** STUB feature extraction: media payload → unit-norm embedding.

@@ -195,36 +195,4 @@ object VideoCodec {
     }
     AudioCodec.energyFingerprint(samples, windows)
   }
-
-  /** Per-frame pixel-grid perceptual hash (the image pHash applied to
-    * one decoded frame): same exact cross-product compare as
-    * [[ImageCodec.perceptualHash]], expressed over a raw luma raster
-    * so no BufferedImage round-trip is needed per frame.
-    */
-  def frameHash(raster: Array[Byte], w: Int, h: Int, grid: Int = 8): Long = {
-    require(grid >= 1 && grid * grid <= 64, s"grid^2 must fit 64 bits, got $grid")
-    require(raster.length == w * h, s"raster length ${raster.length} != ${w}x$h")
-    val sums = new Array[Long](grid * grid)
-    val counts = new Array[Long](grid * grid)
-    var stot = 0L
-    var k = 0
-    while (k < raster.length) {
-      val v = raster(k) & 0xff
-      val bi = ((k / w) * grid) / h
-      val bj = ((k % w) * grid) / w
-      sums(bi * grid + bj) += v
-      counts(bi * grid + bj) += 1L
-      stot += v
-      k += 1
-    }
-    val ctot = raster.length.toLong
-    var fp = 0L
-    var c = 0
-    while (c < grid * grid) {
-      if (counts(c) > 0L && sums(c) * ctot >= stot * counts(c))
-        fp |= (1L << c)
-      c += 1
-    }
-    fp
-  }
 }

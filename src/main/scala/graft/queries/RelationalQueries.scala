@@ -828,11 +828,11 @@ object RelationalQueries {
     // q214's rolling distinct answered from PERSISTED sketch state —
     // the 24/7 form: history is deterministically sliced into three
     // "micro-batches" (md5-gated thirds), each folded into a standing
-    // (day, sk) table through the exactly-once marker discipline
-    // (SketchStateStreams / AggStreams layout), and the rolling window
-    // is answered FROM THE STATE ALONE — raw events are never
-    // re-scanned at query time. KMV merges are exact set-union
-    // algebra, so the streamed fold equals the batch recompute and the
+    // (day, sk) table behind VersionLog's exactly-once commit markers
+    // (SketchStateStreams.maintainBatch), and the rolling window is
+    // answered FROM THE STATE ALONE — raw events are never re-scanned
+    // at query time. KMV merges are exact set-union algebra, so the
+    // batch-by-batch fold equals the one-shot recompute and the
     // oracle stays q187's EXACT rolling distinct.
     "q221_rolling_kmv_state" -> ((s, dir) => {
       val k = 65536
@@ -847,7 +847,7 @@ object RelationalQueries {
         graft.streaming.SketchStateStreams.maintainBatch(
           slice, i.toLong, "user_id", "day", k, statePath)
       }
-      val state = graft.streaming.AggStreams.currentState(s, statePath)
+      val state = graft.core.VersionLog.committedState(s, statePath)
         .getOrElse(sys.error("kmv state missing after fold"))
       graft.streaming.SketchStateStreams.rollingDistinct(state, 7, k)
         .orderBy(col("d"))
@@ -1217,12 +1217,12 @@ object RelationalQueries {
         .orderBy(col("user_id"))
     }),
 
-    // Exactly-once VERSIONED streaming ingestion (IngestStreams over
+    // Exactly-once VERSIONED batch ingestion (IngestStreams over
     // VersionLog): three md5-gated micro-batches land as b<id>/ dirs
-    // with commit markers; batch 1 is REPLAYED (foreachBatch's failure
-    // contract) and must no-op — a duplicated landing would double the
-    // oracle's counts. The latest version then answers like the plain
-    // table: ingestion mechanics are semantically invisible.
+    // with commit markers; batch 1 is REPLAYED (a restarted batch
+    // loop re-delivers it) and must no-op — a duplicated landing would
+    // double the oracle's counts. The latest version then answers like
+    // the plain table: ingestion mechanics are semantically invisible.
     "q231_versioned_ingest" -> ((s, dir) => {
       val ev = t(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1344,7 +1344,7 @@ object RelationalQueries {
       // refresh must REWRITE v=2 from the v=1 state, not double-fold
       val fs = new org.apache.hadoop.fs.Path(mv)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$mv/_commits/v2"), false)
+      fs.delete(graft.core.VersionLog.commitMarker(mv, 2), false)
       require(graft.core.Mv.refresh(s, table, mv,
         Seq("user_id"), Seq("event_id")).contains((1, 2)))
       graft.core.Mv.read(s, mv)

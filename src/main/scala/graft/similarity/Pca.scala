@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Distributed PCA over an embedding column — the
-  * whitening/compression step of a large-scale embedding pipeline
+  * compression step of a large-scale embedding pipeline
   * (reduce 1024-dim encoder outputs to the top-r directions before
   * ANN indexing; 4-16x less storage and dot-product work per probe).
   *
@@ -214,76 +214,6 @@ object Pca {
     cells.foreach(row => m(row.getInt(0))(row.getInt(1)) = row.getDouble(2))
     val (_, vecs) = symmetricEigen(m)
     vecs.take(r)
-  }
-
-  /** Top-r (eigenvalue, component) pairs — [[principalComponents]]
-    * plus the variances a whitening transform needs.
-    */
-  def principalAxes(cov: DataFrame, r: Int): (Array[Double], Array[Array[Double]]) = {
-    val cells = cov.select(col("i"), col("j"), col("cov")).collect()
-    val d = cells.map(_.getInt(0)).max + 1
-    val m = Array.ofDim[Double](d, d)
-    cells.foreach(row => m(row.getInt(0))(row.getInt(1)) = row.getDouble(2))
-    val (vals, vecs) = symmetricEigen(m)
-    (vals.take(r), vecs.take(r))
-  }
-
-  /** Per-dimension means from the moment table (`si / (n·scale)`) —
-    * the centering vector [[whiten]] needs.
-    */
-  def meansFromMoments(moments: DataFrame, scale: Long = 1000000L): Array[Double] = {
-    val rows = moments.filter(col("i") === col("j"))
-      .select(col("i"), col("si"), col("n")).collect()
-    val d = rows.map(_.getInt(0)).max + 1
-    val out = new Array[Double](d)
-    rows.foreach { r =>
-      out(r.getInt(0)) = r.getDecimal(1).doubleValue() /
-        (r.getDecimal(2).doubleValue() * scale.toDouble)
-    }
-    out
-  }
-
-  /** PCA whitening: center on the corpus mean, project onto the top-r
-    * components, scale each coordinate by `1/√eigenvalue` — the
-    * output's covariance is the identity (spec-checked), the
-    * decorrelation step before cosine-based dedup or contrastive
-    * training treats every direction equally. Same broadcast map-side
-    * shape as [[project]]. Eigenvalues at or below `eps` (degenerate
-    * directions) map to zero instead of exploding the noise floor.
-    */
-  def whiten(df: DataFrame, idCol: String, embCol: String,
-      means: Array[Double],
-      eigvals: Array[Double], components: Array[Array[Double]],
-      eps: Double = 1e-12): DataFrame = {
-    require(eigvals.length == components.length,
-      s"${eigvals.length} eigenvalues vs ${components.length} components")
-    val scaled = components.zip(eigvals).map { case (c, v) =>
-      if (v <= eps) c.map(_ => 0.0) else c.map(_ / math.sqrt(v))
-    }
-    // projecting (x − μ) == projecting x then subtracting the
-    // projected mean; fold the constant offset into the map
-    val offset = scaled.map(c => c.zip(means).map { case (a, b) => a * b }.sum)
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast((scaled, offset))
-    df.select(col(idCol).cast("long"), col(embCol).cast("array<double>"))
-      .as[(Long, Seq[Double])]
-      .mapPartitions { rows =>
-        val (comps, off) = bc.value
-        rows.map { case (id, v) =>
-          val out = new Array[Double](comps.length)
-          var r = 0
-          while (r < comps.length) {
-            val c = comps(r)
-            var s = 0.0
-            var i = 0
-            while (i < c.length) { s += c(i) * v(i); i += 1 }
-            out(r) = s - off(r)
-            r += 1
-          }
-          (id, out.toSeq)
-        }
-      }.toDF(idCol, "proj")
   }
 
   /** Project embeddings onto the given components (broadcast r×d

@@ -222,29 +222,16 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
   }
 
-  /** IVF-Flat approximate top-k — the second scale path next to
-    * [[lshTopK]]: a coarse quantizer assigns every corpus vector to its
-    * nearest centroid (inverted lists), and each query scores only the
-    * `nprobe` lists nearest to it. The partition-pruning analog for
-    * vector search: candidate work drops by ~nlist/nprobe.
-    *
-    * The quantizer here is deterministic — [[seedCentroids]]'s
-    * md5-sampled corpus vectors (production IVF k-means-refines them,
-    * which changes WHICH vectors the lists hold but none of the
-    * dataflow below). Centroids are a small dimension:
-    * broadcast to both assignment joins, so the corpus never shuffles
-    * for assignment — the only wide exchange is the per-query top-k.
-    */
   /** Default seed quantizer shared by [[semDedup]], [[ivfTopK]]
-    * and [[kmeansCentroids]]: the `nlist` corpus
+    * and [[topicClusters]]: the `nlist` corpus
     * vectors that sort first by `md5(c_id)` — a deterministic uniform
     * sample. NOT the lowest-id vectors: real corpora arrive sorted by
     * source or time, so an id-prefix seed concentrates every centroid
     * in one source and the remaining cells degenerate. The md5 order
     * is content-independent, replayable by an independent engine in
     * SQL (the DuckDB oracles recompute it verbatim), and stable under
-    * re-partitioning. [[kmeansCentroids]] is still the production
-    * refresh; this is only the seed.
+    * re-partitioning. It is only a seed: k-means refinement is not
+    * built in.
     */
   def seedCentroids(corpus: DataFrame, nlist: Int): DataFrame =
     corpus.orderBy(md5(col("c_id").cast("string")), col("c_id")).limit(nlist)
@@ -257,8 +244,8 @@ object Similarity {
     * the label set is stable and enumerable by a mixture spec
     * (cent_ids themselves are corpus ids — data-dependent names no
     * static weights map could reference). Returns (c_id, topic).
-    * Default centroids = the deterministic md5 seed; pass
-    * [[kmeansCentroids]] output for refined clusters.
+    * Default centroids = the deterministic md5 seed; pass refined
+    * (cent_id, cent_emb) centroids for refined clusters.
     *
     * Scale shape: the nlist-row centroid table broadcasts (its label
     * window sorts nlist rows, nothing more); the corpus never
@@ -286,70 +273,26 @@ object Similarity {
       .select(col("c_id"), col("topic"))
   }
 
-  /** Distributed Lloyd refresh of the IVF coarse quantizer (spherical
-    * k-means: assign by max cosine, update by element-wise mean — the
-    * mean's scale is irrelevant to cosine assignment). Returns
-    * (cent_id, cent_emb), `nlist` rows.
+  /** IVF-Flat approximate top-k — the second scale path next to
+    * [[lshTopK]]: a coarse quantizer assigns every corpus vector to its
+    * nearest centroid (inverted lists), and each query scores only the
+    * `nprobe` lists nearest to it. The partition-pruning analog for
+    * vector search: candidate work drops by ~nlist/nprobe.
     *
-    * Scale shape per iteration: assignment is the same
-    * broadcast-centroids pattern as [[ivfTopK]] (the corpus never
-    * shuffles); the update aggregates (cent_id, dimension) keys —
-    * nlist·dim of them, map-side partial combine, so the exchange
-    * carries centroids, not vectors. Only `nlist` rows ever reach the
-    * driver, once per iteration. Empty clusters keep their previous
-    * centroid.
+    * The quantizer here is deterministic — [[seedCentroids]]'s
+    * md5-sampled corpus vectors (production IVF k-means-refines them,
+    * which changes WHICH vectors the lists hold but none of the
+    * dataflow below). Centroids are a small dimension:
+    * broadcast to both assignment joins, so the corpus never shuffles
+    * for assignment — the only wide exchange is the per-query top-k.
     */
-  def kmeansCentroids(
-      corpus: DataFrame, // (c_id, c_emb: array<double>)
-      nlist: Int = 16,
-      iters: Int = 5): DataFrame = {
-    val spark = corpus.sparkSession
-    // deterministic seed: the same md5-sampled quantizer ivfTopK
-    // defaults to
-    var cent = seedCentroids(corpus, nlist)
-    graft.core.CacheScope.withReleased {
-      // persisted: every iteration's centroid collect reads the corpus
-      val c = persist(corpus.withColumn("c_norm", norm(col("c_emb"))))
-      for (_ <- 1 to iters) {
-        val centLocal = cent.collect().map(r =>
-          (r.getLong(0), r.getSeq[Double](1))) // nlist rows — bounded
-        val centDf = spark.createDataFrame(
-            spark.sparkContext.parallelize(centLocal.toSeq, 1))
-          .toDF("cent_id", "cent_emb")
-          .withColumn("cent_norm", norm(col("cent_emb")))
-        val assigned = graft.core.Joins.lastByKey(
-          c.crossJoin(broadcast(centDf))
-            .withColumn("a_score",
-              cosineWithNorms(col("c_emb"), col("cent_emb"), col("c_norm"), col("cent_norm"))),
-          Seq("c_id"), Seq(col("a_score"), -col("cent_id")))
-        val means = assigned
-          .select(col("cent_id"), posexplode(col("c_emb")).as(Seq("pos", "v")))
-          .groupBy(col("cent_id"), col("pos")).agg(avg(col("v")).as("m"))
-          .groupBy(col("cent_id"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-            x => x.getField("m")).as("cent_emb"))
-        // empty clusters fall back to their previous centroid
-        cent = centDf.select(col("cent_id"), col("cent_emb").as("prev_emb"))
-          .join(means, Seq("cent_id"), "left")
-          .select(col("cent_id"),
-            coalesce(col("cent_emb"), col("prev_emb")).as("cent_emb"))
-      }
-      // materialize the final generation before releasing the cache
-      val finalCent = cent.collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      spark.createDataFrame(spark.sparkContext.parallelize(finalCent.toSeq, 1))
-        .toDF("cent_id", "cent_emb")
-    }
-  }
-
   def ivfTopK(
       queries: DataFrame, // (q_id, q_emb: array<double>)
       corpus: DataFrame, // (c_id, c_emb: array<double>)
       k: Int,
       nlist: Int = 16,
-      nprobe: Int = 4,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(seedCentroids(corpus, nlist))
-      .select(col("cent_id"), col("cent_emb"))
+      nprobe: Int = 4): DataFrame = {
+    val cent = seedCentroids(corpus, nlist)
       .withColumn("cent_norm", norm(col("cent_emb")))
     val c = corpus.withColumn("c_norm", norm(col("c_emb")))
     val assigned = graft.core.Joins.lastByKey(
@@ -569,9 +512,8 @@ object Similarity {
     * Scale shape: the centroid table is nlist rows (broadcast); the
     * pair join is list_id-keyed — the corpus never self-joins globally,
     * and per-cluster pair cost is bounded by the cluster size the
-    * quantizer controls (nlist grows with the corpus; refresh centroids
-    * with [[kmeansCentroids]]). `shuffle_hash` keeps AQE from
-    * driver-building a broadcast of a corpus-sized side.
+    * quantizer controls (nlist grows with the corpus). `shuffle_hash`
+    * keeps AQE from driver-building a broadcast of a corpus-sized side.
     *
     * Skew guard: the quantizer does NOT bound the largest cell — at
     * web scale one dense cell (boilerplate embeddings collapse to a
@@ -897,8 +839,8 @@ object Similarity {
     * of block j is the j-th subvector of the i-th seed vector. Output
     * (j 1..m, i 1..ksub, cw: array<double>) — m·ksub rows, broadcast-
     * sized. The row_number window orders `ksub` rows — bounded, not
-    * corpus-sized. For refined codebooks run per-block Lloyd like
-    * [[kmeansCentroids]]; the seed is the oracle-replayable baseline.
+    * corpus-sized. Refined codebooks come from per-block Lloyd
+    * iterations; the seed is the oracle-replayable baseline.
     */
   def pqCodebooks(corpus: DataFrame, m: Int, dsub: Int, ksub: Int): DataFrame = {
     val seeds = corpus

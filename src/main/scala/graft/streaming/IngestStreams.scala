@@ -1,8 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.DataFrame
 
 import graft.core.{CacheScope, Layout, VersionLog}
 import graft.core.CacheScope.persist
@@ -15,10 +14,11 @@ import graft.core.CacheScope.persist
   * [[graft.core.VersionLog.readChanges]] incremental catch-up falling
   * out of the same commit log.
   *
-  * Durability protocol (the [[AggStreams]] marker discipline, adapted
-  * to data files): write the batch dir (mode overwrite — a replay of a
-  * half-written attempt rewrites it cleanly), THEN the `_commits`
-  * marker, THEN snapshot. Crash analysis, in order:
+  * Durability protocol ([[graft.core.VersionLog.markCommitted]]'s
+  * marker discipline, applied to data files): write the batch dir
+  * (mode overwrite — a replay of a half-written attempt rewrites it
+  * cleanly), THEN the commit marker, THEN snapshot. Crash analysis,
+  * in order:
   *  - mid-write: no marker → the replay overwrites the partial dir; no
   *    snapshot ever referenced its files (snapshots happen after the
   *    marker), so no version breaks;
@@ -52,13 +52,10 @@ object IngestStreams {
   def ingestBatch(batch: DataFrame, batchId: Long, tablePath: String,
       evolveSchema: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val marker = new Path(s"$tablePath/_commits/v$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
-    val (aligned, schemaJson) = checkSchema(batch, tablePath, fs, evolveSchema)
+    if (VersionLog.isCommitted(spark, tablePath, batchId)) return
+    val (aligned, schemaJson) = checkSchema(batch, tablePath, evolveSchema)
     aligned.write.mode("overwrite").parquet(s"$tablePath/b$batchId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, false).close()
+    VersionLog.markCommitted(spark, tablePath, batchId)
     VersionLog.snapshot(spark, tablePath, schemaJson)
   }
 
@@ -79,23 +76,17 @@ object IngestStreams {
     * dropped/retyped columns always refuse).
     */
   private def checkSchema(batch: DataFrame, tablePath: String,
-      fs: org.apache.hadoop.fs.FileSystem,
       evolve: Boolean): (DataFrame, Option[String]) = {
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.{DataType, StructType}
     val p = new Path(s"$tablePath/_schema.json")
-    def pin(st: StructType): Unit = {
-      // attempt-unique tmp + atomic install: a crash mid-write must
-      // not pin a truncated schema, and CONCURRENT first-batch workers
-      // (the OCC ingest shape) each need their own staging file —
-      // identical schemas make any replace winner correct
-      fs.mkdirs(p.getParent)
-      val tmp = new Path(p.getParent,
-        s"._schema.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(st.json.getBytes("UTF-8")) finally out.close()
-      VersionLog.atomicReplace(batch.sparkSession, tmp, p)
-    }
+    val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+    // atomic install: a crash mid-write must not pin a truncated
+    // schema, and CONCURRENT first-batch workers (the OCC ingest
+    // shape) each stage their own file — identical schemas make any
+    // replace winner correct
+    def pin(st: StructType): Unit =
+      VersionLog.writeText(batch.sparkSession, p, st.json)
     if (!fs.exists(p)) {
       pin(batch.schema)
       return (batch, None)
@@ -135,15 +126,6 @@ object IngestStreams {
     }
   }
 
-  /** Streaming writer landing every micro-batch into the versioned
-    * table; caller picks trigger + checkpoint and starts it.
-    */
-  def ingest(stream: DataFrame, tablePath: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, tablePath)
-    }
-
   /** Landing + standing rollup in one exactly-once step: each
     * micro-batch lands versioned, then [[graft.core.Mv.refresh]] folds
     * the new version's delta into the MV — the 24/7 "table AND its
@@ -158,14 +140,6 @@ object IngestStreams {
     graft.core.Mv.refresh(batch.sparkSession, tablePath, mvDir, keys, sumCols)
     ()
   }
-
-  /** Streaming form of [[ingestBatchWithMv]]. */
-  def ingestWithMv(stream: DataFrame, tablePath: String, mvDir: String,
-      keys: Seq[String], sumCols: Seq[String]): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        ingestBatchWithMv(batch, batchId, tablePath, mvDir, keys, sumCols)
-    }
 
   /** IDEMPOTENT-BY-KEY landing: rows whose `keyCol` already exists in
     * the standing table are dropped BEFORE the batch lands — the
@@ -191,13 +165,12 @@ object IngestStreams {
       fpp: Double = 0.01): (Long, Long) = {
     import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    val marker = new Path(s"$tablePath/_commits/v$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return (0L, 0L)
+    if (VersionLog.isCommitted(spark, tablePath, batchId)) return (0L, 0L)
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // clear THIS batch's uncommitted partial landing before anything
     // reads the directory: a crashed attempt's b-dir would otherwise
     // be healed into the bloom manifest and make the replay drop rows
-    // that never actually landed (foreachBatch replays in order, so
+    // that never actually landed (a batch loop replays in order, so
     // the only possible INGEST orphan is this batch's own; compact/DML
     // orphans are excluded by Layout.dataFiles' committed view)
     fs.delete(new Path(s"$tablePath/b$batchId"), true)
@@ -211,9 +184,8 @@ object IngestStreams {
       count(col(keyCol)).as("nk"),
       collect_set(col(keyCol).cast("string")).as("keys")).head()
     val batchRows = stats.getLong(0)
-    if (batchRows == 0L) { // Spark runs no-data micro-batches by design
-      fs.mkdirs(marker.getParent)
-      fs.create(marker, false).close()
+    if (batchRows == 0L) { // an upstream poll can deliver no rows
+      VersionLog.markCommitted(spark, tablePath, batchId)
       return (0L, 0L)
     }
     val candidateKeys = stats.getSeq[String](2)
@@ -260,7 +232,7 @@ object IngestStreams {
         // refuse drift BEFORE writing (the dedup path stays
         // evolution-free: its bloom probes are keyed on one column
         // and the batch must match the table exactly)
-        checkSchema(batch, tablePath, fs, evolve = false)
+        checkSchema(batch, tablePath, evolve = false)
         // right-size the landing from the known survivor count: the
         // batch dir otherwise carries one part file per upstream
         // partition, and every file costs a bloom-manifest row + a
@@ -270,8 +242,7 @@ object IngestStreams {
       }
       n
     }
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, false).close()
+    VersionLog.markCommitted(spark, tablePath, batchId)
     if (landed > 0) {
       VersionLog.snapshot(spark, tablePath)
       if (manifested) Layout.appendBloomManifest(spark, tablePath)

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.core.VersionLog
 import graft.functions.{AggregateFunctions, KmvSketchAgg}
 
 /** Standing per-day KMV sketch state — the 24/7 form of q214's rolling
@@ -18,11 +18,11 @@ import graft.functions.{AggregateFunctions, KmvSketchAgg}
   * regardless of how history was sliced into batches
   * (spec: SketchStateStreamsSpec).
   *
-  * Durability is the [[AggStreams]] marker discipline verbatim:
-  * versioned `v=batchId` state dirs, commit marker AFTER the write,
-  * readers take the highest committed version, replayed batchIds
-  * no-op — exactly-once across restarts and foreachBatch replays.
-  * State reads go through [[AggStreams.currentState]] (same layout).
+  * Durability is [[VersionLog.markCommitted]]'s marker discipline:
+  * versioned `v=batchId` state dirs ([[VersionLog.stateDir]]), commit
+  * marker AFTER the write, readers take the highest committed version
+  * ([[VersionLog.committedState]]), replayed batchIds no-op —
+  * exactly-once across restarts and batch replays.
   *
   * Scale: state is days × k longs — at k = 65536 that is ~0.5 MB/day,
   * three orders below the (user, day) membership table the exact
@@ -43,15 +43,13 @@ object SketchStateStreams {
   def maintainBatch(batch: DataFrame, batchId: Long,
       userCol: String, dayCol: String, k: Int, statePath: String): Unit = {
     val spark = batch.sparkSession
-    val marker = new org.apache.hadoop.fs.Path(s"$statePath/_commits/v$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return
+    if (VersionLog.isCommitted(spark, statePath, batchId)) return
     val delta = daySketchDelta(batch, userCol, dayCol, k)
     val mergeUdf = udf((a: Seq[Long], b: Seq[Long]) =>
       KmvSketchAgg.mergeMinima(
         Option(a).map(_.toArray).getOrElse(Array.empty),
         Option(b).map(_.toArray).getOrElse(Array.empty), k).toSeq)
-    val merged = AggStreams.currentState(spark, statePath) match {
+    val merged = VersionLog.committedState(spark, statePath) match {
       case Some(st) =>
         st.select(col("day"), col("sk").as("sk_old"))
           .join(delta.select(col("day"), col("sk").as("sk_new")), Seq("day"), "full_outer")
@@ -59,20 +57,9 @@ object SketchStateStreams {
             mergeUdf(col("sk_old"), col("sk_new")).as("sk"))
       case None => delta
     }
-    merged.write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, false).close()
+    merged.write.mode("overwrite").parquet(VersionLog.stateDir(statePath, batchId))
+    VersionLog.markCommitted(spark, statePath, batchId)
   }
-
-  /** Streaming writer maintaining the state; caller picks trigger +
-    * checkpoint and starts it.
-    */
-  def maintain(stream: DataFrame, userCol: String, dayCol: String,
-      k: Int, statePath: String): DataStreamWriter[Row] =
-    stream.writeStream.foreachBatch {
-      (batch: DataFrame, batchId: Long) =>
-        maintainBatch(batch, batchId, userCol, dayCol, k, statePath)
-    }
 
   /** Rolling distinct answered FROM THE STATE ALONE — q214's
     * frame-explode equi-join over (day, sk) rows, raw history never

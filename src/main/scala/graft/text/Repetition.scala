@@ -42,22 +42,4 @@ object Repetition {
       trunc6(sum(when(col("c") >= 2, col("c")).otherwise(lit(0L))).cast("double") /
         sum(col("c"))).as("dup_gram_frac"))
   }
-
-  /** Repetition gate: keep documents whose duplicate-bigram mass and
-    * top-bigram concentration are both under the thresholds (returns
-    * the surviving rows of `docs` unchanged — a semi join against the
-    * per-doc stats, so the text column crosses no extra shuffle).
-    */
-  def repetitionFilter(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 2,
-      maxDupFrac: Double = 0.2,
-      maxTopFrac: Double = 0.1): DataFrame = {
-    val keep = repetitionStats(docs, idCol, textCol, n)
-      .filter(col("dup_gram_frac") <= maxDupFrac && col("top_gram_frac") <= maxTopFrac)
-      .select(col(idCol))
-    docs.join(keep, Seq(idCol), "left_semi")
-  }
 }

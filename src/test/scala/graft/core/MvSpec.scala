@@ -47,6 +47,29 @@ class MvSpec extends SparkSpec {
     assert(before === Seq(("a", 2L, 101L)))
   }
 
+  test("a stray non-marker entry under _commits is ignored by read and refresh") {
+    val root = scratch("mvs")
+    val src = s"$root/src"; val mv = s"$root/mv"
+    Seq(("a", 1L), ("b", 2L)).toDF("k", "w").write.parquet(src)
+    VersionLog.snapshot(spark, src)
+    Mv.refresh(spark, src, mv, Seq("k"), Seq("w"))
+    Seq(("a", 4L)).toDF("k", "w").write.mode("append").parquet(src)
+    VersionLog.snapshot(spark, src)
+    Mv.refresh(spark, src, mv, Seq("k"), Seq("w"))
+    val before = mvRows(mv)
+    // an editor backup or copy artifact beside the real markers
+    val fs = new org.apache.hadoop.fs.Path(mv)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new org.apache.hadoop.fs.Path(s"$mv/_commits/v2.bak"), false).close()
+    assert(Mv.committedVersions(spark, mv) === Seq(1, 2))
+    assert(mvRows(mv) === before)
+    assert(Mv.refresh(spark, src, mv, Seq("k"), Seq("w")) === None)
+    Seq(("c", 8L)).toDF("k", "w").write.mode("append").parquet(src)
+    VersionLog.snapshot(spark, src)
+    assert(Mv.refresh(spark, src, mv, Seq("k"), Seq("w")) === Some((2, 3)))
+    assert(mvRows(mv) === before :+ (("c", 1L, 8L)))
+  }
+
   test("prune keeps the newest states and the MV stays readable") {
     val root = scratch("mvp")
     val src = s"$root/src"; val mv = s"$root/mv"

@@ -18,14 +18,6 @@ class SinksSpec extends SparkSpec {
     assert(back.orderBy(col("address")).collect().map(_.getDouble(1)).toSeq === Seq(1.5, 0.0))
   }
 
-  test("A31: scalar point-read, empty-safe") {
-    val s = spark
-    import s.implicits._
-    val df = Seq((42L, "x")).toDF("n", "s")
-    assert(Sinks.scalar(df.select(col("n"))) === Some(42L))
-    assert(Sinks.scalar(df.filter(col("n") === 0).select(col("n"))) === None)
-  }
-
   test("A32: maxRecordsPerFile chunks the append into multiple files") {
     val s = spark
     import s.implicits._

@@ -6,23 +6,6 @@ import graft.SparkSpec
 
 class CurationSpec extends SparkSpec {
 
-  test("hashSample: deterministic, content-keyed, fraction roughly honored") {
-    val s = spark
-    import s.implicits._
-    val df = (0L until 2000L).toDF("id")
-    val a = Curation.hashSample(df, "id", 0.25).collect().map(_.getLong(0)).toSet
-    val b = Curation.hashSample(df, "id", 0.25).collect().map(_.getLong(0)).toSet
-    assert(a === b) // pure function of id — no RNG state
-    assert(math.abs(a.size - 500) < 100, s"got ${a.size} of expected ~500")
-    // repartitioning cannot change the sample (unlike df.sample)
-    val c = Curation.hashSample(df.repartition(13), "id", 0.25)
-      .collect().map(_.getLong(0)).toSet
-    assert(c === a)
-    // monotone: a smaller fraction's sample nests inside a larger one's
-    val half = Curation.hashSample(df, "id", 0.5).collect().map(_.getLong(0)).toSet
-    assert(a.subsetOf(half))
-  }
-
   test("stratifiedHashSample applies per-stratum fractions with default") {
     val s = spark
     import s.implicits._

@@ -84,25 +84,6 @@ class AudioCodecSpec extends AnyFunSuite {
       == Seq(0x10 + 128, (0xff + 128) & 0xff))
   }
 
-  test("resampleLinear: endpoints exact, interior linearly blended, hand-computed") {
-    // [0, 100] to 3 frames: positions 0, 0.5, 1 -> 0, 50, 100
-    assert(AudioCodec.resampleLinear(Array(0, 100), 3).toSeq == Seq(0, 50, 100))
-    // [0, 30, 60, 90] to 2 frames: endpoints only
-    assert(AudioCodec.resampleLinear(Array(0, 30, 60, 90), 2).toSeq == Seq(0, 90))
-    // upsample [10, 20] to 4: num = k*1/3 -> 10, 13.33->13, 16.67->17, 20
-    assert(AudioCodec.resampleLinear(Array(10, 20), 4).toSeq == Seq(10, 13, 17, 20))
-    // identity when target length matches
-    val s = Array(5, 9, 2, 7)
-    assert(AudioCodec.resampleLinear(s, 4).toSeq == s.toSeq)
-  }
-
-  test("resampleToRate preserves duration: frame count scales by the rate ratio") {
-    val s = Array.tabulate(8000)(i => i % 256) // 1 s at 8 kHz
-    assert(AudioCodec.resampleToRate(s, 8000, 4000).length == 4000)
-    assert(AudioCodec.resampleToRate(s, 8000, 12000).length == 12000)
-    assert(AudioCodec.resampleToRate(Array(1), 8000, 4000).length == 1)
-  }
-
   test("energyFingerprint: deterministic, loudness-envelope-faithful, tiny-edit tolerant") {
     // first half silent-ish, second half loud: low windows 0, high windows 1
     val quietLoud = Array.fill(256)(1) ++ Array.fill(256)(200)

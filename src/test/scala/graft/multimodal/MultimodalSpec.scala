@@ -227,24 +227,6 @@ class MultimodalSpec extends SparkSpec {
     assert(got.meta === FakeCodec.decode("audio", raw.payload))
   }
 
-  test("audioResampleTable: REAL decode + linear resample, counts and sums from the product") {
-    val s = spark
-    import s.implicits._
-    val text = "abcdefghij" * 40 // 400 samples
-    val docs = Seq((0L, text)).toDF("doc_id", "text") // rate 4000
-    val media = synthesizeWavAudio(docs, "doc_id", "text")
-    val out = audioResampleTable(s, media, targetRate = 2000).head()
-    assert(out.getInt(1) === 4000 && out.getInt(2) === 2000)
-    assert(out.getLong(3) === 400L && out.getLong(4) === 200L)
-    // the reported sum equals a direct Scala replay of the same resample
-    val src = text.getBytes("UTF-8").map(_ & 0xff)
-    val expect = AudioCodec.resampleLinear(src, 200).map(_.toLong).sum
-    assert(out.getLong(5) === expect)
-    // non-audio rows are dropped, not crashed
-    assert(audioResampleTable(s,
-      Seq(MediaRow(1L, "video", "x".getBytes)).toDS().toDF(), 2000).count() === 0L)
-  }
-
   test("mediaFingerprints: audio rows use the REAL energy fingerprint over decoded samples") {
     val s = spark
     import s.implicits._

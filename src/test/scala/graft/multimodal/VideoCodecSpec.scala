@@ -102,11 +102,4 @@ class VideoCodecSpec extends AnyFunSuite {
     val zero = VideoCodec.VideoClip(2, 2, 10, 1, Array(new Array[Byte](4)))
     assert(VideoCodec.temporalFingerprint(zero) == -1L)
   }
-
-  test("frameHash matches ImageCodec.perceptualHash on the same gray raster") {
-    val w = 16; val h = 12
-    val raster = frame(w * h, 3)
-    val img = ImageCodec.tryDecode(ImageCodec.encodeGrayPng(raster, w, h)).get
-    assert(VideoCodec.frameHash(raster, w, h) == ImageCodec.perceptualHash(img))
-  }
 }

@@ -89,41 +89,6 @@ class PcaSpec extends SparkSpec {
     assert(ev.sliding(2).forall(p => p(0) >= p(1)), "eigenvalues must sort descending")
   }
 
-  test("whiten: output covariance is the identity on the kept directions") {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(9)
-    // anisotropic cloud with a nonzero mean: x = mu + a*u + b*w
-    val d = 6
-    val mu = Array.tabulate(d)(i => 0.3 * (i + 1))
-    val u = Array.tabulate(d)(i => if (i == 0) 3.0 else 0.1 * i)
-    val w = Array.tabulate(d)(i => if (i == 3) 1.0 else 0.02)
-    val data = (0 until 600).map { _ =>
-      val a = rnd.nextGaussian(); val b = rnd.nextGaussian()
-      Seq.tabulate(d)(i => mu(i) + a * u(i) + b * w(i) + rnd.nextGaussian() * 0.01)
-    }
-    val df = data.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("id", "emb")
-      .repartition(4)
-    val moments = Pca.covarianceMoments(df, "emb")
-    val cov = Pca.covarianceFromMoments(moments)
-    val (vals, vecs) = Pca.principalAxes(cov, 2)
-    assert(vals(0) > vals(1) && vals(1) > 0)
-    val means = Pca.meansFromMoments(moments)
-    mu.zip(means).foreach { case (m, got) => assert(math.abs(m - got) < 0.2) }
-    val proj = Pca.whiten(df, "id", "emb", means, vals, vecs)
-      .select(col("proj")).as[Seq[Double]].collect()
-    def cell(i: Int, j: Int): Double = {
-      val mi = proj.map(_(i)).sum / proj.length
-      val mj = proj.map(_(j)).sum / proj.length
-      proj.map(p => (p(i) - mi) * (p(j) - mj)).sum / proj.length
-    }
-    assert(math.abs(cell(0, 0) - 1.0) < 0.15, s"var0 ${cell(0, 0)}")
-    assert(math.abs(cell(1, 1) - 1.0) < 0.15, s"var1 ${cell(1, 1)}")
-    assert(math.abs(cell(0, 1)) < 0.1, s"cross ${cell(0, 1)}")
-    // and the whitened mean is ~0 (centering worked)
-    assert(math.abs(proj.map(_(0)).sum / proj.length) < 0.1)
-  }
-
   test("principalComponents recovers a planted dominant direction; projection concentrates variance") {
     val s = spark
     import s.implicits._

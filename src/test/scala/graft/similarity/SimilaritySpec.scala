@@ -123,51 +123,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("kmeansCentroids converges on separable clusters and lifts IVF to full recall") {
-    val s = spark
-    import s.implicits._
-    // three tight, well-separated direction clusters, with membership
-    // laid out along the seed quantizer's md5(c_id) sample order so
-    // the 3 seeds all start inside cluster A — ONLY a real Lloyd
-    // refresh recovers one centroid per cluster
-    def jitter(base: Seq[Double], eps: Double): Seq[Double] =
-      base.zipWithIndex.map { case (v, i) => v + (if (i % 2 == 0) eps else -eps) }
-    val a = Seq(1.0, 0.0, 0.0, 0.0)
-    val b = Seq(0.0, 1.0, 0.0, 0.0)
-    val cc = Seq(0.0, 0.0, 1.0, 0.0)
-    def md5hex(s: String): String = java.security.MessageDigest
-      .getInstance("MD5").digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val sampleOrder = (0L to 29L).sortBy(i => (md5hex(i.toString), i))
-    val rows =
-      sampleOrder.slice(0, 10).zipWithIndex.map { case (i, j) => (i, jitter(a, 0.01 * (j + 1))) } ++
-        sampleOrder.slice(10, 20).zipWithIndex.map { case (i, j) => (i, jitter(b, 0.01 * (j + 1))) } ++
-        sampleOrder.slice(20, 30).zipWithIndex.map { case (i, j) => (i, jitter(cc, 0.01 * (j + 1))) }
-    val corpus = rows.toDF("c_id", "c_emb")
-
-    val cent = Similarity.kmeansCentroids(corpus, nlist = 3, iters = 5)
-      .collect().map(r => r.getSeq[Double](1))
-    assert(cent.length === 3)
-    // each cluster direction is claimed by exactly one centroid
-    val owners = Seq(a, b, cc).map { dir =>
-      cent.zipWithIndex.maxBy { case (e, _) =>
-        e.zip(dir).map { case (x, y) => x * y }.sum /
-          math.sqrt(e.map(x => x * x).sum)
-      }._2
-    }
-    assert(owners.toSet.size === 3, s"centroids collapsed: $owners")
-
-    // with the refreshed quantizer, probing 1 of 3 lists is exact on
-    // this data (each query's true neighbors share its cluster/list)
-    val qs = Seq((100L, jitter(a, 0.005)), (101L, jitter(b, 0.005)),
-      (102L, jitter(cc, 0.005))).toDF("q_id", "q_emb")
-    val bf = Similarity.bruteForceTopK(qs, corpus, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = Similarity.ivfTopK(qs, corpus, k = 5, nlist = 3, nprobe = 1,
-        centroids = Some(Similarity.kmeansCentroids(corpus, nlist = 3, iters = 5)))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivf === bf, "refreshed IVF with nprobe=1 should be exact on separable clusters")
-  }
-
   test("topicClusters: complete assignment, stable t-labels, direction-faithful with given centroids") {
     val s = spark
     import s.implicits._

@@ -2,14 +2,12 @@ package graft.streaming
 
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.core.VersionLog
 
 /** Versioned exactly-once ingestion: batches land once, replays no-op,
-  * crash windows recover cleanly, versions time-travel per batch, and
-  * the streaming wrapper matches direct batch calls.
+  * crash windows recover cleanly, and versions time-travel per batch.
   */
 class IngestStreamsSpec extends SparkSpec {
   import spark.implicits._
@@ -150,59 +148,25 @@ class IngestStreamsSpec extends SparkSpec {
       .count() === 8L)
   }
 
-  test("ingestWithMv keeps table and MV in lockstep across a full stream re-run") {
+  test("ingestBatchWithMv keeps table and MV in lockstep across a full re-run") {
     val root = scratch("ingestmv")
-    val in = s"$root/in"
     val table = s"$root/t"
     val mv = s"$root/mv"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "grp")
-      .coalesce(1).write.mode("append").parquet(in)
-    Seq((3L, "a")).toDF("id", "grp")
-      .coalesce(1).write.mode("append").parquet(in)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema("id bigint, grp string")
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = IngestStreams.ingestWithMv(stream, table, mv, Seq("grp"), Seq("id"))
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    val batches = Seq(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "grp"),
+      Seq((3L, "a")).toDF("id", "grp"))
+    def runAll(): Unit = batches.zipWithIndex.foreach { case (b, i) =>
+      IngestStreams.ingestBatchWithMv(b, i.toLong, table, mv, Seq("grp"), Seq("id"))
     }
-    runOnce()
+    runAll()
     def mvRows() = graft.core.Mv.read(spark, mv)
       .select("grp", "n_rows", "id__sum").orderBy("grp")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     assert(mvRows() === Seq(("a", 2L, 4L), ("b", 1L, 2L)))
-    runOnce() // full checkpoint replay: nothing lands, nothing re-folds
+    runAll() // replay of both batch ids: nothing lands, nothing re-folds
     assert(mvRows() === Seq(("a", 2L, 4L), ("b", 1L, 2L)))
     assert(graft.core.Mv.committedVersions(spark, mv).last ===
       graft.core.VersionLog.latest(spark, table))
-  }
-
-  test("the streaming wrapper lands micro-batches like direct calls") {
-    val root = scratch("ingests")
-    val in = s"$root/in"
-    val table = s"$root/t"
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(in)
-    Seq((3L, "c")).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(in)
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema("id bigint, v string")
-        .option("maxFilesPerTrigger", "1").parquet(in)
-      val q = IngestStreams.ingest(stream, table)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    runOnce()
-    val latest = VersionLog.latest(spark, table)
-    assert(VersionLog.readVersion(spark, table, latest).count() === 3L)
-    // re-running the whole stream from the checkpoint adds nothing
-    runOnce()
-    assert(VersionLog.latest(spark, table) === latest)
-    assert(VersionLog.readVersion(spark, table, latest).count() === 3L)
   }
 
   test("additive ingest evolution: widening batches re-pin, laggards NULL-fill") {

@@ -2,12 +2,12 @@ package graft.streaming
 
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
+import graft.core.VersionLog
 import graft.functions.{AggregateFunctions, KmvSketchAgg}
 
-/** Standing per-day KMV state: streamed fold == batch recompute
+/** Standing per-day KMV state: batch-by-batch fold == one-shot recompute
   * sketch-for-sketch, rolling distinct from state == exact recompute,
   * replay idempotence, and the merge algebra itself.
   */
@@ -31,36 +31,23 @@ class SketchStateStreamsSpec extends SparkSpec {
   test("streamed per-day state == batch recompute; rolling answer == exact; replays no-op") {
     val s = spark
     import s.implicits._
-    val root = scratch("kmvstream")
-    val in = s"$root/events"
-    val statePath = s"$root/state"
+    val statePath = scratch("kmvstream") + "/state"
     val k = 64
 
-    // two "days" of activity split across three files (micro-batches),
-    // users deliberately recurring across batches and days
-    Seq((1L, 0L), (2L, 0L), (3L, 1L)).toDF("user_id", "day")
-      .coalesce(1).write.mode("append").parquet(in)
-    Seq((2L, 0L), (4L, 1L), (1L, 1L)).toDF("user_id", "day")
-      .coalesce(1).write.mode("append").parquet(in)
-    Seq((5L, 2L), (1L, 2L), (3L, 2L)).toDF("user_id", "day")
-      .coalesce(1).write.mode("append").parquet(in)
-
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("user_id bigint, day bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in)
-      val q = SketchStateStreams.maintain(stream, "user_id", "day", k, statePath)
-        .option("checkpointLocation", s"$root/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    // two "days" of activity split across three micro-batches, users
+    // deliberately recurring across batches and days
+    val batches = Seq(
+      Seq((1L, 0L), (2L, 0L), (3L, 1L)),
+      Seq((2L, 0L), (4L, 1L), (1L, 1L)),
+      Seq((5L, 2L), (1L, 2L), (3L, 2L))).map(_.toDF("user_id", "day"))
+    def foldAll(): Unit = batches.zipWithIndex.foreach { case (b, i) =>
+      SketchStateStreams.maintainBatch(b, i.toLong, "user_id", "day", k, statePath)
     }
-    runOnce()
+    foldAll()
 
     // state == one-shot batch sketch of ALL history, sketch-for-sketch
-    val st = AggStreams.currentState(spark, statePath).get
-    val batch = spark.read.parquet(in)
+    val st = VersionLog.committedState(spark, statePath).get
+    val batch = batches.reduce(_ union _)
       .groupBy(col("day"))
       .agg(AggregateFunctions.kmvMinima(col("user_id"), k).as("sk"))
     assert(st.orderBy("day").collect().map(_.toString).toSeq ===
@@ -74,16 +61,15 @@ class SketchStateStreamsSpec extends SparkSpec {
     // day2 window {1,2}: {1,3,4,5}=4
     assert(got === Seq((0L, 2L), (1L, 4L), (2L, 4L)))
 
-    // fresh AvailableNow pass over the same files adds nothing
-    val vBefore = AggStreams.currentVersion(spark, statePath).get
-    runOnce()
-    assert(AggStreams.currentVersion(spark, statePath).get === vBefore)
-
-    // direct replay of an old batchId is a no-op (marker guard)
+    // replaying every batch id adds nothing (marker guard)
+    val vBefore = VersionLog.committed(spark, statePath)
+    foldAll()
+    assert(VersionLog.committed(spark, statePath) === vBefore)
+    // a replayed id carrying different rows is still a no-op
     SketchStateStreams.maintainBatch(
       Seq((99L, 0L)).toDF("user_id", "day"), 0L, "user_id", "day", k, statePath)
     assert(SketchStateStreams.rollingDistinct(
-        AggStreams.currentState(spark, statePath).get, 2, k)
+        VersionLog.committedState(spark, statePath).get, 2, k)
       .orderBy("d").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq === got)
 
     // saturation trips the loud regime guard, not a silent undercount
@@ -93,7 +79,7 @@ class SketchStateStreamsSpec extends SparkSpec {
       0L, "user_id", "day", 16, tiny)
     val ex = intercept[Exception] {
       SketchStateStreams.rollingDistinct(
-        AggStreams.currentState(spark, tiny).get, 2, 16).collect()
+        VersionLog.committedState(spark, tiny).get, 2, 16).collect()
     }
     assert(ex.getMessage.contains("exact-regime breach"))
   }

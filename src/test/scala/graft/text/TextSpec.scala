@@ -217,18 +217,6 @@ class TextSpec extends SparkSpec {
     }
   }
 
-  test("repetitionFilter keeps low-repetition docs only, rows unchanged") {
-    val s = spark
-    import s.implicits._
-    val docs = Seq(
-      (1L, "spam spam spam spam spam spam"),
-      (2L, "a genuinely varied sentence with no repeated word pairs at all")).toDF("doc_id", "text")
-    val kept = Repetition.repetitionFilter(docs, "doc_id", "text",
-      maxDupFrac = 0.2, maxTopFrac = 0.2).collect()
-    assert(kept.map(_.getLong(0)).toSeq === Seq(2L))
-    assert(kept.head.getString(1).startsWith("a genuinely"))
-  }
-
   test("blocklistGateLarge == literal-array gate; lexicon rides a broadcast semi-join") {
     val s = spark
     import s.implicits._
