@@ -148,7 +148,7 @@ class IngestStreamsSpec extends SparkSpec {
       .count() === 8L)
   }
 
-  test("ingestBatchWithMv keeps table and MV in lockstep across a full re-run") {
+  test("ingestBatchWithMv keeps table and MV in lockstep across a re-run") {
     val root = scratch("ingestmv")
     val table = s"$root/t"
     val mv = s"$root/mv"
