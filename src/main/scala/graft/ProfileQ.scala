@@ -8,12 +8,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * stand-in for the Spark UI (disabled in the bench), used to attribute
   * a multi-job scenario's wall time to its constituent actions.
   *
-  *   sbt "runMain graft.ProfileQ q255_cdc_mirror[,q245_...] [sfDir]"
+  *   sbt "runMain graft.ProfileQ q255_cdc_mirror[,q245_...] [sfDir [--plans outDir tag]]"
+  *
+  * `--plans` also writes the `.explain("formatted")` plan of each
+  * measured frame to `<outDir>/<query>_<tag>.txt` — the committed
+  * evidence for plan-shape claims (`plans/r12/`). It is written after
+  * the counts are taken, so planning it adds no counted job.
   */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val plans =
+      if (args.length > 2 && args(2) == "--plans") Some((args(3), args(4))) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkEntry.localSession(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
@@ -66,9 +73,10 @@ object ProfileQ {
       stages.synchronized(stages.clear())
       shuffleRead = 0L; shuffleWrite = 0L; stageCount = 0
       val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val n = df.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the listener bus drain
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
       val snap = jobs.synchronized(jobs.values.toSeq)
       println(f"== $name: $wall%.3f s wall, $n rows, ${snap.size} jobs, $stageCount stages, shuffleR=${shuffleRead / 1024}KB shuffleW=${shuffleWrite / 1024}KB")
       val jobTotal = snap.map(j => (j.end - j.start).max(0L)).sum / 1e3
@@ -90,6 +98,13 @@ object ProfileQ {
         ss.sortBy(s => -s.ms).take(20).foreach { s =>
           println(f"   stg ${s.id}%4d ${s.ms / 1e3}%7.3f s  ${s.tasks}%4d tasks  taskSum=${s.taskMs / 1e3}%7.3f s  ${s.name.take(100)}")
         }
+      }
+      plans.foreach { case (outDir, tag) =>
+        val out = java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt")
+        java.nio.file.Files.createDirectories(out.getParent)
+        java.nio.file.Files.writeString(out, df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode))
+        println(s"   plan written to $out")
       }
       graft.core.CacheScope.releaseAll(spark)
     }

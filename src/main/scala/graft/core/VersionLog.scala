@@ -187,7 +187,7 @@ object VersionLog {
   }
 
   /** The whole of a small metadata file (a version record, the
-    * superseded list, a cursor, a schema pin) as UTF-8 text.
+    * superseded list, a cursor) as UTF-8 text.
     */
   private[graft] def readText(
       f: org.apache.hadoop.fs.FileSystem, p: Path): String = {
@@ -246,7 +246,7 @@ object VersionLog {
   }
 
   /** The write twin of [[readText]]: replace a small metadata file (the
-    * superseded list, a cursor, a schema pin) with `text` atomically —
+    * superseded list, a cursor) with `text` atomically —
     * a crash mid-write leaves the previous content, never a torn file.
     */
   private[graft] def writeText(spark: SparkSession, p: Path, text: String): Unit =
@@ -359,49 +359,56 @@ object VersionLog {
       .filter(_.nonEmpty)
   }
 
-  /** Memoized inferred schema per (session, table root, sampled file)
+  /** Memoized footer schema per (session, table root, sampled file)
     * for NEVER-EVOLVED versioned tables: the store enforces one
     * physical schema across a table's files (ingest drift guard, MERGE
-    * drift matrix), so the first footer's schema serves every later
-    * read — without the memo each readVersion/readChanges/
-    * readChangeFeed call ran its own footer-inference job (a visible
-    * per-call job locally; a footer fetch per incremental read at
-    * corpus scale). Evolved tables never consult this (their schema
-    * travels in version headers). The SAMPLED FILE is part of the key:
-    * a table removed and re-created at the same path lands fresh
-    * part-file names (writer UUIDs), so a stale schema can never serve
-    * a replacement table. Entries for stopped sessions purge on the
-    * next lookup, mirroring [[graft.Tables]]'s memo hygiene.
+    * drift matrix), so one footer's schema serves every later read and
+    * every ingest check — without the memo each readVersion/
+    * readChanges/readChangeFeed call ran its own footer read. Evolved
+    * tables never consult this (their schema travels in version
+    * headers). The SAMPLED FILE is part of the key: a table removed and
+    * re-created at the same path lands fresh part-file names (writer
+    * UUIDs), so a stale schema can never serve a replacement table.
+    * Entries for stopped sessions purge on the next lookup, mirroring
+    * [[graft.Tables]]'s memo hygiene.
     */
   private val inferredSchemas = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), org.apache.spark.sql.types.StructType]()
+    (SparkSession, String, String), StructType]()
 
-  /** A schema-aware reader: explicit effective schema when the table
-    * has evolved (missing columns in older files read as NULL),
-    * memoized single-footer inference otherwise. `sampleFile` names
-    * any one data file of the version being read (single-schema store
-    * invariant — the same file default inference would sample).
+  /** The schema version `v` reads with — the ONE record of a versioned
+    * table's schema, which reads and the ingest drift check share: the
+    * effective `#schema=` header ([[effectiveSchema]]), or else the
+    * footer of the first file `v` lists. `v = None` asks about the
+    * latest version; with no version yet, the first committed live
+    * file stands in (a crash before the first snapshot leaves marked
+    * batches unversioned). None when no committed file exists at all.
+    *
+    * The footer is read on the driver, NOT via
+    * `spark.read.parquet(f).schema`, whose inference launches a (small)
+    * Spark job per memo miss.
+    */
+  private[graft] def schemaOf(spark: SparkSession, dir: String,
+      v: Option[Int] = None): Option[StructType] = {
+    val at = v.orElse(versions(spark, dir).lastOption)
+    at.flatMap(effectiveSchema(spark, dir, _)).orElse {
+      val files = at.fold(
+        if (fs(spark, dir).exists(new Path(dir))) committedLiveEntries(spark, dir)
+        else Nil)(readEntries(spark, dir, _))
+      files.headOption.map { case (rel, _) =>
+        val f = s"${rootUriPath(dir)}/$rel"
+        inferredSchemas.keySet.removeIf(_._1.sparkContext.isStopped)
+        inferredSchemas.computeIfAbsent((spark, rootUriPath(dir), f),
+          _ => org.apache.spark.sql.GraftBridge.parquetFileSchema(spark, f))
+      }
+    }
+  }
+
+  /** A reader with version `v`'s schema: missing columns in files
+    * older than an evolution read as NULL.
     */
   private def readerFor(spark: SparkSession, dir: String,
-      v: Int, sampleFile: => Option[String]): org.apache.spark.sql.DataFrameReader =
-    effectiveSchema(spark, dir, v) match {
-      case Some(st) => spark.read.schema(st)
-      case None =>
-        sampleFile match {
-          case Some(f) =>
-            inferredSchemas.keySet.removeIf(_._1.sparkContext.isStopped)
-            // driver-side footer read, NOT spark.read.parquet(f).schema:
-            // the Spark-side inference launches one (small) JOB per
-            // memo miss, and the sample-file-keyed memo misses once per
-            // version family (append/compact/DML dirs) — eight visible
-            // jobs in one CDC-mirror scenario
-            val st = inferredSchemas.computeIfAbsent(
-              (spark, rootUriPath(dir), f),
-              _ => org.apache.spark.sql.GraftBridge.parquetFileSchema(spark, f))
-            spark.read.schema(st)
-          case None => spark.read
-        }
-    }
+      v: Int): org.apache.spark.sql.DataFrameReader =
+    schemaOf(spark, dir, Some(v)).fold(spark.read)(st => spark.read.schema(st))
 
   /** ALTER TABLE ADD COLUMNS as a metadata-only version: the SAME file
     * list re-recorded with a new effective schema. Strictly additive —
@@ -811,7 +818,7 @@ object VersionLog {
   def readVersion(spark: SparkSession, dir: String, v: Int): DataFrame = {
     val paths = verifiedPaths(spark, dir, readEntries(spark, dir, v),
       s"version $v", "the history was compacted past this version")
-    readerFor(spark, dir, v, paths.headOption).parquet(paths: _*)
+    readerFor(spark, dir, v).parquet(paths: _*)
   }
 
   /** DESCRIBE HISTORY: one row per recorded version — file count,
@@ -905,7 +912,7 @@ object VersionLog {
     else {
       val paths = verifiedPaths(spark, dir, fresh.toSeq.sortBy(_._1),
         s"the v$fromV→v$toV delta", IncrementalHorizon)
-      readerFor(spark, dir, toV, paths.headOption).parquet(paths: _*)
+      readerFor(spark, dir, toV).parquet(paths: _*)
     }
   }
 
@@ -940,7 +947,7 @@ object VersionLog {
       else {
         val paths = verifiedPaths(spark, dir, entries, s"the v$v change feed",
           IncrementalHorizon)
-        Some(readerFor(spark, dir, v, paths.headOption).parquet(paths: _*))
+        Some(readerFor(spark, dir, v).parquet(paths: _*))
       }
     def tag(df: DataFrame, typ: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(typ))

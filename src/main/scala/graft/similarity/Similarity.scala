@@ -222,8 +222,8 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("cos"), col("rank"))
   }
 
-  /** Default seed quantizer shared by [[semDedup]], [[ivfTopK]]
-    * and [[topicClusters]]: the `nlist` corpus
+  /** Seed quantizer of [[ivfTopK]], [[ivfPqTopK]] and
+    * [[topicClusters]], and [[semDedup]]'s default: the `nlist` corpus
     * vectors that sort first by `md5(c_id)` — a deterministic uniform
     * sample. NOT the lowest-id vectors: real corpora arrive sorted by
     * source or time, so an id-prefix seed concentrates every centroid
@@ -244,8 +244,7 @@ object Similarity {
     * the label set is stable and enumerable by a mixture spec
     * (cent_ids themselves are corpus ids — data-dependent names no
     * static weights map could reference). Returns (c_id, topic).
-    * Default centroids = the deterministic md5 seed; pass refined
-    * (cent_id, cent_emb) centroids for refined clusters.
+    * Centroids are [[seedCentroids]]' deterministic md5 seed.
     *
     * Scale shape: the nlist-row centroid table broadcasts (its label
     * window sorts nlist rows, nothing more); the corpus never
@@ -254,10 +253,8 @@ object Similarity {
     */
   def topicClusters(
       corpus: DataFrame, // (c_id, c_emb: array<double>)
-      nlist: Int = 16,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    val labeled = centroids.getOrElse(seedCentroids(corpus, nlist))
-      .select(col("cent_id"), col("cent_emb"))
+      nlist: Int = 16): DataFrame = {
+    val labeled = seedCentroids(corpus, nlist)
       .withColumn("cent_norm", norm(col("cent_emb")))
       .withColumn("topic",
         concat(lit("t"), row_number()
@@ -917,10 +914,8 @@ object Similarity {
       nprobe: Int = 4,
       m: Int = 8,
       dsub: Int = 8,
-      ksub: Int = 16,
-      centroids: Option[DataFrame] = None): DataFrame = {
-    val cent = centroids.getOrElse(seedCentroids(corpus, nlist))
-      .select(col("cent_id"), col("cent_emb"))
+      ksub: Int = 16): DataFrame = {
+    val cent = seedCentroids(corpus, nlist)
       .withColumn("cent_norm", norm(col("cent_emb")))
     val assigned = assignToCentroids(corpus, cent)
       .select(col("cent_id").as("list_id"), col("c_id"))

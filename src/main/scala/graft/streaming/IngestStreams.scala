@@ -27,7 +27,8 @@ import graft.core.CacheScope.persist
   *  - after marker, before snapshot: the replay no-ops; the batch's
   *    rows are live but unversioned until the NEXT snapshot (any later
   *    batch, or the caller's final [[VersionLog.snapshot]]) — snapshot
-  *    LAG, never row loss or duplication.
+  *    LAG, never row loss or duplication. An evolving batch's widened
+  *    schema is minted by its replay ([[ingestBatch]]).
   * Rows are never duplicated (the marker gates the only write) and
   * recorded versions are never invalidated (batch dirs are written at
   * most once after their marker exists — nothing deletes files a
@@ -42,17 +43,28 @@ object IngestStreams {
 
   /** Land one micro-batch exactly once (idempotent per batchId).
     *
-    * Schema drift is a LOUD error, not a silent parquet mix: the first
-    * batch pins the table's schema (names + types, nullability-
-    * insensitive) at `_schema.json`; a later batch that disagrees —
-    * an upstream producer change, the classic slow-poison of a
-    * standing ingest — fails with both schemas named instead of
-    * writing files future readers can't reconcile.
+    * Schema drift is a LOUD error, not a silent parquet mix: a batch
+    * is checked (names + types, nullability-insensitive) against the
+    * schema the table's latest version reads with
+    * ([[VersionLog.schemaOf]], the table's one schema record); a batch
+    * that disagrees — an upstream producer change, the classic
+    * slow-poison of a standing ingest — fails with both schemas named
+    * instead of writing files future readers can't reconcile.
+    *
+    * With `evolveSchema`, a replay of a COMMITTED batch that still
+    * widens the latest version mints the missing `#schema=` stamp: a
+    * crash between the marker and the snapshot would otherwise leave
+    * the batch's extra columns unread by every later version.
     */
   def ingestBatch(batch: DataFrame, batchId: Long, tablePath: String,
       evolveSchema: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    if (VersionLog.isCommitted(spark, tablePath, batchId)) return
+    if (VersionLog.isCommitted(spark, tablePath, batchId)) {
+      if (evolveSchema)
+        checkSchema(batch, tablePath, evolve = true)._2.foreach(j =>
+          VersionLog.snapshot(spark, tablePath, Some(j)))
+      return
+    }
     val (aligned, schemaJson) = checkSchema(batch, tablePath, evolveSchema)
     aligned.write.mode("overwrite").parquet(s"$tablePath/b$batchId")
     VersionLog.markCommitted(spark, tablePath, batchId)
@@ -64,66 +76,40 @@ object IngestStreams {
       .mkString(",")
 
   /** Validate — and, when `evolve` is set, ADDITIVELY EVOLVE — the
-    * batch against the pinned table schema. Returns (alignedBatch,
-    * newSchemaJson): the aligned batch carries the pinned/evolved
-    * column order with missing NULLABLE columns NULL-filled (a lagging
-    * producer that has not learned a new column yet keeps landing);
-    * newSchemaJson is set exactly when the pin WIDENED (extra columns
-    * in the batch) — the caller stamps it into the snapshot it mints,
-    * so rows in files written before the evolution read back as NULL
-    * (the reference's insert policy: extras widen, missing NULL-fill —
-    * clients/custom_clickhouse.py:130-150 — but opt-in here, and
-    * dropped/retyped columns always refuse).
+    * batch against the table's schema ([[VersionLog.schemaOf]]; a table
+    * with no committed file accepts any batch). Writes nothing. Returns
+    * (alignedBatch, newSchemaJson): the aligned batch carries the
+    * table's/evolved column order with missing NULLABLE columns
+    * NULL-filled (a lagging producer that has not learned a new column
+    * yet keeps landing); newSchemaJson is set exactly when the schema
+    * WIDENS (extra columns in the batch) — the caller stamps it into
+    * the snapshot it mints, so rows in files written before the
+    * evolution read back as NULL (the reference's insert policy: extras
+    * widen, missing NULL-fill — clients/custom_clickhouse.py:130-150 —
+    * but opt-in here, and dropped/retyped columns always refuse).
     */
   private def checkSchema(batch: DataFrame, tablePath: String,
       evolve: Boolean): (DataFrame, Option[String]) = {
     import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val p = new Path(s"$tablePath/_schema.json")
-    val fs = p.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-    // atomic install: a crash mid-write must not pin a truncated
-    // schema, and CONCURRENT first-batch workers (the OCC ingest
-    // shape) each stage their own file — identical schemas make any
-    // replace winner correct
-    def pin(st: StructType): Unit =
-      VersionLog.writeText(batch.sparkSession, p, st.json)
-    if (!fs.exists(p)) {
-      pin(batch.schema)
-      return (batch, None)
+    val table = VersionLog.schemaOf(batch.sparkSession, tablePath) match {
+      case Some(st) => st
+      case None => return (batch, None)
     }
-    val pinnedStr = VersionLog.readText(fs, p)
-    val pinned: StructType =
-      if (pinnedStr.trim.startsWith("{"))
-        DataType.fromJson(pinnedStr).asInstanceOf[StructType]
-      else {
-        // legacy canonical-string pin: recover the full StructType
-        // from a committed data file (pre-evolution tables are
-        // single-schema by the old guard's guarantee)
-        val files = Layout.dataFiles(batch.sparkSession, tablePath)
-        require(files.nonEmpty,
-          s"legacy schema pin at $p but no committed data to recover " +
-            "the full schema from — re-pin explicitly")
-        batch.sparkSession.read.parquet(files.toSeq.min).schema
-      }
-    if (canonical(batch.schema) == canonical(pinned)) return (batch, None)
+    if (canonical(batch.schema) == canonical(table)) return (batch, None)
     require(evolve,
       s"schema drift on ingest into $tablePath — pinned " +
-        s"[${canonical(pinned)}] vs batch [${canonical(batch.schema)}]; " +
+        s"[${canonical(table)}] vs batch [${canonical(batch.schema)}]; " +
         "pass evolveSchema=true for additive widening, or migrate the " +
         "table explicitly instead of mixing file schemas")
     // a missing NULLABLE column NULL-fills; any other drop refuses
-    val (evolved, extras) = VersionLog.evolveAdditively(pinned, batch.schema,
+    val (evolved, extras) = VersionLog.evolveAdditively(table, batch.schema,
       s"batch ingested into $tablePath", nullFills = _.nullable)
     val batchCols = batch.columns.toSet
     val aligned = batch.select(evolved.fields.toSeq.map { f =>
       if (batchCols(f.name)) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
     }: _*)
-    if (extras.isEmpty) (aligned, None)
-    else {
-      pin(evolved)
-      (aligned, Some(evolved.json))
-    }
+    (aligned, if (extras.isEmpty) None else Some(evolved.json))
   }
 
   /** Landing + standing rollup in one exactly-once step: each

@@ -60,6 +60,13 @@ object GraftBridge {
       .convert(message)
   }
 
+  /** Block until every event posted so far has reached every listener
+    * — a profiler reading its job listener after an action must not
+    * race the asynchronous bus. `listenerBus` is `private[spark]`.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Eager ColumnNode → Expression conversion. `expression` defers the
     * conversion inside a `ColumnNodeExpression` placeholder, which only
     * the Dataset boundary unwraps — an expression returned from a

@@ -48,6 +48,7 @@ class LshIndexSpec extends SparkSpec {
 
   test("probe == in-memory minhashLshPairs cross pairs; pruning reaches the scan") {
     spark.catalog.clearCache()
+    val rdds = spark.sparkContext.getPersistentRDDs.keySet
     val dir = scratch("lshidx")
     LshIndex.write(ref, "doc_id", "text", dir,
       n = 3, numHashes = 64, bands = 16, numPartitions = 8)
@@ -59,7 +60,7 @@ class LshIndexSpec extends SparkSpec {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       (rows, p)
     }
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- rdds).isEmpty,
       "probe caches must be released by the bracket")
     val want = crossPairs(ref.unionByName(batch))
     assert(got === want)

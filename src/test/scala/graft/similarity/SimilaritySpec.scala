@@ -132,12 +132,17 @@ class SimilaritySpec extends SparkSpec {
       base.zipWithIndex.map { case (v, i) => v + (if (i % 2 == 0) eps else -eps) }
     val corpus = ((0L to 4L).map(i => (i, jitter(a, 0.01 * (i + 1)))) ++
       (5L to 9L).map(i => (i, jitter(b, 0.01 * (i - 4))))).toDF("c_id", "c_emb")
-    // explicit centroids: labels follow cent_id rank, rows follow direction
-    val cent = Seq((100L, a), (200L, b)).toDF("cent_id", "cent_emb")
-    val got = Similarity.topicClusters(corpus, nlist = 2, centroids = Some(cent))
+    // seed centroids: each seed row takes t<rank of its cent_id>, and
+    // rows follow direction (the md5 seed of 4 holds one a-direction id)
+    val seeds = Similarity.seedCentroids(corpus, 4).collect().map(_.getLong(0)).sorted
+    val got = Similarity.topicClusters(corpus, nlist = 4)
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got.size === 10, "every vector must be assigned exactly once")
-    assert((0L to 4L).forall(got(_) == "t1") && (5L to 9L).forall(got(_) == "t2"))
+    seeds.zipWithIndex.foreach { case (id, i) => assert(got(id) === s"t${i + 1}") }
+    val aSeeds = seeds.filter(_ <= 4L)
+    assert(aSeeds.length === 1)
+    assert((0L to 4L).forall(got(_) == got(aSeeds.head)) &&
+      (5L to 9L).forall(got(_) != got(aSeeds.head)))
     // default md5 seed: deterministic across invocations, labels dense
     val d1 = Similarity.topicClusters(corpus, nlist = 3)
       .orderBy(col("c_id")).collect().map(_.getString(1))

@@ -73,6 +73,15 @@ class IngestStreamsSpec extends SparkSpec {
     IngestStreams.ingestBatch(Seq((2L, "b")).toDF("id", "v"), 3L, dir)
     assert(VersionLog.readVersion(spark, dir, VersionLog.latest(spark, dir))
       .count() === 2L)
+    // a first batch that committed but crashed before any snapshot
+    // still sets the schema a retyped later batch is refused against
+    val lagged = scratch("ingestsdl") + "/t"
+    Seq((1L, "a")).toDF("id", "v").write.parquet(s"$lagged/b0")
+    VersionLog.markCommitted(spark, lagged, 0L)
+    val laggedDrift = intercept[IllegalArgumentException] {
+      IngestStreams.ingestBatch(Seq((2, "b")).toDF("id", "v"), 1L, lagged)
+    }
+    assert(laggedDrift.getMessage.contains("schema drift"))
   }
 
   test("dedup ingest drops existing keys; crash orphans and manifest lag heal") {
@@ -204,5 +213,25 @@ class IngestStreamsSpec extends SparkSpec {
     // time travel: the pre-evolution version reads its own two columns
     assert(VersionLog.readVersion(spark, dir, 1).columns.toSeq ===
       Seq("id", "v"))
+  }
+
+  test("an evolving batch that crashed before its snapshot is stamped by its replay") {
+    val dir = scratch("ingevoc") + "/t"
+    IngestStreams.ingestBatch(Seq((1L, "a")).toDF("id", "v"), 0L, dir)
+    // simulate: widened batch 1 wrote data + marker, crashed before the
+    // snapshot that would have stamped its schema
+    Seq((2L, "b", 9L)).toDF("id", "v", "score").write.parquet(s"$dir/b1")
+    VersionLog.markCommitted(spark, dir, 1L)
+    IngestStreams.ingestBatch(
+      Seq((2L, "b", 9L)).toDF("id", "v", "score"), 1L, dir,
+      evolveSchema = true)
+    // a lagging producer lands after the replay
+    IngestStreams.ingestBatch(
+      Seq((3L, "c")).toDF("id", "v"), 2L, dir, evolveSchema = true)
+    val head = VersionLog.readVersion(spark, dir, VersionLog.latest(spark, dir))
+    assert(head.columns.toSeq === Seq("id", "v", "score"))
+    val scores = head.orderBy("id").select("score").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(scores === Seq(None, Some(9L), None))
   }
 }
